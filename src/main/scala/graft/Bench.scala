@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at the given SF and prints
   * ONE JSON line. Per-query records are `{"sec":…,"ok":…,"err":…}` so a
@@ -14,64 +13,15 @@ object Bench {
     // rerun re-times queries, not fixture writers. Verify/tests never set
     // this, keeping the correctness gate on live builds.
     System.setProperty("graft.fixture.durable", "1")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // optional comma-separated subset (SPARK_GRAFT_QUERIES) — used for the
-    // large-scale points where timing the full inventory is wasteful
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val builder0 = SparkSession.builder()
-      // multi-JVM smoke knob — see Verify.scala; executors of a
-      // local-cluster master get the application jar via SPARK_GRAFT_JARS
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-    // set spark.jars ONLY when the env provides it: an unconditional
-    // default of "" would CLOBBER the spark.jars a `spark-submit`
-    // invocation already carries (the application jar), stripping graft
-    // classes from standalone executors — codegen then fails with
-    // "Unknown variable or type graft.functions.VecMath" and every
-    // ScalaUDF lambda dies deserializing (round-13 standalone-bench find)
-    val builder = sys.env.get("SPARK_GRAFT_JARS").filter(_.nonEmpty)
-      .fold(builder0)(j => builder0.config("spark.jars", j))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Coalesce-floor knob for experiments. Measured on this inventory:
-      // the 1 MiB default wins overall — smaller floors (64k/256k) help
-      // CPU-bound mid-size joins but tax every iterative operator's
-      // per-round stages more than they save (full-run totals 34.0 s at
-      // 1m vs 36.5 s at 256k, n=211).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      // single-JVM local mode: listing a few hundred partition dirs on
-      // the driver beats spinning a whole Spark job per partitioned scan
-      // (the default threshold of 32 paths is tuned for object stores)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "2048")
-      .config("spark.ui.enabled", "false")
-    // free-form experiment knobs: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.split("=", 2))
-      .foldLeft(builder) { (b, kv) => b.config(kv(0).trim, kv(1).trim) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Every glob-path parquet read (bucket=*, batch_*) makes Spark's
-    // FileStreamSink.hasMetadata stat the literal glob string, catch the
-    // FileNotFoundException, and WARN with the full stack trace before the
-    // read proceeds normally — ~30 harmless traces per run that bury real
-    // warmup failures (round-10 verdict finding #2). Silence exactly that
-    // logger; every other WARN stays visible.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     // absorb one-time JVM/JIT/codegen/parquet-writer warmup outside the
     // timings: run every query once at the smallest SF so each plan's
     // generated code is compiled before its timed run (fall back to the
     // bench dir itself when the small fixture isn't on this host)
     val warmDir = Seq("/root/testdata/sf0.001").find(new java.io.File(_).isDirectory)
       .getOrElse(sfDir)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val selected = Harness.selected
     selected.foreach { case (_, fn) =>
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
     }
@@ -88,7 +38,7 @@ object Bench {
     // within 20% of the min: the reported number converges to the plan's
     // cost rather than the host's worst moment, and every repeat is a
     // full honest execution (nothing is subtracted or extrapolated).
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       def once(): (Double, Option[String]) = {
         val t0 = System.nanoTime()
         val err = try { fn(spark, sfDir).count(); None }
@@ -102,14 +52,6 @@ object Bench {
           times.sorted.apply(1) > times.min * 1.2)
       while (runs.size < 6 && runs.forall(_._2.isEmpty) && noisy)
         runs = runs :+ once()
-      // drift forensics (opt-in): per-query repeats + heap, to stderr so
-      // the one-line JSON contract on stdout is untouched
-      if (sys.env.contains("SPARK_GRAFT_TRACE")) {
-        val rt = Runtime.getRuntime
-        val usedMb = (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
-        System.err.println(f"[bench-trace] $name%-28s min=${times.min}%8.3f " +
-          s"runs=[${times.map(t => f"$t%.3f").mkString(",")}] heapMB=$usedMb")
-      }
       (name, times.min, runs.flatMap(_._2).headOption)
     }
     val qs = results.map { case (k, sec, err) =>

@@ -59,16 +59,11 @@ object CommitRace {
   private val Retries = 100
 
   private def session(): SparkSession = {
-    val b = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+    val s = Harness.session()
     sys.env.get("SPARK_GRAFT_COMMIT_IMPL").filter(_.nonEmpty)
-      .foreach(b.config(lake.CommitPrimitive.ImplConf, _))
+      .foreach(s.conf.set(lake.CommitPrimitive.ImplConf, _))
     sys.env.get("SPARK_GRAFT_CAS_URL").filter(_.nonEmpty)
-      .foreach(b.config(lake.HttpCasCommit.UrlConf, _))
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+      .foreach(s.conf.set(lake.HttpCasCommit.UrlConf, _))
     s
   }
 

@@ -6,15 +6,8 @@ import org.apache.spark.sql.functions._
 /** Scratch profiler (dev-only, not part of the API). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val d = Harness.sfDir
+    val s = Harness.session()
     def t(tag: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f
@@ -34,12 +27,6 @@ object Probe {
       println(s"NAMES entries=${graft.ml.NamesDict.entries.size} " +
         s"served=${graft.ml.NamesDict.resolvedEntries.size}")
       return
-    }
-    if (args.contains("names-count")) {
-      // README ml-row numbers: distinct entries / with accent-fold aliases
-      println(s"NAMES entries=${ml.NamesDict.entries.size} " +
-        s"resolved=${ml.NamesDict.resolvedEntries.size}")
-      s.stop(); return
     }
     t("warmup count")(sources.Tables.documents(s, d).count())
     if (args.contains("scale-sweep")) {
@@ -93,34 +80,45 @@ object Probe {
       }
     }
     if (args.contains("jobs")) {
-      // jobs (with SPARK_GRAFT_QUERIES): per-query Spark job/stage counts
-      // on the SECOND run (fixtures warm) — the bench-shaving feedback
+      // per query (SPARK_GRAFT_QUERIES, else the whole inventory): Spark
+      // jobs/stages/tasks of a WARM run — the bench-shaving feedback
       // loop: a 0.4 s query firing 12 jobs is scheduler overhead, not
-      // query work.
+      // query work. Min-of-3 timed runs, the bench's own noise
+      // discipline, so a probe number is comparable to a bench number.
+      import java.util.concurrent.atomic.AtomicInteger
       import org.apache.spark.scheduler._
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
+      val (jobs, stages, tasks) = (new AtomicInteger, new AtomicInteger, new AtomicInteger)
       s.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
-        }
+        override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit =
+          stages.incrementAndGet()
+        override def onTaskEnd(tk: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
       })
-      val names = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "")
-        .split(",").map(_.trim).filter(_.nonEmpty)
-      names.foreach { q =>
-        SparkEntry.queries(q)(s, d).count() // fixture build + warm
-        // min-of-3 timed runs — the bench's own noise discipline, so a
-        // probe number is comparable to a bench number
-        val times = (1 to 3).map { _ =>
-          jobs.set(0); stages.set(0)
-          val t0 = System.nanoTime()
-          SparkEntry.queries(q)(s, d).count()
-          (System.nanoTime() - t0) / 1e9
+      // events reach the listener asynchronously: drain the bus before
+      // resetting or reading the counters
+      def drain(): Unit = org.apache.spark.sql.GraftShim.drainListenerBus(s.sparkContext)
+      val rows = Harness.selected.flatMap { case (q, fn) =>
+        try {
+          fn(s, d).count() // fixture build + warm
+          val runs = (1 to 3).map { _ =>
+            drain(); jobs.set(0); stages.set(0); tasks.set(0)
+            val t0 = System.nanoTime()
+            fn(s, d).count()
+            val sec = (System.nanoTime() - t0) / 1e9
+            drain()
+            (sec, jobs.get, stages.get, tasks.get)
+          }
+          val best @ (sec, j, st, tk) = runs.minBy(_._1)
+          println(f"JOBS $q%-28s $sec%6.2f s  jobs=$j%3d  stages=$st%3d  tasks=$tk%5d" +
+            s"  runs=[${runs.map(r => f"${r._1}%.2f").mkString(",")}]")
+          Some(best)
+        } catch { case e: Throwable =>
+          println(f"JOBS $q%-28s FAILED ${e.toString.take(120)}")
+          None
         }
-        println(f"JOBS $q%-28s ${times.min}%6.2f s" +
-          f"  jobs=${jobs.get}%3d  stages=${stages.get}%3d" +
-          s"  runs=[${times.map(t => f"$t%.2f").mkString(",")}]")
       }
+      println(f"JOBS TOTAL sec=${rows.map(_._1).sum}%.2f jobs=${rows.map(_._2).sum} " +
+        s"stages=${rows.map(_._3).sum} tasks=${rows.map(_._4).sum}")
     }
     if (args.contains("make-scale")) {
       // make-scale <dstDir> <factor>: key-offset replication of the whole
@@ -202,17 +200,6 @@ object Probe {
           else transform(col("embedding"), (x, j) =>
             (x + (pmod(hash(col("vec_id"), j, lit(i)), lit(2001)) - 1000)
               .cast("float") * lit(0.00035f)).cast("float"))))
-    }
-    if (args.contains("minhash-stages")) {
-      t("docShingles compute")(ext.Dedup.docShingles(s, d).where(size(col("sh")) > 0).count())
-      val t0 = System.nanoTime()
-      val sh = ext.Dedup.materializePublic(s,
-        ext.Dedup.docShingles(s, d).where(size(col("sh")) > 0), "probe_sh")
-      println(f"PROBE materialize sh            ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      t("minhashSigs compute")(ext.Dedup.minhashSigs(sh).count())
-      val t1 = System.nanoTime()
-      val sig = ext.Dedup.materializePublic(s, ext.Dedup.minhashSigs(sh), "probe_sig")
-      println(f"PROBE materialize sig           ${(System.nanoTime() - t1) / 1e9}%8.2f s")
     }
     if (args.contains("stream-live")) {
       // live-run wall cost of every streaming operator and the composed
@@ -338,66 +325,6 @@ object Probe {
           .parquet(util.Scratch.dir("live_members") + "/t")
       }
     }
-    if (args.contains("cdf-narrow")) {
-      // Round-11 verdict ask #6: q_table_changes' fixture UPDATE matches
-      // rows in EVERY file, so its sf10 ratio measures the worst case
-      // only. This probe pins the pruned path on the same corpus: an
-      // UPDATE whose predicate lands inside one range band must rewrite
-      // O(1) files (zone-map findTouchedFiles), and the change feed over
-      // that commit must scan O(touched) — against the broad-update
-      // contrast on the identical table.
-      import graft.lake.{ManifestTable, ZoneMap}
-      val dir = util.Scratch.dir("cdf_narrow") + "/t"
-      val nFiles = 64
-      val o = sources.Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_custkey").as("c"), col("o_totalprice").as("p"))
-      t("cdf table build")( {
-        ZoneMap.commitWithStats(o.repartitionByRange(nFiles, col("k")),
-          dir, 20250701, 900, statsCols = Seq("k"))
-        ManifestTable.readLatest(s, dir).count()
-      })
-      val ext = spark.GraftDml.extSession(s)
-      ext.sql(s"""CREATE OR REPLACE TEMPORARY VIEW cdfn
-                 |USING graft OPTIONS (path '$dir', runDate '20250701',
-                 |runTime '1000')""".stripMargin)
-      // bounds from ACTUAL keys (keys are gappy — TPC-H orderkeys plus
-      // make-scale offsets — so an arithmetic mid-band guess can match
-      // zero rows and commit nothing): ~500 keys inside the lowest band
-      val smalls = o.select(col("k")).orderBy(col("k")).limit(1501)
-        .collect().map(_.getAs[Number](0).longValue())
-      val (lo, hi) = (smalls(1000), smalls(1500))
-      def filesOf(v: Int) = ManifestTable.snapshots(s, dir)
-        .find(_.version == v).get.files.toSet
-      t("narrow UPDATE (1 band)")( {
-        // >=/<= rather than BETWEEN: Spark 4 rewrites BETWEEN through a
-        // `With` common-expression the relocated DML predicate can't host
-        ext.sql(s"UPDATE cdfn SET p = p + 1 WHERE k >= $lo AND k <= $hi")
-        val touched = filesOf(1) -- filesOf(2)
-        println(s"PROBE   narrow touched ${touched.size}/$nFiles input files, " +
-          s"staged ${(filesOf(2) -- filesOf(1)).size}")
-        touched.size.toLong
-      })
-      t("narrow feed (v1->v2)")( {
-        val f = ext.sql(s"SELECT * FROM table_changes('$dir', 1, 2, 'k')")
-        val n = f.count()
-        println(s"PROBE   narrow feed scanned ${f.inputFiles.length} files")
-        n
-      })
-      t("broad UPDATE (all bands)")( {
-        ext.sql("UPDATE cdfn SET p = p + 1 WHERE c % 100 = 0")
-        val touched = filesOf(2) -- filesOf(3)
-        println(s"PROBE   broad touched ${touched.size}/$nFiles input files, " +
-          s"staged ${(filesOf(3) -- filesOf(2)).size}")
-        touched.size.toLong
-      })
-      t("broad feed (v2->v3)")( {
-        val f = ext.sql(s"SELECT * FROM table_changes('$dir', 2, 3, 'k')")
-        val n = f.count()
-        println(s"PROBE   broad feed scanned ${f.inputFiles.length} files")
-        n
-      })
-      s.stop(); return
-    }
     if (args.contains("plans")) {
       // plan-capture mode (round-13 optimization deliverable): write each
       // query's explain("formatted") to plans/<dir>/<query>_<suffix>.txt.
@@ -406,10 +333,8 @@ object Probe {
       val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r13")
       val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "before")
       new java.io.File(outDir).mkdirs()
-      val names = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "")
-        .split(",").map(_.trim).filter(_.nonEmpty)
-      names.foreach { q =>
-        val df = SparkEntry.queries(q)(s, d)
+      Harness.selected.foreach { case (q, fn) =>
+        val df = fn(s, d)
         df.collect()
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

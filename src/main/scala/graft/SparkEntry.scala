@@ -16,99 +16,56 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_snapshot_diff")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Core.queries ++ ext.Relational.queries ++ ml.GenderQueries.queries ++
-      ext.TextAnalysis.queries ++ ext.Dedup.queries ++ ext.Similarity.queries ++
-      ext.Multimodal.queries ++ streaming.StreamDiff.queries ++
-      streaming.Sessionize.queries ++ sources.Ingest.queries ++
-      ops.AsofJoin.queries ++ streaming.WindowAgg.queries ++
-      ops.SkewJoin.queries ++ streaming.StreamDedup.queries ++
-      ops.Formats.queries ++ ops.RangeJoin.queries ++
-      streaming.StreamJoin.queries ++ lake.Merge.queries ++
-      lake.Compact.queries ++ ext.Profile.queries ++
-      ext.Clusters.queries ++ ext.Split.queries ++
-      ops.BloomJoin.queries ++ ext.EventAnalytics.queries ++
-      lake.ManifestTable.queries ++ pipeline.PipelineQueries.queries ++
-      ext.Scrub.queries ++ ext.Packing.queries ++ ext.Quantize.queries ++
-      lake.IncrementalAgg.queries ++ lake.ZOrder.queries ++
-      streaming.StreamIncrAgg.queries ++ ext.Repetition.queries ++
-      ext.Decontam.queries ++ lake.History.queries ++ ext.TimeSeries.queries ++
-      ext.Temperature.queries ++ lake.ZoneMap.queries ++
-      streaming.StreamJdbc.queries ++ ext.PageRank.queries ++
-      lake.Evolution.queries ++ lake.Vacuum.queries ++ ext.SkewStats.queries ++
-      streaming.StreamEnrich.queries ++ lake.DeleteVectors.queries ++
-      ops.FuzzyJoin.queries ++ ext.Search.queries ++ ext.LangModel.queries ++
-      lake.TableDiff.queries ++ lake.ChangeFeed.queries ++
-      lake.Expectations.queries ++ ops.DenseId.queries ++ ops.JaroJoin.queries ++
-      functions.TopKAgg.queries ++ lake.BloomIndex.queries ++ ext.Sketches.queries ++ ext.Bpe.queries ++ ext.Outliers.queries ++ ext.Triangles.queries ++ lake.IncrJoinView.queries ++
-      streaming.StreamOuterJoin.queries ++ ext.FreqPairs.queries ++
-      lake.Branches.queries ++ lake.Catalog.queries ++
-      lake.HiddenPartition.queries ++ streaming.StreamCatalog.queries ++
-      lake.ColumnMap.queries ++ ext.KMeans.queries ++ sources.JdbcIncr.queries ++
-      _root_.graft.spark.GraftFormat.queries ++ _root_.graft.spark.GraftStream.queries ++
-      _root_.graft.spark.GraftSink.queries ++ lake.Restore.queries ++
-      lake.CopyInto.queries ++ lake.Identity.queries ++ sinks.Jdbc.queries ++
-      ext.Url.queries ++ sources.Warc.queries ++ ext.DedupIncr.queries ++
-      ext.Html.queries ++ ops.Avro.queries ++ ext.Drift.queries ++
-      ext.Integrity.queries ++ ext.KCore.queries ++ ops.Skyline.queries ++
-      lake.MetaTables.queries ++ lake.RecordIndex.queries ++
-      lake.ResultCache.queries ++ streaming.StreamScd2.queries ++
-      lake.ReplaceWhere.queries ++ ext.Pq.queries ++ ext.IvfPq.queries ++
-      spark.GraftDml.queries ++ spark.GraftSqlQueries.queries ++
-      spark.GraftTableFunctions.queries ++ lake.OptimizedWrite.queries ++
-      ext.WeightedSample.queries ++ ext.SemDedup.queries ++ ext.QualityClassifier.queries ++ ext.BinaryQuant.queries ++ lake.RowTracking.queries ++ lake.Wap.queries ++ ext.Curriculum.queries ++
-      ext.Anonymity.queries ++ ext.Chat.queries ++ ext.Mixture.queries ++
-      ext.Selection.queries ++ ext.ReleaseDiff.queries ++
-      ext.ReleaseYield.queries
-      // (q_format_files rides graft.spark.GraftFormat.queries)
-      // (q_commit_guard rides lake.Expectations.queries, already included)
+  /** Every query module, each listed once. One entry per implemented
+    * operator from SURVEY.md §2 comes from these modules' `queries`.
+    */
+  val modules: Seq[QueryModule] = Seq(
+    ops.Core, ext.Relational, ml.GenderQueries, ext.TextAnalysis, ext.Dedup,
+    ext.Similarity, ext.Multimodal, streaming.StreamDiff,
+    streaming.Sessionize, sources.Ingest, ops.AsofJoin, streaming.WindowAgg,
+    ops.SkewJoin, streaming.StreamDedup, ops.Formats, ops.RangeJoin,
+    streaming.StreamJoin, lake.Merge, lake.Compact, ext.Profile,
+    ext.Clusters, ext.Split, ops.BloomJoin, ext.EventAnalytics,
+    lake.ManifestTable, pipeline.PipelineQueries, ext.Scrub, ext.Packing,
+    ext.Quantize, lake.IncrementalAgg, lake.ZOrder, streaming.StreamIncrAgg,
+    ext.Repetition, ext.Decontam, lake.History, ext.TimeSeries,
+    ext.Temperature, lake.ZoneMap, streaming.StreamJdbc, ext.PageRank,
+    lake.Evolution, lake.Vacuum, ext.SkewStats, streaming.StreamEnrich,
+    lake.DeleteVectors, ops.FuzzyJoin, ext.Search, ext.LangModel,
+    lake.TableDiff, lake.ChangeFeed, lake.Expectations, ops.DenseId,
+    ops.JaroJoin, functions.TopKAgg, lake.BloomIndex, ext.Sketches, ext.Bpe,
+    ext.Outliers, ext.Triangles, lake.IncrJoinView,
+    streaming.StreamOuterJoin, ext.FreqPairs, lake.Branches, lake.Catalog,
+    lake.HiddenPartition, streaming.StreamCatalog, lake.ColumnMap,
+    ext.KMeans, sources.JdbcIncr, spark.GraftFormat, spark.GraftStream,
+    spark.GraftSink, lake.Restore, lake.CopyInto, lake.Identity, sinks.Jdbc,
+    ext.Url, sources.Warc, ext.DedupIncr, ext.Html, ops.Avro, ext.Drift,
+    ext.Integrity, ext.KCore, ops.Skyline, lake.MetaTables,
+    lake.RecordIndex, lake.ResultCache, streaming.StreamScd2,
+    lake.ReplaceWhere, ext.Pq, ext.IvfPq, spark.GraftDml,
+    spark.GraftSqlQueries, spark.GraftTableFunctions, lake.OptimizedWrite,
+    ext.WeightedSample, ext.SemDedup, ext.QualityClassifier,
+    ext.BinaryQuant, lake.RowTracking, lake.Wap, ext.Curriculum,
+    ext.Anonymity, ext.Chat, ext.Mixture, ext.Selection, ext.ReleaseDiff,
+    ext.ReleaseYield)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    register(modules.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check.
     */
-  def oracleSql: Map[String, String] =
-    ops.Core.oracles ++ ext.Relational.oracles ++ ml.GenderQueries.oracles ++
-      ext.TextAnalysis.oracles ++ ext.Dedup.oracles ++ ext.Similarity.oracles ++
-      ext.Multimodal.oracles ++ streaming.StreamDiff.oracles ++
-      streaming.Sessionize.oracles ++ sources.Ingest.oracles ++
-      ops.AsofJoin.oracles ++ streaming.WindowAgg.oracles ++
-      ops.SkewJoin.oracles ++ streaming.StreamDedup.oracles ++
-      ops.Formats.oracles ++ ops.RangeJoin.oracles ++
-      streaming.StreamJoin.oracles ++ lake.Merge.oracles ++
-      lake.Compact.oracles ++ ext.Profile.oracles ++
-      ext.Clusters.oracles ++ ext.Split.oracles ++
-      ops.BloomJoin.oracles ++ ext.EventAnalytics.oracles ++
-      lake.ManifestTable.oracles ++ pipeline.PipelineQueries.oracles ++
-      ext.Scrub.oracles ++ ext.Packing.oracles ++ ext.Quantize.oracles ++
-      lake.IncrementalAgg.oracles ++ lake.ZOrder.oracles ++
-      streaming.StreamIncrAgg.oracles ++ ext.Repetition.oracles ++
-      ext.Decontam.oracles ++ lake.History.oracles ++ ext.TimeSeries.oracles ++
-      ext.Temperature.oracles ++ lake.ZoneMap.oracles ++
-      streaming.StreamJdbc.oracles ++ ext.PageRank.oracles ++
-      lake.Evolution.oracles ++ lake.Vacuum.oracles ++ ext.SkewStats.oracles ++
-      streaming.StreamEnrich.oracles ++ lake.DeleteVectors.oracles ++
-      ops.FuzzyJoin.oracles ++ ext.Search.oracles ++ ext.LangModel.oracles ++
-      lake.TableDiff.oracles ++ lake.ChangeFeed.oracles ++
-      lake.Expectations.oracles ++ ops.DenseId.oracles ++ ops.JaroJoin.oracles ++
-      functions.TopKAgg.oracles ++ lake.BloomIndex.oracles ++ ext.Sketches.oracles ++ ext.Bpe.oracles ++ ext.Outliers.oracles ++ ext.Triangles.oracles ++ lake.IncrJoinView.oracles ++
-      streaming.StreamOuterJoin.oracles ++ ext.FreqPairs.oracles ++
-      lake.Branches.oracles ++ lake.Catalog.oracles ++
-      lake.HiddenPartition.oracles ++ streaming.StreamCatalog.oracles ++
-      lake.ColumnMap.oracles ++ ext.KMeans.oracles ++ sources.JdbcIncr.oracles ++
-      _root_.graft.spark.GraftFormat.oracles ++ _root_.graft.spark.GraftStream.oracles ++
-      _root_.graft.spark.GraftSink.oracles ++ lake.Restore.oracles ++
-      lake.CopyInto.oracles ++ lake.Identity.oracles ++ sinks.Jdbc.oracles ++
-      ext.Url.oracles ++ sources.Warc.oracles ++ ext.DedupIncr.oracles ++
-      ext.Html.oracles ++ ops.Avro.oracles ++ ext.Drift.oracles ++
-      ext.Integrity.oracles ++ ext.KCore.oracles ++ ops.Skyline.oracles ++
-      lake.MetaTables.oracles ++ lake.RecordIndex.oracles ++
-      lake.ResultCache.oracles ++ streaming.StreamScd2.oracles ++
-      lake.ReplaceWhere.oracles ++ ext.Pq.oracles ++ ext.IvfPq.oracles ++
-      spark.GraftDml.oracles ++ spark.GraftSqlQueries.oracles ++
-      spark.GraftTableFunctions.oracles ++ lake.OptimizedWrite.oracles ++
-      ext.WeightedSample.oracles ++ ext.SemDedup.oracles ++ ext.QualityClassifier.oracles ++ ext.BinaryQuant.oracles ++ lake.RowTracking.oracles ++ lake.Wap.oracles ++ ext.Curriculum.oracles ++
-      ext.Anonymity.oracles ++ ext.Chat.oracles ++ ext.Mixture.oracles ++
-      ext.Selection.oracles ++ ext.ReleaseDiff.oracles ++
-      ext.ReleaseYield.oracles
+  lazy val oracleSql: Map[String, String] = register(modules.map(_.oracles))
+
+  /** Union of the modules' maps; a name two modules both register is an
+    * error rather than a silent last-one-wins.
+    */
+  private[graft] def register[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect {
+      case (k, ks) if ks.size > 1 => k
+    }
+    require(dups.isEmpty,
+      s"registered by more than one module: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.flatten.toMap
+  }
 }

@@ -1,44 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected query's result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: `Verify <sfDir> <outDir>`; `SPARK_GRAFT_QUERIES` picks a subset.
+  * Exits 1, naming the failed queries, when any query threw — after every
+  * other result and oracle_sql.json are written.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names — dev-only subset runs
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER: the multi-JVM smoke knob (round-10 verdict ask #1)
-    // — e.g. local-cluster[2,16,4096] runs executors as SEPARATE JVMs, the
-    // one mode where broadcast values, codegen'd expressions, and task
-    // closures must genuinely serialize. SPARK_GRAFT_JARS ships the
-    // application jar to those executor JVMs (local[*] needs neither).
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // nonEmpty guard: an empty value must not CLOBBER the spark.jars a
-    // spark-submit invocation already carries (see Bench — round-13 find)
-    val spark = sys.env.get("SPARK_GRAFT_JARS").filter(_.nonEmpty)
-      .fold(builder)(j => builder.config("spark.jars", j))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // silence FileStreamSink's per-glob-read WARN stack trace (see Bench)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val selected = Harness.selected
+    val failed = selected.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -57,5 +38,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${selected.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -37,9 +37,7 @@ import graft.sources.Tables
   * (username, full_name, gender) — exactly the quasi-identifier shape
   * this gate audits (`scripts/script_api_apify_to_spark.py:239`).
   */
-object Anonymity {
-  type Q = (SparkSession, String) => DataFrame
-
+object Anonymity extends graft.QueryModule {
   /** Minimum releasable class size. */
   val k = 3
 

@@ -30,7 +30,7 @@ import graft.sources.Tables
   * Composes with X7 IVF buckets for sub-linear probes: Hamming replaces
   * ADC inside each probed cluster.
   */
-object BinaryQuant {
+object BinaryQuant extends graft.QueryModule {
 
   /** Sign-pack an `array<float>` into `array<long>` words: dimension i
     * contributes bit `i % 64` of word `i / 64` iff its value > 0.
@@ -86,8 +86,6 @@ object BinaryQuant {
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Sign-pack the corpus, Hamming-rank the standard 8 query vectors —

@@ -38,7 +38,7 @@ import graft.sources.Tables._
   * chained CTEs with identical tie-breaks — a counting, argmax, or
   * application bug in any round cascades into every later round's hash.
   */
-object Bpe {
+object Bpe extends graft.QueryModule {
 
   /** Word-frequency table: lowercase whitespace tokens of `textCol`. */
   def wordFreq(docs: DataFrame, textCol: String): DataFrame =
@@ -89,8 +89,6 @@ object Bpe {
     base.unpersist()
     out.result()
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val Rounds = 6
 

@@ -30,9 +30,7 @@ import graft.sources.Tables
   * opposite of the X62 single-partition trap. Rendered examples are
   * turn-budget-bounded, so no row ever exceeds ~`maxTurns` turn strings.
   */
-object Chat {
-  type Q = (SparkSession, String) => DataFrame
-
+object Chat extends graft.QueryModule {
   /** Turn budget per rendered example (the context-window head). */
   val maxTurns = 12
 

@@ -33,9 +33,7 @@ import graft.sources.Tables
   * storage (blocks / parquet) backs the result — the caller owns
   * deleting `dir` / letting the final blocks age out.
   */
-object Clusters {
-  type Q = (SparkSession, String) => DataFrame
-
+object Clusters extends graft.QueryModule {
   /** Connected components of the undirected edge list `edges` (long
     * columns `a`, `b`). Returns (node, label) with label = min node id
     * reachable; only nodes that appear in an edge are labeled.

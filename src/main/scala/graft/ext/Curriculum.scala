@@ -41,7 +41,7 @@ import graft.sources.Tables.documents
   * tier. Everything is exact integer / md5 arithmetic, so every schedule
   * position and triplet choice is DuckDB-replayable.
   */
-object Curriculum {
+object Curriculum extends graft.QueryModule {
 
   /** Fixed-width quality bins over the stopword-permille fluency proxy:
     * bin = min(9, permille div 25). Exact integers; empty docs land in
@@ -86,8 +86,6 @@ object Curriculum {
       df.withColumn("__sched", key), "__sched", 8, Seq(idCol))
     (out.withColumnRenamed("rid", "pos").drop("__sched"), n)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // X228: per-bin schedule block — membership (n_docs, sum_ids) pins

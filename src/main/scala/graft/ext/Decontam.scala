@@ -31,9 +31,7 @@ import graft.sources.Tables
   *
   * Reference scope: extension surface (builder prompt; SURVEY §2 X53).
   */
-object Decontam {
-  type Q = (SparkSession, String) => DataFrame
-
+object Decontam extends graft.QueryModule {
   /** N-gram order for overlap detection (see scaling note above). */
   val ngramN = 4
 

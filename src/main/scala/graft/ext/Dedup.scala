@@ -31,9 +31,7 @@ import graft.sources.Tables._
   * structure; exact dedup plants its own normalized copies because all
   * fixture texts are byte-distinct.
   */
-object Dedup {
-  type Q = (SparkSession, String) => DataFrame
-
+object Dedup extends graft.QueryModule {
   val shingleLen = 4
   val nHashes = 32
   val bandSize = 4 // → 8 bands of 4 hashes
@@ -115,9 +113,6 @@ object Dedup {
     * (Spark recomputes shared subplans per branch). At 100 TB the signature /
     * shingle table is a first-class materialized artifact anyway.
     */
-  private[graft] def materializePublic(s: SparkSession, df: DataFrame, tag: String): DataFrame =
-    materialize(s, df, tag)
-
   private def materialize(s: SparkSession, df: DataFrame, tag: String): DataFrame = {
     val tmp = graft.util.Scratch.dir(tag)
     df.write.mode("overwrite").parquet(tmp)

@@ -33,7 +33,7 @@ import graft.sources.Tables
   * `dup_of_corpus`) and the exact post-append state, both replayed by the
   * DuckDB oracle from the raw tables.
   */
-object DedupIncr {
+object DedupIncr extends graft.QueryModule {
 
   /** Normalized content fingerprint — E1's key (`q_dedup_exact`/
     * `q_dedup_doc_exact` use the same normalization, and the oracle
@@ -83,8 +83,6 @@ object DedupIncr {
     ManifestTable.appendRetrying(survivors, root, date, time)
     decided
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** The replayed two-step timeline, memoized per (JVM, sfDir): corpus =
     * docs with `doc_id % 3 != 2` (plus the state commit), batch = the

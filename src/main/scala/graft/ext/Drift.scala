@@ -35,9 +35,7 @@ import graft.sources.Tables._
   * pure per-token arithmetic, top-k by (score desc, token asc). The
   * corpus shuffles zero times.
   */
-object Drift {
-  type Q = (SparkSession, String) => DataFrame
-
+object Drift extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Slices: even vs odd doc_id (two deterministic interleaved
     // "snapshots" of the same corpus — drift ranking mechanics and the

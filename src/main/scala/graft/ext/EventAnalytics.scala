@@ -21,9 +21,7 @@ import graft.sources.Tables.events
   * over (cohort, week, user) after a wide join, shuffles the event log
   * twice).
   */
-object EventAnalytics {
-  type Q = (SparkSession, String) => DataFrame
-
+object EventAnalytics extends graft.QueryModule {
   val funnelSteps: Seq[String] = Seq("signup", "view", "click", "purchase")
 
   /** Per-user earliest completion time of each funnel step (strictly

@@ -29,7 +29,7 @@ import graft.sources.Tables
   * support threshold in its HAVING. At 100 TB both shuffles key on
   * basket id or pair — no driver state, no global window.
   */
-object FreqPairs {
+object FreqPairs extends graft.QueryModule {
 
   /** Pairs (u < v) co-occurring in ≥ `minSupport` baskets, each basket
     * truncated to its `maxBasket` smallest items. `baskets` must have
@@ -63,8 +63,6 @@ object FreqPairs {
       .agg(count(lit(1)).as("n_baskets"))
       .where(col("n_baskets") >= minSupport)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Parts co-purchased in ≥2 orders, baskets capped at 4 items — the

@@ -23,9 +23,7 @@ import graft.sources.Tables
   * zero shuffles; the corpus-wide extraction is embarrassingly parallel,
   * exactly like the production WET-generation pass it models.
   */
-object Html {
-
-  type Q = (SparkSession, String) => DataFrame
+object Html extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     "q_html_extract" -> ((s, d) => {

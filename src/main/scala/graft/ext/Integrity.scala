@@ -33,9 +33,7 @@ import graft.sources.Tables._
   * are broadcast-sized; at 100 TB the same plan runs as a shuffled hash
   * join on the key — still one pass over each child.
   */
-object Integrity {
-  type Q = (SparkSession, String) => DataFrame
-
+object Integrity extends graft.QueryModule {
   /** One audit row: child left-joins the parent key set, counting total,
     * orphans, and an orphan child-key checksum in a single aggregate.
     */

@@ -26,9 +26,7 @@ import graft.lake.{Catalog, ManifestTable}
   * and materialize compose unchanged because the codes live in the same
   * list files the tombstones target.
   */
-object IvfPq {
-  type Q = (SparkSession, String) => DataFrame
-
+object IvfPq extends graft.QueryModule {
   private def booksDf(s: SparkSession, books: Array[Array[Array[Long]]]): DataFrame = {
     val rows = for (i <- books.indices; c <- books(i).indices)
       yield Row(i, c, books(i)(c).toSeq)

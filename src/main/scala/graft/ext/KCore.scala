@@ -28,9 +28,7 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint` truncates per round exactly as
   * Clusters.connectedComponents documents.
   */
-object KCore {
-  type Q = (SparkSession, String) => DataFrame
-
+object KCore extends graft.QueryModule {
   /** Degrees over canonical undirected edges `(u, v)`. */
   private def degrees(edges: DataFrame): DataFrame =
     edges.select(col("u").as("node"))

@@ -32,7 +32,7 @@ import graft.sources.Tables
   * (tens); larger k would switch to a broadcast-join assign — same
   * contract, different physical plan.
   */
-object KMeans {
+object KMeans extends graft.QueryModule {
 
   /** `floor(x * 10000)` per element, as BIGINT — the shared quantizer. */
   def quantize(vec: Column): Column =
@@ -125,8 +125,6 @@ object KMeans {
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int): DataFrame =
     assignTo(df, vecCol, trainCentroids(df, idCol, vecCol, k, iters))
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // k=4, 2 update rounds + final assignment over the embeddings table;

@@ -27,7 +27,7 @@ import graft.sources.Tables
   * fewer than 2 tokens have no bigrams and are excluded (their quality
   * signal belongs to the X4/E4 length gates).
   */
-object LangModel {
+object LangModel extends graft.QueryModule {
 
   /** "w₁ w₂" bigram strings of the shared tokenization (empty below 2
     * tokens) — pure array expressions, no explode until the caller needs
@@ -188,8 +188,6 @@ object LangModel {
         expr("CAST(SUM(slot_permille) * MIN(raw_tot) " +
           "DIV (COUNT(*) * MIN(target_tot)) AS BIGINT)")
           .as("importance_permille"))
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Every bigram of every doc is in the model by construction (the

@@ -32,9 +32,7 @@ import graft.sources.Tables.documents
   * sources — pair fan-out per shingle is bounded by C(|sources|, 2),
   * and the corpus never joins itself.
   */
-object Mixture {
-  type Q = (SparkSession, String) => DataFrame
-
+object Mixture extends graft.QueryModule {
   /** Budget = `budgetNum`/`budgetDen` of total corpus tokens. */
   val budgetNum = 6
   val budgetDen = 10

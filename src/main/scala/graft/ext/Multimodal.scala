@@ -36,9 +36,7 @@ case class MediaFeatures(
   * feature extractor amortizes decoder init per PARTITION, exactly the
   * `mapPartitions` shape used here.
   */
-object Multimodal {
-  type Q = (SparkSession, String) => DataFrame
-
+object Multimodal extends graft.QueryModule {
   val frameBytes = 256
   val frameStep = 4
   val nStrides = 8

@@ -25,9 +25,7 @@ import graft.sources.Tables._
   * corpus never shuffles — the same two-pass-over-scan /
   * zero-shuffle shape as X68's LM scoring.
   */
-object Outliers {
-  type Q = (SparkSession, String) => DataFrame
-
+object Outliers extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Per event type: row count, 3σ outlier count, and the outlier
     // event_id checksum (membership pin, X35-style). Exact integer

@@ -29,9 +29,7 @@ import graft.sources.Tables
   * and X236 fill-in-the-middle (both pure per-row explode/arithmetic
   * over the shared tokenization — embarrassingly parallel at any scale).
   */
-object Packing {
-  type Q = (SparkSession, String) => DataFrame
-
+object Packing extends graft.QueryModule {
   /** Tokens per pack. Fixture-sized here; a real run passes its model's
     * context length — the plan shape is capacity-independent.
     */

@@ -36,9 +36,7 @@ import graft.sources.Tables
   * price of exactness — negligible against PageRank's own O(d^K)
   * iteration error.
   */
-object PageRank {
-  type Q = (SparkSession, String) => DataFrame
-
+object PageRank extends graft.QueryModule {
   val scale = 1000000000000L // 1e-12 rank units
   val dampingPct = 85L
   val iterations = 5

@@ -31,9 +31,7 @@ import graft.sources.Tables
   * PqSpec pins determinism, code-domain, compression, reconstruction
   * quality, and the recall floor against the exact oracle.
   */
-object Pq {
-  type Q = (SparkSession, String) => DataFrame
-
+object Pq extends graft.QueryModule {
   import KMeans.quantize
 
   /** subspaces × centroids-per-subspace for the embeddings fixture:

@@ -20,9 +20,7 @@ import graft.sources.Tables
   * `approx_count_distinct` when exactness isn't required (E5 covers the
   * sketch's contract).
   */
-object Profile {
-  type Q = (SparkSession, String) => DataFrame
-
+object Profile extends graft.QueryModule {
   /** Profile the given numeric/string columns of `df` in one aggregate
     * pass: (column, n_rows, n_null, n_distinct, min_s, max_s) — bounds
     * reported as strings so heterogeneous column types share one schema

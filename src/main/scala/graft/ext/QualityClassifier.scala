@@ -35,7 +35,7 @@ import graft.sources.Tables
   * tokens are contiguous in its partition), so the one shuffle carries
   * ~one row per document, not per token. No driver-side model state.
   */
-object QualityClassifier {
+object QualityClassifier extends graft.QueryModule {
 
   /** Per-token sign votes from a labeled corpus. `isPos` marks the
     * curated slice. Only tokens with ≥ `minCount` total occurrences
@@ -80,8 +80,6 @@ object QualityClassifier {
     docs.join(keyed, Seq("doc_id"))
       .withColumn("pass", col("n_pos") * 2 >= col("n_votes"))
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Curated slice = even-numbered sources; the classifier is trained on

@@ -20,9 +20,7 @@ import graft.sources.Tables
   * the hash pins cross-engine IEEE bit-agreement of the whole pipeline,
   * not just "roughly similar codes".
   */
-object Quantize {
-  type Q = (SparkSession, String) => DataFrame
-
+object Quantize extends graft.QueryModule {
   /** Per-vector max|x| (double); the quantization scale is maxAbs/127. */
   def maxAbs(emb: Column): Column =
     array_max(transform(emb, x => abs(x.cast("double"))))

@@ -22,9 +22,7 @@ import graft.util.Exact.{dsum, dsumRevenue}
   *  - `q_topk` compiles to TakeOrderedAndProject: per-partition top-k then a
   *    driver-side merge of k·partitions rows, never a global sort.
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // E7: grouped aggregation (TPC-H Q1 shape).
     "q_group_agg" -> ((s, d) =>

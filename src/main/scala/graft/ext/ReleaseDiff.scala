@@ -24,9 +24,7 @@ import graft.sources.Tables.documents
   * shuffles (hash early, join on slim columns); the card is a combinable
   * per-source rollup of join-tagged rows.
   */
-object ReleaseDiff {
-  type Q = (SparkSession, String) => DataFrame
-
+object ReleaseDiff extends graft.QueryModule {
   /** Release-B revision rules, keyed on `md5("rel:" || doc_id) mod 10`:
     * 0 → dropped; 1,2 → text edited (a revision suffix); 3 → an added
     * fresh document (id + max(doc_id)+1, same source, derived text); else

@@ -37,9 +37,7 @@ import graft.sources.Tables.documents
   * upstream), and the two prefix structures ride the per-corpus cache
   * like X240's.
   */
-object ReleaseYield {
-  type Q = (SparkSession, String) => DataFrame
-
+object ReleaseYield extends graft.QueryModule {
   /** Per-corpus prefix structures for the budget and packing stages —
     * pure functions of the immutable corpus, like Selection's.
     */

@@ -30,9 +30,7 @@ import graft.sources.Tables
   * this is part of the mandated LLM-training-data extension surface
   * (builder prompt; SURVEY §2 X52).
   */
-object Repetition {
-  type Q = (SparkSession, String) => DataFrame
-
+object Repetition extends graft.QueryModule {
   /** Gopher-ish gate thresholds (fractions in [0,1]). */
   val maxDupWordFrac = 0.30
   val maxDup2GramFrac = 0.20

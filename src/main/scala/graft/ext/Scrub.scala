@@ -16,9 +16,7 @@ import graft.sources.Tables
   * through the native codegen'd [[graft.functions.NfcNormalize]]
   * expression rather than a boxed Scala UDF.
   */
-object Scrub {
-  type Q = (SparkSession, String) => DataFrame
-
+object Scrub extends graft.QueryModule {
   /** Redaction patterns: deliberately RE2-compatible (no lookaround, no
     * backrefs) so the DuckDB oracle applies the IDENTICAL pattern text —
     * engine-dialect parity is part of what the hash pins.

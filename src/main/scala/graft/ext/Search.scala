@@ -24,7 +24,7 @@ import graft.sources.Tables
   * signal to re-chunk postings by doc-id range (the Lucene segment
   * shape), which this layout admits without semantic change.
   */
-object Search {
+object Search extends graft.QueryModule {
 
   /** `term → (df, sorted postings)` over the documents' distinct terms. */
   def invertedIndex(docs: DataFrame): DataFrame =
@@ -58,8 +58,6 @@ object Search {
     * intersection, selective enough that the AND bites.
     */
   val queryTerms: Seq[String] = Seq("spark", "vector", "sort")
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Index materialized once (the build is FixtureCache'd like the E2

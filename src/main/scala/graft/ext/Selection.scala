@@ -25,9 +25,7 @@ import graft.sources.Tables.documents
   * back. One slim-frame pass, bucket-parallel everywhere; the budget
   * itself falls out of the offsets pass for free.
   */
-object Selection {
-  type Q = (SparkSession, String) => DataFrame
-
+object Selection extends graft.QueryModule {
   /** Keep the top `budgetNum`/`budgetDen` of corpus tokens. */
   val budgetNum = 4
   val budgetDen = 10

@@ -31,7 +31,7 @@ import graft.sources.Tables
   * codegen, the assignment memoized as a committed artifact exactly like
   * X115's (Lloyd's is the INPUT here; q_kmeans times that).
   */
-object SemDedup {
+object SemDedup extends graft.QueryModule {
 
   /** τ²·10⁴ for τ = 0.95 — the similarity threshold as an exact
     * integer.
@@ -89,8 +89,6 @@ object SemDedup {
     e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       .unionByName(copies)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // X191: planted duplicates drop, distinct-direction vectors survive;

@@ -24,9 +24,7 @@ import graft.sources.Tables._
   *    be written partitioned by bucket so probes prune to single partitions.
   *    Recall is property-tested against the exact tier (SimilaritySpec).
   */
-object Similarity {
-  type Q = (SparkSession, String) => DataFrame
-
+object Similarity extends graft.QueryModule {
   val k = 5
   val nQueries = 8
   val nPlanes = 6

@@ -32,9 +32,7 @@ import graft.sources.Tables._
   *    standard error at default lgK=12), like E5.
   *  - The EXACT count rides along for the value-level hash compare.
   */
-object Sketches {
-  type Q = (SparkSession, String) => DataFrame
-
+object Sketches extends graft.QueryModule {
   /** Count-min sketch (X90) parameters: d independent md5-derived hash
     * rows × w buckets. Every hash is a pure deterministic function of
     * (row index, key), so unlike most sketches the WHOLE structure — and

@@ -17,9 +17,7 @@ import graft.sources.Tables
   * single-partition WindowExec appears anywhere in the plan. `frac` is
   * one exact-integer division, IEEE-bit-identical to the oracle.
   */
-object SkewStats {
-  type Q = (SparkSession, String) => DataFrame
-
+object SkewStats extends graft.QueryModule {
   /** Top `k` keys of `df` by frequency with their share of all rows.
     *
     * Scale shape: the distinct-key set can be huge (every user/url in

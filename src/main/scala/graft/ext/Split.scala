@@ -19,9 +19,7 @@ import graft.sources.Tables
   * chain), no shuffle, no driver state — embarrassingly parallel at any
   * scale.
   */
-object Split {
-  type Q = (SparkSession, String) => DataFrame
-
+object Split extends graft.QueryModule {
   /** Bucket in [0, 100) as a pure function of the key's string form. */
   def hashBucket(key: Column): Column =
     pmod(conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long"), lit(100))

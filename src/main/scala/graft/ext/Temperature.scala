@@ -26,9 +26,7 @@ import graft.sources.Tables
   * identical documents. The corpus side never shuffles except the final
   * vocab-sized report aggregate.
   */
-object Temperature {
-  type Q = (SparkSession, String) => DataFrame
-
+object Temperature extends graft.QueryModule {
   /** md5-derived uniform in [0,1): first 8 hex chars / 2^32 (exact). */
   def hashUniform(key: Column): Column =
     conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("double") /

@@ -17,9 +17,7 @@ import graft.sources.Tables._
   * Counts are cast to BIGINT to match DuckDB's `len()`/`count(*)` types in
   * the oracle's schema compare.
   */
-object TextAnalysis {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextAnalysis extends graft.QueryModule {
   /** Lowercased whitespace tokens with empties dropped — the shared
     * tokenizer; mirrored in SQL as
     * `list_filter(string_split_regex(lower(text),'\s+'), t -> t <> '')`.

@@ -28,9 +28,7 @@ import graft.util.Exact.dsum
   * The LOCF picks an already-exact value (no FP arithmetic), so results
   * are bit-identical to the oracle.
   */
-object TimeSeries {
-  type Q = (SparkSession, String) => DataFrame
-
+object TimeSeries extends graft.QueryModule {
   /** Dense (user_id, day) grid over each user's active span with
     * `n_events`, `is_gap`, and LOCF-filled `filled_value`.
     */

@@ -31,7 +31,7 @@ import graft.sources.Tables
   * orientation-independent, so the DuckDB oracle can enumerate triangles
   * the naive way (id-ordered u<v<w three-way join) and must agree exactly.
   */
-object Triangles {
+object Triangles extends graft.QueryModule {
 
   /** Per-node triangle counts over canonical undirected `(u, v)` edges
     * (u < v, distinct). Nodes in no triangle are absent.
@@ -123,8 +123,6 @@ object Triangles {
   def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
     cappedEdges(Tables.lineitem(s, d).where(col("l_partkey") % 2 === 0)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct())
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // The edge list is referenced three times (degrees, wedges ×2,

@@ -26,7 +26,7 @@ import graft.sources.Tables
   * plain string ops and must agree on distinct counts and exemplar
   * values — a full functional twin, not a rows-only check.
   */
-object Url {
+object Url extends graft.QueryModule {
 
   /** The deterministic messy-URL fixture. The PAGE a url denotes is
     * keyed on `doc_id % 25` (so ~25 docs share each page per residue
@@ -57,8 +57,6 @@ object Url {
       queryRaw,
       when(d % 7 === 0, lit("#Sec2")).otherwise(lit("")))
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** The canonical HOST of a url: lowercased authority, port stripped —
     * derived from [[UrlCanon.url_canon]] so host extraction and dedup

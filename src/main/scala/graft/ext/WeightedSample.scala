@@ -32,7 +32,7 @@ import graft.sources.Tables
   * window (the X62 rule); τ is a one-row driver sync on an
   * already-n-sized frame.
   */
-object WeightedSample {
+object WeightedSample extends graft.QueryModule {
 
   private val Two40 = 1099511627776.0 // 2^40, exact in a double
 
@@ -66,8 +66,6 @@ object WeightedSample {
         greatest(col(weightCol).cast("double"), lit(tau)))
       .drop("__q")
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // X190: 200 documents sampled token-mass-proportionally; the oracle

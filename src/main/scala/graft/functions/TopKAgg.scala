@@ -133,7 +133,7 @@ case class TopKByCount(
 }
 
 /** DataFrame entry point + the SURVEY §2 query for [[TopKByCount]]. */
-object TopKAgg {
+object TopKAgg extends graft.QueryModule {
 
   /** `topk_by_count(values, k)` aggregate column: `array<struct<item,
     * cnt>>` of the k most frequent values, count desc then value asc.
@@ -141,8 +141,6 @@ object TopKAgg {
   def topKByCount(values: Column, k: Int): Column =
     GraftShim.column(
       TopKByCount(GraftShim.expression(values), k).toAggregateExpression())
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Top-3 order priorities per customer nation, one aggregation pass;

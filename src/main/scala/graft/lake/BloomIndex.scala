@@ -46,7 +46,7 @@ import graft.sources.Tables
   * data itself with the same type-normalized xxhash64 on both paths
   * (the X36 lesson: hash-normalize integrals to long before hashing).
   */
-object BloomIndex {
+object BloomIndex extends graft.QueryModule {
 
   /** One file's serialized Bloom filter for `column` (base64 in the
     * sidecar JSON; the bytes are `BloomFilter.writeTo` format, readable
@@ -170,8 +170,6 @@ object BloomIndex {
         graft.sources.Tables.cachedScan(spark, cand.map(f => s"$dir/$f"))).where(pred)
     }
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Time-clustered commit with a Bloom index on the primary key — the
     * layout/lookup mismatch zone maps can't prune.

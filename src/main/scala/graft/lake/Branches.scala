@@ -29,7 +29,7 @@ import graft.sources.Tables
   * ref lookup to X39's single-manifest read, and no operation here
   * touches data bytes.
   */
-object Branches {
+object Branches extends graft.QueryModule {
 
   case class Ref(name: String, kind: String, lineage: Seq[Int]) {
     def head: Int = lineage.last
@@ -257,8 +257,6 @@ object Branches {
     commitToBranch(merged, dir, target, date, time)
     readRef(spark, dir, target)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Timeline: main=v1 → branch exp → exp commits v2 → main commits v3 →
     * tag rel1 at v1. Reads through all three refs must reconstruct the

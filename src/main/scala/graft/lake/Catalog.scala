@@ -34,7 +34,7 @@ import org.json4s.jackson.JsonMethods
   * table commits themselves, and no data is ever rewritten to join or
   * leave a transaction.
   */
-object Catalog {
+object Catalog extends graft.QueryModule {
 
   /** A committed catalog version: a consistent cut across tables.
     * `epoch` marks cuts published by an exactly-once streaming writer
@@ -262,8 +262,6 @@ object Catalog {
     ResultCache.vacuum(spark, root)
     expired.map(_.version)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Timeline: tx1 writes a consistent pair (orders slice + lineitem
     * slice, both keyed `% 3 === 0`); tx2 replaces both with the wider

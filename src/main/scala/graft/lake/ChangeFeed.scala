@@ -33,7 +33,7 @@ import graft.util.Exact.dsum
   * content diff — and the materialize step still produces NO rows there:
   * compaction stays invisible to consumers.
   */
-object ChangeFeed {
+object ChangeFeed extends graft.QueryModule {
 
   /** Per-JVM cache of each committed step's tombstone-touched file lists
     * — metadata of immutable versions, safe to cache forever.
@@ -189,8 +189,6 @@ object ChangeFeed {
     if (parts.isEmpty) emptyStep(spark, dir, sNew) // no-op delete commit
     else parts.reduce(_ unionByName _)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Over the X64 fixture timeline (v1 full commit, v2/v3 delete commits,

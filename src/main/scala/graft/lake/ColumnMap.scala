@@ -44,7 +44,7 @@ import graft.util.{Exact, FixtureCache}
   * footer-merged schema union (`mergeSchema` — metadata, no row reading)
   * plus a per-column alias projection that Catalyst folds into the scan.
   */
-object ColumnMap {
+object ColumnMap extends graft.QueryModule {
 
   /** One mapped column. `dtype` is the Spark DDL type string, used to
     * type the NULL projection for files written before the field existed.
@@ -395,8 +395,6 @@ object ColumnMap {
       groups.values.map(project).reduce(_ unionByName _)
     }
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** The X110 timeline fixture (create → rename → append → drop → re-add
     * → append), shared with the datasource's mapped-read query.

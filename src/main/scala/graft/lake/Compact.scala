@@ -20,9 +20,7 @@ import graft.sources.Tables
   * [[Layout.overwriteSnapshot]]). Row content is untouched; the
   * rows-identical contract is oracle-checked by `q_compact_roundtrip`.
   */
-object Compact {
-  type Q = (SparkSession, String) => DataFrame
-
+object Compact extends graft.QueryModule {
   /** On-disk bytes of a parquet directory from the file listing only —
     * via the Hadoop FileSystem API, so s3a/hdfs/gs paths work exactly
     * like local ones (every other lake op goes through Spark's FS too).

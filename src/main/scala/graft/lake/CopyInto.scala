@@ -31,7 +31,7 @@ import graft.util.{Exact, FixtureCache, Scratch}
   * increment (never the cumulative history), and the landing listing is
   * the only O(landing) step — the ingest reads only the new files.
   */
-object CopyInto {
+object CopyInto extends graft.QueryModule {
 
   private def copyDir(dir: String) = s"$dir/_copy"
   private def sideName(version: Int) = f"v$version%08d.json"
@@ -145,8 +145,6 @@ object CopyInto {
     }
     None // unreachable
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Landing batch 1 (2 files), copy; batch 2 lands BESIDE the already-

@@ -38,7 +38,7 @@ import graft.util.Exact.dsum
   * shuffle of the data side. A tombstone set too big to broadcast is the
   * signal to [[materialize]] (exactly the heuristic Delta applies).
   */
-object DeleteVectors {
+object DeleteVectors extends graft.QueryModule {
 
   /** The manifest-relative path of each scanned row's file: everything
     * after the TABLE ROOT in the `_metadata.file_path` URI. Computed by
@@ -186,8 +186,6 @@ object DeleteVectors {
       op = "materialize")
     version
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Shared X64/X75 fixture timeline (built once per JVM): v1 full commit
     * of orders across 8 files, v2/v3 cumulative delete commits, v4

@@ -28,7 +28,7 @@ import graft.util.Exact.dsum
   * stage, no shuffle. Reading N versions costs N scans by definition —
   * it's a history read, not a snapshot read.
   */
-object Evolution {
+object Evolution extends graft.QueryModule {
 
   /** Widen `a` and `b` to their least common type, or None if they
     * conflict.
@@ -154,8 +154,6 @@ object Evolution {
     spark.createDataFrame(rows).toDF("from_v", "to_v", "n_added",
       "n_removed", "n_widened", "n_broken", "verdict")
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Three commits with drifting schemas — v1 (key, qty int), v2 widens

@@ -22,7 +22,7 @@ import graft.sources.Tables
   * adds a column, not a pass. Rules are SQL boolean expressions, so they
   * stay inside whole-stage codegen.
   */
-object Expectations {
+object Expectations extends graft.QueryModule {
 
   /** A named row-level expectation: `predicate` must hold for every row
     * (violations are rows where it is false or NULL — NULL is a failure,
@@ -132,8 +132,6 @@ object Expectations {
       Catalog.readTable(spark, root, table).count(),
       Catalog.readTable(spark, root, s"${table}_quarantine").count())
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** The fixture rule set over orders: three holding expectations and one
     * deliberately violated by the data (shippriority-like status gate).

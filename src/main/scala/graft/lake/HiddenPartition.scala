@@ -33,7 +33,7 @@ import org.json4s.jackson.JsonMethods
   * monotone) — they fall back to row filtering within all partitions,
   * exactly Iceberg's behavior.
   */
-object HiddenPartition {
+object HiddenPartition extends graft.QueryModule {
 
   /** One declared transform; `param` is n for bucket, w for truncate. */
   case class Transform(col: String, kind: String, param: Long = 0) {
@@ -202,8 +202,6 @@ object HiddenPartition {
       .map { case (ts, gid) =>
         scanLayout(spark, s"$dir/g$gid/data", ts, preds, cachedSchema) }
       .reduce(_ unionByName _)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Events written under three transform layouts (`days(ts)`,
     * `bucket(8, user_id)`, `truncate(500, event_id)` — one transform per

@@ -24,9 +24,7 @@ import graft.sources.Tables
   * window. Runs are contiguous in the sort the window already performs;
   * no self-join, no driver state.
   */
-object History {
-  type Q = (SparkSession, String) => DataFrame
-
+object History extends graft.QueryModule {
   /** Collapse `df` into SCD2 intervals.
     *
     * @param key   entity column

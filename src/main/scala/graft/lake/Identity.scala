@@ -30,7 +30,7 @@ import graft.util.FixtureCache
   * history is SQL-reconstructible (the oracle's row_number twin).
   * `orderCol` must be unique per batch (X77's contract).
   */
-object Identity {
+object Identity extends graft.QueryModule {
 
   private def idDir(dir: String) = s"$dir/_identity"
   private def sideName(version: Int) = f"v$version%08d.json"
@@ -103,8 +103,6 @@ object Identity {
     }
     (-1, -1L) // unreachable
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Three appends in slice order: ids must come out globally

@@ -28,7 +28,7 @@ import graft.sources.Tables
   * key and the anti-join/union pair applies it exactly — this requires
   * fact rows unique on the projection, the usual MV key contract.
   */
-object IncrJoinView {
+object IncrJoinView extends graft.QueryModule {
 
   /** Bring the view at `viewDir` up to the fact table's latest version,
     * initializing it (one full join of fact v1) if absent. Returns the
@@ -59,8 +59,6 @@ object IncrJoinView {
     }
     factV
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   private val factCols =
     Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")

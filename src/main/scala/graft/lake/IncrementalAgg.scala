@@ -28,9 +28,7 @@ import graft.sources.Tables
   * oracle), not approximately-FP-equal. The double cast happens only at
   * the read boundary.
   */
-object IncrementalAgg {
-  type Q = (SparkSession, String) => DataFrame
-
+object IncrementalAgg extends graft.QueryModule {
   private val dec = DecimalType(18, 2)
 
   /** Aggregate one increment alone: combinable (count, decimal-sum) per key. */

@@ -51,7 +51,7 @@ import org.json4s.jackson.JsonMethods
   * safe: a manifest is either fully present or absent, and data files
   * are immutable once published.
   */
-object ManifestTable {
+object ManifestTable extends graft.QueryModule {
 
   /** `deletes` (X64) lists the version's deletion-vector sidecar files —
     * empty for ordinary full-snapshot commits, so pre-DV manifests parse
@@ -506,7 +506,7 @@ object ManifestTable {
   // reader an explicit schema. This removes the footer-inference Spark
   // job every `spark.read.parquet(files)` call otherwise launches; lake
   // queries that stack several version reads (change feeds, clones,
-  // time travel) were paying 5-15 such jobs per WARM run (JobAudit).
+  // time travel) were paying 5-15 such jobs per WARM run (`Probe jobs`).
   /** Memoize an arbitrary schema computation for one committed version —
     * used by the datasource's file index, whose merged-footer inference
     * otherwise costs a Spark job on every relation build. `kind` keys
@@ -554,8 +554,6 @@ object ManifestTable {
       .sortBy(s => (s.runDate, s.runTime, s.version))
       .lastOption
       .map(s => readVersion(spark, dir, s.version))
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Atomic visibility made observable: the fixture commits version 1

@@ -24,9 +24,7 @@ import graft.sources.Tables
   * and the usual deployment writes the result as a new snapshot partition
   * ([[Layout.overwriteSnapshot]]) so re-runs stay idempotent.
   */
-object Merge {
-  type Q = (SparkSession, String) => DataFrame
-
+object Merge extends graft.QueryModule {
   private val uMark = "__merge_upd_marker"
 
   /** Apply `updates` to `base` by `keys`. `updates` must carry every

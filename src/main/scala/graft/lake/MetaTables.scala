@@ -21,9 +21,7 @@ import org.apache.spark.sql.types._
   * inherit). Files without stats surface NULL rows/bounds — absence
   * degrades to "unknown", never to a wrong number (the X57 rule).
   */
-object MetaTables {
-  type Q = (SparkSession, String) => DataFrame
-
+object MetaTables extends graft.QueryModule {
   /** Shared fixture: an 8-file o_orderkey-range-clustered commit with
     * zone maps, then a DV delete of the %9 slice (≈11% MOR debt) —
     * used by `q_format_files` and the advisor's "clustered" table.

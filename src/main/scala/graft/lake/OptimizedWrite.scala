@@ -30,7 +30,7 @@ import graft.util.{Exact, FixtureCache}
   * caller's chosen commit surface exactly as before — optimized writes
   * change file GEOMETRY, never content or metadata semantics.
   */
-object OptimizedWrite {
+object OptimizedWrite extends graft.QueryModule {
 
   val DefaultTargetBytes: Long = 128L * 1024 * 1024
 
@@ -76,8 +76,6 @@ object OptimizedWrite {
       targetBytes: Long = DefaultTargetBytes): Int =
     ManifestTable.appendStagedRetrying(df.sparkSession, dir, date, time,
       staged(df, dir, targetBytes))
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Fixture: the same orders slice committed twice — a naive 48-task
     * write (48 tiny files) vs an optimized write (AQE rebalance to a

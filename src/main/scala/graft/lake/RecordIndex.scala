@@ -32,9 +32,7 @@ import graft.sources.Tables
   * tables the key is unique per version (enforced at build — duplicate
   * keys refuse, they would make "the" position ambiguous).
   */
-object RecordIndex {
-  type Q = (SparkSession, String) => DataFrame
-
+object RecordIndex extends graft.QueryModule {
   private def indexRel(version: Int) = f"_index/v$version%08d"
 
   /** Commit `df` as the next version with a record index on `keyCol`.

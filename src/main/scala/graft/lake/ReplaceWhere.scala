@@ -54,7 +54,7 @@ import graft.sources.Tables
   * refuses a lost race) — the daily-reload writer is one job by contract;
   * concurrent appends should retry around it like X96 writers.
   */
-object ReplaceWhere {
+object ReplaceWhere extends graft.QueryModule {
 
   /** The replaced scope: what the new batch claims and what may prune. */
   sealed trait Scope {
@@ -251,8 +251,6 @@ object ReplaceWhere {
       statsCols: Seq[String]): Int =
     replaceWhere(spark, dir, LongBand(column, lo, hi), newData, date, time,
       statsCols)
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Orders range-clustered on o_custkey; the middle custkey band is
     * reloaded with a recomputed batch (statuses force-closed, totals

@@ -23,7 +23,7 @@ import graft.util.{Exact, FixtureCache}
   * show WHEN the table was rolled back and to what content, rather than
   * the rollback masquerading as a fresh write.
   */
-object Restore {
+object Restore extends graft.QueryModule {
 
   /** Commit `toVersion`'s exact content as the NEW latest version.
     * Returns the committed version number.
@@ -52,8 +52,6 @@ object Restore {
     }
     -1 // unreachable
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // v1 = whole slice, v2 = a "bad" replace with only a third of it,

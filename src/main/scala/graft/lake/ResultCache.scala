@@ -24,9 +24,7 @@ import graft.sources.Tables
   * The cache stores result ROWS, not row order — callers re-impose
   * ordering after the read (the same contract as any parquet round-trip).
   */
-object ResultCache {
-  type Q = (SparkSession, String) => DataFrame
-
+object ResultCache extends graft.QueryModule {
   /** Serve `tag` from the cache under `root` if an entry exists for the
     * CURRENT versions of `inputs`; otherwise compute, store, and serve.
     */

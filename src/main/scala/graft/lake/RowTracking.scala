@@ -38,7 +38,7 @@ import graft.util.{Exact, FixtureCache}
   * before-commit hook (a crash between them is invisible: unreferenced
   * sidecar versions never resolve).
   */
-object RowTracking {
+object RowTracking extends graft.QueryModule {
 
   val RowId = "_row_id"
 
@@ -77,8 +77,6 @@ object RowTracking {
           v => Identity.writeSidecar(spark, dir, v, base + nNew))
     } finally ManifestTable.dropStaged(spark, dir, stagedB)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Tracked init (ids 1..N over the even keys), a full ZORDER

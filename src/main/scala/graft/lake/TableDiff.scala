@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * rows — multiplicity beyond presence is out of contract for
   * [[SnapshotDiff.diffNullSafe]] too.
   */
-object TableDiff {
+object TableDiff extends graft.QueryModule {
 
   private def bucketOf(keys: Seq[String], nBuckets: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets))
@@ -123,8 +123,6 @@ object TableDiff {
       latest.files ++ staged, deletes = delFiles, op = "repair")
     Some((version, bad))
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // The synth snapshot pair diffed via checksums: phase 1 flags the

@@ -32,7 +32,7 @@ import graft.util.Exact.dsum
   * Driver-side work is the manifest listing (tiny by design); data
   * deletion is one recursive remove per expired version.
   */
-object Vacuum {
+object Vacuum extends graft.QueryModule {
 
   private val DataDirRe = """v(\d{8})""".r
   private val StagedDirRe = """w[0-9a-f]{8}""".r
@@ -170,8 +170,6 @@ object Vacuum {
     }
     expired.map(_.version)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Three commits, retention of 2: v1 expires, v2/v3 survive byte-for-

@@ -36,7 +36,7 @@ import graft.sources.Tables
   *    staged table (X76's single-scan rule evaluation) and both ref
   *    operations are metadata-only JSON writes.
   */
-object Wap {
+object Wap extends graft.QueryModule {
 
   /** One WAP attempt's outcome: whether it published, the staged global
     * version (orphaned when unpublished), the per-rule violation counts,
@@ -66,8 +66,6 @@ object Wap {
     Outcome(green, staged, report,
       Branches.readRef(spark, dir, target).head)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Fixture: main = orders k%3=0 (v1) → WAP #1 stages main ∪ k%3=1
     * (clean → publishes) → WAP #2 stages main ∪ k%3=2 with every new

@@ -22,9 +22,7 @@ import graft.sources.Tables
   * min/max aggregate (driver-side scalars; at production scale, catalog
   * stats).
   */
-object ZOrder {
-  type Q = (SparkSession, String) => DataFrame
-
+object ZOrder extends graft.QueryModule {
   val bits = 16
 
   /** Bucket a numeric column to [0, 2^b) given its min/max. */

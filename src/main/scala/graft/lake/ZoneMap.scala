@@ -34,7 +34,7 @@ import graft.util.Exact.dsum
   * optimization, never a semantics change, which is exactly what
   * `q_stats_prune`'s plain-table oracle pins.
   */
-object ZoneMap {
+object ZoneMap extends graft.QueryModule {
 
   /** Per-file `[lo, hi]` ranges for the stat columns, plus the file's row
     * count (X69 stats-only aggregates) and string-typed bounds (X78 —
@@ -436,8 +436,6 @@ object ZoneMap {
         .where(col(column) >= lo && col(column) <= hi).count()
     (inside.map(_.rows).sum + boundary, straddle.size)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Fixture predicate: the middle fifth of the orderkey space. */
   private[lake] def keyBounds(s: SparkSession, d: String): (Long, Long) = {

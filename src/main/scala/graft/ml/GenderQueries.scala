@@ -7,9 +7,7 @@ import org.apache.spark.sql.functions._
   * profiles, each with the generated DuckDB oracle. The two tiers implement
   * the same function, so they share it.
   */
-object GenderQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object GenderQueries extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Tier 1: reference-shaped UDF → nested struct → flatten (reference
     // script_api_apify_to_spark.py:174-178).

@@ -31,7 +31,7 @@ import graft.sources.Tables._
   * (as `q_asof_join` does) — the same contract DuckDB's ASOF leaves
   * implementation-defined.
   */
-object AsofJoin {
+object AsofJoin extends graft.QueryModule {
 
   /** @param rightValues right-side columns to carry onto matched left rows
     * @param matchedTimeAlias output column holding the matched right time
@@ -73,8 +73,6 @@ object AsofJoin {
           col("_m._rt").as(matchedTimeAlias) :++
           rightValues.map(c => col(s"_m.$c").as(c)): _*)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // trades/quotes split of the orders table: every 3rd order is a

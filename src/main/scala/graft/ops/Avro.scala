@@ -41,9 +41,7 @@ import graft.util.Exact.dsum
   * parquet (`scripts/script_api_apify_to_spark.py:125-137,194`); Avro is
   * the missing streaming-edge format a production lake ingests from.
   */
-object Avro {
-  type Q = (SparkSession, String) => DataFrame
-
+object Avro extends graft.QueryModule {
   /** Avro schema for a Spark schema (supported: long/int/double/float/
     * boolean/string/binary/timestamp/timestamp_ntz/date; nullable →
     * union with null).

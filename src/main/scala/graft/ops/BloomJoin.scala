@@ -23,9 +23,7 @@ import graft.util.Exact.dsum
   * semi join). Driver traffic is the serialized filter only, same class
   * of payload as a broadcast hash table but orders of magnitude smaller.
   */
-object BloomJoin {
-  type Q = (SparkSession, String) => DataFrame
-
+object BloomJoin extends graft.QueryModule {
   /** Native distributed bloom build: one aggregate over the dim keys.
     * Returns the serialized filter (driver-held, like a broadcast var).
     * The caller must hash-normalize `key` to the same type the probe side

@@ -16,9 +16,7 @@ import graft.sources.Tables._
   * DECIMAL(18,2) accumulation and a final cast to double, which is exact and
   * bit-identical in Spark and DuckDB (see Rel.dsum).
   */
-object Core {
-  type Q = (SparkSession, String) => DataFrame
-
+object Core extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // S5: plain vectorized parquet scan, full row, deterministic order.
     "q_scan" -> ((s, d) =>

@@ -34,7 +34,7 @@ import graft.sources.Tables
   * truncated wide hashes and silently diverged from full-key order once
   * the id domain grew.
   */
-object DenseId {
+object DenseId extends graft.QueryModule {
 
   def assign(df: DataFrame, orderCol: String, parts: Int,
       tieCols: Seq[String] = Nil): DataFrame =
@@ -168,8 +168,6 @@ object DenseId {
         .otherwise(lit(rem) + expr(s"(rid - 1 - ${(q + 1) * rem}) DIV $q"))
         .cast("long") + 1)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Customer with a COLLISION-FREE composite sort key: cents-scaled
     * balance times a stride derived from `max(c_custkey) + 1`, plus the

@@ -18,9 +18,7 @@ import graft.util.Exact.dsum
   * ORC the columnar alternative — at 100 TB the engine's internal layers
   * stay columnar (parquet/ORC) and text formats appear only at the edges.
   */
-object Formats {
-  type Q = (SparkSession, String) => DataFrame
-
+object Formats extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     "q_format_roundtrip" -> ((s, d) => {
       // fixture scope: a deterministic eighth of orders. The contract is

@@ -31,7 +31,7 @@ import graft.sources.Tables
   * key space is optionally md5-compressed to fixed-width hashes to cut
   * shuffle bytes (`compactKeys`).
   */
-object FuzzyJoin {
+object FuzzyJoin extends graft.QueryModule {
 
   /** `{s} ∪ del1(s)` as a deduped array column — pure codegen'd
     * expressions, no UDF.
@@ -64,8 +64,6 @@ object FuzzyJoin {
       .withColumn("dist", levenshtein(col("a_str"), col("b_str")))
       .where(col("dist") <= 1)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Supplier-name self-join: every unordered pair of s_name values at

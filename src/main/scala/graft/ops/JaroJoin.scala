@@ -51,7 +51,7 @@ import graft.sources.Tables
   * recall-traded alternative. JaroJoinSpec pins losslessness
   * (blocked == brute force) on variable-length random strings.
   */
-object JaroJoin {
+object JaroJoin extends graft.QueryModule {
 
   /** `⌊log₂(length)⌋` bucket — the sound length blocking key for τ ≥ 0.9. */
   private def bucket(s: Column): Column =
@@ -267,8 +267,6 @@ object JaroJoin {
     (msTier ++ fbTier).reduce(_ unionByName _)
       .dropDuplicates("a_id", "b_id")
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Supplier-name self-join at τ=0.97: numeric-suffix variants under

@@ -21,9 +21,7 @@ import graft.util.Exact.dsum
   * on the bin key, and Catalyst still picks broadcast when one side is
   * small — PlanSpec pins the no-BNLJ/no-cartesian claim.
   */
-object RangeJoin {
-  type Q = (SparkSession, String) => DataFrame
-
+object RangeJoin extends graft.QueryModule {
   /** Exact floor(c / binWidth) for ANY long input: the division runs in
     * DECIMAL(38,0), never Double — long/long division in Spark is Double,
     * whose 53-bit mantissa silently mis-bins values ≥ 2^53 (epoch NANOS

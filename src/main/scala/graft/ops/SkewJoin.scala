@@ -22,7 +22,7 @@ import graft.util.Exact.dsum
   *     cost of a `salts`× replication of the build side — bounded and
   *     chosen by the caller.
   */
-object SkewJoin {
+object SkewJoin extends graft.QueryModule {
 
   /** @param salts sub-partitions per key; probe-side salt is a
     * deterministic hash of the whole row (no rand(), so retries and
@@ -36,8 +36,6 @@ object SkewJoin {
       explode(sequence(lit(0), lit(salts - 1))))
     p.join(b.hint("merge"), Seq(key, "_salt")).drop("_salt")
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // lineitem ⋈ supplier on suppkey: ~600 lineitems per supplier at

@@ -34,9 +34,7 @@ import graft.sources.Tables
   * on the range bucket. Output is the unique skyline set — fully
   * deterministic, no tie-break needed.
   */
-object Skyline {
-  type Q = (SparkSession, String) => DataFrame
-
+object Skyline extends graft.QueryModule {
   /** Skyline of `df` maximizing integer column `xCol` and numeric
     * `yCol`, bucket-parallel (no SinglePartition anywhere in the plan).
     * `parts <= 0` derives the bucket count from the cluster (floor 32, so

@@ -43,9 +43,7 @@ import graft.sources.Tables
   * whose current side is the day's two-run union (the DAG's glob over the
   * date's time subdirs), so matched keys drop against EITHER run's rows.
   */
-object PipelineQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object PipelineQueries extends graft.QueryModule {
   private val runs = Seq((1, 20250301, 1100), (2, 20250302, 900), (3, 20250302, 1000))
   private val accounts = Seq(("acct_a", 1), ("acct_b", 5))
 

@@ -21,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    at 100 TB. [[Jdbc.readPartitioned]] is the scale path: Spark issues
   *    `numPartitions` range-sliced queries in parallel.
   */
-object Jdbc {
+object Jdbc extends graft.QueryModule {
 
   /** Connection config. `driver` defaults to Postgres (the reference's
     * target, jar: `/root/reference/jars/postgresql-42.2.27.jar`) but any
@@ -249,8 +249,6 @@ object Jdbc {
       finally st.close()
     } finally conn.close()
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // X124: two atomic publishes — the second wholly replaces the first

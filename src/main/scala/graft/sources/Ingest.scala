@@ -38,7 +38,7 @@ import graft.lake.Layout.TableRef
   *  - S4's explicit-schema contract is a projection+cast at the end
   *    ([[toContract]]), so inference only ever touches the raw layer.
   */
-object Ingest {
+object Ingest extends graft.QueryModule {
 
   private lazy val http = HttpClient.newBuilder()
     .connectTimeout(Duration.ofSeconds(10))
@@ -109,8 +109,6 @@ object Ingest {
       (if (present(f.name)) col(f.name) else lit(null)).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** End-to-end ingest query for the correctness gate: build the three
     * payload shapes from fixture tables, land them verbatim under a raw

@@ -43,7 +43,7 @@ import graft.util.{Exact, FixtureCache}
   * (Spark's JDBC source ships filters), so the source does an index range
   * scan, not a full scan shipped over the wire.
   */
-object JdbcIncr {
+object JdbcIncr extends graft.QueryModule {
 
   private def ingestDir(dir: String) = s"$dir/_ingest"
   private def sideName(version: Int) = f"v$version%08d.json"
@@ -118,8 +118,6 @@ object JdbcIncr {
     }
     None // unreachable
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Seed a Derby source with the low half of orders, pull (full load),

@@ -43,7 +43,7 @@ case class WarcRec(
   * file, and 90k files saturate any cluster. Tasks ship only the
   * broadcast Hadoop conf; payload bytes stay executor-side.
   */
-object Warc {
+object Warc extends graft.QueryModule {
 
   val nFiles = 4
   private val CRLF = "\r\n"
@@ -270,8 +270,6 @@ object Warc {
       parse(fsf(f).open(new Path(f)), idx)
     }.toDF()
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // X147: full per-record readback — offsets, header fields, payload

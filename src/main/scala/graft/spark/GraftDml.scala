@@ -379,9 +379,7 @@ case class GraftMergeCommand(dir: String, params: Map[String, String],
   * read back via version time travel, so the oracle can rebuild every
   * intermediate state from raw orders.
   */
-object GraftDml {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraftDml extends graft.QueryModule {
   /** The extensions-built sibling session, one per JVM/SparkContext —
     * DML rides the analyzer rule, so a plain session cannot run it (the
     * spec pins that refusal).

@@ -655,9 +655,7 @@ class ManifestFileIndex(spark: SparkSession, dir: String,
 }
 
 /** Query/oracle surface for X113. */
-object GraftFormat {
-
-  type Q = (SparkSession, String) => DataFrame
+object GraftFormat extends graft.QueryModule {
 
   val queries: Map[String, Q] = Map(
     // v1 = full orders slice range-partitioned on o_orderkey with zone

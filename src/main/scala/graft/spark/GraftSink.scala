@@ -34,7 +34,7 @@ import graft.util.{Exact, FixtureCache, Scratch}
   * the source AND the sink of one structured-streaming pipeline, both
   * ends exactly-once off the same rename-as-commit.
   */
-object GraftSink {
+object GraftSink extends graft.QueryModule {
 
   private def streamDir(dir: String) = s"$dir/_stream"
   private def sideName(version: Int) = f"v$version%08d.json"
@@ -175,8 +175,6 @@ object GraftSink {
       }
     }
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // X116: the writer modes against the committed log, read back through

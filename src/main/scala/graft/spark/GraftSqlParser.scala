@@ -937,13 +937,11 @@ case class GraftCtasCommand(dir: String, orReplace: Boolean, query: String,
   * the `DESCRIBE HISTORY` ledger (deterministic because the statements
   * pin their commit stamps with `AT`).
   */
-object GraftSqlQueries {
+object GraftSqlQueries extends graft.QueryModule {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
   import graft.sources.Tables
   import graft.util.{Exact, FixtureCache}
-
-  type Q = (SparkSession, String) => DataFrame
 
   private def fixture(s: SparkSession, d: String): String =
     FixtureCache.dir("sql_maint", d) { dir =>

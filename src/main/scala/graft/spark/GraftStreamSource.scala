@@ -294,9 +294,7 @@ class GraftStreamSource(spark: SparkSession, dir: String,
 }
 
 /** Query/oracle surface for X114. */
-object GraftStream {
-
-  type Q = (SparkSession, String) => DataFrame
+object GraftStream extends graft.QueryModule {
 
   /** One AvailableNow pass of the graft stream into a parquet sink. */
   def runOnce(spark: SparkSession, tableDir: String, sinkDir: String,

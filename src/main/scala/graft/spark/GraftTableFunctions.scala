@@ -35,7 +35,7 @@ import graft.lake.ChangeFeed
   * pays a keyed diff); omitting it over an append/delete-only range
   * works, and a replace step without keys refuses with the contract.
   */
-object GraftTableFunctions {
+object GraftTableFunctions extends graft.QueryModule {
 
   private val usage =
     "table_changes('<path>', <from_version>, <to_version> [, '<k1,k2>'])"
@@ -110,8 +110,6 @@ object GraftTableFunctions {
     new ExpressionInfo(GraftTableFunctions.getClass.getCanonicalName,
       "table_changes"),
     (args: Seq[Expression]) => buildTableChanges(args))
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // X184: the whole DML timeline (DV delete, CoW update, merge) read

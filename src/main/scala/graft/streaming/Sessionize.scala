@@ -33,7 +33,7 @@ case class Session(
   * is implicit in the sort; the streaming tier's state store is
   * RocksDB-backed per executor at scale and watermark-evicted.
   */
-object Sessionize {
+object Sessionize extends graft.QueryModule {
 
   /** Session gap: events of one user separated by more than this belong to
     * different sessions (12 h fits the fixture's ~7 h median inter-event
@@ -142,8 +142,6 @@ object Sessionize {
       Session(userId, seq, 0L, toTs(0L), toTs(0L)))
     live ++ tombstones
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "q_sessionize" -> ((s, d) =>

@@ -29,7 +29,7 @@ import graft.sources.Tables
   * consistency is structural: every cut's tables were folded from the
   * same prefix of the stream.
   */
-object StreamCatalog {
+object StreamCatalog extends graft.QueryModule {
 
   /** Batch ids already committed as catalog cuts. */
   def committedEpochs(s: SparkSession, root: String): Set[Long] =
@@ -95,8 +95,6 @@ object StreamCatalog {
       q.awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Three event micro-batches streamed into a two-table catalog, then

@@ -20,7 +20,7 @@ import graft.sources.Tables
   * partitioned by key hash; rows emit on FIRST sight (append mode never
   * waits on the watermark for dedup), so latency is one micro-batch.
   */
-object StreamDedup {
+object StreamDedup extends graft.QueryModule {
 
   val watermark = "2 hours"
 
@@ -50,8 +50,6 @@ object StreamDedup {
       q.awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Planted duplicates in both flavors: in-batch copies (same file) and

@@ -28,7 +28,7 @@ import graft.lake.SnapshotDiff
   * same one-manifest-per-batch rule, and the state table is bucketed by the
   * diff key so each diff is a shuffle-free sort-merge join.
   */
-object StreamDiff {
+object StreamDiff extends graft.QueryModule {
 
   /** Run the snapshot-diff stream over `watchDir` until all available files
     * are processed. Appends change rows to `outDir`; keeps the last
@@ -108,8 +108,6 @@ object StreamDiff {
     Files.move(part, Paths.get(target), StandardCopyOption.REPLACE_EXISTING)
     new java.io.File(target).setLastModified(mtime)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // The flagship diff computed BY THE STREAMING PIPELINE: two snapshot

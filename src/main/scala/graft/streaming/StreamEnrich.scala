@@ -26,7 +26,7 @@ import graft.util.Exact.dsum
   * flips to a pre-bucketed co-located join (X12's layout) — same API,
   * different physical plan.
   */
-object StreamEnrich {
+object StreamEnrich extends graft.QueryModule {
 
   /** Enriched per-nation revenue: stream of orders joined to the
     * customer→nation dimension per micro-batch, aggregated per batch and
@@ -55,8 +55,6 @@ object StreamEnrich {
       q.awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Three order micro-batches enriched against customer⋈nation; the

@@ -25,7 +25,7 @@ import graft.sources.Tables
   * batch plus one keyed merge against state — independent of history
   * length, the property that makes hourly→streaming migration free.
   */
-object StreamIncrAgg {
+object StreamIncrAgg extends graft.QueryModule {
 
   def run(s: SparkSession, watchDir: String, stateDir: String, chkDir: String,
       schema: org.apache.spark.sql.types.StructType, keys: Seq[String],
@@ -58,8 +58,6 @@ object StreamIncrAgg {
       require(v == target, s"batch $id expected to commit version $target, got $v")
     }
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Three single-file micro-batches of the events table streamed into

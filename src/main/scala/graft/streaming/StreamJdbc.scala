@@ -30,7 +30,7 @@ import graft.sources.Tables
   * history. The batch aggregate upstream is combinable, so each
   * micro-batch ships #keys rows, not #events.
   */
-object StreamJdbc {
+object StreamJdbc extends graft.QueryModule {
 
   private def execUpdate(cfg: JdbcConfig, sql: String,
       swallow: Set[String] = Set.empty): Unit = {
@@ -111,8 +111,6 @@ object StreamJdbc {
       q.awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Three event micro-batches streamed into Derby; then batch 0 is

@@ -27,7 +27,7 @@ import graft.sources.Tables
   * load-bearing), and must emit exactly the batch join — it shares a
   * plain-SQL DuckDB oracle.
   */
-object StreamJoin {
+object StreamJoin extends graft.QueryModule {
 
   val watermark = "2 hours"
   val joinWindow = "1 hour"
@@ -64,8 +64,6 @@ object StreamJoin {
       q.awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     "q_stream_join" -> ((s, d) => {

@@ -33,7 +33,7 @@ import graft.sources.Tables
   * The oracle is the plain batch LEFT JOIN — streaming, batching, and
   * the sentinel mechanism must all be invisible.
   */
-object StreamOuterJoin {
+object StreamOuterJoin extends graft.QueryModule {
 
   val watermark = "2 hours"
   val joinWindow = "1 hour"
@@ -71,8 +71,6 @@ object StreamOuterJoin {
       q.awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Stream input files for `q_stream_outer_join`: two time-ordered files
     * per side cut at a straddling match (X30's discipline) plus the

@@ -30,9 +30,7 @@ import graft.sources.Tables
   * replays the quarantined keys later — the spec pins that the replay
   * converges bit-identically to the full rebuild.
   */
-object StreamScd2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object StreamScd2 extends graft.QueryModule {
   /** Idempotent per-batch apply: batch `id` owns catalog cut id+2.
     * Late-key rows dead-letter instead of failing the stream (X175).
     */

@@ -27,7 +27,7 @@ import graft.util.Exact.dsum
   * stream length. The compaction read ("latest per key") is served by the
   * same window-rank shape as E1 exact dedup.
   */
-object WindowAgg {
+object WindowAgg extends graft.QueryModule {
 
   val windowLen = "1 hour"
   val watermark = "2 hours"
@@ -80,8 +80,6 @@ object WindowAgg {
       .where(col("rn") === 1)
       .select("window_start", "event_type", "n_events", "sum_value")
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Two snapshot files split by event time (sessions cross the batch

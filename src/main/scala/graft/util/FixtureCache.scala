@@ -13,15 +13,6 @@ object FixtureCache {
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** The fixture directory for (tag, sfDir), building it with `build` on
-    * first request in this JVM and reusing it afterwards. REENTRANT:
-    * builds may request other fixtures (a cluster fixture materializing
-    * the shingle table it is built from), which
-    * `ConcurrentHashMap.computeIfAbsent` would reject as a recursive
-    * update — hence the double-checked synchronized block (same-thread
-    * reentry is fine; concurrent first-builds serialize, which they did
-    * per-key before too).
-    */
   /** Cached analyzed relation over a memoized fixture dir: builds the
     * fixture once per JVM AND lists/schema-infers it once per session
     * (graft.sources.Tables.cachedParquet) — a per-call
@@ -32,6 +23,15 @@ object FixtureCache {
       build: String => Unit): org.apache.spark.sql.DataFrame =
     graft.sources.Tables.cachedParquet(spark, dir(tag, sfDir)(build))
 
+  /** The fixture directory for (tag, sfDir), building it with `build` on
+    * first request in this JVM and reusing it afterwards. REENTRANT:
+    * builds may request other fixtures (a cluster fixture materializing
+    * the shingle table it is built from), which
+    * `ConcurrentHashMap.computeIfAbsent` would reject as a recursive
+    * update — hence the double-checked synchronized block (same-thread
+    * reentry is fine; concurrent first-builds serialize, which they did
+    * per-key before too).
+    */
   def dir(tag: String, sfDir: String)(build: String => Unit): String = {
     val key = s"$tag|$sfDir"
     val hit = cache.get(key)

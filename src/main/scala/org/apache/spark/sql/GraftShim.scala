@@ -28,6 +28,13 @@ object GraftShim {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming)
 
+  /** Block until every posted listener event is delivered: listeners see
+    * events asynchronously, so a counter read without this can miss a job
+    * that already started (`listenerBus` is `private[spark]`).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** A serializable path→FileSystem factory for executor-side file IO
     * (record readers, fixture writers). Wraps the session's Hadoop conf
     * in Spark's own `SerializableConfiguration` (private[spark], hence

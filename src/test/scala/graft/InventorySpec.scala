@@ -45,6 +45,15 @@ class InventorySpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
+  test("the registry rejects a query name two modules both register") {
+    val err = intercept[IllegalArgumentException] {
+      SparkEntry.register(Seq(Map("q_a" -> "1", "q_dup" -> "2"), Map("q_dup" -> "3")))
+    }
+    assert(err.getMessage.contains("q_dup") && !err.getMessage.contains("q_a"))
+    // so the inventory is exactly the modules' disjoint union
+    assert(queryCount == SparkEntry.modules.map(_.queries.size).sum)
+  }
+
   test("README cites the generated inventory line, byte-exact") {
     val line = s"Inventory (pinned by InventorySpec): $queryCount queries " +
       s"(${(oracleKeys intersect queryKeys).size} oracled), " +

@@ -99,7 +99,10 @@ submit() { # CLASS args...
 }
 
 echo "spark_submit_gate: graft.Verify $SFDIR -> $OUT"
-submit graft.Verify "$SFDIR" "$OUT" 2> "$LOGDIR/verify.stderr"
+# Verify exits 1 when any query threw; the bench slice still runs, and the
+# script exits with Verify's status.
+VERIFY_STATUS=0
+submit graft.Verify "$SFDIR" "$OUT" 2> "$LOGDIR/verify.stderr" || VERIFY_STATUS=$?
 grep "\[verify\]" "$LOGDIR/verify.stderr" || true
 
 GATE_SLICE="q_json_ingest,q_json_normalize,q_scan,q_glob_scan,q_prev_snapshot,\
@@ -111,3 +114,7 @@ SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_BENCH_SF:-/root/testdata/sf0.1} \
   SPARK_GRAFT_QUERIES="$GATE_SLICE" \
   submit graft.Bench 2> "$LOGDIR/bench.stderr" | grep '"metric"'
 echo "spark_submit_gate: done (compare with: python3 tools/check.py $SFDIR $OUT)"
+if [ "$VERIFY_STATUS" -ne 0 ]; then
+  echo "spark_submit_gate: graft.Verify failed (exit $VERIFY_STATUS); see $LOGDIR/verify.stderr" >&2
+fi
+exit "$VERIFY_STATUS"
