@@ -86,14 +86,12 @@ object IvfIndex {
     }
     val tv = cut.tables.getOrElse("centroids", throw new NoSuchElementException(
       s"table 'centroids' not in catalog version ${cut.version}"))
-    centroidCache.computeIfAbsent(s"$root#$tv", _ =>
+    graft.util.FixtureCache.value("ivf_centroids", s"$root#$tv") {
       ManifestTable.readVersion(s, s"$root/centroids", tv).orderBy("cluster")
         .collect()
-        .map(_.getAs[scala.collection.Seq[Long]]("centroid").toArray))
+        .map(_.getAs[scala.collection.Seq[Long]]("centroid").toArray)
+    }
   }
-
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Long]]]()
 
   /** Incremental maintenance: assign `newVecs` to the existing
     * quantizer, append to `lists`, publish the next cut (centroids

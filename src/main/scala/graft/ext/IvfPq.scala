@@ -52,7 +52,7 @@ object IvfPq extends graft.QueryModule {
     }
     val tv = cut.tables.getOrElse("pqbooks", throw new NoSuchElementException(
       s"table 'pqbooks' not in catalog version ${cut.version}"))
-    bookCache.computeIfAbsent(s"$root#$tv", _ => {
+    graft.util.FixtureCache.value("ivfpq_books", s"$root#$tv") {
       val rows = ManifestTable.readVersion(s, s"$root/pqbooks", tv)
         .orderBy("sub", "cid").collect()
       val m = rows.map(_.getInt(0)).max + 1
@@ -60,11 +60,8 @@ object IvfPq extends graft.QueryModule {
       val byKey = rows.map(r => (r.getInt(0), r.getInt(1)) ->
         r.getAs[scala.collection.Seq[Long]]("centroid").toArray).toMap
       Array.tabulate(m)(i => Array.tabulate(kk)(c => byKey((i, c))))
-    })
+    }
   }
-
-  private val bookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Long]]]]()
 
   /** Train both quantizers on `corpus` and commit centroids + pqbooks +
     * encoded lists as one catalog cut. Returns the cut.

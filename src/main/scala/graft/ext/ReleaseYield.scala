@@ -38,12 +38,6 @@ import graft.sources.Tables.documents
   * like X240's.
   */
 object ReleaseYield extends graft.QueryModule {
-  /** Per-corpus prefix structures for the budget and packing stages —
-    * pure functions of the immutable corpus, like Selection's.
-    */
-  private val structCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, graft.ops.DenseId.PrefixStructure, graft.ops.DenseId.PrefixStructure)]
-
   val queries: Map[String, Q] = Map(
     "q_release_yield" -> ((s, d) => {
       val t = TextAnalysis.tokens(col("text"))
@@ -86,8 +80,9 @@ object ReleaseYield extends graft.QueryModule {
           .select("doc_id", "n_tok", "permille")
           .write.mode("overwrite").parquet(dir)
       }
-      // stages 3+4: budget cut + packing, structures cached per corpus
-      val (stride, st3, st4) = structCache.computeIfAbsent(d, _ => {
+      // stages 3+4: budget cut + packing; both prefix structures are pure
+      // functions of the immutable corpus, cached per corpus
+      val (stride, st3, st4) = graft.util.FixtureCache.value("yield_prefix", d) {
         // committed sidecar (round-10 ask #4): 1 stride line + 3 lines
         // per prefix structure, replayed by a cold driver with no sketch
         val lines = graft.util.ArtifactStore.lines("yield_prefix", d, "v1:k8") {
@@ -106,7 +101,7 @@ object ReleaseYield extends graft.QueryModule {
         (lines.head.toLong,
           graft.util.ArtifactStore.decodePrefix(lines.slice(1, 4)),
           graft.util.ArtifactStore.decodePrefix(lines.slice(4, 7)))
-      })
+      }
       val keyed = surv2.withColumn("k",
         (lit(1000L) - col("permille")) * stride + col("doc_id"))
       val budget = st3.total * Selection.budgetNum / Selection.budgetDen

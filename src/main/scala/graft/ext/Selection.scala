@@ -30,15 +30,6 @@ object Selection extends graft.QueryModule {
   val budgetNum = 4
   val budgetDen = 10
 
-  /** Per-corpus (stride, prefix structure) — deterministic pure
-    * functions of the immutable score fixture, like X7's quantizer. The
-    * in-JVM map is the L1; the value itself is a COMMITTED sidecar via
-    * [[graft.util.ArtifactStore]] (round-10 ask #4), so a restarted
-    * driver reads the committed lines instead of re-sketching.
-    */
-  private val structCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, graft.ops.DenseId.PrefixStructure)]
-
   val queries: Map[String, Q] = Map(
     // Per-source manifest of the selected subset: the mixture a fixed
     // token budget actually buys (fluent sources crowd out the rest —
@@ -57,8 +48,9 @@ object Selection extends graft.QueryModule {
       // composite sort key + prefix structure: pure functions of the
       // immutable score fixture, cached per corpus dir (the X7
       // quantizer-cache discipline) so warm runs pay ONE distributed
-      // pass — at scale the structure persists alongside the table
-      val (stride, st) = structCache.computeIfAbsent(d, _ => {
+      // pass — at scale the structure persists alongside the table: a
+      // COMMITTED sidecar (round-10 ask #4) a restarted driver re-reads
+      val (stride, st) = graft.util.FixtureCache.value("sel_prefix", d) {
         val lines = graft.util.ArtifactStore.lines("sel_prefix", d, "v1:k8") {
           val stride = scored.agg(max("doc_id")).head.getAs[Number](0).longValue() + 1
           val st = graft.ops.DenseId.prefixStructure(
@@ -68,7 +60,7 @@ object Selection extends graft.QueryModule {
         }
         (lines.head.toLong,
           graft.util.ArtifactStore.decodePrefix(lines.tail))
-      })
+      }
       val keyed = scored.withColumn("k",
         (lit(1000L) - col("permille")) * stride + col("doc_id"))
       val cum = graft.ops.DenseId.applyPrefix(keyed, "k", "n_tok", st)

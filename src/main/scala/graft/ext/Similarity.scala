@@ -125,18 +125,12 @@ object Similarity extends graft.QueryModule {
     math.max(ivfProbes,
       math.ceil(k.toDouble * ivfProbes / ivfK).toInt)
 
-  /** Per-corpus quantizer cache: centroids are a deterministic pure
-    * function of the corpus dir (seeded by first-k ids, fixed iteration
-    * count), so Lloyd's passes run once per JVM per corpus — re-running
-    * them per bench invocation would time index CONSTRUCTION inside every
-    * query; at scale the quantizer is built once and persisted with the
-    * partitioned corpus (the IVF index file, in FAISS terms).
+  /** The corpus quantizer and its probe count, memoized per corpus dir:
+    * centroids are a deterministic pure function of the corpus (seeded by
+    * first-k ids, fixed iteration count), so Lloyd's runs once per JVM.
     */
-  private val quantCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Array[Long]], Int)]()
-
   def quantizerFor(s: SparkSession, d: String, e: DataFrame): (Array[Array[Long]], Int) =
-    quantCache.computeIfAbsent(d, _ => {
+    graft.util.FixtureCache.value("ivf_quant", d) {
       // committed sidecar (round-10 ask #4) — the FAISS index-file role:
       // a cold driver reads the k×dim centroid lines instead of paying
       // the Lloyd's passes again; k (and thus probes) falls back out of
@@ -148,7 +142,7 @@ object Similarity extends graft.QueryModule {
       }
       val cents = graft.util.ArtifactStore.decodeMatrix(lines)
       (cents, adaptiveProbes(cents.length))
-    })
+    }
 
   /** Coarse quantizer for the IVF tier: the X111 bit-reproducible
     * fixed-point Lloyd's (integer ×10⁴ vectors, exact integer squared-L2,

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -120,10 +120,4 @@ case class JaroWinklerSim(left: Expression, right: Expression)
 object StringSim {
   def jaroWinkler(a: Column, b: Column): Column =
     GraftShim.column(JaroWinklerSim(GraftShim.expression(a), GraftShim.expression(b)))
-
-  /** Make `jaro_winkler` callable from SQL on a running session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftShim.registerFunction(spark, "jaro_winkler",
-      new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler"),
-      args => JaroWinklerSim(args(0), args(1)))
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftShim, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -213,16 +213,6 @@ object VectorOps {
       case ArrayType(_: NumericType, n) => Cast(e, ArrayType(FloatType, n))
       case _ => e // rejected by checkInputDataTypes with a typed error
     }
-
-  /** Make `vec_cosine`/`vec_dot` callable from SQL on a running session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    GraftShim.registerFunction(spark, "vec_cosine",
-      new ExpressionInfo(classOf[CosineSim].getName, "vec_cosine"),
-      args => CosineSim(coerceFloatArray(args(0)), coerceFloatArray(args(1))))
-    GraftShim.registerFunction(spark, "vec_dot",
-      new ExpressionInfo(classOf[DotProd].getName, "vec_dot"),
-      args => DotProd(coerceFloatArray(args(0)), coerceFloatArray(args(1))))
-  }
 }
 
 /** `SparkSessionExtensions` hook registering the vector functions for SQL

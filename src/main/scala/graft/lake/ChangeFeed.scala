@@ -35,12 +35,6 @@ import graft.util.Exact.dsum
   */
 object ChangeFeed extends graft.QueryModule {
 
-  /** Per-JVM cache of each committed step's tombstone-touched file lists
-    * — metadata of immutable versions, safe to cache forever.
-    */
-  private val stepFileCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, String)]]()
-
   /** `added`/`deleted` rows for every step in `(fromV, toV]`, tagged
     * `(from_version, to_version)`.
     *
@@ -163,11 +157,12 @@ object ChangeFeed extends graft.QueryModule {
     // lists are MANIFEST METADATA of two immutable committed versions, so
     // they cache per JVM (the Delta SnapshotManagement move): a feed
     // re-read of the same step pays zero resolution jobs.
-    val fileTags = stepFileCache.computeIfAbsent(
-      s"$dir|${sOld.version}|${sNew.version}", _ =>
-        delTomb.select(col("file"), lit("deleted").as("side"))
-          .unionByName(addTomb.select(col("file"), lit("added").as("side")))
-          .distinct().as[(String, String)].collect())
+    val fileTags = graft.util.FixtureCache.value("cf_step_files",
+        s"$dir|${sOld.version}|${sNew.version}") {
+      delTomb.select(col("file"), lit("deleted").as("side"))
+        .unionByName(addTomb.select(col("file"), lit("added").as("side")))
+        .distinct().as[(String, String)].collect()
+    }
 
     /** Rows of `sNew`'s data files sitting at `tomb`'s (file, pos). */
     def rowsAt(files: Seq[String], tomb: DataFrame, tag: String): Option[DataFrame] =

@@ -1,7 +1,7 @@
 package graft.util
 
 /** Committed DRIVER-SIDE artifacts (round-10 VERDICT ask #4): the per-JVM
-  * `ConcurrentHashMap` memo pattern keeps warm bench repeats honest, but a
+  * memo ([[FixtureCache.value]]) keeps warm bench repeats honest, but a
   * restarted driver (or a second session over the same corpus) retrains
   * quantizers and re-sketches prefix structures that are pure deterministic
   * functions of an immutable corpus — at 100 TB these are exactly the
@@ -9,7 +9,7 @@ package graft.util
   * vocabulary, a stats sidecar), not per-process.
   *
   * This store is the scalar twin of [[FixtureCache.durableDir]] and rides
-  * its machinery verbatim: same `GRAFT_FIXTURE_DURABLE` opt-in (Bench sets
+  * its machinery verbatim: same `graft.fixture.durable` opt-in (Bench sets
   * it; Verify and the test suites never do, so the correctness gate always
   * exercises live builds), same builder-version fingerprint keying, same
   * crash-safe tmp-dir + atomic-rename publish. The artifact lands as a
@@ -17,7 +17,7 @@ package graft.util
   * current payloads are exact longs/IEEE doubles, so `toString`/`parse`
   * round-trips are bit-exact.
   *
-  * Callers keep their in-JVM L1 memo ON TOP of this (decode-once per
+  * Callers wrap this in [[FixtureCache.value]] (decode-once per
   * process); the store only changes what a COLD JVM does on a miss: read
   * the committed file instead of re-running the distributed build.
   */

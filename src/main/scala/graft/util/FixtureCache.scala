@@ -1,17 +1,30 @@
 package graft.util
 
-/** Memoized fixture builds for queries whose INPUT is a materialized
-  * scratch layout (stream snapshot files, signature tables). The operator
-  * under test/bench re-runs on every invocation, but rebuilding an
-  * identical input fixture per-invocation (per warmup + per bench repeat)
-  * only re-times the fixture writer — VERDICT r2 item 2 calls this out as
-  * the honest lever on the streaming trio. Keyed by (tag, sfDir) so
-  * different scale factors never share a fixture; builds land in Scratch
-  * dirs and are deleted at JVM exit like every other intermediate.
+/** The one in-JVM memo. It holds memoized fixture builds for queries
+  * whose INPUT is a materialized scratch layout (stream snapshot files,
+  * signature tables), and driver-side values such as trained quantizers
+  * and prefix structures. The operator under test/bench re-runs on every
+  * invocation, but rebuilding an identical input per-invocation (per
+  * warmup + per bench repeat) only re-times the builder — VERDICT r2
+  * item 2 calls this out as the honest lever on the streaming trio. Every
+  * entry must be a deterministic build over immutable input. Fixtures are
+  * keyed by (tag, sfDir) so different scale factors never share one;
+  * builds land in Scratch dirs and are deleted at JVM exit like every
+  * other intermediate.
   */
 object FixtureCache {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Every entry, keyed `namespace|tag|key`. Each namespace ("value",
+    * "dir", "durable") is a literal without `|`, so value keys and
+    * fixture-dir keys are disjoint by construction: `ArtifactStore.lines`
+    * falls back to `dir(tag, sfDir)` under the same tag a `value` memo may
+    * use. An entry is a finished value or the [[Building]] mark of a build
+    * in flight.
+    */
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** In-flight mark; the building thread holds its monitor. */
+  private final class Building
 
   /** Cached analyzed relation over a memoized fixture dir: builds the
     * fixture once per JVM AND lists/schema-infers it once per session
@@ -23,28 +36,22 @@ object FixtureCache {
       build: String => Unit): org.apache.spark.sql.DataFrame =
     graft.sources.Tables.cachedParquet(spark, dir(tag, sfDir)(build))
 
-  /** The fixture directory for (tag, sfDir), building it with `build` on
-    * first request in this JVM and reusing it afterwards. REENTRANT:
-    * builds may request other fixtures (a cluster fixture materializing
-    * the shingle table it is built from), which
-    * `ConcurrentHashMap.computeIfAbsent` would reject as a recursive
-    * update — hence the double-checked synchronized block (same-thread
-    * reentry is fine; concurrent first-builds serialize, which they did
-    * per-key before too).
+  /** The value for (tag, key), built by `build` on first request in this
+    * JVM and reused afterwards. `build` must be a pure function of
+    * immutable input named by the key.
     */
-  def dir(tag: String, sfDir: String)(build: String => Unit): String = {
-    val key = s"$tag|$sfDir"
-    val hit = cache.get(key)
-    if (hit != null) return hit
-    synchronized {
-      val again = cache.get(key)
-      if (again != null) return again
+  def value[V <: AnyRef](tag: String, key: String)(build: => V): V =
+    getOrBuild(s"value|$tag|$key")(build)
+
+  /** The fixture directory for (tag, sfDir), building it with `build` on
+    * first request in this JVM and reusing it afterwards.
+    */
+  def dir(tag: String, sfDir: String)(build: String => Unit): String =
+    getOrBuild(s"dir|$tag|$sfDir") {
       val d = Scratch.dir(tag)
       build(d)
-      cache.put(key, d)
       d
     }
-  }
 
   /** Cross-JVM durable fixture reuse (round-9 VERDICT ask #3): committed
     * TIMELINE fixtures (multi-commit DML tables, trained ANN indexes) are
@@ -55,11 +62,11 @@ object FixtureCache {
     * process restarts.
     *
     * Safety rules, in order of importance:
-    *  - OPT-IN per process: only takes effect when
-    *    `GRAFT_FIXTURE_DURABLE=1` (graft.Bench sets it for its own JVM);
-    *    Verify and the test suites never set it, so the CORRECTNESS gate
-    *    always exercises live builds — a stale cache can slow a bench,
-    *    never fake a correctness pass.
+    *  - OPT-IN per process: only takes effect when the system property
+    *    `graft.fixture.durable` is `1` (graft.Bench sets it for its own
+    *    JVM); Verify and the test suites never set it, so the CORRECTNESS
+    *    gate always exercises live builds — a stale cache can slow a
+    *    bench, never fake a correctness pass.
     *  - keyed by an explicit caller FINGERPRINT (the "schema-hash"):
     *    builder changes bump it, and a mismatch is a different directory,
     *    never a reused one.
@@ -68,19 +75,12 @@ object FixtureCache {
     *    adopts the winner. A completeness marker guards against torn
     *    copies from a killed JVM.
     *
-    * Falls back to the in-JVM [[dir]] when the env knob is off.
+    * Falls back to the in-JVM [[dir]] when the property is off.
     */
   def durableDir(tag: String, sfDir: String, fingerprint: String)(
-      build: String => Unit): String = {
-    if (!sys.env.get("GRAFT_FIXTURE_DURABLE").contains("1") &&
-        System.getProperty("graft.fixture.durable") != "1")
-      return dir(tag, sfDir)(build)
-    val key = s"$tag|$sfDir|durable"
-    val hit = cache.get(key)
-    if (hit != null) return hit
-    synchronized {
-      val again = cache.get(key)
-      if (again != null) return again
+      build: String => Unit): String =
+    if (System.getProperty("graft.fixture.durable") != "1") dir(tag, sfDir)(build)
+    else getOrBuild(s"durable|$tag|$sfDir") {
       val root = sys.env.getOrElse("GRAFT_FIXTURE_CACHE", "/tmp/graft_fixture_cache")
       val hash = java.security.MessageDigest.getInstance("MD5")
         .digest(s"$tag|$sfDir|$fingerprint".getBytes("UTF-8"))
@@ -101,16 +101,39 @@ object FixtureCache {
           }
         }
       }
-      val d = target.getAbsolutePath
-      cache.put(key, d)
-      d
+      target.getAbsolutePath
     }
-  }
 
-  /** Test hook: drop the in-JVM memo so a spec can exercise the
-    * cross-JVM adoption path (a fresh JVM is exactly "empty memo, durable
-    * dir present"). Later fixture requests rebuild into fresh scratch
-    * dirs — slower, never wrong.
+  /** The one get-or-build. REENTRANT: a build may request other entries
+    * (a cluster fixture materializing the shingle table it is built
+    * from), which `ConcurrentHashMap.computeIfAbsent` would reject as a
+    * recursive update. The lock is per key — the in-flight mark's monitor,
+    * not one object-wide monitor — because a build may wait on another
+    * thread that requests a different key: q_stream_cdf's fixture awaits
+    * a stream whose thread resolves a memoized change-feed step.
+    * Concurrent first requests of one key wait for its single build; a
+    * build that throws leaves no entry.
+    */
+  private def getOrBuild[V <: AnyRef](key: String)(build: => V): V =
+    cache.get(key) match {
+      case null =>
+        val mark = new Building
+        mark.synchronized {
+          if (cache.putIfAbsent(key, mark) != null) return getOrBuild(key)(build)
+          try { val v = build; cache.put(key, v); v }
+          finally cache.remove(key, mark)
+        }
+      case b: Building =>
+        require(!Thread.holdsLock(b), s"memo build of $key requested itself")
+        b.synchronized(()) // wait out the in-flight build, then re-read
+        getOrBuild(key)(build)
+      case v => v.asInstanceOf[V]
+    }
+
+  /** Test hook: drop every memo entry (values and fixture dirs) so a spec
+    * can exercise the cross-JVM adoption path (a fresh JVM is exactly
+    * "empty memo, durable dir present"). Later requests rebuild — fixtures
+    * into fresh scratch dirs — slower, never wrong.
     */
   private[graft] def clearForTest(): Unit = cache.clear()
 

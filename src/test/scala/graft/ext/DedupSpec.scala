@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.VectorOps
+import graft.functions.{SqlFunctions, VectorOps}
 
 class DedupSpec extends SparkSpec {
 
@@ -131,7 +131,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("vec_cosine is callable from SQL after registration") {
-    VectorOps.register(spark)
+    SqlFunctions.registerAll(spark)
     val got = spark.sql("SELECT vec_cosine(array(1.0f, 2.0f), array(2.0f, 4.0f)) AS c")
       .head().getDouble(0)
     assert(math.abs(got - 1.0) < 1e-12)

@@ -25,8 +25,9 @@ class IvfIndexSpec extends SparkSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
 
   test("search reads ONLY committed state — a fresh root reproduces it exactly") {
-    // IvfIndex holds no per-JVM caches: loadCentroids and search take
-    // the root alone, so a re-read IS what a restarted JVM would see.
+    // loadCentroids memoizes per (root, committed centroids version), so
+    // different roots are different memo keys: r2's search reads r2's
+    // committed state, which IS what a restarted JVM would see.
     val r1 = Scratch.dir("ivf_idx_a")
     val r2 = Scratch.dir("ivf_idx_b")
     assert(IvfIndex.build(spark, corpus, r1, 20250801, 900) == 1)

@@ -58,7 +58,7 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("SQL registration: jaro_winkler callable from spark.sql") {
-    StringSim.register(spark)
+    SqlFunctions.registerAll(spark)
     val r = spark.sql("SELECT jaro_winkler('MARTHA', 'MARHTA') AS jw").head.getDouble(0)
     assert(math.abs(r - 0.9611111111) < 1e-9)
   }

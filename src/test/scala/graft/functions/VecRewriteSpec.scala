@@ -85,7 +85,7 @@ class VecRewriteSpec extends SparkSpec {
   }
 
   test("vec_dot is callable from SQL after registration") {
-    VectorOps.register(spark)
+    SqlFunctions.registerAll(spark)
     val got = spark.sql("SELECT vec_dot(array(1.0f, 2.0f), array(3.0f, 4.0f)) AS d")
       .head().getDouble(0)
     assert(got == 11.0)
@@ -113,7 +113,7 @@ class VecRewriteSpec extends SparkSpec {
   }
 
   test("native expressions null out on length mismatch and null elements") {
-    VectorOps.register(spark)
+    SqlFunctions.registerAll(spark)
     // HOF/DuckDB parity: mismatched lengths and NULL slots yield NULL,
     // never a truncated or zero-slot-contaminated number
     assert(spark.sql("SELECT vec_dot(array(1.0f), array(1.0f, 2.0f)) AS d")
@@ -127,7 +127,7 @@ class VecRewriteSpec extends SparkSpec {
   }
 
   test("SQL calls over non-float arrays implicit-cast instead of misreading memory") {
-    VectorOps.register(spark)
+    SqlFunctions.registerAll(spark)
     // array<double> and array<int> literals both coerce to array<float>
     val d = spark.sql("SELECT vec_dot(array(1.0, 2.0), array(3.0, 4.0)) AS d")
       .head().getDouble(0)

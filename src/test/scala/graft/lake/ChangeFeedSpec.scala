@@ -43,6 +43,29 @@ class ChangeFeedSpec extends SparkSpec {
     assert(!plan.contains("FullOuter"), s"expected the DV fast path:\n$plan")
   }
 
+  test("a re-read delete-commit step resolves its touched files from the memo: zero jobs") {
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "payload", "grp", "change").as[(Long, String, Int, String)]
+        .collect().toSet
+    val first = ChangeFeed.changeFeed(spark, dir, 2, 3, Seq("k"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val second = try {
+      drain(); jobs.set(0)
+      val df = ChangeFeed.changeFeed(spark, dir, 2, 3, Seq("k"))
+      drain()
+      assert(jobs.get == 0, s"the re-read ran ${jobs.get} tombstone-resolution jobs")
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val want = rowsOf(first)
+    assert(want.nonEmpty && rowsOf(second) == want)
+  }
+
   test("no-op delete step (v3→v4) yields zero rows through the fast path") {
     val step = ChangeFeed.changeFeed(spark, dir, 3, 4, Seq("k"))
     assert(step.count() == 0)

@@ -2,9 +2,10 @@ package graft.util
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cross-JVM durable fixture layer (round-9 ask #3): opt-in flag,
-  * marker-gated adoption, fingerprint isolation. Pure filesystem — no
-  * Spark session needed.
+/** The one in-JVM memo (reentrant builds, disjoint value/dir keys, a
+  * per-key lock) and the cross-JVM durable fixture layer (round-9 ask
+  * #3): opt-in flag, marker-gated adoption, fingerprint isolation. Pure
+  * filesystem — no Spark session needed.
   */
 class FixtureCacheSpec extends AnyFunSuite {
 
@@ -68,5 +69,54 @@ class FixtureCacheSpec extends AnyFunSuite {
       assert(builds == 2, "a torn durable dir must rebuild")
       assert(new java.io.File(d2, "_GRAFT_FIXTURE_OK").isFile)
     }
+  }
+
+  test("a value build may request a fixture dir and another value") {
+    val got = FixtureCache.value("fixspec_outer", sfKey) {
+      val d = FixtureCache.dir("fixspec_inner_dir", sfKey)(_ => ())
+      val inner = FixtureCache.value("fixspec_inner", sfKey)(Seq(d))
+      inner :+ "outer"
+    }
+    assert(got.size == 2 && got.last == "outer")
+    assert(FixtureCache.value("fixspec_outer", sfKey)(Seq.empty[String]) eq got)
+  }
+
+  test("value and ArtifactStore.lines under one (tag, sfDir) keep their own entries") {
+    assert(System.getProperty("graft.fixture.durable") == null)
+    // with durability off, lines falls back to dir(tag, sfDir): its dir
+    // entry and the value entry share tag and key and must not collide
+    val v = FixtureCache.value("fixspec_ns", sfKey)(Seq(7L, 8L))
+    val l = ArtifactStore.lines("fixspec_ns", sfKey, "v1")(Seq("a", "b"))
+    assert(l == Seq("a", "b"))
+    val v2: Seq[Long] = FixtureCache.value("fixspec_ns", sfKey)(Seq.empty[Long])
+    assert(v2 == Seq(7L, 8L) && (v2 eq v))
+    assert(ArtifactStore.lines("fixspec_ns", sfKey, "v1")(Seq("rebuilt")) == Seq("a", "b"))
+  }
+
+  test("clearForTest empties values as well as dirs") {
+    var (valueBuilds, dirBuilds) = (0, 0)
+    def v() = FixtureCache.value("fixspec_clear", sfKey) { valueBuilds += 1; new Object }
+    def d() = FixtureCache.dir("fixspec_clear", sfKey)(_ => dirBuilds += 1)
+    v(); d(); v(); d()
+    assert((valueBuilds, dirBuilds) == ((1, 1)))
+    FixtureCache.clearForTest()
+    v(); d()
+    assert((valueBuilds, dirBuilds) == ((2, 2)))
+  }
+
+  test("a build may wait on another thread that requests a different key") {
+    // the q_stream_cdf shape: a fixture build awaits a stream whose
+    // thread resolves a memoized value — one object-wide lock deadlocks
+    var fromOther: String = null
+    FixtureCache.value("fixspec_waiter", sfKey) {
+      val t = new Thread(() =>
+        fromOther = FixtureCache.value("fixspec_other", sfKey)("other"))
+      t.setDaemon(true)
+      t.start()
+      t.join(30000)
+      assert(!t.isAlive, "the other thread is blocked on the memo")
+      "waiter"
+    }
+    assert(fromOther == "other")
   }
 }
