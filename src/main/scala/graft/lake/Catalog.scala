@@ -94,14 +94,15 @@ object Catalog extends graft.QueryModule {
     * Rename-as-commit with bounded optimistic retry: a lost race re-reads
     * the new latest cut and re-overlays (the transaction's table versions
     * are already durable, so only this tiny JSON is rebuilt).
-    */
-  /** `expectBase`: compare-and-swap publish — the new cut must land
+    *
+    * `expectBase`: compare-and-swap publish — the new cut must land
     * directly on catalog version `expectBase`; if any concurrent writer
     * advanced the catalog past it, REFUSE instead of overlay-and-retry.
     * This is the single-writer guard for read-modify-write transactions
     * (X165 scd2Apply recomputes tails it read at a specific cut — an
     * overlay on a newer cut would silently drop the concurrent writer's
-    * tail work, the X121 lost-update shape).
+    * tail work, the X121 lost-update shape). The refusal is a plain
+    * IllegalStateException, not a [[LostRace]], so it escapes the loop.
     */
   def publishCatalog(spark: SparkSession, root: String, date: Int, time: Int,
       tableVersions: Map[String, Int], maxRetries: Int = 5,
@@ -109,8 +110,7 @@ object Catalog extends graft.QueryModule {
     val fs = ManifestTable.fsFor(spark, root)
     val cdir = new Path(catalogDir(root))
     fs.mkdirs(cdir)
-    var tries = 0
-    while (true) {
+    ManifestTable.retrying("catalog commit", root, maxRetries) {
       val latest = snapshots(spark, root).lastOption
       expectBase.foreach { eb =>
         val lv = latest.map(_.version).getOrElse(0)
@@ -127,13 +127,11 @@ object Catalog extends graft.QueryModule {
                     | "tables": {$body}$epochField}""".stripMargin
       // put-if-absent through the storage seam (CommitPrimitive) — same
       // commit point as the table manifests, same object-store caveats
-      if (CommitPrimitive.active(spark).putIfAbsent(spark,
-          new Path(cdir, f"v$v%08d.json"), json.getBytes("UTF-8"))) return v
-      tries += 1
-      if (tries > maxRetries) throw new IllegalStateException(
-        s"catalog commit at $root lost $tries consecutive races; giving up")
+      if (!CommitPrimitive.active(spark).putIfAbsent(spark,
+          new Path(cdir, f"v$v%08d.json"), json.getBytes("UTF-8")))
+        throw new LostRace(s"concurrent commit of catalog version $v detected at $root")
+      v
     }
-    -1 // unreachable
   }
 
   /** One atomic multi-table transaction: commit each table, then publish

@@ -100,8 +100,7 @@ object CopyInto extends graft.QueryModule {
     * new landed.
     */
   def copyInto(spark: SparkSession, dir: String, landingDir: String,
-      date: Int, time: Int, maxRetries: Int = 5,
-      dedupeBy: String = "path"): Option[Int] = {
+      date: Int, time: Int, dedupeBy: String = "path"): Option[Int] = {
     require(dedupeBy == "path" || dedupeBy == "content",
       s"dedupeBy must be 'path' or 'content', got '$dedupeBy'")
     val fs = new Path(landingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -123,27 +122,9 @@ object CopyInto extends graft.QueryModule {
         (firstPer.map(_._1), firstPer.map(_._2))
       }
     if (fresh.isEmpty) return None
-    val df = spark.read.parquet(fresh: _*)
-    val staged = ManifestTable.stageDataFiles(df, dir)
-    var tries = 0
-    while (true) {
-      val latest = ManifestTable.snapshots(spark, dir).lastOption
-      val v = latest.map(_.version).getOrElse(0) + 1
-      writeSidecar(spark, dir, v, fresh, freshDigests)
-      try {
-        ManifestTable.commitManifest(spark, dir, v, date, time,
-          latest.map(_.files).getOrElse(Nil) ++ staged,
-          deletes = latest.map(_.deletes).getOrElse(Nil), op = "append")
-        return Some(v)
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
-          tries += 1
-          if (tries > maxRetries) throw new IllegalStateException(
-            s"copy into $dir lost $tries consecutive races; giving up", e)
-      }
-    }
-    None // unreachable
+    val staged = ManifestTable.stageDataFiles(spark.read.parquet(fresh: _*), dir)
+    Some(ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
+      beforeCommit = (_, v) => writeSidecar(spark, dir, v, fresh, freshDigests)))
   }
 
   val queries: Map[String, Q] = Map(

@@ -17,11 +17,11 @@ object Cow {
     * immediately BEFORE the manifest rename — the hook the streaming
     * sink uses to place its exactly-once txn sidecar so a crash between
     * sidecar and rename replays the whole batch (the X58/X117 ordering).
-    * Returns the committed version; a lost rename race throws the
-    * "concurrent commit" IllegalStateException for the caller's retry
-    * loop (the caller must RE-READ and RECOMPUTE — the staged rewrite
-    * was derived from `snap`, so rebasing metadata alone would lose the
-    * concurrent writer's rows).
+    * Returns the committed version; a lost rename race throws
+    * [[LostRace]] for the caller's [[ManifestTable.retrying]] loop (the
+    * caller must RE-READ and RECOMPUTE — the staged rewrite was derived
+    * from `snap`, so rebasing metadata alone would lose the concurrent
+    * writer's rows).
     */
   def commit(spark: SparkSession, dir: String, snap: ManifestTable.Snapshot,
       retained: Seq[String], staged: Seq[String], date: Int, time: Int,

@@ -1,6 +1,5 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -98,8 +97,8 @@ object DeleteVectors extends graft.QueryModule {
     * "predicate applied to my parent version". Each attempt stages its
     * sidecar under a writer-unique `deletes/w<8 hex>` dir so concurrent
     * delete writers can never clobber each other's staged vectors.
-    */
-  /** `base`: when set, the tombstones are computed against THAT committed
+    *
+    * `base`: when set, the tombstones are computed against THAT committed
     * version and ITS file list carries into the new commit — the same
     * replay-idempotence hook as `appendRetrying`'s `base` (round-7 ADVICE):
     * a two-phase caller (X99 catalog cuts) must tombstone/rebase on the
@@ -110,21 +109,11 @@ object DeleteVectors extends graft.QueryModule {
     */
   def deleteWhereRetrying(spark: SparkSession, dir: String, predicate: Column,
       date: Int, time: Int, maxRetries: Int = 5,
-      base: Option[Int] = None): Int = {
-    var tries = 0
-    while (true) {
-      val rel = s"deletes/w${java.util.UUID.randomUUID.toString.take(8)}"
-      try return deleteAttempt(spark, dir, predicate, date, time, Some(rel), base)
-      catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
-          tries += 1
-          if (tries > maxRetries) throw new IllegalStateException(
-            s"delete commit at $dir lost $tries consecutive races; giving up", e)
-      }
+      base: Option[Int] = None): Int =
+    ManifestTable.retrying("delete commit", dir, maxRetries) {
+      deleteAttempt(spark, dir, predicate, date, time,
+        Some(s"deletes/w${java.util.UUID.randomUUID.toString.take(8)}"), base)
     }
-    -1 // unreachable
-  }
 
   /** One delete-commit attempt against the CURRENT latest snapshot.
     * `sidecarRel = None` stages at the version-named dir (single-writer
@@ -154,15 +143,9 @@ object DeleteVectors extends graft.QueryModule {
       if (parent.deletes.isEmpty) newDel.limit(0)
       else spark.read.schema("file STRING, pos BIGINT")
         .parquet(parent.deletes.map(f => s"$dir/$f"): _*)
-    val rel = sidecarRel.getOrElse(f"deletes/v$version%08d")
-    oldDel.unionByName(newDel).dropDuplicates("file", "pos")
-      .write.mode("overwrite").parquet(s"$dir/$rel")
-
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delFiles = fs.listStatus(new Path(s"$dir/$rel")).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"$rel/${s.getPath.getName}")
-      .sorted
+    val delFiles = ManifestTable.writeParquet(
+      oldDel.unionByName(newDel).dropDuplicates("file", "pos"), dir,
+      sidecarRel.getOrElse(f"deletes/v$version%08d"), "overwrite")
     ManifestTable.commitManifest(spark, dir, version, date, time,
       parent.files, deletes = delFiles)
     version

@@ -46,8 +46,13 @@ object Identity extends graft.QueryModule {
   }
 
   /** The committed high-water mark (0 for a fresh table). */
-  def highWater(spark: SparkSession, dir: String): Long = {
-    val latest = ManifestTable.latestVersion(spark, dir).getOrElse(return 0L)
+  def highWater(spark: SparkSession, dir: String): Long =
+    highWaterAt(spark, dir, ManifestTable.latestVersion(spark, dir).getOrElse(0))
+
+  /** The high-water mark as of committed version `latest` (0 = none):
+    * its newest sidecar at or below it.
+    */
+  private def highWaterAt(spark: SparkSession, dir: String, latest: Int): Long = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val d = new Path(idDir(dir))
     if (!fs.exists(d)) return 0L
@@ -65,43 +70,29 @@ object Identity extends graft.QueryModule {
 
   /** Append `df` with `idCol` = highWater+1..highWater+n (ordered by
     * `orderCol` within the batch), advancing the mark atomically with
-    * the commit. Returns (version, new high water).
+    * the commit. Returns (version, new high water). Every attempt first
+    * re-checks the mark against the snapshot it builds on: if another
+    * identity append moved it since `highWater` was read, the staged ids
+    * are suspect and the append refuses rather than commit duplicates
+    * (identity appends are a single-writer surface, like X112).
     */
   def appendWithIds(df: DataFrame, dir: String, idCol: String,
-      orderCol: String, date: Int, time: Int, parts: Int = 8,
-      maxRetries: Int = 5): (Int, Long) = {
+      orderCol: String, date: Int, time: Int, parts: Int = 8): (Int, Long) = {
     val spark = df.sparkSession
     val base = highWater(spark, dir)
     val withIds = DenseId.assign(df, orderCol, parts)
       .withColumn(idCol, col("rid") + base).drop("rid")
     val staged = ManifestTable.stageDataFiles(withIds, dir)
     val n = spark.read.parquet(staged.map(f => s"$dir/$f"): _*).count()
-    var tries = 0
-    while (true) {
-      val latest = ManifestTable.snapshots(spark, dir).lastOption
-      val v = latest.map(_.version).getOrElse(0) + 1
-      writeSidecar(spark, dir, v, base + n)
-      try {
-        ManifestTable.commitManifest(spark, dir, v, date, time,
-          latest.map(_.files).getOrElse(Nil) ++ staged,
-          deletes = latest.map(_.deletes).getOrElse(Nil), op = "append")
-        return (v, base + n)
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
-          // a concurrent writer may have claimed ids: the staged frame's
-          // ids are now suspect — refuse rather than risk duplicates
-          // (identity appends are a single-writer surface, like X112)
-          tries += 1
-          if (tries > maxRetries) throw new IllegalStateException(
-            s"identity append at $dir lost $tries consecutive races; giving up", e)
-          val nowBase = highWater(spark, dir)
-          if (nowBase != base) throw new IllegalStateException(
-            s"identity append at $dir raced a concurrent identity append " +
-              s"(high water moved $base -> $nowBase); re-run to reassign ids", e)
-      }
-    }
-    (-1, -1L) // unreachable
+    val v = ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
+      beforeCommit = { (parent, v) =>
+        val nowBase = highWaterAt(spark, dir, parent.map(_.version).getOrElse(0))
+        if (nowBase != base) throw new IllegalStateException(
+          s"identity append at $dir raced a concurrent identity append " +
+            s"(high water moved $base -> $nowBase); re-run to reassign ids")
+        writeSidecar(spark, dir, v, base + n)
+      })
+    (v, base + n)
   }
 
   val queries: Map[String, Q] = Map(

@@ -5,6 +5,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+/** A lost optimistic-concurrency race: the commit slot for a version (or
+  * catalog cut) was already taken. The one exception
+  * [[ManifestTable.retrying]] rebases on; every other failure escapes the
+  * loop. A subclass of IllegalStateException, so callers that treat any
+  * failed commit alike keep working.
+  */
+final class LostRace(msg: String) extends IllegalStateException(msg)
+
 /** Manifest-committed snapshots with time travel (extension X39) — the
   * atomic-visibility upgrade over [[Layout]]'s directory convention.
   *
@@ -89,12 +97,18 @@ object ManifestTable extends graft.QueryModule {
     * exercised directly (ManifestSpec). Returns the staged file paths
     * relative to the table dir.
     */
-  def writeDataFiles(df: DataFrame, dir: String, version: Int): Seq[String] = {
-    val rel = f"data/v$version%08d"
+  def writeDataFiles(df: DataFrame, dir: String, version: Int): Seq[String] =
+    writeParquet(df, dir, f"data/v$version%08d", "overwrite")
+
+  /** Write `df` as parquet under the table-relative dir `rel` with save
+    * `mode`, and return the written files' table-relative paths, sorted —
+    * the one staged-file writer behind data, staging and tombstone dirs.
+    */
+  private[lake] def writeParquet(df: DataFrame, dir: String, rel: String,
+      mode: String): Seq[String] = {
     val dataDir = s"$dir/$rel"
-    df.write.mode("overwrite").parquet(dataDir)
-    val fs = fsFor(df.sparkSession, dataDir)
-    fs.listStatus(new Path(dataDir)).toSeq
+    df.write.mode(mode).parquet(dataDir)
+    fsFor(df.sparkSession, dataDir).listStatus(new Path(dataDir)).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => s"$rel/${s.getPath.getName}")
       .sorted
@@ -103,7 +117,7 @@ object ManifestTable extends graft.QueryModule {
   /** Step 2: publish `version` by writing its manifest to a temp name and
     * atomically renaming it into place. The rename IS the commit point —
     * before it, readers cannot see the version at all; after it, they see
-    * all of it. Fails if the version was already committed (lost race).
+    * all of it. Throws [[LostRace]] if the version was already committed.
     */
   def commitManifest(spark: SparkSession, dir: String, version: Int,
       date: Int, time: Int, files: Seq[String],
@@ -111,20 +125,13 @@ object ManifestTable extends graft.QueryModule {
     val fs = fsFor(spark, dir)
     val mdir = new Path(manifestDir(dir))
     fs.mkdirs(mdir)
-    val delField =
-      if (deletes.isEmpty) ""
-      else s""",\n "deletes": [${deletes.map("\"" + _ + "\"").mkString(", ")}]"""
-    val opField = if (op == "write") "" else s""",\n "op": "$op""""
-    val json =
-      s"""{"version": $version, "run_date": $date, "run_time": $time,
-         | "files": [${files.map("\"" + _ + "\"").mkString(", ")}]$delField$opField}""".stripMargin
+    val json = snapshotJson(Snapshot(version, date, time, files, deletes, op))
     // the commit point — put-if-absent through the storage seam
     // (CommitPrimitive; rename on local FS/HDFS, swappable for a
     // conditional PUT on object stores — docs/STORAGE_CONTRACT.md)
     if (!CommitPrimitive.active(spark).putIfAbsent(spark,
         new Path(mdir, manifestName(version)), json.getBytes("UTF-8")))
-      throw new IllegalStateException(
-        s"concurrent commit of version $version detected at $dir")
+      throw new LostRace(s"concurrent commit of version $version detected at $dir")
     // X200: the commit just landed; checkpoint the log every Nth version
     // (table property `graft.checkpoint.interval`, 0 disables). Strictly
     // best-effort — a checkpoint accelerates reads, so its failure must
@@ -155,16 +162,9 @@ object ManifestTable extends graft.QueryModule {
     * immutable for the rest of the attempt loop. Returns table-relative
     * paths.
     */
-  def stageDataFiles(df: DataFrame, dir: String): Seq[String] = {
-    val rel = s"data/w${java.util.UUID.randomUUID.toString.take(8)}"
-    val dataDir = s"$dir/$rel"
-    df.write.mode("error").parquet(dataDir)
-    val fs = fsFor(df.sparkSession, dataDir)
-    fs.listStatus(new Path(dataDir)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"$rel/${s.getPath.getName}")
-      .sorted
-  }
+  def stageDataFiles(df: DataFrame, dir: String): Seq[String] =
+    writeParquet(df, dir, s"data/w${java.util.UUID.randomUUID.toString.take(8)}",
+      "error")
 
   /** Delete staged-but-uncommitted data dirs (refusal / scratch cleanup —
     * the complement of [[stageDataFiles]]). Accepts the relative paths
@@ -177,26 +177,27 @@ object ManifestTable extends graft.QueryModule {
       .foreach(rel => fs.delete(new Path(s"$dir/$rel"), true))
   }
 
-  /** Bounded optimistic-commit loop: re-resolve the latest snapshot,
-    * attempt the manifest publish, and on a lost rename race try again
-    * against the new latest. Only manifest metadata is rebuilt per
-    * attempt — data files were staged once.
+  /** The one optimistic-commit loop: run `attempt`, and on a [[LostRace]]
+    * run it again, up to `maxRetries` retries. Each attempt resolves the
+    * latest snapshot itself, so the loop does no I/O of its own. After
+    * `maxRetries + 1` losses it throws a plain IllegalStateException —
+    * not a LostRace, so an exhausted inner loop is never retried by an
+    * outer one. Any other exception escapes at once.
     */
-  private def retryLoop(spark: SparkSession, dir: String, maxRetries: Int)(
-      attempt: Option[Snapshot] => Int): Int = {
+  private[graft] def retrying[T](what: String, at: String,
+      maxRetries: Int = 5)(attempt: => T): T = {
     var tries = 0
-    while (true) {
-      val latest = snapshots(spark, dir).lastOption
-      try return attempt(latest)
+    var result: Option[T] = None
+    while (result.isEmpty) {
+      try result = Some(attempt)
       catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
+        case e: LostRace =>
           tries += 1
           if (tries > maxRetries) throw new IllegalStateException(
-            s"commit at $dir lost $tries consecutive races; giving up", e)
+            s"$what at $at lost $tries consecutive races; giving up", e)
       }
     }
-    -1 // unreachable
+    result.get
   }
 
   /** REPLACE commit with optimistic concurrency: the snapshot carries its
@@ -213,11 +214,20 @@ object ManifestTable extends graft.QueryModule {
   /** [[commitRetrying]] from already-staged files — the stage-first hook
     * X187 constraint enforcement needs (validate the staged bytes, then
     * publish exactly those bytes).
+    *
+    * `beforeCommit` receives the snapshot the attempt builds on and the
+    * target version, and runs immediately before the manifest publish on
+    * every attempt: the one place a committer writes the version's
+    * sidecars (zone maps, ingest watermarks, txn markers), so a crash
+    * between sidecar and publish leaves the sidecar unreferenced.
     */
   def commitStagedRetrying(spark: SparkSession, dir: String, date: Int,
-      time: Int, staged: Seq[String], maxRetries: Int = 5): Int =
-    retryLoop(spark, dir, maxRetries) { latest =>
+      time: Int, staged: Seq[String], maxRetries: Int = 5,
+      beforeCommit: (Option[Snapshot], Int) => Unit = (_, _) => ()): Int =
+    retrying("commit", dir, maxRetries) {
+      val latest = snapshots(spark, dir).lastOption
       val v = latest.map(_.version).getOrElse(0) + 1
+      beforeCommit(latest, v)
       commitManifest(spark, dir, v, date, time, staged)
       v
     }
@@ -246,18 +256,23 @@ object ManifestTable extends graft.QueryModule {
       stageDataFiles(df, dir), maxRetries, base)
 
   /** [[appendRetrying]] from already-staged files — the stage-first hook
-    * X187 constraint enforcement needs.
+    * X187 constraint enforcement needs. `beforeCommit` is
+    * [[commitStagedRetrying]]'s sidecar slot; its snapshot is the one
+    * whose files carry forward.
     */
   def appendStagedRetrying(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
-      base: Option[Int] = None): Int = {
+      base: Option[Int] = None,
+      beforeCommit: (Option[Snapshot], Int) => Unit = (_, _) => ()): Int = {
     val baseSnap = base.map { bv =>
       snapshots(spark, dir).find(_.version == bv).getOrElse(
         throw new NoSuchElementException(s"no committed version $bv at $dir"))
     }
-    retryLoop(spark, dir, maxRetries) { latest =>
+    retrying("append", dir, maxRetries) {
+      val latest = snapshots(spark, dir).lastOption
       val v = latest.map(_.version).getOrElse(0) + 1
       val carried = baseSnap.orElse(latest)
+      beforeCommit(carried, v)
       commitManifest(spark, dir, v, date, time,
         carried.map(_.files).getOrElse(Nil) ++ staged,
         deletes = carried.map(_.deletes).getOrElse(Nil), op = "append")
@@ -429,25 +444,13 @@ object ManifestTable extends graft.QueryModule {
               "^" + java.util.regex.Pattern.quote(od) + "/",
               java.util.regex.Matcher.quoteReplacement(nd) + "/"))
         }
-        val delDir = s"deletes/w${java.util.UUID.randomUUID.toString.take(8)}"
-        remapped.write.mode("error").parquet(s"$dstDir/$delDir")
-        fs.listStatus(new Path(s"$dstDir/$delDir")).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(s => s"$delDir/${s.getPath.getName}").sorted
+        writeParquet(remapped, dstDir,
+          s"deletes/w${java.util.UUID.randomUUID.toString.take(8)}", "error")
       }
     commitManifest(spark, dstDir, 1, date, time, files, deletes = deletes)
     1
   }
 
-  /** The table's commit log as a DataFrame (X102 — the DESCRIBE HISTORY
-    * surface): one row per version with the operation KIND and file
-    * counts, derived from manifests ALONE — zero data bytes read, so the
-    * log of a 100 TB table costs the same as a 100 MB one. Kinds: the
-    * manifest's own `op` when it carries one ("append"/"materialize");
-    * otherwise "delete" when the version keeps its parent's exact file
-    * list but changes the deletion-vector set (X64's tombstone-only
-    * commit), else "write" (full replace).
-    */
   /** Exact row count of a committed snapshot from parquet FOOTERS alone —
     * driver-side metadata reads, no Spark job (how Delta/Iceberg answer
     * `count(*)` and DESCRIBE HISTORY row counts). Valid for DV-carrying
@@ -486,6 +489,15 @@ object ManifestTable extends graft.QueryModule {
     }
   }
 
+  /** The table's commit log as a DataFrame (X102 — the DESCRIBE HISTORY
+    * surface): one row per version with the operation KIND and file
+    * counts, derived from manifests ALONE — zero data bytes read, so the
+    * log of a 100 TB table costs the same as a 100 MB one. Kinds: the
+    * manifest's own `op` when it carries one ("append"/"materialize");
+    * otherwise "delete" when the version keeps its parent's exact file
+    * list but changes the deletion-vector set (X64's tombstone-only
+    * commit), else "write" (full replace).
+    */
   def history(spark: SparkSession, dir: String): DataFrame = {
     val rows = historyRows(spark, dir).map { case (s, kind) =>
       (s.version.toLong, s.runDate, s.runTime, kind,
@@ -495,12 +507,6 @@ object ManifestTable extends graft.QueryModule {
       .toDF("version", "run_date", "run_time", "op", "n_files", "n_delete_files")
   }
 
-  /** Time travel: the table exactly as committed at `version` — a scan of
-    * that manifest's file list only, immune to in-flight writes of later
-    * versions (their data files are staged but unreferenced). Versions
-    * carrying deletion vectors (X64) get them applied; plain versions keep
-    * the bare-scan plan (pinned in DeleteVectorSpec).
-    */
   // A committed version's file list is immutable, so its merged parquet
   // schema is too — cache it per (session, dir, version) and hand the
   // reader an explicit schema. This removes the footer-inference Spark
@@ -530,6 +536,12 @@ object ManifestTable extends graft.QueryModule {
     spark.read.schema(sch).parquet(paths: _*)
   }
 
+  /** Time travel: the table exactly as committed at `version` — a scan of
+    * that manifest's file list only, immune to in-flight writes of later
+    * versions (their data files are staged but unreferenced). Versions
+    * carrying deletion vectors (X64) get them applied; plain versions keep
+    * the bare-scan plan (pinned in DeleteVectorSpec).
+    */
   def readVersion(spark: SparkSession, dir: String, version: Int): DataFrame = {
     val snap = snapshots(spark, dir).find(_.version == version)
       .getOrElse(throw new NoSuchElementException(

@@ -89,10 +89,11 @@ object Merge extends graft.QueryModule {
     *     stats on the same columns, one manifest rename.
     *
     * A batch matching nothing and inserting nothing commits nothing
-    * (returns the current version). A lost rename race throws the
-    * "concurrent commit" error — callers retry by re-invoking (the
-    * rewrite must recompute against the new latest or a concurrent
-    * writer's rows would be lost; the streaming sink's loop does this).
+    * (returns the current version). A lost rename race throws
+    * [[LostRace]] — callers retry by re-invoking inside
+    * [[ManifestTable.retrying]] (the rewrite must recompute against the
+    * new latest or a concurrent writer's rows would be lost; the
+    * streaming sink's loop does this).
     * `beforeCommit` is the exactly-once txn-sidecar hook (see
     * [[Cow.commit]]). Small per-batch insert files accumulate by design;
     * X174 maintenance bin-packs them.

@@ -29,28 +29,20 @@ object Restore extends graft.QueryModule {
     * Returns the committed version number.
     */
   def restore(spark: SparkSession, dir: String, toVersion: Int,
-      date: Int, time: Int, maxRetries: Int = 5): Int = {
+      date: Int, time: Int): Int = {
     val snaps = ManifestTable.snapshots(spark, dir)
     val target = snaps.find(_.version == toVersion).getOrElse(
       throw new NoSuchElementException(
         s"no version $toVersion at $dir (have ${snaps.map(_.version).mkString(",")})"))
-    var tries = 0
-    while (true) {
+    ManifestTable.retrying("restore", dir) {
       val latest = ManifestTable.snapshots(spark, dir).last
-      if (latest.version == toVersion) return toVersion // already there
-      try {
+      if (latest.version == toVersion) toVersion // already there
+      else {
         ManifestTable.commitManifest(spark, dir, latest.version + 1, date, time,
           target.files, deletes = target.deletes, op = "restore")
-        return latest.version + 1
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
-          tries += 1
-          if (tries > maxRetries) throw new IllegalStateException(
-            s"restore at $dir lost $tries consecutive races; giving up", e)
+        latest.version + 1
       }
     }
-    -1 // unreachable
   }
 
   val queries: Map[String, Q] = Map(

@@ -109,14 +109,9 @@ object TableDiff extends graft.QueryModule {
       if (latest.deletes.isEmpty) newDel.limit(0)
       else spark.read.schema("file STRING, pos BIGINT")
         .parquet(latest.deletes.map(f => s"$dir/$f"): _*)
-    val rel = f"deletes/v$version%08d"
-    oldDel.unionByName(newDel).dropDuplicates("file", "pos")
-      .write.mode("overwrite").parquet(s"$dir/$rel")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$rel"))
-      .toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"$rel/${s.getPath.getName}").sorted
+    val delFiles = ManifestTable.writeParquet(
+      oldDel.unionByName(newDel).dropDuplicates("file", "pos"), dir,
+      f"deletes/v$version%08d", "overwrite")
 
     val staged = ManifestTable.stageDataFiles(src.where(hit), dir)
     ManifestTable.commitManifest(spark, dir, version, date, time,

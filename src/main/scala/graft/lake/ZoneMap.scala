@@ -52,9 +52,6 @@ object ZoneMap extends graft.QueryModule {
   private def statsPath(dir: String, version: Int) =
     new Path(s"$dir/_manifests", statsName(version))
 
-  /** One combinable aggregate pass over already-staged files → their
-    * FileStats, rel-resolved against `files`.
-    */
   /** X168: distinct-value sets larger than this per (file, column) are
     * NOT recorded — the file then simply never equality-prunes, the same
     * absence-degrades rule as every other stat (a genuinely categorical
@@ -63,6 +60,9 @@ object ZoneMap extends graft.QueryModule {
     */
   val MaxValsPerFile: Int = 64
 
+  /** One combinable aggregate pass over already-staged files → their
+    * FileStats, rel-resolved against `files`.
+    */
   private[graft] def statsFor(spark: SparkSession, dir: String, files: Seq[String],
       statsCols: Seq[String], strCols: Seq[String],
       setCols: Seq[String] = Nil): Seq[FileStats] = {
@@ -96,10 +96,6 @@ object ZoneMap extends graft.QueryModule {
     }.toSeq.sortBy(_.file)
   }
 
-  /** Commit `df` as the next version with zone-map stats on `statsCols`
-    * (long-comparable columns) and `strCols` (string columns, X78 —
-    * lexicographic bounds). Returns the committed version.
-    */
   /** X189 — (re)build the stats sidecar for the LATEST version in place
     * (`ANALYZE TABLE … COMPUTE STATISTICS`): a table committed without
     * stats gains X57/X78/X69 pruning with zero data rewrites. Default
@@ -134,26 +130,16 @@ object ZoneMap extends graft.QueryModule {
     */
   def commitStagedWithStats(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], statsCols: Seq[String],
-      strCols: Seq[String] = Nil, maxRetries: Int = 5): Int = {
+      strCols: Seq[String] = Nil): Int = {
     val stats = statsFor(spark, dir, staged, statsCols, strCols)
-    var tries = 0
-    while (true) {
-      val v = ManifestTable.latestVersion(spark, dir).getOrElse(0) + 1
-      writeStatsSidecar(spark, dir, v, stats)
-      try {
-        ManifestTable.commitManifest(spark, dir, v, date, time, staged)
-        return v
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
-          tries += 1
-          if (tries > maxRetries) throw new IllegalStateException(
-            s"replace at $dir lost $tries consecutive races; giving up", e)
-      }
-    }
-    -1 // unreachable
+    ManifestTable.commitStagedRetrying(spark, dir, date, time, staged,
+      beforeCommit = (_, v) => writeStatsSidecar(spark, dir, v, stats))
   }
 
+  /** Commit `df` as the next version with zone-map stats on `statsCols`
+    * (long-comparable columns) and `strCols` (string columns, X78 —
+    * lexicographic bounds). Returns the committed version.
+    */
   def commitWithStats(df: DataFrame, dir: String, date: Int, time: Int,
       statsCols: Seq[String], strCols: Seq[String] = Nil,
       op: String = "write", setCols: Seq[String] = Nil): Int = {
@@ -161,8 +147,6 @@ object ZoneMap extends graft.QueryModule {
     val version = ManifestTable.latestVersion(spark, dir).getOrElse(0) + 1
     val files = ManifestTable.writeDataFiles(df, dir, version)
     val stats = statsFor(spark, dir, files, statsCols, strCols, setCols)
-
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     writeStatsSidecar(spark, dir, version, stats)
     ManifestTable.commitManifest(spark, dir, version, date, time, files, op = op)
     version
@@ -206,10 +190,9 @@ object ZoneMap extends graft.QueryModule {
     * new parent on a lost race.
     */
   def appendWithStats(df: DataFrame, dir: String, date: Int, time: Int,
-      statsCols: Seq[String], strCols: Seq[String] = Nil,
-      maxRetries: Int = 5): Int =
+      statsCols: Seq[String], strCols: Seq[String] = Nil): Int =
     appendStagedWithStats(df.sparkSession, dir, date, time,
-      ManifestTable.stageDataFiles(df, dir), statsCols, strCols, maxRetries)
+      ManifestTable.stageDataFiles(df, dir), statsCols, strCols)
 
   /** [[appendWithStats]] from already-staged files — the stage-first hook
     * (X187/X216): callers validate the staged bytes, then publish exactly
@@ -217,30 +200,18 @@ object ZoneMap extends graft.QueryModule {
     */
   def appendStagedWithStats(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], statsCols: Seq[String],
-      strCols: Seq[String] = Nil, maxRetries: Int = 5): Int = {
-    val newStats = statsFor(spark, dir, staged, statsCols, strCols)
-    var tries = 0
-    while (true) {
-      val latest = ManifestTable.snapshots(spark, dir).lastOption
-      val v = latest.map(_.version).getOrElse(0) + 1
-      val parentStats = latest.flatMap(l => fileStats(spark, dir, l.version))
-        .getOrElse(Nil)
-      writeStatsSidecar(spark, dir, v, parentStats ++ newStats)
-      try {
-        ManifestTable.commitManifest(spark, dir, v, date, time,
-          latest.map(_.files).getOrElse(Nil) ++ staged,
-          deletes = latest.map(_.deletes).getOrElse(Nil), op = "append")
-        return v
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
-          tries += 1
-          if (tries > maxRetries) throw new IllegalStateException(
-            s"append at $dir lost $tries consecutive races; giving up", e)
-      }
-    }
-    -1 // unreachable
-  }
+      strCols: Seq[String] = Nil): Int =
+    ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
+      beforeCommit = appendStats(spark, dir,
+        statsFor(spark, dir, staged, statsCols, strCols)))
+
+  /** The `beforeCommit` hook of a stats-maintaining append: the new
+    * version's sidecar is the parent's entries verbatim plus `newStats`.
+    */
+  private[graft] def appendStats(spark: SparkSession, dir: String,
+      newStats: Seq[FileStats]): (Option[ManifestTable.Snapshot], Int) => Unit =
+    (parent, v) => writeStatsSidecar(spark, dir, v,
+      parent.flatMap(p => fileStats(spark, dir, p.version)).getOrElse(Nil) ++ newStats)
 
   /** The sidecar for `version`, if one was written. */
   def fileStats(spark: SparkSession, dir: String, version: Int): Option[Seq[FileStats]] = {
@@ -267,7 +238,7 @@ object ZoneMap extends graft.QueryModule {
       case Some(stats) =>
         val ranged = stats.filter(s =>
           s.lo.contains(column) && s.hi(column) >= lo && s.lo(column) <= hi)
-          .map(_.file)
+          .map(_.file).filter(all.toSet)
         // Files the stats pass somehow missed stay in scope — never prune
         // on absence of evidence.
         val known = stats.map(_.file).toSet
@@ -310,7 +281,7 @@ object ZoneMap extends graft.QueryModule {
       case Some(stats) =>
         val ranged = stats.filter(s =>
           s.slo.contains(column) && s.shi(column) >= lo && s.slo(column) <= hi)
-          .map(_.file)
+          .map(_.file).filter(snap.files.toSet)
         val known = stats.filter(_.slo.contains(column)).map(_.file).toSet
         ranged ++ snap.files.filterNot(known.contains)
     }
@@ -339,7 +310,7 @@ object ZoneMap extends graft.QueryModule {
         val vset = values.toSet
         val hit = stats.filter(s => s.vals.get(column)
             .forall(_.exists(vset.contains))) // no set recorded ⇒ stays
-          .map(_.file)
+          .map(_.file).filter(all.toSet)
         val known = stats.map(_.file).toSet
         hit ++ all.filterNot(known.contains)
     }

@@ -85,7 +85,7 @@ object JdbcIncr extends graft.QueryModule {
     * new (no version is created).
     */
   def pull(spark: SparkSession, cfg: JdbcConfig, table: String, wmCol: String,
-      dir: String, date: Int, time: Int, maxRetries: Int = 5): Option[Int] = {
+      dir: String, date: Int, time: Int): Option[Int] = {
     val lastWm = committedWatermark(spark, dir)
     val src = lastWm.foldLeft(Jdbc.read(spark, cfg, table))(
       (df, w) => df.where(col(wmCol) > lit(w)))
@@ -96,27 +96,10 @@ object JdbcIncr extends graft.QueryModule {
     val mx = if (staged.isEmpty) null else stagedDf.agg(max(col(wmCol))).head.get(0)
     if (mx == null) return None // empty increment: no commit, no version
     val newWm = mx.asInstanceOf[Number].longValue
-    var tries = 0
-    while (true) {
-      val latest = ManifestTable.snapshots(spark, dir).lastOption
-      val v = latest.map(_.version).getOrElse(0) + 1
-      // sidecar first, then the manifest rename — the commit makes both
-      // the rows and their watermark visible in one atomic step
-      writeSidecar(spark, dir, v, newWm)
-      try {
-        ManifestTable.commitManifest(spark, dir, v, date, time,
-          latest.map(_.files).getOrElse(Nil) ++ staged,
-          deletes = latest.map(_.deletes).getOrElse(Nil), op = "append")
-        return Some(v)
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
-          tries += 1
-          if (tries > maxRetries) throw new IllegalStateException(
-            s"ingest at $dir lost $tries consecutive races; giving up", e)
-      }
-    }
-    None // unreachable
+    // the watermark sidecar lands right before the manifest publish — the
+    // commit makes both the rows and their watermark visible in one step
+    Some(ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
+      beforeCommit = (_, v) => writeSidecar(spark, dir, v, newWm)))
   }
 
   val queries: Map[String, Q] = Map(

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.lake.ManifestTable
+import graft.lake.{ManifestTable, ZoneMap}
 import graft.sources.Tables
 import graft.util.{Exact, FixtureCache, Scratch}
 
@@ -72,44 +72,6 @@ object GraftSink extends graft.QueryModule {
     Some(Txn((j \ "app_id").extract[String], (j \ "batch_id").extract[Long]))
   }
 
-  /** Append `df` as the next version with `txn` recorded atomically —
-    * the sidecar-before-rename loop shared with X112.
-    */
-  private def appendWithTxn(df: DataFrame, dir: String, txn: Txn,
-      date: Int, time: Int, maxRetries: Int = 5,
-      statsCols: Seq[String] = Nil): Int = {
-    val spark = df.sparkSession
-    val staged = ManifestTable.stageDataFiles(df, dir)
-    // X134 composition: per-batch zone maps keep the sink table prunable
-    val newStats =
-      if (statsCols.isEmpty) Nil
-      else graft.lake.ZoneMap.statsFor(spark, dir, staged, statsCols, Nil)
-    var tries = 0
-    while (true) {
-      val latest = ManifestTable.snapshots(spark, dir).lastOption
-      val v = latest.map(_.version).getOrElse(0) + 1
-      writeSidecar(spark, dir, v, txn)
-      if (statsCols.nonEmpty) {
-        val parentStats = latest.flatMap(l =>
-          graft.lake.ZoneMap.fileStats(spark, dir, l.version)).getOrElse(Nil)
-        graft.lake.ZoneMap.writeStatsSidecar(spark, dir, v, parentStats ++ newStats)
-      }
-      try {
-        ManifestTable.commitManifest(spark, dir, v, date, time,
-          latest.map(_.files).getOrElse(Nil) ++ staged,
-          deletes = latest.map(_.deletes).getOrElse(Nil), op = "append")
-        return v
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.startsWith("concurrent commit") =>
-          tries += 1
-          if (tries > maxRetries) throw new IllegalStateException(
-            s"stream sink at $dir lost $tries consecutive races; giving up", e)
-      }
-    }
-    -1 // unreachable
-  }
-
   /** DSv1 streaming sink: one version per micro-batch — APPEND by
     * default; with `mergeKeys` set, each batch UPSERTS by key into the
     * previous state (the "merge in foreachBatch" pattern, canned): last
@@ -140,8 +102,17 @@ object GraftSink extends graft.QueryModule {
         val first = deleteCol.foldLeft(batch) { (b, dc) =>
           b.where(!coalesce(col(dc), lit(false))).drop(dc)
         }
-        appendWithTxn(first, dir, Txn(appId, batchId), 20250801, 0,
-          statsCols = statsCols)
+        val staged = ManifestTable.stageDataFiles(first, dir)
+        // X134 composition: per-batch zone maps keep the sink table prunable
+        val stats: (Option[ManifestTable.Snapshot], Int) => Unit =
+          if (statsCols.isEmpty) (_, _) => ()
+          else ZoneMap.appendStats(spark, dir,
+            ZoneMap.statsFor(spark, dir, staged, statsCols, Nil))
+        ManifestTable.appendStagedRetrying(spark, dir, 20250801, 0, staged,
+          beforeCommit = { (parent, v) =>
+            writeSidecar(spark, dir, v, Txn(appId, batchId))
+            stats(parent, v)
+          })
       } else {
         // X180: each batch lands COPY-ON-WRITE over touched files only
         // (Merge.upsertCow) — commit cost tracks the batch, not the
@@ -154,23 +125,10 @@ object GraftSink extends graft.QueryModule {
         // re-reads the new latest. Cache the batch so only the merge
         // re-runs.
         batch.persist()
-        try {
-          var tries = 0
-          var done = false
-          while (!done) {
-            try {
-              graft.lake.Merge.upsertCow(spark, dir, batch, mergeKeys,
-                20250801, 0, deleteCol = deleteCol,
-                beforeCommit = v => writeSidecar(spark, dir, v, Txn(appId, batchId)))
-              done = true
-            } catch {
-              case e: IllegalStateException if e.getMessage != null &&
-                  e.getMessage.startsWith("concurrent commit") =>
-                tries += 1
-                if (tries > 5) throw new IllegalStateException(
-                  s"stream merge sink at $dir lost $tries races; giving up", e)
-            }
-          }
+        try ManifestTable.retrying("stream merge sink", dir) {
+          graft.lake.Merge.upsertCow(spark, dir, batch, mergeKeys,
+            20250801, 0, deleteCol = deleteCol,
+            beforeCommit = v => writeSidecar(spark, dir, v, Txn(appId, batchId)))
         } finally batch.unpersist()
       }
     }

@@ -3,6 +3,9 @@ package graft.lake
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.json4s.JInt
+import org.json4s.jackson.JsonMethods
 
 import graft.SparkSpec
 
@@ -27,6 +30,52 @@ class CountingCommit extends CommitPrimitive {
 object CountingCommit {
   val puts = new AtomicInteger(0)
   val replaces = new AtomicInteger(0)
+}
+
+/** A primitive that loses races on demand. While armed for a directory,
+  * each manifest or catalog put under it first lands a competing commit
+  * in the slot — the previous version's content, renumbered to the slot's
+  * version — and then reports the race lost, as a concurrent writer that
+  * got there first would. Other puts and every replace pass straight to
+  * [[RenameCommit]].
+  */
+class InterloperCommit extends CommitPrimitive {
+  override def putIfAbsent(spark: SparkSession, target: Path,
+      payload: Array[Byte]): Boolean =
+    InterloperCommit.slot(target) match {
+      case Some(v) if InterloperCommit.left.getAndDecrement() > 0 =>
+        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val in = fs.open(new Path(target.getParent, f"v${v - 1}%08d.json"))
+        val prev = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        val competing = JsonMethods.compact(JsonMethods.render(
+          JsonMethods.parse(prev).replace(List("version"), JInt(v))))
+        assert(RenameCommit.putIfAbsent(spark, target, competing.getBytes("UTF-8")))
+        false
+      case _ => RenameCommit.putIfAbsent(spark, target, payload)
+    }
+  override def replace(spark: SparkSession, target: Path,
+      payload: Array[Byte]): Unit = RenameCommit.replace(spark, target, payload)
+}
+object InterloperCommit {
+  private val Slot = """v(\d{8})\.json""".r
+  @volatile private var under = ""
+  private val left = new AtomicInteger(0)
+
+  /** Lose the next `losses` manifest or catalog puts below `dir`. */
+  def arm(dir: String, losses: Int): Unit = {
+    under = new Path(dir).toUri.getPath
+    left.set(losses)
+  }
+
+  def disarm(): Unit = left.set(0)
+
+  private def slot(target: Path): Option[Int] =
+    (target.getName, target.getParent.getName) match {
+      case (Slot(v), "_manifests" | "_catalog")
+          if target.toUri.getPath.startsWith(under) => Some(v.toInt)
+      case _ => None
+    }
 }
 
 /** The storage commit seam (docs/STORAGE_CONTRACT.md): rename-backed
@@ -184,5 +233,183 @@ class CommitPrimitiveSpec extends SparkSpec {
       impl0.fold(spark.conf.unset(CommitPrimitive.ImplConf))(
         spark.conf.set(CommitPrimitive.ImplConf, _))
     }
+  }
+
+  /** Run `body` with every manifest or catalog put below `dir` going
+    * through [[InterloperCommit]], armed to lose `losses` races.
+    */
+  private def losing[T](dir: String, losses: Int = 1)(body: => T): T = {
+    val impl0 = spark.conf.getOption(CommitPrimitive.ImplConf)
+    spark.conf.set(CommitPrimitive.ImplConf, classOf[InterloperCommit].getName)
+    InterloperCommit.arm(dir, losses)
+    try body finally {
+      InterloperCommit.disarm()
+      impl0.fold(spark.conf.unset(CommitPrimitive.ImplConf))(
+        spark.conf.set(CommitPrimitive.ImplConf, _))
+    }
+  }
+
+  /** After one lost race, the committer landed at latest+2 and the
+    * interloper's version at latest+1 still holds latest's content.
+    */
+  private def landedPastInterloper(dir: String, latest: Int, landed: Int): Unit = {
+    assert(landed == latest + 2)
+    val snaps = ManifestTable.snapshots(spark, dir)
+    assert(snaps.map(_.version) == (1 to latest + 2))
+    assert(snaps(latest).files == snaps(latest - 1).files &&
+      snaps(latest).deletes == snaps(latest - 1).deletes,
+      "the interloper's version was overwritten")
+  }
+
+  private def sidecarAt(dir: String, sub: String, v: Int): String = {
+    val p = new Path(f"$dir/$sub/v$v%08d.json")
+    assert(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
+      s"no $sub sidecar at the landed version $v")
+    readBytes(p)
+  }
+
+  test("one lost race: append, replace, delete and restore land past the interloper") {
+    val kv = (0L until 6L).map(i => (i, i)).toDF("k", "v")
+    val app = s"${graft.util.Scratch.dir("lose_app")}/t"
+    ManifestTable.commit(kv, app, 20250901, 900)
+    landedPastInterloper(app, 1, losing(app)(
+      ManifestTable.appendRetrying(Seq((9L, 9L)).toDF("k", "v"), app, 20250901, 910)))
+    assert(ManifestTable.readLatest(spark, app).count() == 7)
+
+    val rep = s"${graft.util.Scratch.dir("lose_rep")}/t"
+    ManifestTable.commit(kv, rep, 20250901, 900)
+    landedPastInterloper(rep, 1, losing(rep)(
+      ManifestTable.commitRetrying(Seq((9L, 9L)).toDF("k", "v"), rep, 20250901, 910)))
+    assert(ManifestTable.readLatest(spark, rep).count() == 1)
+
+    val del = s"${graft.util.Scratch.dir("lose_del")}/t"
+    ManifestTable.commit(kv, del, 20250901, 900)
+    DeleteVectors.deleteWhere(spark, del, col("k") === 0L, 20250901, 905)
+    landedPastInterloper(del, 2, losing(del)(
+      DeleteVectors.deleteWhereRetrying(spark, del, col("k") < 3L, 20250901, 910)))
+    assert(ManifestTable.readLatest(spark, del).count() == 3)
+
+    val res = s"${graft.util.Scratch.dir("lose_res")}/t"
+    ManifestTable.commit(kv, res, 20250901, 900)
+    ManifestTable.commit(kv.limit(1), res, 20250901, 905)
+    landedPastInterloper(res, 2, losing(res)(
+      Restore.restore(spark, res, 1, 20250901, 910)))
+    assert(ManifestTable.readLatest(spark, res).count() == 6)
+  }
+
+  test("one lost race: zone-map append and replace put their stats at the landed version, and the interloper's version never reads them") {
+    val kv = (0L until 6L).map(i => (i, i)).toDF("k", "v")
+    def check(dir: String, landed: Int, newKeys: Set[Long]): Unit = {
+      landedPastInterloper(dir, 1, landed)
+      assert(ZoneMap.fileStats(spark, dir, landed).get
+        .exists(s => newKeys.contains(s.lo("k"))))
+      // the lost attempt left a stats sidecar at the interloper's version
+      // naming files that version does not hold: pruning must not add them
+      val got = ZoneMap.readRange(spark, dir, 2, "k", 0L, 100L)
+        .select("k", "v").as[(Long, Long)].collect().toSet
+      assert(got == (0L until 6L).map(i => (i, i)).toSet)
+    }
+    val app = s"${graft.util.Scratch.dir("lose_zapp")}/t"
+    ZoneMap.commitWithStats(kv, app, 20250901, 900, Seq("k"))
+    check(app, losing(app)(ZoneMap.appendWithStats(
+      Seq((50L, 50L)).toDF("k", "v"), app, 20250901, 910, Seq("k"))), Set(50L))
+
+    val rep = s"${graft.util.Scratch.dir("lose_zrep")}/t"
+    ZoneMap.commitWithStats(kv, rep, 20250901, 900, Seq("k"))
+    val staged = ManifestTable.stageDataFiles(Seq((60L, 60L)).toDF("k", "v"), rep)
+    check(rep, losing(rep)(ZoneMap.commitStagedWithStats(
+      spark, rep, 20250901, 910, staged, Seq("k"))), Set(60L))
+  }
+
+  test("one lost race: COPY INTO and the JDBC pull put their sidecars at the landed version; an identity append refuses") {
+    val landing = graft.util.Scratch.dir("lose_land")
+    def drop(name: String, k: Long): Unit = {
+      val tmp = s"$landing/_tmp_$name"
+      Seq((k, k)).toDF("k", "v").coalesce(1).write.parquet(tmp)
+      val fs = new Path(landing).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.rename(fs.listStatus(new Path(tmp)).map(_.getPath)
+        .find(_.getName.endsWith(".parquet")).get, new Path(s"$landing/$name.parquet"))
+      fs.delete(new Path(tmp), true)
+    }
+    val cp = s"${graft.util.Scratch.dir("lose_copy")}/t"
+    drop("a", 1L)
+    CopyInto.copyInto(spark, cp, landing, 20250901, 900)
+    drop("b", 2L)
+    val cv = losing(cp)(CopyInto.copyInto(spark, cp, landing, 20250901, 910))
+    landedPastInterloper(cp, 1, cv.get)
+    assert(sidecarAt(cp, "_copy", 3).contains(s"$landing/b.parquet"))
+    assert(ManifestTable.readLatest(spark, cp).count() == 2)
+
+    val cfg = graft.sinks.Jdbc.JdbcConfig(
+      url = "jdbc:derby:memory:commitlosespec;create=true",
+      driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    val jd = s"${graft.util.Scratch.dir("lose_jdbc")}/t"
+    graft.sinks.Jdbc.append((1L to 3L).map(i => (i, i)).toDF("wm", "v"), cfg, "lose_src")
+    graft.sources.JdbcIncr.pull(spark, cfg, "lose_src", "wm", jd, 20250901, 900)
+    graft.sinks.Jdbc.append(Seq((4L, 4L)).toDF("wm", "v"), cfg, "lose_src")
+    val jv = losing(jd)(
+      graft.sources.JdbcIncr.pull(spark, cfg, "lose_src", "wm", jd, 20250901, 910))
+    landedPastInterloper(jd, 1, jv.get)
+    assert(sidecarAt(jd, "_ingest", 3).contains("\"watermark\": 4"))
+    assert(graft.sources.JdbcIncr.committedWatermark(spark, jd).contains(4L))
+
+    // identity: the retry sees the high water moved and refuses rather
+    // than commit ids a concurrent writer may have issued
+    val id = s"${graft.util.Scratch.dir("lose_ident")}/t"
+    Identity.appendWithIds((0L until 3L).toDF("k"), id, "id", "k", 20250901, 900)
+    val e = intercept[IllegalStateException](losing(id)(
+      Identity.appendWithIds((5L until 7L).toDF("k"), id, "id", "k", 20250901, 910)))
+    assert(e.getMessage.contains("high water moved"), e.getMessage)
+    assert(ManifestTable.snapshots(spark, id).map(_.version) == Seq(1, 2))
+    val ids = ManifestTable.readLatest(spark, id).select("id").as[Long].collect()
+    assert(ids.sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("one lost race: the stream sink's append and merge put their txn sidecars at the landed version") {
+    val kv = (0L until 6L).map(i => (i, i)).toDF("k", "v")
+    val app = s"${graft.util.Scratch.dir("lose_sink")}/t"
+    ManifestTable.commit(kv, app, 20250901, 900)
+    val appSink = new graft.spark.GraftSink.StreamSink(spark, app, appId = "chk-a",
+      statsCols = Seq("k"))
+    losing(app)(appSink.addBatch(0L, Seq((9L, 9L)).toDF("k", "v")))
+    landedPastInterloper(app, 1, ManifestTable.latestVersion(spark, app).get)
+    assert(sidecarAt(app, "_stream", 3).contains("chk-a"))
+    assert(ZoneMap.fileStats(spark, app, 3).isDefined)
+    assert(ManifestTable.readLatest(spark, app).count() == 7)
+
+    val mrg = s"${graft.util.Scratch.dir("lose_msink")}/t"
+    ManifestTable.commit(kv, mrg, 20250901, 900)
+    val mergeSink = new graft.spark.GraftSink.StreamSink(spark, mrg, appId = "chk-m",
+      mergeKeys = Seq("k"))
+    losing(mrg)(mergeSink.addBatch(0L, Seq((2L, 20L), (9L, 9L)).toDF("k", "v")))
+    landedPastInterloper(mrg, 1, ManifestTable.latestVersion(spark, mrg).get)
+    assert(sidecarAt(mrg, "_stream", 3).contains("chk-m"))
+    val rows = ManifestTable.readLatest(spark, mrg).select("k", "v")
+      .as[(Long, Long)].collect().toMap
+    assert(rows.size == 7 && rows(2L) == 20L && rows(9L) == 9L)
+  }
+
+  test("one lost catalog race: the cut lands past the interloper with both overlays") {
+    val root = graft.util.Scratch.dir("lose_cat")
+    Catalog.publishCatalog(spark, root, 20250901, 900, Map("t" -> 1))
+    assert(losing(root)(
+      Catalog.publishCatalog(spark, root, 20250901, 910, Map("u" -> 4))) == 3)
+    val cuts = Catalog.snapshots(spark, root)
+    assert(cuts.map(_.version) == Seq(1, 2, 3))
+    assert(cuts(1).tables == Map("t" -> 1))
+    assert(cuts(2).tables == Map("t" -> 1, "u" -> 4))
+  }
+
+  test("a primitive that always loses exhausts the loop with a plain IllegalStateException, never a LostRace") {
+    val dir = s"${graft.util.Scratch.dir("lose_all")}/t"
+    ManifestTable.commit(Seq((1L, 1L)).toDF("k", "v"), dir, 20250901, 900)
+    val e = intercept[IllegalStateException](losing(dir, Int.MaxValue)(
+      ManifestTable.appendRetrying(Seq((2L, 2L)).toDF("k", "v"), dir, 20250901, 910)))
+    assert(e.getMessage.contains("lost 6 consecutive races"), e.getMessage)
+    assert(!e.isInstanceOf[LostRace])
+    assert(e.getCause.isInstanceOf[LostRace])
+    // six interlopers landed; the append itself never did
+    assert(ManifestTable.snapshots(spark, dir).map(_.version) == (1 to 7))
+    assert(ManifestTable.readLatest(spark, dir).count() == 1)
   }
 }

@@ -42,23 +42,48 @@ class CopyIntoSpec extends SparkSpec {
     assert(rows.groupBy("k").count().where(col("count") > 1).count() == 0)
   }
 
+  /** Simulate a crashed COPY INTO: its sidecar for `version` is written,
+    * its commit never happens.
+    */
+  private def orphanSidecar(dir: String, version: Int, files: Seq[String]): Unit = {
+    val m = classOf[CopyInto.type].getDeclaredMethods
+      .find(_.getName == "writeSidecar").get
+    m.setAccessible(true)
+    m.invoke(CopyInto, spark, dir, Int.box(version), files, Nil)
+  }
+
   test("crash-orphaned sidecars are invisible: the increment re-ingests") {
     val dir = Scratch.dir("copy_crash")
     val landing = Scratch.dir("copy_crash_land")
     drop(landing, "a", Seq((1L, 1L)))
     CopyInto.copyInto(spark, dir, landing, 20250901, 900)
 
-    // simulate: sidecar for v2 written, commit never happened
-    val m = classOf[CopyInto.type].getDeclaredMethods
-      .find(_.getName == "writeSidecar").get
-    m.setAccessible(true)
-    m.invoke(CopyInto, spark, dir, Int.box(2), Seq(s"$landing/b.parquet"), Nil)
+    orphanSidecar(dir, 2, Seq(s"$landing/b.parquet"))
 
     drop(landing, "b", Seq((2L, 2L)))
     // the orphan does NOT hide b: resolution only reads sidecars of
     // committed versions
     assert(CopyInto.copyInto(spark, dir, landing, 20250901, 1000).contains(2))
     assert(ManifestTable.readLatest(spark, dir).count() == 2)
+  }
+
+  test("a crash-orphaned sidecar is not adopted by a foreign commit at its version (known defect)") {
+    // Sidecars resolve by version number alone, so a plain append that
+    // commits the orphan's version makes the orphan look committed: b is
+    // then "already ingested" and never lands. Fixing it needs a link
+    // from sidecar to commit (a format change); the same rule governs
+    // the JDBC watermark, the identity high water and the stream txn.
+    val dir = Scratch.dir("copy_adopt")
+    val landing = Scratch.dir("copy_adopt_land")
+    drop(landing, "a", Seq((1L, 1L)))
+    CopyInto.copyInto(spark, dir, landing, 20250901, 900)
+    orphanSidecar(dir, 2, Seq(s"$landing/b.parquet"))
+    ManifestTable.appendRetrying(Seq((9L, 9L)).toDF("k", "v"), dir, 20250901, 950)
+    drop(landing, "b", Seq((2L, 2L)))
+    pendingUntilFixed {
+      assert(CopyInto.copyInto(spark, dir, landing, 20250901, 1000).contains(3))
+      assert(ManifestTable.readLatest(spark, dir).where(col("k") === 2L).count() == 1)
+    }
   }
 
   test("content mode: a re-dropped file under a new name is not new data") {
