@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Medallion-lake path convention (SURVEY §1.1, §7; FIXTURES §4).
   *
@@ -14,12 +15,20 @@ import org.apache.spark.sql.functions._
   * Spark-native re-expression: the date/time path segments become REAL
   * partition columns (`run_date`, `run_time`) written with `partitionBy`,
   * so
-  *  - "previous snapshot" discovery is a metadata-only `max(run_time)`
-  *    (no filesystem walking, no data rows read);
+  *  - "previous snapshot" discovery is a `max(run_time)` over partition
+  *    values (no filesystem walking beyond the one listing). It is still a
+  *    scan job: with `spark.sql.optimizer.metadataOnly` at its default
+  *    (off) Spark plans the aggregate over the pruned files;
   *  - an equality filter on `run_time` prunes the scan to one partition —
   *    the pattern that holds at thousands of snapshots × 1000 executors;
   *  - cross-snapshot reads are ONE scan with partition discovery, not a
   *    Python loop of per-directory reads.
+  *
+  * A table whose [[TableRef]] declares its data schema is read with that
+  * schema plus the two partition columns, so building a read runs no job.
+  * An undeclared table infers its schema from Parquet footers, which costs
+  * one extra job per read and fails on a table dir that holds no data file
+  * (an empty snapshot write leaves exactly that).
   *
   * `run_date`/`run_time` are integers (`yyyymmdd`/`HHMM`, e.g. 20250301 /
   * 930): integer ordering coincides with the reference's lexicographic
@@ -37,8 +46,12 @@ object Layout {
   val runDateCol = "run_date"
   val runTimeCol = "run_time"
 
-  /** Identity of one lake table: `root/layer/group/table`. */
-  case class TableRef(root: String, layer: String, group: String, table: String) {
+  /** Identity of one lake table: `root/layer/group/table`. `dataSchema`,
+    * when declared, is the table's columns without `run_date`/`run_time`:
+    * reads use it instead of inferring, and writes must match it.
+    */
+  case class TableRef(root: String, layer: String, group: String, table: String,
+      dataSchema: Option[StructType] = None) {
     def dir: String = s"$root/$layer/$group/$table"
   }
 
@@ -66,8 +79,16 @@ object Layout {
     * every other snapshot untouched — the write mode for re-running a
     * failed hourly job (the reference retries tasks, `apify_dag.py:38-39`;
     * a plain append would duplicate the snapshot's rows on retry).
+    * Throws `IllegalArgumentException` when `ref` declares a data schema
+    * and the frame's column names and types differ from it, in order.
     */
-  def overwriteSnapshot(df: DataFrame, ref: TableRef, date: Int, time: Int): Unit =
+  def overwriteSnapshot(df: DataFrame, ref: TableRef, date: Int, time: Int): Unit = {
+    ref.dataSchema.foreach { declared =>
+      def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+      require(shape(df.schema) == shape(declared),
+        s"${ref.dir}: frame columns ${df.schema.toDDL} differ from the declared " +
+          declared.toDDL)
+    }
     // dynamic mode as a PER-WRITE option, not a session-conf toggle: a
     // save/set/restore around the write would race concurrent snapshot
     // writers (pipeline.Pipeline commits account-scoped tables in
@@ -78,18 +99,23 @@ object Layout {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(runDateCol, runTimeCol)
       .parquet(ref.dir)
+  }
 
   /** All snapshots of a table as ONE DataFrame with `run_date`/`run_time`
     * partition columns (partition discovery replaces the reference's
-    * glob-loop-union, `apify_dag.py:134-148`).
+    * glob-loop-union, `apify_dag.py:134-148`). A declared data schema is
+    * read as given; an undeclared one is inferred from the footers.
     */
   def snapshots(spark: SparkSession, ref: TableRef): DataFrame =
-    spark.read.parquet(ref.dir)
+    ref.dataSchema.fold(spark.read)(s => spark.read.schema(
+      s.add(runDateCol, IntegerType).add(runTimeCol, IntegerType)))
+      .parquet(ref.dir)
 
   /** Greatest run-time strictly before `currentTime` on `date` — the
     * reference's listdir+sort+filter discovery loop
-    * (`script_api_apify_to_spark.py:218-234`), as a metadata-only
-    * aggregate over partition values.
+    * (`script_api_apify_to_spark.py:218-234`), as an aggregate over
+    * partition values: it reads no data column, but it is still a scan job
+    * (see the object doc), plus a schema job when `ref` is undeclared.
     */
   def previousRunTime(spark: SparkSession, ref: TableRef, date: Int,
       currentTime: Int): Option[Int] = {
@@ -104,9 +130,10 @@ object Layout {
     * r2 item 5; the reference's discovery loop handles same-day only,
     * `script_api_apify_to_spark.py:218-234` — a real lake's "as of T"
     * read must fall back to yesterday's last snapshot when today has
-    * none). Still a metadata-only aggregate over partition values: the
+    * none). Still an aggregate over partition values only: the
     * lexicographic max of the `(run_date, run_time)` struct under a
-    * partition-column-only filter reads zero data rows.
+    * partition-column-only filter reads no data column, though, like
+    * [[previousRunTime]], it runs a scan job.
     */
   def snapshotAsOf(spark: SparkSession, ref: TableRef, date: Int,
       time: Int): Option[(Int, Int)] = {

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
 
 import graft.lake.Layout
 import graft.lake.Layout.TableRef
@@ -47,7 +47,15 @@ import graft.sources.Ingest
   *     `apify_dag.py:41,198`) generalizes to the latest `final_aggregated`
   *     snapshot strictly before the current run, ACROSS days
   *     ([[Layout.snapshotAsOf]]) — day one has none, so the global diff is
-  *     skipped exactly like the reference's missing-path branch.
+  *     skipped exactly like the reference's missing-path branch;
+  *   - every table the pipeline writes declares its columns on its
+  *     [[TableRef]], so no read infers a schema (one Spark job each), and a
+  *     quiet account's empty diff still reads back as an empty table;
+  *   - the aggregate's lake writes, JDBC appends and ES bulks start
+  *     together in one [[FanOut]] instead of the DAG's aggregate-then-index
+  *     sequence, so a sink may write before a sibling lake write fails; the
+  *     fan-out waits for every branch before it throws, and the
+  *     [[Scheduler]] retry then rewrites all of them idempotently.
   *
   * At 100 TB: per-account work is embarrassingly parallel (the
   * orchestrator fans out accounts); within one account every stage is a
@@ -71,22 +79,38 @@ object Pipeline {
   /** The explicit raw-layer contract (`script_api_apify_to_spark.py:161-164`). */
   val contract: StructType = StructType.fromDDL("username STRING, full_name STRING")
 
-  /** The scored-table data columns (the reference's 4-column select, `:239-240`). */
-  val dataCols: Seq[String] =
-    Seq("username", "full_name", "predicted_gender", "confidence")
+  /** The scored table: the contract plus the enrichment (the reference's
+    * 4-column select, `:239-240`). Every pipeline table is this plus
+    * string columns.
+    */
+  private val scored: StructType =
+    contract.add("predicted_gender", StringType).add("confidence", DoubleType)
+
+  /** The scored-table data columns. */
+  val dataCols: Seq[String] = scored.fieldNames.toSeq
+
+  /** A table's declared data schema: the scored columns, then `extra`
+    * string columns in the order its writer appends them.
+    */
+  private def declared(extra: String*): Option[StructType] =
+    Some(extra.foldLeft(scored)(_.add(_, StringType)))
 
   def formattedRef(cfg: Config, account: String): TableRef =
-    TableRef(cfg.root, Layout.formattedLayer, cfg.group, account)
+    TableRef(cfg.root, Layout.formattedLayer, cfg.group, account, declared())
   def usageRef(cfg: Config, account: String): TableRef =
-    TableRef(cfg.root, Layout.usageLayer, cfg.group, account)
+    TableRef(cfg.root, Layout.usageLayer, cfg.group, account, declared())
   def comparatifRef(cfg: Config, account: String): TableRef =
-    TableRef(cfg.root, Layout.usageLayer, cfg.group, s"${account}_comparatif")
+    TableRef(cfg.root, Layout.usageLayer, cfg.group, s"${account}_comparatif",
+      declared("change"))
   def aggregatedRef(cfg: Config): TableRef =
-    TableRef(cfg.root, Layout.combinedLayer, cfg.group, "final_aggregated")
+    TableRef(cfg.root, Layout.combinedLayer, cfg.group, "final_aggregated",
+      declared("username_scraped"))
   def comparatifAggRef(cfg: Config): TableRef =
-    TableRef(cfg.root, Layout.combinedLayer, cfg.group, "final_comparatif")
+    TableRef(cfg.root, Layout.combinedLayer, cfg.group, "final_comparatif",
+      declared("change", "username_scraped"))
   def globalCompRef(cfg: Config): TableRef =
-    TableRef(cfg.root, Layout.combinedLayer, cfg.group, "final_global_comparatif")
+    TableRef(cfg.root, Layout.combinedLayer, cfg.group, "final_global_comparatif",
+      declared("username_scraped", "change"))
 
   private def exists(spark: SparkSession, ref: TableRef): Boolean = {
     val p = new org.apache.hadoop.fs.Path(ref.dir)
@@ -107,13 +131,9 @@ object Pipeline {
     // task mapping (one spark-submit per account in parallel,
     // `apify_dag.py:83-91,336`); every table below is account-scoped, so
     // the jobs share nothing but the SparkSession (which is thread-safe).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val accountRuns = payloads.map { case (account, payload) => Future {
-      runAccount(spark, cfg, date, time, account, payload)
-    }}
-    accountRuns.foreach(Await.result(_, Duration.Inf))
+    FanOut.all(payloads.map { case (account, payload) =>
+      () => runAccount(spark, cfg, date, time, account, payload)
+    })
     runAggregate(spark, cfg, date, time, payloads.map(_._1))
   }
 
@@ -159,15 +179,12 @@ object Pipeline {
 
   /** Stages 2–3 — the reference's `aggregate_results` + ES indexing tasks
     * (`apify_dag.py:132-246,289-318`): union the day's snapshots across
-    * accounts, global diff, and fan out to JDBC/ES. Reads the lake (not
-    * payloads), so a retry after any partial stage-2 write converges.
+    * accounts, global diff, and fan out to the lake, JDBC and ES at once.
+    * Reads the lake (not payloads), so a retry after any partial stage-2
+    * write or sink converges.
     */
   def runAggregate(spark: SparkSession, cfg: Config, date: Int, time: Int,
       accounts: Seq[String]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-
     // ---- stage 2: cross-account aggregation over the DAY's snapshots
     val agg = accounts.map { account =>
       Layout.snapshots(spark, usageRef(cfg, account))
@@ -175,54 +192,47 @@ object Pipeline {
         .select(dataCols.map(col): _*)
         .withColumn("username_scraped", lit(account))
     }.reduce(_ unionByName _).cache() // feeds its write + global diff + sinks
-    agg.count() // materialize once before the concurrent consumers below
+    try {
+      agg.count() // materialize once before the concurrent consumers below
 
-    val compParts = accounts.collect {
-      case account if exists(spark, comparatifRef(cfg, account)) =>
-        Layout.snapshots(spark, comparatifRef(cfg, account))
-          .where(col(Layout.runDateCol) === date && col(Layout.runTimeCol) <= time)
-          .select((dataCols :+ "change").map(col): _*)
-          .withColumn("username_scraped", lit(account))
-    }
-    val compAgg = compParts.reduceOption(_ unionByName _)
+      val compAgg = accounts.collect {
+        case account if exists(spark, comparatifRef(cfg, account)) =>
+          Layout.snapshots(spark, comparatifRef(cfg, account))
+            .where(col(Layout.runDateCol) === date && col(Layout.runTimeCol) <= time)
+            .select((dataCols :+ "change").map(col): _*)
+            .withColumn("username_scraped", lit(account))
+      }.reduceOption(_ unionByName _)
 
-    // the previous-aggregate lookup runs BEFORE this run's aggregate write
-    // so no reader ever lists the table mid-write (re-runs aside, the
-    // current partition doesn't exist yet; the time bound excludes it
-    // either way) — then the three stage-2 writes, which share no tables,
-    // commit concurrently
-    val prevAgg = // on the first run ever, the aggregate table has no dir yet
-      if (exists(spark, aggregatedRef(cfg)))
-        Layout.snapshotAsOf(spark, aggregatedRef(cfg), date, time - 1)
-      else None
-    val stage2 = Seq(
-      Future { Layout.overwriteSnapshot(agg, aggregatedRef(cfg), date, time) },
-      Future {
-        compAgg.foreach(c => Layout.overwriteSnapshot(c, comparatifAggRef(cfg), date, time))
-      },
-      Future {
-        // ---- stage 2b: global diff vs the latest aggregate before this run
-        prevAgg.foreach { case (pd, pt) =>
-          val aggCols = dataCols :+ "username_scraped"
+      // ---- stage 2b: global diff vs the latest aggregate before this run.
+      // The lookup and the old side's listing run BEFORE the fan-out, so no
+      // reader lists the table while this run's aggregate write is in
+      // flight (on the first run ever the table has no dir yet)
+      val globalDiff =
+        (if (exists(spark, aggregatedRef(cfg)))
+          Layout.snapshotAsOf(spark, aggregatedRef(cfg), date, time - 1)
+        else None).map { case (pd, pt) =>
           val old = Layout.snapshotAt(spark, aggregatedRef(cfg), pd, pt)
-            .select(aggCols.map(col): _*)
+            .select((dataCols :+ "username_scraped").map(col): _*)
           // current side = the aggregate being committed (cached above)
-          val g = SnapshotDiff.diff(agg, old, cfg.keys, "added_global", "deleted_global")
-          Layout.overwriteSnapshot(g, globalCompRef(cfg), date, time)
+          SnapshotDiff.diff(agg, old, cfg.keys, "added_global", "deleted_global")
         }
-      })
-    stage2.foreach(Await.result(_, Duration.Inf))
 
-    // ---- stage 2c/3: aggregates to Postgres-shaped JDBC + Elasticsearch
-    cfg.jdbc.foreach { j =>
-      appendRunIdempotent(agg, j, "final_aggregated_usage", date, time)
-      compAgg.foreach(c => appendRunIdempotent(c, j, "final_comparatif_usage", date, time))
-    }
-    cfg.es.foreach { e =>
-      Elastic.bulkIndexKeyed(agg, e, Elastic.aggregatedIndex)
-      compAgg.foreach(c => Elastic.bulkIndexKeyed(c, e, Elastic.comparatifIndex))
-    }
-    agg.unpersist()
+      // ---- stage 2/2c/3: the three lake writes, which share no tables, and
+      // the aggregates to Postgres-shaped JDBC and Elasticsearch, together
+      val lake: Seq[() => Unit] = Seq(
+        () => Layout.overwriteSnapshot(agg, aggregatedRef(cfg), date, time),
+        () => compAgg.foreach(Layout.overwriteSnapshot(_, comparatifAggRef(cfg), date, time)),
+        () => globalDiff.foreach(Layout.overwriteSnapshot(_, globalCompRef(cfg), date, time)))
+      val jdbc = cfg.jdbc.toSeq.flatMap { j => Seq(
+        () => appendRunIdempotent(agg, j, "final_aggregated_usage", date, time),
+        () => compAgg.foreach(appendRunIdempotent(_, j, "final_comparatif_usage", date, time)))
+      }
+      val es = cfg.es.toSeq.flatMap { e => Seq(
+        () => Elastic.bulkIndexKeyed(agg, e, Elastic.aggregatedIndex),
+        () => compAgg.foreach(Elastic.bulkIndexKeyed(_, e, Elastic.comparatifIndex)))
+      }
+      FanOut.all(lake ++ jdbc ++ es)
+    } finally agg.unpersist()
   }
 
   /** Retry-idempotent JDBC append: rows carry the run stamp, and a re-run

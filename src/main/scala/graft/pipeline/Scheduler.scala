@@ -1,9 +1,5 @@
 package graft.pipeline
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** X148: thin orchestration shim — the reference's Airflow layer
@@ -33,7 +29,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At scale the per-account layer is embarrassingly parallel; tasks
   * within a layer run concurrently on the shared (thread-safe)
   * SparkSession, mirroring Airflow's dynamic task mapping
-  * (`apify_dag.py:83-91,336`).
+  * (`apify_dag.py:83-91,336`). A layer is one [[FanOut]]: every task
+  * starts at once, whatever the core count, and the next layer starts only
+  * after every task of this one has finished. The DAG's separate ES
+  * indexing task is folded into `aggregate_results`, whose lake writes,
+  * JDBC appends and ES bulks run in one fan-out of their own; a failure in
+  * any of them fails the task after all of them finish, and the retry
+  * rewrites each idempotently.
   */
 object Scheduler {
 
@@ -77,8 +79,7 @@ object Scheduler {
           attempts += Attempt(date, time, t.name, 0, UpstreamFailed, "", 0L)
         }
       } else {
-        val runs = layer.map(t => Future(runTask(cfg, date, time, t)))
-        val results = runs.map(Await.result(_, Duration.Inf))
+        val results = FanOut.all(layer.map(t => () => runTask(cfg, date, time, t)))
         results.foreach(attempts ++= _)
         if (results.exists(_.last.status == Failed)) failed = true
       }
@@ -118,9 +119,9 @@ object Scheduler {
   /** The reference DAG's graph for one hourly tick, over
     * [[Pipeline.runAccount]]/[[Pipeline.runAggregate]]: layer 1 = the
     * mapped per-account tasks, layer 2 = `aggregate_results` (which also
-    * carries the ES/JDBC fan-out, as the reference's does). `wrap` lets
-    * tests inject failures around a named task without touching the
-    * production bodies.
+    * carries the JDBC and ES sinks, in the same fan-out as its lake
+    * writes). `wrap` lets tests inject failures around a named task
+    * without touching the production bodies.
     */
   def pipelineTick(spark: SparkSession, cfg: Config, pcfg: Pipeline.Config,
       date: Int, time: Int, payloads: Seq[(String, String)],

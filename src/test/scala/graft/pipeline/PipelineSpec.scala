@@ -104,34 +104,63 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pipeline: aggregates flow to the ES _bulk endpoint keyed by username") {
-    import java.net.InetSocketAddress
-    import java.nio.charset.StandardCharsets
-    import com.sun.net.httpserver.HttpServer
-    val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/_bulk", ex => {
-      received.add(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-      val resp = """{"errors":false}""".getBytes(StandardCharsets.UTF_8)
-      ex.sendResponseHeaders(200, resp.length)
-      ex.getResponseBody.write(resp)
-      ex.close()
-    })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
-    server.start()
+    val stub = new BulkStub
     try {
-      val es = graft.sinks.Elastic.EsConfig("127.0.0.1", server.getAddress.getPort)
-      val cfg = Pipeline.Config(graft.util.Scratch.dir("pipeline_es"), es = Some(es))
+      val cfg = Pipeline.Config(graft.util.Scratch.dir("pipeline_es"), es = Some(stub.config))
       val payloads = Seq(("acct_a", 1), ("acct_b", 5)).map { case (a, m) =>
         a -> PipelineQueries.payloadJson(spark, sf, m, 1)
       }
       Pipeline.runHourly(spark, cfg, 20250301, 1100, payloads)
-      val actions = received.toArray(Array.empty[String])
-        .flatMap(_.split("\n")).filter(_.contains("\"_index\""))
-      assert(actions.nonEmpty)
+      val docs = stub.accepted.toArray(Array.empty[(String, String)])
+      assert(docs.nonEmpty)
       // run 1 has no comparatif → only the aggregated index is written
-      assert(actions.forall(_.contains(""""_index":"final_aggregated_index"""")))
+      assert(docs.forall(_._1 == "final_aggregated_index"))
       // doc-id upsert keyed by username (the reference's es.mapping.id)
-      assert(actions.exists(_.matches(""".*"_id":"(u|Emma_)\d+".*""")))
-    } finally server.stop(0)
+      assert(docs.exists(_._2.matches("""(u|Emma_)\d+""")))
+    } finally stub.stop()
+  }
+
+  test("pipeline: every table's declared schema equals the one its files infer") {
+    finalRows // forces the timeline
+    val t = timeline
+    val refs = Seq("acct_a", "acct_b").flatMap(a => Seq(Pipeline.formattedRef(t, a),
+      Pipeline.usageRef(t, a), Pipeline.comparatifRef(t, a))) ++
+      Seq(Pipeline.aggregatedRef(t), Pipeline.comparatifAggRef(t), Pipeline.globalCompRef(t))
+    refs.foreach { ref =>
+      def shape(df: DataFrame) = df.schema.fields.toSeq.map(f => (f.name, f.dataType))
+      assert(ref.dataSchema.nonEmpty, ref.dir)
+      assert(shape(spark.read.parquet(ref.dir)) == shape(Layout.snapshots(spark, ref)), ref.dir)
+    }
+  }
+
+  test("pipeline: a declared table rejects a write whose columns differ") {
+    import org.apache.spark.sql.functions.lit
+    val ref = Pipeline.usageRef(Pipeline.Config(graft.util.Scratch.dir("pipeline_declared")), "a")
+    val good = spark.range(1).select(lit("u1").as("username"), lit("Ann Lee").as("full_name"),
+      lit("female").as("predicted_gender"), lit(0.9).as("confidence"))
+    Seq(good.withColumnRenamed("full_name", "fullname"), good.withColumn("extra", lit(1)))
+      .foreach { bad =>
+        intercept[IllegalArgumentException](Layout.overwriteSnapshot(bad, ref, 20250301, 100))
+      }
+    assert(!new java.io.File(ref.dir).exists())
+    Layout.overwriteSnapshot(good, ref, 20250301, 100)
+    assert(Layout.snapshotAt(spark, ref, 20250301, 100).count() == 1)
+  }
+
+  test("pipeline: building a declared snapshot read runs no Spark job") {
+    finalRows // forces the timeline
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      drain(); jobs.set(0)
+      Layout.snapshots(spark, Pipeline.usageRef(timeline, "acct_a"))
+      drain()
+      assert(jobs.get == 0, s"the declared read ran ${jobs.get} schema jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
+import graft.lake.Layout
+import graft.sinks.{Elastic, Jdbc}
 import graft.util.Scratch
 
 /** X148 pins — the Airflow-shim contract (`airflow/dags/apify_dag.py:38-50`):
@@ -23,14 +25,12 @@ class SchedulerSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  private def lakeState(cfg: Pipeline.Config): Seq[String] = {
-    import graft.lake.Layout
+  private def lakeState(cfg: Pipeline.Config): Seq[String] =
     Seq(
       Layout.snapshots(spark, Pipeline.usageRef(cfg, "acct_a")),
       Layout.snapshots(spark, Pipeline.usageRef(cfg, "acct_b")),
       Layout.snapshots(spark, Pipeline.aggregatedRef(cfg))
     ).flatMap(rows)
-  }
 
   test("scheduler: injected failure retries then succeeds, state identical to a clean run") {
     // clean tick in root A
@@ -112,5 +112,54 @@ class SchedulerSpec extends SparkSpec {
     // the second tick saw the first's aggregate → the cross-day global
     // diff ran (the schedule is genuinely stateful across ticks)
     assert(new java.io.File(Pipeline.globalCompRef(cfg).dir).exists())
+  }
+
+  test("scheduler: an unchanged account's empty diff does not fail the next aggregate") {
+    // two same-day runs of one account with identical rows and no NULL
+    // full_name: the 23:00 diff is empty, so its snapshot write leaves a
+    // table dir with no data file, which the aggregate then reads
+    val cfg = Pipeline.Config(Scratch.dir("sched_quiet"))
+    val payload = Seq("acct_q" ->
+      """[{"username": "ann", "full_name": "Ann Lee"}, {"username": "bob", "full_name": "Bob Ray"}]""")
+    val history = Seq(2200, 2300).flatMap(t =>
+      Scheduler.pipelineTick(spark, Scheduler.Config(), cfg, 20250301, t, payload))
+    assert(history.forall(_.status == Scheduler.Success),
+      history.filter(_.status != Scheduler.Success).map(_.error).mkString("; "))
+    assert(Layout.snapshotAt(spark, Pipeline.comparatifAggRef(cfg), 20250301, 2300).count() == 0)
+    assert(Layout.snapshotAt(spark, Pipeline.aggregatedRef(cfg), 20250301, 2300).count() == 4)
+  }
+
+  test("scheduler: a sink failing inside the aggregate fan-out converges on retry") {
+    // the aggregate's lake writes, JDBC appends and ES bulks run together,
+    // so a sink can fail while its siblings have already written; the
+    // retry must still land exactly a clean run's lake, JDBC and ES state
+    def run(name: String, stub: BulkStub, failSecondTick: Boolean)
+        : (Pipeline.Config, Seq[Scheduler.Attempt]) = {
+      val cfg = Pipeline.Config(Scratch.dir(name), es = Some(stub.config),
+        jdbc = Some(Jdbc.JdbcConfig(url = s"jdbc:derby:memory:$name;create=true",
+          driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver")))
+      val sched = Scheduler.Config(retries = 1)
+      val first = Scheduler.pipelineTick(spark, sched, cfg, 20250301, 1100, payloads(1))
+      stub.failNext.set(failSecondTick)
+      (cfg, first ++ Scheduler.pipelineTick(spark, sched, cfg, 20250301, 1200, payloads(2)))
+    }
+    def state(cfg: Pipeline.Config): Seq[String] = lakeState(cfg) ++ Seq(
+      Layout.snapshots(spark, Pipeline.comparatifAggRef(cfg)),
+      Layout.snapshots(spark, Pipeline.globalCompRef(cfg))).flatMap(rows) ++
+      Seq("final_aggregated_usage", "final_comparatif_usage", "acct_a", "acct_b")
+        .flatMap(t => rows(Jdbc.read(spark, cfg.jdbc.get, t)).map(t + _))
+
+    val (cleanStub, flakyStub) = (new BulkStub, new BulkStub)
+    try {
+      val (clean, cleanHistory) = run("sched_sink_clean", cleanStub, failSecondTick = false)
+      val (flaky, history) = run("sched_sink_flaky", flakyStub, failSecondTick = true)
+      assert(cleanHistory.forall(h => h.attempt == 1 && h.status == Scheduler.Success))
+      assert(history.filter(h => h.task == "aggregate_results" && h.run_time == 1200)
+        .map(h => (h.attempt, h.status)) == Seq((1, Scheduler.Failed), (2, Scheduler.Success)))
+      assert(state(flaky) == state(clean))
+      val docs = cleanStub.accepted
+      assert(docs.size > 0 && flakyStub.accepted == docs)
+      assert(docs.stream().anyMatch(_._1 == Elastic.comparatifIndex))
+    } finally { cleanStub.stop(); flakyStub.stop() }
   }
 }
