@@ -81,7 +81,8 @@ object BloomIndex extends graft.QueryModule {
   def commitWithBloom(df: DataFrame, dir: String, date: Int, time: Int,
       bloomCol: String, fpp: Double = 0.01): Int = {
     val spark = df.sparkSession
-    val version = ManifestTable.latestVersion(spark, dir).getOrElse(0) + 1
+    val parent = ManifestTable.snapshots(spark, dir).lastOption
+    val version = parent.fold(1)(_.version + 1)
     val files = ManifestTable.writeDataFiles(df, dir, version)
 
     val staged = spark.read.parquet(f"$dir/data/v$version%08d")
@@ -115,8 +116,7 @@ object BloomIndex extends graft.QueryModule {
     val out = fs.create(bloomPath(dir, version), true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
 
-    ManifestTable.commitManifest(spark, dir, version, date, time, files)
-    version
+    ManifestTable.commitManifest(spark, dir, parent, date, time, files)
   }
 
   /** The bloom sidecar for `version`, if one was written. */

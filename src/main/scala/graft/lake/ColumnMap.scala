@@ -135,8 +135,7 @@ object ColumnMap extends graft.QueryModule {
       Field(i + 1, n, n, dt.catalogString)
     }
     writeMapping(spark, dir, 1, fields)
-    ManifestTable.commitManifest(spark, dir, 1, date, time, Nil)
-    1
+    ManifestTable.commitManifest(spark, dir, None, date, time, Nil)
   }
 
   /** First commit: field ids 1..n in column order, physical = logical. */
@@ -231,9 +230,8 @@ object ColumnMap extends graft.QueryModule {
     val v = snap.version + 1
     if (extra.nonEmpty) writeMapping(spark, dir, v, evolved)
     try {
-      ManifestTable.commitManifest(spark, dir, v, date, time,
+      ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
         snap.files ++ staged, deletes = snap.deletes, op = "append")
-      v
     } catch { case e: Exception =>
       // a lost race must leave NOTHING: the orphan mapping at v would
       // otherwise be adopted by whichever commit claims that version
@@ -254,9 +252,8 @@ object ColumnMap extends graft.QueryModule {
     val next = change(mappingAt(spark, dir, snap.version))
     val v = snap.version + 1
     writeMapping(spark, dir, v, next)
-    ManifestTable.commitManifest(spark, dir, v, snap.runDate, snap.runTime,
+    ManifestTable.commitManifest(spark, dir, Some(snap), snap.runDate, snap.runTime,
       snap.files, deletes = snap.deletes, op = op)
-    v
   }
 
   /** Enable column mapping on an existing UNMAPPED table: derive field

@@ -100,9 +100,8 @@ object Constraints {
     val next = change(activeAt(spark, dir, snap.version))
     val v = snap.version + 1
     writeSet(spark, dir, v, next)
-    ManifestTable.commitManifest(spark, dir, v, date, time,
+    ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
       snap.files, deletes = snap.deletes, op = "constraint")
-    v
   }
 
   /** `ADD CONSTRAINT name CHECK (predicate)`: existing rows must already

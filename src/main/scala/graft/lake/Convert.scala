@@ -40,8 +40,7 @@ object Convert {
       .map(_.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"))
       .sorted
     require(files.nonEmpty, s"no parquet files to convert at $dir")
-    ManifestTable.commitManifest(spark, dir, 1, date, time, files,
+    ManifestTable.commitManifest(spark, dir, None, date, time, files,
       op = "convert")
-    1
   }
 }

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.sources.Tables
 import graft.util.{Exact, FixtureCache, Scratch}
@@ -16,41 +15,23 @@ import graft.util.{Exact, FixtureCache, Scratch}
   * watermark, X114 tails a graft LOG by version — this one ingests
   * whatever FILES showed up in a landing directory (upstream dumps,
   * vendor drops), exactly once per file, no matter how often the job
-  * runs or crashes. Each committed version carries a `_copy/v<N>.json`
-  * sidecar listing the landing files that version ingested (sidecar
-  * written BEFORE the manifest rename — the X112 pattern, so orphans
-  * from crashes are invisible and re-runs re-ingest the same increment);
-  * the ingested-set is the union of sidecars at-or-below the committed
-  * latest, and a run ingests `listed − ingested`, appending nothing and
-  * committing no version when that set is empty.
+  * runs or crashes. Each committed manifest carries the cumulative
+  * ingested set as its `copy` state entry (`{"files", "digests"}`),
+  * published in the same put as the file list, so a crashed or lost
+  * attempt records nothing and a re-run re-ingests the same increment;
+  * a run ingests `listed − ingested`, appending nothing and committing
+  * no version when that set is empty. Runs are single-writer: a run
+  * whose parent's ingested set moved since it listed refuses rather
+  * than append the same files twice.
   *
   * Idempotence key is the landing file PATH (COPY INTO's own default):
   * re-listing, re-running, and upstream re-dumping the same path are all
   * no-ops; a genuinely new file — even one with identical content — is
-  * new data. At scale the per-version sidecars stay proportional to each
-  * increment (never the cumulative history), and the landing listing is
-  * the only O(landing) step — the ingest reads only the new files.
+  * new data. The ingested set grows with every landing file ingested,
+  * the same order as the manifest's own file list; the landing listing
+  * is the only O(landing) step — the ingest reads only the new files.
   */
 object CopyInto extends graft.QueryModule {
-
-  private def copyDir(dir: String) = s"$dir/_copy"
-  private def sideName(version: Int) = f"v$version%08d.json"
-  private val SideRe = """v(\d{8})\.json""".r
-
-  private def writeSidecar(spark: SparkSession, dir: String, version: Int,
-      files: Seq[String], digests: Seq[String] = Nil): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(copyDir(dir)))
-    def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val dig =
-      if (digests.isEmpty) ""
-      else s""", "digests": [${digests.map(j).mkString(", ")}]"""
-    val out = fs.create(new Path(copyDir(dir), sideName(version)), true)
-    try out.write(
-      s"""{"version": $version, "files": [${files.map(j).mkString(", ")}]$dig}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** md5 of a landing file's bytes — the content identity for
     * `dedupeBy = "content"`. Driver-side stream over ONE new file at a
@@ -67,33 +48,19 @@ object CopyInto extends graft.QueryModule {
     md.digest().map("%02x".format(_)).mkString
   }
 
+  /** One field of a `copy` state entry. */
+  private def field(entry: Option[JValue], name: String): Seq[String] = {
+    implicit val fmts: Formats = DefaultFormats
+    entry.flatMap(j => (j \ name).extractOpt[Seq[String]]).getOrElse(Nil)
+  }
+
   /** Content digests already ingested by committed versions. */
   def ingestedDigests(spark: SparkSession, dir: String): Set[String] =
-    readSidecars(spark, dir, "digests")
+    field(ManifestTable.latestState(spark, dir, "copy"), "digests").toSet
 
   /** Landing files already ingested by committed versions. */
   def ingestedFiles(spark: SparkSession, dir: String): Set[String] =
-    readSidecars(spark, dir, "files")
-
-  private def readSidecars(spark: SparkSession, dir: String,
-      field: String): Set[String] = {
-    val latest = ManifestTable.latestVersion(spark, dir).getOrElse(return Set.empty)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cdir = new Path(copyDir(dir))
-    if (!fs.exists(cdir)) return Set.empty
-    implicit val fmts: Formats = DefaultFormats
-    fs.listStatus(cdir).toSeq
-      .flatMap(_.getPath.getName match {
-        case SideRe(n) if n.toInt <= latest => Some(n.toInt)
-        case _ => None
-      })
-      .flatMap { v =>
-        val in = fs.open(new Path(cdir, sideName(v)))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        (JsonMethods.parse(text) \ field).extractOpt[Seq[String]].getOrElse(Nil)
-      }.toSet
-  }
+    field(ManifestTable.latestState(spark, dir, "copy"), "files").toSet
 
   /** Ingest new parquet files under `landingDir` (non-recursive), exactly
     * once per path. Returns the committed version, or None when nothing
@@ -107,24 +74,30 @@ object CopyInto extends graft.QueryModule {
     val listed = fs.listStatus(new Path(landingDir)).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toUri.getPath).sorted
-    val newPaths = listed.filterNot(ingestedFiles(spark, dir))
+    val seen = ManifestTable.latestState(spark, dir, "copy")
+    val (files, digests) = (field(seen, "files"), field(seen, "digests"))
+    val newPaths = listed.filterNot(files.toSet)
     // content mode: a re-dropped file under a NEW NAME is still the same
     // increment — digest only the path-fresh files (O(new bytes)) and
     // drop any whose bytes a committed version already ingested
     val (fresh, freshDigests) =
       if (dedupeBy == "path") (newPaths, Nil: Seq[String])
       else {
-        val seen = ingestedDigests(spark, dir)
+        val done = digests.toSet
         val withDig = newPaths.map(p => p -> digestOf(fs, new Path(p)))
-          .filterNot { case (_, dg) => seen(dg) }
+          .filterNot { case (_, dg) => done(dg) }
         // two identical drops in ONE batch: keep the first path
         val firstPer = withDig.groupBy(_._2).map(_._2.head).toSeq.sortBy(_._1)
         (firstPer.map(_._1), firstPer.map(_._2))
       }
     if (fresh.isEmpty) return None
     val staged = ManifestTable.stageDataFiles(spark.read.parquet(fresh: _*), dir)
+    val next = {
+      import org.json4s.JsonDSL._
+      ("files" -> (files ++ fresh)) ~ ("digests" -> (digests ++ freshDigests))
+    }
     Some(ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
-      beforeCommit = (_, v) => writeSidecar(spark, dir, v, fresh, freshDigests)))
+      state = ManifestTable.claim("copy", seen, next, dir)))
   }
 
   val queries: Map[String, Q] = Map(

@@ -12,11 +12,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Cow {
 
-  /** Commit `retained ++ staged` as `snap.version + 1`. `beforeCommit`
-    * runs with the target version AFTER the stats sidecar lands and
-    * immediately BEFORE the manifest rename — the hook the streaming
-    * sink uses to place its exactly-once txn sidecar so a crash between
-    * sidecar and rename replays the whole batch (the X58/X117 ordering).
+  /** Commit `retained ++ staged` as `snap.version + 1`, with `state`
+    * setting the commit's own state entries ([[ManifestTable.commitManifest]]
+    * — the streaming sink's txn and row tracking's id high water ride the
+    * same manifest, so a crash or a lost race leaves neither behind).
     * Returns the committed version; a lost rename race throws
     * [[LostRace]] for the caller's [[ManifestTable.retrying]] loop (the
     * caller must RE-READ and RECOMPUTE — the staged rewrite was derived
@@ -25,8 +24,8 @@ object Cow {
     */
   def commit(spark: SparkSession, dir: String, snap: ManifestTable.Snapshot,
       retained: Seq[String], staged: Seq[String], date: Int, time: Int,
-      op: String, beforeCommit: Int => Unit = _ => ()): Int = {
-    val version = snap.version + 1
+      op: String,
+      state: Option[ManifestTable.Snapshot] => ManifestTable.State = _ => Map.empty): Int = {
     ZoneMap.fileStats(spark, dir, snap.version).foreach { stats =>
       val byFile = stats.map(s => s.file -> s).toMap
       val statsCols = stats.flatMap(_.lo.keys).distinct
@@ -35,12 +34,10 @@ object Cow {
       val fresh =
         if (staged.isEmpty) Nil
         else ZoneMap.statsFor(spark, dir, staged, statsCols, strCols, setCols)
-      ZoneMap.writeStatsSidecar(spark, dir, version,
+      ZoneMap.writeStatsSidecar(spark, dir, snap.version + 1,
         retained.flatMap(byFile.get) ++ fresh)
     }
-    beforeCommit(version)
-    ManifestTable.commitManifest(spark, dir, version, date, time,
-      retained ++ staged, deletes = snap.deletes, op = op)
-    version
+    ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
+      retained ++ staged, deletes = snap.deletes, op = op, state = state)
   }
 }

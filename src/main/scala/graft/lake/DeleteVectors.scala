@@ -146,9 +146,8 @@ object DeleteVectors extends graft.QueryModule {
     val delFiles = ManifestTable.writeParquet(
       oldDel.unionByName(newDel).dropDuplicates("file", "pos"), dir,
       sidecarRel.getOrElse(f"deletes/v$version%08d"), "overwrite")
-    ManifestTable.commitManifest(spark, dir, version, date, time,
+    ManifestTable.commitManifest(spark, dir, Some(latest), date, time,
       parent.files, deletes = delFiles)
-    version
   }
 
   /** Fold the latest version's tombstones into fresh data files — the
@@ -157,17 +156,15 @@ object DeleteVectors extends graft.QueryModule {
     * files and the sidecars. Returns the new version.
     */
   def materialize(spark: SparkSession, dir: String, date: Int, time: Int): Int = {
-    val v = ManifestTable.latestVersion(spark, dir).getOrElse(
+    val latest = ManifestTable.snapshots(spark, dir).lastOption.getOrElse(
       throw new NoSuchElementException(s"no committed snapshot at $dir"))
-    val version = v + 1
     val files = ManifestTable.writeDataFiles(
-      ManifestTable.readVersion(spark, dir, v), dir, version)
+      ManifestTable.readVersion(spark, dir, latest.version), dir, latest.version + 1)
     // op = "materialize" records the commit's content-preservation
     // contract in the manifest (pinned below and in DeleteVectorSpec), so
     // X75 feed consumers skip the step without reading either version.
-    ManifestTable.commitManifest(spark, dir, version, date, time, files,
+    ManifestTable.commitManifest(spark, dir, Some(latest), date, time, files,
       op = "materialize")
-    version
   }
 
   /** Shared X64/X75 fixture timeline (built once per JVM): v1 full commit

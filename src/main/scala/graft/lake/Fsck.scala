@@ -51,7 +51,7 @@ object Fsck {
     if (bad.nonEmpty) {
       val snap = ManifestTable.snapshots(spark, dir).last
       val badSet = bad.map(_._2).toSet
-      ManifestTable.commitManifest(spark, dir, snap.version + 1, date, time,
+      ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
         snap.files.filterNot(badSet),
         deletes = snap.deletes.filterNot(badSet), op = "fsck")
     }

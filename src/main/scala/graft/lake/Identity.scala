@@ -1,10 +1,8 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.ops.DenseId
 import graft.sources.Tables
@@ -14,14 +12,13 @@ import graft.util.FixtureCache
   * (extension X121; Delta `GENERATED ALWAYS AS IDENTITY`, done strictly).
   *
   * Each append assigns `highWater + 1 .. highWater + n` to its rows and
-  * advances the high-water mark ATOMICALLY with the commit: the mark
-  * rides an `_identity/v<N>.json` sidecar written before the manifest
-  * rename and resolved newest-at-or-below the committed latest (the
-  * X112/X117 pattern), so a crashed attempt leaves ids unclaimed-and-
-  * invisible, and a re-run reissues the SAME range. Delta's identity
-  * promises uniqueness but not density (cache blocks burn gaps on
-  * crash); with the mark fused into the commit, ids here are unique AND
-  * gapless AND deterministic.
+  * advances the high-water mark ATOMICALLY with the commit: the mark is
+  * the manifest's `identity` state entry (`{"high_water"}`), published
+  * in the same put as the file list, so a crashed or lost attempt leaves
+  * ids unclaimed-and-invisible, and a re-run reissues the SAME range.
+  * Delta's identity promises uniqueness but not density (cache blocks
+  * burn gaps on crash); with the mark fused into the commit, ids here
+  * are unique AND gapless AND deterministic.
   *
   * Within a batch, ids follow `orderCol` order via X77's bucket-parallel
   * dense-rank (quantile split points + per-bucket offsets — no
@@ -32,66 +29,44 @@ import graft.util.FixtureCache
   */
 object Identity extends graft.QueryModule {
 
-  private def idDir(dir: String) = s"$dir/_identity"
-  private def sideName(version: Int) = f"v$version%08d.json"
-  private val SideRe = """v(\d{8})\.json""".r
-
-  private[lake] def writeSidecar(spark: SparkSession, dir: String, version: Int,
-      highWater: Long): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(idDir(dir)))
-    val out = fs.create(new Path(idDir(dir), sideName(version)), true)
-    try out.write(s"""{"version": $version, "high_water": $highWater}""".getBytes("UTF-8"))
-    finally out.close()
+  /** The high water a state entry records (0 when there is none). */
+  private[lake] def highWaterOf(entry: Option[JValue]): Long = {
+    implicit val fmts: Formats = DefaultFormats
+    entry.map(j => (j \ "high_water").extract[Long]).getOrElse(0L)
   }
 
   /** The committed high-water mark (0 for a fresh table). */
   def highWater(spark: SparkSession, dir: String): Long =
-    highWaterAt(spark, dir, ManifestTable.latestVersion(spark, dir).getOrElse(0))
+    highWaterOf(ManifestTable.latestState(spark, dir, "identity"))
 
-  /** The high-water mark as of committed version `latest` (0 = none):
-    * its newest sidecar at or below it.
+  /** The state hook of a commit that issues `n` ids above the high water
+    * of `seen`, the entry read before the ids were assigned: it refuses
+    * when the parent's mark moved, since the staged ids may then collide
+    * with ones a concurrent identity commit issued (identity commits are
+    * a single-writer surface, like X112).
     */
-  private def highWaterAt(spark: SparkSession, dir: String, latest: Int): Long = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val d = new Path(idDir(dir))
-    if (!fs.exists(d)) return 0L
-    val vs = fs.listStatus(d).toSeq.flatMap(_.getPath.getName match {
-      case SideRe(n) if n.toInt <= latest => Some(n.toInt)
-      case _ => None
-    })
-    if (vs.isEmpty) return 0L
-    val in = fs.open(new Path(d, sideName(vs.max)))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    implicit val fmts: Formats = DefaultFormats
-    (JsonMethods.parse(text) \ "high_water").extract[Long]
-  }
+  private[lake] def issue(seen: Option[JValue], n: Long,
+      dir: String): Option[ManifestTable.Snapshot] => ManifestTable.State =
+    ManifestTable.claim("identity", seen,
+      JObject("high_water" -> JInt(highWaterOf(seen) + n)), dir)
 
   /** Append `df` with `idCol` = highWater+1..highWater+n (ordered by
     * `orderCol` within the batch), advancing the mark atomically with
-    * the commit. Returns (version, new high water). Every attempt first
-    * re-checks the mark against the snapshot it builds on: if another
-    * identity append moved it since `highWater` was read, the staged ids
-    * are suspect and the append refuses rather than commit duplicates
-    * (identity appends are a single-writer surface, like X112).
+    * the commit. Returns (version, new high water). A lost race to a
+    * commit that issued no ids lands on the next attempt; one to an
+    * identity commit that moved the mark refuses ([[issue]]).
     */
   def appendWithIds(df: DataFrame, dir: String, idCol: String,
       orderCol: String, date: Int, time: Int, parts: Int = 8): (Int, Long) = {
     val spark = df.sparkSession
-    val base = highWater(spark, dir)
+    val seen = ManifestTable.latestState(spark, dir, "identity")
+    val base = highWaterOf(seen)
     val withIds = DenseId.assign(df, orderCol, parts)
       .withColumn(idCol, col("rid") + base).drop("rid")
     val staged = ManifestTable.stageDataFiles(withIds, dir)
     val n = spark.read.parquet(staged.map(f => s"$dir/$f"): _*).count()
     val v = ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
-      beforeCommit = { (parent, v) =>
-        val nowBase = highWaterAt(spark, dir, parent.map(_.version).getOrElse(0))
-        if (nowBase != base) throw new IllegalStateException(
-          s"identity append at $dir raced a concurrent identity append " +
-            s"(high water moved $base -> $nowBase); re-run to reassign ids")
-        writeSidecar(spark, dir, v, base + n)
-      })
+      state = issue(seen, n, dir))
     (v, base + n)
   }
 

@@ -32,8 +32,10 @@ final class LostRace(msg: String) extends IllegalStateException(msg)
   *   _manifests/v00000001.json       -- ...this rename lands (the commit)
   * }}}
   *
-  * Manifest JSON: `{"version", "run_date", "run_time", "files": [...]}`
-  * with file paths relative to the table dir. Each version is a COMPLETE
+  * Manifest JSON: `{"version", "run_date", "run_time", "files": [...],
+  * "deletes"?: [...], "op"?, "state": {owner: entry}}` with file paths
+  * relative to the table dir, rendered by json4s (so any file name
+  * round-trips). Each version is a COMPLETE
   * snapshot (the reference's model — every run rewrites the table), so
   * time travel is "read the files of version N", and as-of-T resolution
   * is a scan of the (tiny, driver-side) manifest list — no data listing.
@@ -69,9 +71,21 @@ object ManifestTable extends graft.QueryModule {
     * carry, letting consumers (X75 change feed) route without reading
     * data. Pre-op manifests parse as "write" — absence of metadata never
     * claims content equality.
+    *
+    * `state` is the exactly-once state of the writers that must not
+    * repeat work, keyed by owner: `copy` (COPY INTO's ingested landing
+    * files), `ingest` (the JDBC pull's watermark), `identity` (the id
+    * high water) and `stream` (the stream sink's last batch). Every
+    * commit carries its parent's map forward with its own entries set
+    * ([[commitManifest]]), in the same put as its file list, so a lost
+    * or crashed attempt leaves no state behind for another commit to
+    * adopt (Delta's `txn` action).
     */
   case class Snapshot(version: Int, runDate: Int, runTime: Int,
-      files: Seq[String], deletes: Seq[String] = Nil, op: String = "write")
+      files: Seq[String], deletes: Seq[String] = Nil, op: String = "write",
+      state: State = Map.empty)
+
+  type State = Map[String, JValue]
 
   private def manifestDir(dir: String) = s"$dir/_manifests"
   private def manifestName(version: Int) = f"v$version%08d.json"
@@ -114,23 +128,31 @@ object ManifestTable extends graft.QueryModule {
       .sorted
   }
 
-  /** Step 2: publish `version` by writing its manifest to a temp name and
-    * atomically renaming it into place. The rename IS the commit point —
-    * before it, readers cannot see the version at all; after it, they see
-    * all of it. Throws [[LostRace]] if the version was already committed.
+  /** Step 2: publish the version after `parent` (version 1 for a new
+    * table) by writing its manifest to a temp name and atomically
+    * renaming it into place. The rename IS the commit point — before it,
+    * readers cannot see the version at all; after it, they see all of
+    * it. The manifest carries `parent`'s state with the entries
+    * `state(parent)` returns set on top; that function may throw to
+    * refuse the commit. Throws [[LostRace]] if the version was already
+    * committed. Returns the committed version.
     */
-  def commitManifest(spark: SparkSession, dir: String, version: Int,
+  def commitManifest(spark: SparkSession, dir: String, parent: Option[Snapshot],
       date: Int, time: Int, files: Seq[String],
-      deletes: Seq[String] = Nil, op: String = "write"): Unit = {
+      deletes: Seq[String] = Nil, op: String = "write",
+      state: Option[Snapshot] => State = _ => Map.empty): Int = {
+    val version = parent.fold(1)(_.version + 1)
+    val carried = parent.fold(Map.empty: State)(_.state) ++ state(parent)
     val fs = fsFor(spark, dir)
     val mdir = new Path(manifestDir(dir))
     fs.mkdirs(mdir)
-    val json = snapshotJson(Snapshot(version, date, time, files, deletes, op))
+    val json = jsonBytes(snapshotJson(
+      Snapshot(version, date, time, files, deletes, op, carried)))
     // the commit point — put-if-absent through the storage seam
     // (CommitPrimitive; rename on local FS/HDFS, swappable for a
     // conditional PUT on object stores — docs/STORAGE_CONTRACT.md)
     if (!CommitPrimitive.active(spark).putIfAbsent(spark,
-        new Path(mdir, manifestName(version)), json.getBytes("UTF-8")))
+        new Path(mdir, manifestName(version)), json))
       throw new LostRace(s"concurrent commit of version $version detected at $dir")
     // X200: the commit just landed; checkpoint the log every Nth version
     // (table property `graft.checkpoint.interval`, 0 disables). Strictly
@@ -141,6 +163,7 @@ object ManifestTable extends graft.QueryModule {
     catch { case _: Exception => 10 }
     if (interval > 0 && version % interval == 0)
       try writeCheckpoint(spark, dir) catch { case _: Exception => () }
+    version
   }
 
   /** Atomic snapshot write: stage data files, then publish the manifest.
@@ -148,11 +171,30 @@ object ManifestTable extends graft.QueryModule {
     */
   def commit(df: DataFrame, dir: String, date: Int, time: Int): Int = {
     val spark = df.sparkSession
-    val version = latestVersion(spark, dir).getOrElse(0) + 1
-    val files = writeDataFiles(df, dir, version)
-    commitManifest(spark, dir, version, date, time, files)
-    version
+    val parent = snapshots(spark, dir).lastOption
+    commitManifest(spark, dir, parent, date, time,
+      writeDataFiles(df, dir, parent.fold(1)(_.version + 1)))
   }
+
+  /** The state hook of a single-writer owner: set `owner`'s entry to
+    * `next`, refusing with an IllegalStateException (which escapes
+    * [[retrying]]) when the parent's entry is no longer `seen`, the one
+    * the commit's work was derived from. After a benign lost race the
+    * entry is unchanged and the next attempt lands; a moved entry means
+    * a concurrent writer of the same owner landed first, and committing
+    * would apply the increment twice.
+    */
+  private[graft] def claim(owner: String, seen: Option[JValue], next: JValue,
+      at: String): Option[Snapshot] => State = { parent =>
+    if (parent.flatMap(_.state.get(owner)) != seen) throw new IllegalStateException(
+      s"$owner state at $at moved since it was read: a concurrent $owner " +
+        "commit landed first; re-run")
+    Map(owner -> next)
+  }
+
+  /** The latest committed snapshot's `owner` state entry. */
+  def latestState(spark: SparkSession, dir: String, owner: String): Option[JValue] =
+    snapshots(spark, dir).lastOption.flatMap(_.state.get(owner))
 
   /** Stage data files under a WRITER-UNIQUE directory (`data/w<8 hex>`),
     * detached from any version number — step 1 of the optimistic-
@@ -217,19 +259,17 @@ object ManifestTable extends graft.QueryModule {
     *
     * `beforeCommit` receives the snapshot the attempt builds on and the
     * target version, and runs immediately before the manifest publish on
-    * every attempt: the one place a committer writes the version's
-    * sidecars (zone maps, ingest watermarks, txn markers), so a crash
-    * between sidecar and publish leaves the sidecar unreferenced.
+    * every attempt: the place a committer writes the version's cache
+    * sidecars (zone maps), which readers only ever apply to the
+    * version's own file list.
     */
   def commitStagedRetrying(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
       beforeCommit: (Option[Snapshot], Int) => Unit = (_, _) => ()): Int =
     retrying("commit", dir, maxRetries) {
       val latest = snapshots(spark, dir).lastOption
-      val v = latest.map(_.version).getOrElse(0) + 1
-      beforeCommit(latest, v)
-      commitManifest(spark, dir, v, date, time, staged)
-      v
+      beforeCommit(latest, latest.fold(1)(_.version + 1))
+      commitManifest(spark, dir, latest, date, time, staged)
     }
 
   /** APPEND commit with optimistic concurrency: the new version is
@@ -247,7 +287,8 @@ object ManifestTable extends graft.QueryModule {
     * unreferenced append on the table log, and a replay that rebased on
     * log-latest would stack the same rows on top of the orphan —
     * rebasing on the version the last CATALOG cut references makes the
-    * replayed append land exactly once (round-6 ADVICE finding).
+    * replayed append land exactly once (round-6 ADVICE finding). The
+    * state map still carries forward from log-latest.
     * Returns the committed version.
     */
   def appendRetrying(df: DataFrame, dir: String, date: Int, time: Int,
@@ -257,26 +298,27 @@ object ManifestTable extends graft.QueryModule {
 
   /** [[appendRetrying]] from already-staged files — the stage-first hook
     * X187 constraint enforcement needs. `beforeCommit` is
-    * [[commitStagedRetrying]]'s sidecar slot; its snapshot is the one
-    * whose files carry forward.
+    * [[commitStagedRetrying]]'s cache-sidecar slot; its snapshot is the
+    * one whose files carry forward. `state` is [[commitManifest]]'s,
+    * called with log-latest on every attempt.
     */
   def appendStagedRetrying(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
       base: Option[Int] = None,
-      beforeCommit: (Option[Snapshot], Int) => Unit = (_, _) => ()): Int = {
+      beforeCommit: (Option[Snapshot], Int) => Unit = (_, _) => (),
+      state: Option[Snapshot] => State = _ => Map.empty): Int = {
     val baseSnap = base.map { bv =>
       snapshots(spark, dir).find(_.version == bv).getOrElse(
         throw new NoSuchElementException(s"no committed version $bv at $dir"))
     }
     retrying("append", dir, maxRetries) {
       val latest = snapshots(spark, dir).lastOption
-      val v = latest.map(_.version).getOrElse(0) + 1
       val carried = baseSnap.orElse(latest)
-      beforeCommit(carried, v)
-      commitManifest(spark, dir, v, date, time,
+      beforeCommit(carried, latest.fold(1)(_.version + 1))
+      commitManifest(spark, dir, latest, date, time,
         carried.map(_.files).getOrElse(Nil) ++ staged,
-        deletes = carried.map(_.deletes).getOrElse(Nil), op = "append")
-      v
+        deletes = carried.map(_.deletes).getOrElse(Nil), op = "append",
+        state = state)
     }
   }
 
@@ -286,32 +328,47 @@ object ManifestTable extends graft.QueryModule {
     finally in.close()
   }
 
-  private def parseSnapshot(j: JValue): Snapshot = {
+  /** A parsed manifest, and whether it predates the `state` field. */
+  private def parseSnapshot(j: JValue): (Snapshot, Boolean) = {
     implicit val fmts: Formats = DefaultFormats
-    Snapshot((j \ "version").extract[Int], (j \ "run_date").extract[Int],
+    val state = j \ "state" match {
+      case JObject(fields) => Some(fields.toMap)
+      case _ => None
+    }
+    (Snapshot((j \ "version").extract[Int], (j \ "run_date").extract[Int],
       (j \ "run_time").extract[Int], (j \ "files").extract[Seq[String]],
       (j \ "deletes").extractOpt[Seq[String]].getOrElse(Nil),
-      (j \ "op").extractOpt[String].getOrElse("write"))
+      (j \ "op").extractOpt[String].getOrElse("write"),
+      state.getOrElse(Map.empty)), state.isEmpty)
   }
 
-  private def snapshotJson(s: Snapshot): String = {
-    val del = if (s.deletes.isEmpty) ""
-      else s""", "deletes": [${s.deletes.map("\"" + _ + "\"").mkString(", ")}]"""
-    val op = if (s.op == "write") "" else s""", "op": "${s.op}""""
-    s"""{"version": ${s.version}, "run_date": ${s.runDate}, "run_time": ${s.runTime},""" +
-      s""" "files": [${s.files.map("\"" + _ + "\"").mkString(", ")}]$del$op}"""
+  /** The one JSON renderer of the log: manifests, checkpoints and the
+    * checkpoint pointer all go through json4s, which escapes every
+    * string (file names, landing paths, stream app ids).
+    */
+  private def snapshotJson(s: Snapshot): JValue = {
+    import org.json4s.JsonDSL._
+    ("version" -> s.version) ~ ("run_date" -> s.runDate) ~
+      ("run_time" -> s.runTime) ~ ("files" -> s.files) ~
+      ("deletes" -> Some(s.deletes).filter(_.nonEmpty)) ~
+      ("op" -> Some(s.op).filter(_ != "write")) ~
+      ("state" -> JObject(s.state.toList.sortBy(_._1)))
   }
+
+  private def jsonBytes(j: JValue): Array[Byte] =
+    JsonMethods.compact(JsonMethods.render(j)).getBytes("UTF-8")
 
   /** One checkpoint file's snapshot map, or empty on ANY failure
     * (concurrently vacuumed, corrupt bytes) — absence degrades to the
     * full per-manifest read, never lies.
     */
-  private def checkpointed(fs: FileSystem, mdir: Path, v: Int): Map[Int, Snapshot] =
+  private def checkpointed(fs: FileSystem, mdir: Path,
+      v: Int): Map[Int, (Snapshot, Boolean)] =
     try {
       implicit val fmts: Formats = DefaultFormats
       val body = JsonMethods.parse(readText(fs, new Path(mdir, checkpointName(v))))
       (body \ "snapshots").extract[Seq[JValue]]
-        .map(parseSnapshot).map(s => s.version -> s).toMap
+        .map(parseSnapshot).map(s => s._1.version -> s).toMap
     } catch { case _: Exception => Map.empty }
 
   /** All committed snapshots, oldest first. One listing of the manifest
@@ -324,6 +381,8 @@ object ManifestTable extends graft.QueryModule {
     * version newer than the checkpoint is read directly — a checkpoint
     * can therefore never add, drop, or alter a commit, only cheapen it
     * (spec-pinned byte-equality against the manifest-by-manifest read).
+    * When the latest manifest predates the `state` field, its state is
+    * resolved from the old sidecars ([[legacyState]]).
     */
   def snapshots(spark: SparkSession, dir: String): Seq[Snapshot] = {
     val fs = fsFor(spark, dir)
@@ -340,12 +399,40 @@ object ManifestTable extends graft.QueryModule {
       case CheckpointRe(v) => Some(v.toInt)
       case _ => None
     }).maxOption.map(checkpointed(fs, mdir, _)).getOrElse(Map.empty)
-    listed.map { case (v, p) =>
+    val read = listed.map { case (v, p) =>
       ckpt.getOrElse(v, {
         manifestReads.incrementAndGet()
         parseSnapshot(JsonMethods.parse(readText(fs, p)))
       })
-    }.sortBy(_.version)
+    }.sortBy(_._1.version)
+    read.lastOption match {
+      case Some((last, true)) =>
+        read.init.map(_._1) :+ last.copy(state = legacyState(fs, dir, last.version))
+      case _ => read.map(_._1)
+    }
+  }
+
+  /** The state of a table whose latest manifest predates the `state`
+    * field, read from the per-owner sidecars `_<owner>/v<N>.json` that
+    * older writers left. Each owner's sidecars at or below `latest` merge
+    * in version order — numbers newest-wins, lists union — which is how
+    * each owner resolved them. Nothing writes these files any more; the
+    * first new commit folds this state into its manifest.
+    */
+  private def legacyState(fs: FileSystem, dir: String, latest: Int): State = {
+    val present = fs.listStatus(new Path(dir)).map(_.getPath.getName).toSet
+    Seq("copy", "ingest", "identity", "stream").filter(o => present(s"_$o"))
+      .flatMap { owner =>
+        fs.listStatus(new Path(s"$dir/_$owner")).toSeq
+          .flatMap(st => st.getPath.getName match {
+            case ManifestRe(n) if n.toInt <= latest => Some(n.toInt -> st.getPath)
+            case _ => None
+          })
+          .sortBy(_._1)
+          .map(p => JsonMethods.parse(readText(fs, p._2)).removeField(_._1 == "version"))
+          .reduceOption[JValue](org.json4s.Merge.merge(_, _))
+          .map(owner -> _)
+      }.toMap
   }
 
   /** Write an X200 log checkpoint at the current latest version: one
@@ -364,12 +451,10 @@ object ManifestTable extends graft.QueryModule {
     val mdir = new Path(manifestDir(dir))
     val target = new Path(mdir, checkpointName(v))
     if (!fs.exists(target)) {
-      val json = s"""{"version": $v, "snapshots": [${
-        snaps.map(snapshotJson).mkString(",\n")}]}"""
       // race lost = same bytes landed (checkpoints are a pure function of
       // the log), so a false from the seam is simply ignored
-      CommitPrimitive.active(spark)
-        .putIfAbsent(spark, target, json.getBytes("UTF-8"))
+      CommitPrimitive.active(spark).putIfAbsent(spark, target, jsonBytes(
+        JObject("version" -> JInt(v), "snapshots" -> JArray(snaps.map(snapshotJson).toList))))
     }
     // pointer moves forward only — a slow concurrent checkpointer of an
     // OLDER version must not regress readers to a longer delta
@@ -380,7 +465,7 @@ object ManifestTable extends graft.QueryModule {
     } catch { case _: Exception => -1 }
     if (v > current) // atomic replace: readers see old pointer or new, never torn bytes
       CommitPrimitive.active(spark).replace(spark,
-        new Path(mdir, LastCheckpoint), s"""{"version": $v}""".getBytes("UTF-8"))
+        new Path(mdir, LastCheckpoint), jsonBytes(JObject("version" -> JInt(v))))
     Some(v)
   }
 
@@ -447,8 +532,7 @@ object ManifestTable extends graft.QueryModule {
         writeParquet(remapped, dstDir,
           s"deletes/w${java.util.UUID.randomUUID.toString.take(8)}", "error")
       }
-    commitManifest(spark, dstDir, 1, date, time, files, deletes = deletes)
-    1
+    commitManifest(spark, dstDir, None, date, time, files, deletes = deletes)
   }
 
   /** Exact row count of a committed snapshot from parquet FOOTERS alone —

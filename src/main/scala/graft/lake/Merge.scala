@@ -94,14 +94,14 @@ object Merge extends graft.QueryModule {
     * [[ManifestTable.retrying]] (the rewrite must recompute against the
     * new latest or a concurrent writer's rows would be lost; the
     * streaming sink's loop does this).
-    * `beforeCommit` is the exactly-once txn-sidecar hook (see
-    * [[Cow.commit]]). Small per-batch insert files accumulate by design;
+    * `state` sets the commit's own state entries (see [[Cow.commit]]).
+    * Small per-batch insert files accumulate by design;
     * X174 maintenance bin-packs them.
     */
   def upsertCow(spark: SparkSession, dir: String, updates: DataFrame,
       keys: Seq[String], date: Int, time: Int,
       deleteCol: Option[String] = None,
-      beforeCommit: Int => Unit = _ => ()): Int = {
+      state: Option[ManifestTable.Snapshot] => ManifestTable.State = _ => Map.empty): Int = {
     val snap = ManifestTable.snapshots(spark, dir).lastOption.getOrElse(
       throw new NoSuchElementException(
         s"no committed version at $dir — commit the initial state first"))
@@ -144,7 +144,7 @@ object Merge extends graft.QueryModule {
       else Cow.commit(spark, dir, snap,
         retained = snap.files.filterNot(touched.toSet),
         staged = ManifestTable.stageDataFiles(merged, dir),
-        date, time, op = "merge", beforeCommit = beforeCommit)
+        date, time, op = "merge", state = state)
     } finally ManifestTable.dropStaged(spark, dir, stagedBatch)
   }
 

@@ -80,9 +80,8 @@ object Properties {
     val next = change(activeAt(spark, dir, snap.version))
     val v = snap.version + 1
     writeMap(spark, dir, v, next)
-    ManifestTable.commitManifest(spark, dir, v, date, time,
+    ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
       snap.files, deletes = snap.deletes, op = "setproperty")
-    v
   }
 
   /** `SET TBLPROPERTIES (k = v, …)` — metadata-only, upserts keys. */

@@ -42,7 +42,8 @@ object RecordIndex extends graft.QueryModule {
   def commitWithIndex(df: DataFrame, dir: String, date: Int, time: Int,
       keyCol: String): Int = {
     val spark = df.sparkSession
-    val version = ManifestTable.latestVersion(spark, dir).getOrElse(0) + 1
+    val parent = ManifestTable.snapshots(spark, dir).lastOption
+    val version = parent.fold(1)(_.version + 1)
     val files = ManifestTable.writeDataFiles(df, dir, version)
     val staged = spark.read.parquet(f"$dir/data/v$version%08d")
     val dup = staged.groupBy(col(keyCol)).count().where(col("count") > 1).count()
@@ -54,8 +55,7 @@ object RecordIndex extends graft.QueryModule {
         regexp_extract(col("_metadata.file_path"), "(data/v\\d{8}/[^/]+)$", 1).as("file"),
         col("_metadata.row_index").as("pos"))
       .write.mode("overwrite").parquet(s"$dir/${indexRel(version)}")
-    ManifestTable.commitManifest(spark, dir, version, date, time, files)
-    version
+    ManifestTable.commitManifest(spark, dir, parent, date, time, files)
   }
 
   /** The index table of `version` (immutable once its version is

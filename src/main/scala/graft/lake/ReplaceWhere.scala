@@ -240,9 +240,8 @@ object ReplaceWhere extends graft.QueryModule {
 
     ZoneMap.writeStatsSidecar(spark, dir, version,
       retained.flatMap(byFile.get) ++ newStats)
-    ManifestTable.commitManifest(spark, dir, version, date, time,
+    ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
       retained ++ staged, deletes = snap.deletes, op = "replace_where")
-    version
   }
 
   /** Numeric-band convenience form (the original X172 signature). */

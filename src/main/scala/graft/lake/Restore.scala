@@ -37,11 +37,8 @@ object Restore extends graft.QueryModule {
     ManifestTable.retrying("restore", dir) {
       val latest = ManifestTable.snapshots(spark, dir).last
       if (latest.version == toVersion) toVersion // already there
-      else {
-        ManifestTable.commitManifest(spark, dir, latest.version + 1, date, time,
-          target.files, deletes = target.deletes, op = "restore")
-        latest.version + 1
-      }
+      else ManifestTable.commitManifest(spark, dir, Some(latest), date, time,
+        target.files, deletes = target.deletes, op = "restore")
     }
   }
 

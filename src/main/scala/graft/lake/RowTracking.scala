@@ -12,7 +12,7 @@ import graft.util.{Exact, FixtureCache}
   * rewrites a lakehouse performs on its behalf. The three promises:
   *
   *  1. ingest mints unique, gapless, DETERMINISTIC ids (the X121
-  *     identity machinery — high-water sidecar fused into the commit,
+  *     identity machinery — high water carried in the commit's manifest,
   *     in-batch order by the caller's key, so the whole assignment is
   *     SQL-reconstructible and the oracle can replay it);
   *  2. maintenance (OPTIMIZE / ZORDER / compaction) preserves ids BY
@@ -34,9 +34,8 @@ import graft.util.{Exact, FixtureCache}
   * table (at production scale that lookup routes through the X166
   * record index — a point-lookup, not a scan), then rides X180's
   * touched-files CoW — per-batch cost tracks the batch, and the id
-  * watermark lands atomically with the merge commit via its
-  * before-commit hook (a crash between them is invisible: unreferenced
-  * sidecar versions never resolve).
+  * high water rides the merge commit's own manifest, so a crashed or
+  * lost merge leaves it where it was.
   */
 object RowTracking extends graft.QueryModule {
 
@@ -57,7 +56,8 @@ object RowTracking extends graft.QueryModule {
     */
   def trackedUpsert(spark: SparkSession, dir: String, batch0: DataFrame,
       key: String, orderCol: String, date: Int, time: Int): Int = {
-    val base = Identity.highWater(spark, dir)
+    val seen = ManifestTable.latestState(spark, dir, "identity")
+    val base = Identity.highWaterOf(seen)
     // stage the caller's batch once; every derivation below reads these
     // bytes, so a non-deterministic batch cannot mint ids for one row
     // set and merge another (the X172 discipline)
@@ -73,8 +73,7 @@ object RowTracking extends graft.QueryModule {
         .withColumn(RowId, col("rid") + base).drop("rid")
       val nNew = fresh.count()
       Merge.upsertCow(spark, dir, matched.unionByName(fresh), Seq(key),
-        date, time, beforeCommit =
-          v => Identity.writeSidecar(spark, dir, v, base + nNew))
+        date, time, state = Identity.issue(seen, nNew, dir))
     } finally ManifestTable.dropStaged(spark, dir, stagedB)
   }
 

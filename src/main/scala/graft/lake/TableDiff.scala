@@ -114,7 +114,7 @@ object TableDiff extends graft.QueryModule {
       f"deletes/v$version%08d", "overwrite")
 
     val staged = ManifestTable.stageDataFiles(src.where(hit), dir)
-    ManifestTable.commitManifest(spark, dir, version, date, time,
+    ManifestTable.commitManifest(spark, dir, Some(latest), date, time,
       latest.files ++ staged, deletes = delFiles, op = "repair")
     Some((version, bad))
   }

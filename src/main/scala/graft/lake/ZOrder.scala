@@ -146,11 +146,9 @@ object ZOrder extends graft.QueryModule {
     if (latest.files.size <= n) return None // already packed to budget
     val folded = ManifestTable.readVersion(spark, dir, latest.version)
       .repartition(n)
-    val v = latest.version + 1
-    val files = ManifestTable.writeDataFiles(folded, dir, v)
-    ManifestTable.commitManifest(spark, dir, v, date, time, files,
-      op = "optimize")
-    Some(v)
+    val files = ManifestTable.writeDataFiles(folded, dir, latest.version + 1)
+    Some(ManifestTable.commitManifest(spark, dir, Some(latest), date, time, files,
+      op = "optimize"))
   }
 
   /** X196 — banded bin-packing (`OPTIMIZE … WHERE col BETWEEN lo AND

@@ -144,12 +144,12 @@ object ZoneMap extends graft.QueryModule {
       statsCols: Seq[String], strCols: Seq[String] = Nil,
       op: String = "write", setCols: Seq[String] = Nil): Int = {
     val spark = df.sparkSession
-    val version = ManifestTable.latestVersion(spark, dir).getOrElse(0) + 1
+    val parent = ManifestTable.snapshots(spark, dir).lastOption
+    val version = parent.fold(1)(_.version + 1)
     val files = ManifestTable.writeDataFiles(df, dir, version)
     val stats = statsFor(spark, dir, files, statsCols, strCols, setCols)
     writeStatsSidecar(spark, dir, version, stats)
-    ManifestTable.commitManifest(spark, dir, version, date, time, files, op = op)
-    version
+    ManifestTable.commitManifest(spark, dir, parent, date, time, files, op = op)
   }
 
   private[graft] def writeStatsSidecar(spark: SparkSession, dir: String,

@@ -1,10 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.lake.ManifestTable
 import graft.sinks.Jdbc
@@ -22,17 +20,19 @@ import graft.util.{Exact, FixtureCache}
   * costs O(new rows).
   *
   * Exactly-once the lake way (same machinery as X58/X109, one level
-  * simpler): the committed WATERMARK rides a tiny sidecar
-  * (`_ingest/v<N>.json`) written BEFORE the version's manifest commit and
-  * resolved newest-at-or-below the committed latest — so
-  *  - a crash before the commit leaves an orphan sidecar no reader
-  *    resolves (X39's staged-data story), and the re-run re-pulls the
+  * simpler): the committed WATERMARK is the manifest's `ingest` state
+  * entry (`{"watermark"}`), published in the same put as the version's
+  * file list — so
+  *  - a crash or a lost race before the commit leaves no watermark
+  *    behind (X39's staged-data story), and the re-run re-pulls the
   *    same increment;
   *  - a re-run after success pulls `wm > committed watermark` = 0 rows
   *    and commits NOTHING (a version-less no-op);
   *  - the watermark is computed FROM THE STAGED BATCH (one parquet agg),
   *    never from a second racing source query, so it is exactly the max
-  *    of what the commit made visible.
+  *    of what the commit made visible;
+  *  - pulls are single-writer: a pull whose parent's watermark moved
+  *    since it read it refuses rather than append the same rows twice.
   *
   * Contract (the standard high-watermark caveat, stated rather than
   * hidden): `wmCol` must be monotonic at the SOURCE — a row landing with
@@ -45,39 +45,14 @@ import graft.util.{Exact, FixtureCache}
   */
 object JdbcIncr extends graft.QueryModule {
 
-  private def ingestDir(dir: String) = s"$dir/_ingest"
-  private def sideName(version: Int) = f"v$version%08d.json"
-  private val SideRe = """v(\d{8})\.json""".r
-
-  private def writeSidecar(spark: SparkSession, dir: String, version: Int,
-      wm: Long): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(ingestDir(dir)))
-    val out = fs.create(new Path(ingestDir(dir), sideName(version)), true)
-    try out.write(s"""{"version": $version, "watermark": $wm}""".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** The committed watermark: newest sidecar at-or-below the committed
-    * latest version. Orphan sidecars above it (crash leftovers) are
-    * invisible by construction.
-    */
-  def committedWatermark(spark: SparkSession, dir: String): Option[Long] = {
-    val latest = ManifestTable.latestVersion(spark, dir).getOrElse(return None)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idir = new Path(ingestDir(dir))
-    if (!fs.exists(idir)) return None
-    val vs = fs.listStatus(idir).toSeq.flatMap(_.getPath.getName match {
-      case SideRe(n) => Some(n.toInt)
-      case _ => None
-    }).filter(_ <= latest)
-    if (vs.isEmpty) return None
-    val in = fs.open(new Path(idir, sideName(vs.max)))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+  private def watermarkOf(entry: Option[JValue]): Option[Long] = {
     implicit val fmts: Formats = DefaultFormats
-    Some((JsonMethods.parse(text) \ "watermark").extract[Long])
+    entry.map(j => (j \ "watermark").extract[Long])
   }
+
+  /** The watermark of the latest committed version, if any pull landed. */
+  def committedWatermark(spark: SparkSession, dir: String): Option[Long] =
+    watermarkOf(ManifestTable.latestState(spark, dir, "ingest"))
 
   /** One incremental pull: append source rows with `wmCol` past the
     * committed watermark, advancing it atomically with the commit.
@@ -86,7 +61,8 @@ object JdbcIncr extends graft.QueryModule {
     */
   def pull(spark: SparkSession, cfg: JdbcConfig, table: String, wmCol: String,
       dir: String, date: Int, time: Int): Option[Int] = {
-    val lastWm = committedWatermark(spark, dir)
+    val seen = ManifestTable.latestState(spark, dir, "ingest")
+    val lastWm = watermarkOf(seen)
     val src = lastWm.foldLeft(Jdbc.read(spark, cfg, table))(
       (df, w) => df.where(col(wmCol) > lit(w)))
     val staged = ManifestTable.stageDataFiles(src, dir)
@@ -95,11 +71,10 @@ object JdbcIncr extends graft.QueryModule {
       else spark.read.parquet(staged.map(f => s"$dir/$f"): _*)
     val mx = if (staged.isEmpty) null else stagedDf.agg(max(col(wmCol))).head.get(0)
     if (mx == null) return None // empty increment: no commit, no version
-    val newWm = mx.asInstanceOf[Number].longValue
-    // the watermark sidecar lands right before the manifest publish — the
-    // commit makes both the rows and their watermark visible in one step
+    // the commit makes both the rows and their watermark visible in one put
     Some(ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
-      beforeCommit = (_, v) => writeSidecar(spark, dir, v, newWm)))
+      state = ManifestTable.claim("ingest", seen,
+        JObject("watermark" -> JInt(mx.asInstanceOf[Number].longValue)), dir)))
   }
 
   val queries: Map[String, Q] = Map(

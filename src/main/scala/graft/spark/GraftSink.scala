@@ -1,11 +1,9 @@
 package graft.spark
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftShim, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.lake.{ManifestTable, ZoneMap}
 import graft.sources.Tables
@@ -20,57 +18,21 @@ import graft.util.{Exact, FixtureCache, Scratch}
   * (not the filesystem — a half-staged crash leftover is not "exists").
   *
   * Streaming: `writeStream.format("graft")` commits each micro-batch as
-  * an append version, exactly-once per CHECKPOINT LINEAGE: a sidecar
-  * `_stream/v<N>.json` written before the version's manifest rename
-  * records (appId = checkpoint location, batchId); a replayed batch with
+  * an append version, exactly-once per CHECKPOINT LINEAGE: the version's
+  * manifest records (appId = checkpoint location, batchId) as its
+  * `stream` state entry, in the same put as its files; a replayed batch with
   * the same lineage and a batchId at-or-below the committed one SKIPS
   * entirely (Delta's txnAppId/txnVersion idempotence, keyed the way
   * streaming restarts actually key themselves), while a NEW checkpoint
   * (new lineage) legitimately starts over from batch 0 and is not
-  * confused with a replay. Crash-orphaned sidecars above the committed
-  * latest are invisible — the X39/X112 resolution rule.
+  * confused with a replay. A crashed or lost attempt records no txn, so
+  * its batch is never mistaken for a replay.
   *
   * Together with X113/X114 this closes the loop: a graft table can be
   * the source AND the sink of one structured-streaming pipeline, both
   * ends exactly-once off the same rename-as-commit.
   */
 object GraftSink extends graft.QueryModule {
-
-  private def streamDir(dir: String) = s"$dir/_stream"
-  private def sideName(version: Int) = f"v$version%08d.json"
-  private val SideRe = """v(\d{8})\.json""".r
-
-  private case class Txn(appId: String, batchId: Long)
-
-  private def writeSidecar(spark: SparkSession, dir: String, version: Int,
-      txn: Txn): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(streamDir(dir)))
-    val appJson = txn.appId.replace("\\", "\\\\").replace("\"", "\\\"")
-    val out = fs.create(new Path(streamDir(dir), sideName(version)), true)
-    try out.write(
-      s"""{"version": $version, "app_id": "$appJson", "batch_id": ${txn.batchId}}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def committedTxn(spark: SparkSession, dir: String): Option[Txn] = {
-    val latest = ManifestTable.latestVersion(spark, dir).getOrElse(return None)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sdir = new Path(streamDir(dir))
-    if (!fs.exists(sdir)) return None
-    val vs = fs.listStatus(sdir).toSeq.flatMap(_.getPath.getName match {
-      case SideRe(n) => Some(n.toInt)
-      case _ => None
-    }).filter(_ <= latest)
-    if (vs.isEmpty) return None
-    val in = fs.open(new Path(sdir, sideName(vs.max)))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    implicit val fmts: Formats = DefaultFormats
-    val j = JsonMethods.parse(text)
-    Some(Txn((j \ "app_id").extract[String], (j \ "batch_id").extract[Long]))
-  }
 
   /** DSv1 streaming sink: one version per micro-batch — APPEND by
     * default; with `mergeKeys` set, each batch UPSERTS by key into the
@@ -89,14 +51,19 @@ object GraftSink extends graft.QueryModule {
       mergeKeys: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       deleteCol: Option[String] = None) extends Sink {
     override def addBatch(batchId: Long, data: DataFrame): Unit = {
-      val replayed = committedTxn(spark, dir)
-        .exists(t => t.appId == appId && batchId <= t.batchId)
+      implicit val fmts: Formats = DefaultFormats
+      val latest = ManifestTable.snapshots(spark, dir).lastOption
+      val replayed = latest.flatMap(_.state.get("stream")).exists(t =>
+        (t \ "app_id").extract[String] == appId &&
+          batchId <= (t \ "batch_id").extract[Long])
       if (replayed) return // exactly-once: this lineage already landed it
+      val txn: Option[ManifestTable.Snapshot] => ManifestTable.State =
+        _ => Map("stream" -> JObject("app_id" -> JString(appId), "batch_id" -> JInt(batchId)))
       // the incoming frame carries a streaming plan; rebase it onto its
       // computed rows (the construction every DSv1 sink uses)
       val batch = GraftShim.internalCreateDataFrame(
         spark, data.queryExecution.toRdd, data.schema, isStreaming = false)
-      if (mergeKeys.isEmpty || ManifestTable.latestVersion(spark, dir).isEmpty) {
+      if (mergeKeys.isEmpty || latest.isEmpty) {
         // first batch of an upsert stream: a delete for a key the table
         // never held is a no-op, so flagged rows drop rather than insert
         val first = deleteCol.foldLeft(batch) { (b, dc) =>
@@ -109,26 +76,20 @@ object GraftSink extends graft.QueryModule {
           else ZoneMap.appendStats(spark, dir,
             ZoneMap.statsFor(spark, dir, staged, statsCols, Nil))
         ManifestTable.appendStagedRetrying(spark, dir, 20250801, 0, staged,
-          beforeCommit = { (parent, v) =>
-            writeSidecar(spark, dir, v, Txn(appId, batchId))
-            stats(parent, v)
-          })
+          beforeCommit = stats, state = txn)
       } else {
         // X180: each batch lands COPY-ON-WRITE over touched files only
         // (Merge.upsertCow) — commit cost tracks the batch, not the
-        // table; the txn sidecar is placed by upsertCow's beforeCommit
-        // hook, immediately before the manifest rename, preserving the
-        // crash-replay ordering. The upsert recomputes INSIDE the retry
-        // loop: a lost race means a concurrent writer advanced the
-        // table, and re-committing the pre-race rewrite would silently
-        // erase those rows (the classic lost update) — each retry
-        // re-reads the new latest. Cache the batch so only the merge
-        // re-runs.
+        // table; the txn rides the merge's own manifest. The upsert
+        // recomputes INSIDE the retry loop: a lost race means a
+        // concurrent writer advanced the table, and re-committing the
+        // pre-race rewrite would silently erase those rows (the classic
+        // lost update) — each retry re-reads the new latest. Cache the
+        // batch so only the merge re-runs.
         batch.persist()
         try ManifestTable.retrying("stream merge sink", dir) {
           graft.lake.Merge.upsertCow(spark, dir, batch, mergeKeys,
-            20250801, 0, deleteCol = deleteCol,
-            beforeCommit = v => writeSidecar(spark, dir, v, Txn(appId, batchId)))
+            20250801, 0, deleteCol = deleteCol, state = txn)
         } finally batch.unpersist()
       }
     }

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.json4s.JInt
+import org.json4s.{JArray, JInt, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
 import graft.SparkSpec
@@ -35,9 +35,9 @@ object CountingCommit {
 /** A primitive that loses races on demand. While armed for a directory,
   * each manifest or catalog put under it first lands a competing commit
   * in the slot — the previous version's content, renumbered to the slot's
-  * version — and then reports the race lost, as a concurrent writer that
-  * got there first would. Other puts and every replace pass straight to
-  * [[RenameCommit]].
+  * version and passed through the armed `edit` — and then reports the
+  * race lost, as a concurrent writer that got there first would. Other
+  * puts and every replace pass straight to [[RenameCommit]].
   */
 class InterloperCommit extends CommitPrimitive {
   override def putIfAbsent(spark: SparkSession, target: Path,
@@ -49,7 +49,7 @@ class InterloperCommit extends CommitPrimitive {
         val prev = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
         val competing = JsonMethods.compact(JsonMethods.render(
-          JsonMethods.parse(prev).replace(List("version"), JInt(v))))
+          InterloperCommit.edit(JsonMethods.parse(prev).replace(List("version"), JInt(v)))))
         assert(RenameCommit.putIfAbsent(spark, target, competing.getBytes("UTF-8")))
         false
       case _ => RenameCommit.putIfAbsent(spark, target, payload)
@@ -60,15 +60,21 @@ class InterloperCommit extends CommitPrimitive {
 object InterloperCommit {
   private val Slot = """v(\d{8})\.json""".r
   @volatile private var under = ""
+  @volatile private var edit: JValue => JValue = identity
   private val left = new AtomicInteger(0)
 
-  /** Lose the next `losses` manifest or catalog puts below `dir`. */
-  def arm(dir: String, losses: Int): Unit = {
+  /** Run `body` losing the next `losses` manifest or catalog puts below
+    * `dir`; each competing manifest is the previous one passed through
+    * `edit`, as a concurrent commit that changed it would leave.
+    */
+  def losing[T](spark: SparkSession, dir: String, losses: Int = 1,
+      edit: JValue => JValue = identity)(body: => T): T = {
     under = new Path(dir).toUri.getPath
+    this.edit = edit
     left.set(losses)
+    try CommitPrimitiveSpec.using(spark, classOf[InterloperCommit])(body)
+    finally left.set(0)
   }
-
-  def disarm(): Unit = left.set(0)
 
   private def slot(target: Path): Option[Int] =
     (target.getName, target.getParent.getName) match {
@@ -76,6 +82,44 @@ object InterloperCommit {
           if target.toUri.getPath.startsWith(under) => Some(v.toInt)
       case _ => None
     }
+}
+
+/** A primitive that crashes on demand: while armed for a directory, each
+  * manifest put under it throws before anything lands, as a writer that
+  * died at its commit point would. Every other put and replace passes
+  * straight to [[RenameCommit]].
+  */
+class CrashingCommit extends CommitPrimitive {
+  override def putIfAbsent(spark: SparkSession, target: Path,
+      payload: Array[Byte]): Boolean =
+    if (target.getParent.getName == "_manifests" &&
+        CrashingCommit.under.exists(target.toUri.getPath.startsWith))
+      throw new java.io.IOException(s"simulated crash before publishing $target")
+    else RenameCommit.putIfAbsent(spark, target, payload)
+  override def replace(spark: SparkSession, target: Path,
+      payload: Array[Byte]): Unit = RenameCommit.replace(spark, target, payload)
+}
+object CrashingCommit {
+  @volatile private var under: Option[String] = None
+
+  /** Run `body` with every manifest put below `dir` crashing; the crash
+    * surfaces as the IOException `body` throws.
+    */
+  def crashing[T](spark: SparkSession, dir: String)(body: => T): T = {
+    under = Some(new Path(dir).toUri.getPath)
+    try CommitPrimitiveSpec.using(spark, classOf[CrashingCommit])(body)
+    finally under = None
+  }
+}
+
+object CommitPrimitiveSpec {
+  /** Run `body` with the commit primitive `cls` selected. */
+  def using[T](spark: SparkSession, cls: Class[_ <: CommitPrimitive])(body: => T): T = {
+    val impl0 = spark.conf.getOption(CommitPrimitive.ImplConf)
+    spark.conf.set(CommitPrimitive.ImplConf, cls.getName)
+    try body finally impl0.fold(spark.conf.unset(CommitPrimitive.ImplConf))(
+      spark.conf.set(CommitPrimitive.ImplConf, _))
+  }
 }
 
 /** The storage commit seam (docs/STORAGE_CONTRACT.md): rename-backed
@@ -235,22 +279,12 @@ class CommitPrimitiveSpec extends SparkSpec {
     }
   }
 
-  /** Run `body` with every manifest or catalog put below `dir` going
-    * through [[InterloperCommit]], armed to lose `losses` races.
-    */
-  private def losing[T](dir: String, losses: Int = 1)(body: => T): T = {
-    val impl0 = spark.conf.getOption(CommitPrimitive.ImplConf)
-    spark.conf.set(CommitPrimitive.ImplConf, classOf[InterloperCommit].getName)
-    InterloperCommit.arm(dir, losses)
-    try body finally {
-      InterloperCommit.disarm()
-      impl0.fold(spark.conf.unset(CommitPrimitive.ImplConf))(
-        spark.conf.set(CommitPrimitive.ImplConf, _))
-    }
-  }
+  private def losing[T](dir: String, losses: Int = 1)(body: => T): T =
+    InterloperCommit.losing(spark, dir, losses)(body)
 
   /** After one lost race, the committer landed at latest+2 and the
-    * interloper's version at latest+1 still holds latest's content.
+    * interloper's version at latest+1 still holds latest's content and
+    * state: the lost attempt left nothing for it to adopt.
     */
   private def landedPastInterloper(dir: String, latest: Int, landed: Int): Unit = {
     assert(landed == latest + 2)
@@ -259,13 +293,8 @@ class CommitPrimitiveSpec extends SparkSpec {
     assert(snaps(latest).files == snaps(latest - 1).files &&
       snaps(latest).deletes == snaps(latest - 1).deletes,
       "the interloper's version was overwritten")
-  }
-
-  private def sidecarAt(dir: String, sub: String, v: Int): String = {
-    val p = new Path(f"$dir/$sub/v$v%08d.json")
-    assert(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"no $sub sidecar at the landed version $v")
-    readBytes(p)
+    assert(snaps(latest).state == snaps(latest - 1).state,
+      "the interloper's version adopted the lost attempt's state")
   }
 
   test("one lost race: append, replace, delete and restore land past the interloper") {
@@ -321,51 +350,92 @@ class CommitPrimitiveSpec extends SparkSpec {
       spark, rep, 20250901, 910, staged, Seq("k"))), Set(60L))
   }
 
-  test("one lost race: COPY INTO and the JDBC pull put their sidecars at the landed version; an identity append refuses") {
-    val landing = graft.util.Scratch.dir("lose_land")
-    def drop(name: String, k: Long): Unit = {
-      val tmp = s"$landing/_tmp_$name"
-      Seq((k, k)).toDF("k", "v").coalesce(1).write.parquet(tmp)
-      val fs = new Path(landing).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.rename(fs.listStatus(new Path(tmp)).map(_.getPath)
-        .find(_.getName.endsWith(".parquet")).get, new Path(s"$landing/$name.parquet"))
-      fs.delete(new Path(tmp), true)
-    }
-    val cp = s"${graft.util.Scratch.dir("lose_copy")}/t"
-    drop("a", 1L)
-    CopyInto.copyInto(spark, cp, landing, 20250901, 900)
-    drop("b", 2L)
-    val cv = losing(cp)(CopyInto.copyInto(spark, cp, landing, 20250901, 910))
-    landedPastInterloper(cp, 1, cv.get)
-    assert(sidecarAt(cp, "_copy", 3).contains(s"$landing/b.parquet"))
-    assert(ManifestTable.readLatest(spark, cp).count() == 2)
-
-    val cfg = graft.sinks.Jdbc.JdbcConfig(
-      url = "jdbc:derby:memory:commitlosespec;create=true",
-      driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver")
-    val jd = s"${graft.util.Scratch.dir("lose_jdbc")}/t"
-    graft.sinks.Jdbc.append((1L to 3L).map(i => (i, i)).toDF("wm", "v"), cfg, "lose_src")
-    graft.sources.JdbcIncr.pull(spark, cfg, "lose_src", "wm", jd, 20250901, 900)
-    graft.sinks.Jdbc.append(Seq((4L, 4L)).toDF("wm", "v"), cfg, "lose_src")
-    val jv = losing(jd)(
-      graft.sources.JdbcIncr.pull(spark, cfg, "lose_src", "wm", jd, 20250901, 910))
-    landedPastInterloper(jd, 1, jv.get)
-    assert(sidecarAt(jd, "_ingest", 3).contains("\"watermark\": 4"))
-    assert(graft.sources.JdbcIncr.committedWatermark(spark, jd).contains(4L))
-
-    // identity: the retry sees the high water moved and refuses rather
-    // than commit ids a concurrent writer may have issued
-    val id = s"${graft.util.Scratch.dir("lose_ident")}/t"
-    Identity.appendWithIds((0L until 3L).toDF("k"), id, "id", "k", 20250901, 900)
-    val e = intercept[IllegalStateException](losing(id)(
-      Identity.appendWithIds((5L until 7L).toDF("k"), id, "id", "k", 20250901, 910)))
-    assert(e.getMessage.contains("high water moved"), e.getMessage)
-    assert(ManifestTable.snapshots(spark, id).map(_.version) == Seq(1, 2))
-    val ids = ManifestTable.readLatest(spark, id).select("id").as[Long].collect()
-    assert(ids.sorted.toSeq == Seq(1L, 2L, 3L))
+  private def dropLanding(landing: String, name: String, k: Long): Unit = {
+    val tmp = s"$landing/_tmp_$name"
+    Seq((k, k)).toDF("k", "v").coalesce(1).write.parquet(tmp)
+    val fs = new Path(landing).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.rename(fs.listStatus(new Path(tmp)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get, new Path(s"$landing/$name.parquet"))
+    fs.delete(new Path(tmp), true)
   }
 
-  test("one lost race: the stream sink's append and merge put their txn sidecars at the landed version") {
+  private val lostCfg = graft.sinks.Jdbc.JdbcConfig(
+    url = "jdbc:derby:memory:commitlosespec;create=true",
+    driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+
+  test("one lost race: COPY INTO, the JDBC pull and an identity append land past the interloper with their state") {
+    val landing = graft.util.Scratch.dir("lose_land")
+    val cp = s"${graft.util.Scratch.dir("lose_copy")}/t"
+    dropLanding(landing, "a", 1L)
+    CopyInto.copyInto(spark, cp, landing, 20250901, 900)
+    dropLanding(landing, "b", 2L)
+    val cv = losing(cp)(CopyInto.copyInto(spark, cp, landing, 20250901, 910))
+    landedPastInterloper(cp, 1, cv.get)
+    assert(CopyInto.ingestedFiles(spark, cp) ==
+      Set(s"$landing/a.parquet", s"$landing/b.parquet"))
+    assert(ManifestTable.readLatest(spark, cp).count() == 2)
+
+    val jd = s"${graft.util.Scratch.dir("lose_jdbc")}/t"
+    graft.sinks.Jdbc.append((1L to 3L).map(i => (i, i)).toDF("wm", "v"), lostCfg, "lose_src")
+    graft.sources.JdbcIncr.pull(spark, lostCfg, "lose_src", "wm", jd, 20250901, 900)
+    graft.sinks.Jdbc.append(Seq((4L, 4L)).toDF("wm", "v"), lostCfg, "lose_src")
+    val jv = losing(jd)(
+      graft.sources.JdbcIncr.pull(spark, lostCfg, "lose_src", "wm", jd, 20250901, 910))
+    landedPastInterloper(jd, 1, jv.get)
+    assert(graft.sources.JdbcIncr.committedWatermark(spark, jd).contains(4L))
+
+    // identity: the interloper issued no ids, so the retry keeps its
+    // range and lands — ids stay contiguous
+    val id = s"${graft.util.Scratch.dir("lose_ident")}/t"
+    Identity.appendWithIds((0L until 3L).toDF("k"), id, "id", "k", 20250901, 900)
+    val (iv, hw) = losing(id)(
+      Identity.appendWithIds((5L until 7L).toDF("k"), id, "id", "k", 20250901, 910))
+    landedPastInterloper(id, 1, iv)
+    assert(hw == 5L && Identity.highWater(spark, id) == 5L)
+    val ids = ManifestTable.readLatest(spark, id).select("id").as[Long].collect()
+    assert(ids.sorted.toSeq == (1L to 5L))
+  }
+
+  test("a competing commit that moved the state: COPY INTO, the JDBC pull and an identity append refuse") {
+    def moved(path: List[String], to: JValue): JValue => JValue =
+      _.replace("state" :: path, to)
+    def refuses(dir: String, path: List[String], to: JValue)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](
+        InterloperCommit.losing(spark, dir, edit = moved(path, to))(body))
+      assert(e.getMessage.contains("moved"), e.getMessage)
+      assert(!e.isInstanceOf[LostRace])
+      // only the competing commit landed
+      assert(ManifestTable.snapshots(spark, dir).map(_.version) == Seq(1, 2))
+    }
+    val landing = graft.util.Scratch.dir("moved_land")
+    val cp = s"${graft.util.Scratch.dir("moved_copy")}/t"
+    dropLanding(landing, "a", 1L)
+    CopyInto.copyInto(spark, cp, landing, 20250901, 900)
+    dropLanding(landing, "b", 2L)
+    // a concurrent run ingested b: this run must not append it again
+    refuses(cp, List("copy", "files"), JArray(List(
+      JString(s"$landing/a.parquet"), JString(s"$landing/b.parquet"))))(
+      CopyInto.copyInto(spark, cp, landing, 20250901, 910))
+    assert(ManifestTable.readLatest(spark, cp).count() == 1)
+
+    val jd = s"${graft.util.Scratch.dir("moved_jdbc")}/t"
+    graft.sinks.Jdbc.append((1L to 3L).map(i => (i, i)).toDF("wm", "v"), lostCfg, "moved_src")
+    graft.sources.JdbcIncr.pull(spark, lostCfg, "moved_src", "wm", jd, 20250901, 900)
+    graft.sinks.Jdbc.append(Seq((4L, 4L)).toDF("wm", "v"), lostCfg, "moved_src")
+    // a concurrent pull took rows up to 4: this pull must not append them again
+    refuses(jd, List("ingest", "watermark"), JInt(4))(
+      graft.sources.JdbcIncr.pull(spark, lostCfg, "moved_src", "wm", jd, 20250901, 910))
+    assert(ManifestTable.readLatest(spark, jd).count() == 3)
+
+    val id = s"${graft.util.Scratch.dir("moved_ident")}/t"
+    Identity.appendWithIds((0L until 3L).toDF("k"), id, "id", "k", 20250901, 900)
+    // a concurrent identity append issued ids 4..10: ours would collide
+    refuses(id, List("identity", "high_water"), JInt(10))(
+      Identity.appendWithIds((5L until 7L).toDF("k"), id, "id", "k", 20250901, 910))
+    assert(Identity.highWater(spark, id) == 10L)
+  }
+
+  test("one lost race: the stream sink's append and merge carry their txn to the landed version") {
     val kv = (0L until 6L).map(i => (i, i)).toDF("k", "v")
     val app = s"${graft.util.Scratch.dir("lose_sink")}/t"
     ManifestTable.commit(kv, app, 20250901, 900)
@@ -373,7 +443,7 @@ class CommitPrimitiveSpec extends SparkSpec {
       statsCols = Seq("k"))
     losing(app)(appSink.addBatch(0L, Seq((9L, 9L)).toDF("k", "v")))
     landedPastInterloper(app, 1, ManifestTable.latestVersion(spark, app).get)
-    assert(sidecarAt(app, "_stream", 3).contains("chk-a"))
+    assert(txn(app) == Some(("chk-a", 0L)))
     assert(ZoneMap.fileStats(spark, app, 3).isDefined)
     assert(ManifestTable.readLatest(spark, app).count() == 7)
 
@@ -383,10 +453,40 @@ class CommitPrimitiveSpec extends SparkSpec {
       mergeKeys = Seq("k"))
     losing(mrg)(mergeSink.addBatch(0L, Seq((2L, 20L), (9L, 9L)).toDF("k", "v")))
     landedPastInterloper(mrg, 1, ManifestTable.latestVersion(spark, mrg).get)
-    assert(sidecarAt(mrg, "_stream", 3).contains("chk-m"))
+    assert(txn(mrg) == Some(("chk-m", 0L)))
     val rows = ManifestTable.readLatest(spark, mrg).select("k", "v")
       .as[(Long, Long)].collect().toMap
     assert(rows.size == 7 && rows(2L) == 20L && rows(9L) == 9L)
+  }
+
+  private def txn(dir: String): Option[(String, Long)] = {
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    ManifestTable.latestState(spark, dir, "stream").map(t =>
+      ((t \ "app_id").extract[String], (t \ "batch_id").extract[Long]))
+  }
+
+  test("an always-losing loop leaves no stream txn behind: the append and merge sinks' batch 0 is not skipped as a replay") {
+    val kv = (0L until 6L).map(i => (i, i)).toDF("k", "v")
+    def exhaustThenRetry(tag: String, mergeKeys: Seq[String]): Unit = {
+      val dir = s"${graft.util.Scratch.dir(tag)}/t"
+      ManifestTable.commit(kv, dir, 20250901, 900)
+      // an app id that needs escaping round-trips through the manifest
+      val appId = s"chk \"$tag\" \\ x"
+      val sink = new graft.spark.GraftSink.StreamSink(spark, dir, appId = appId,
+        mergeKeys = mergeKeys)
+      val batch = Seq((9L, 9L)).toDF("k", "v")
+      intercept[IllegalStateException](
+        InterloperCommit.losing(spark, dir, Int.MaxValue)(sink.addBatch(0L, batch)))
+      // six interlopers took v2..v7; none carries the lost batch's txn
+      assert(ManifestTable.snapshots(spark, dir).map(_.version) == (1 to 7))
+      assert(txn(dir).isEmpty)
+      // the restarted stream re-delivers batch 0, and it lands
+      sink.addBatch(0L, batch)
+      assert(txn(dir) == Some((appId, 0L)))
+      assert(ManifestTable.readLatest(spark, dir).where(col("k") === 9L).count() == 1)
+    }
+    exhaustThenRetry("noadopt_sink", Nil)
+    exhaustThenRetry("noadopt_msink", Seq("k"))
   }
 
   test("one lost catalog race: the cut lands past the interloper with both overlays") {

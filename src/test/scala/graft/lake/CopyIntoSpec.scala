@@ -42,48 +42,44 @@ class CopyIntoSpec extends SparkSpec {
     assert(rows.groupBy("k").count().where(col("count") > 1).count() == 0)
   }
 
-  /** Simulate a crashed COPY INTO: its sidecar for `version` is written,
-    * its commit never happens.
-    */
-  private def orphanSidecar(dir: String, version: Int, files: Seq[String]): Unit = {
-    val m = classOf[CopyInto.type].getDeclaredMethods
-      .find(_.getName == "writeSidecar").get
-    m.setAccessible(true)
-    m.invoke(CopyInto, spark, dir, Int.box(version), files, Nil)
-  }
-
   test("crash-orphaned sidecars are invisible: the increment re-ingests") {
     val dir = Scratch.dir("copy_crash")
     val landing = Scratch.dir("copy_crash_land")
     drop(landing, "a", Seq((1L, 1L)))
     CopyInto.copyInto(spark, dir, landing, 20250901, 900)
 
-    orphanSidecar(dir, 2, Seq(s"$landing/b.parquet"))
-
     drop(landing, "b", Seq((2L, 2L)))
-    // the orphan does NOT hide b: resolution only reads sidecars of
-    // committed versions
+    // the run crashes at its commit point: b must not read as ingested
+    intercept[java.io.IOException](CrashingCommit.crashing(spark, dir)(
+      CopyInto.copyInto(spark, dir, landing, 20250901, 950)))
+    assert(CopyInto.ingestedFiles(spark, dir) == Set(s"$landing/a.parquet"))
     assert(CopyInto.copyInto(spark, dir, landing, 20250901, 1000).contains(2))
     assert(ManifestTable.readLatest(spark, dir).count() == 2)
   }
 
-  test("a crash-orphaned sidecar is not adopted by a foreign commit at its version (known defect)") {
-    // Sidecars resolve by version number alone, so a plain append that
-    // commits the orphan's version makes the orphan look committed: b is
-    // then "already ingested" and never lands. Fixing it needs a link
-    // from sidecar to commit (a format change); the same rule governs
-    // the JDBC watermark, the identity high water and the stream txn.
+  test("a crashed COPY INTO leaves nothing for a foreign commit at its version to adopt") {
+    // the crashed run's ingested set never reached storage, so the plain
+    // append that takes its version cannot make b look ingested
     val dir = Scratch.dir("copy_adopt")
     val landing = Scratch.dir("copy_adopt_land")
     drop(landing, "a", Seq((1L, 1L)))
     CopyInto.copyInto(spark, dir, landing, 20250901, 900)
-    orphanSidecar(dir, 2, Seq(s"$landing/b.parquet"))
-    ManifestTable.appendRetrying(Seq((9L, 9L)).toDF("k", "v"), dir, 20250901, 950)
     drop(landing, "b", Seq((2L, 2L)))
-    pendingUntilFixed {
-      assert(CopyInto.copyInto(spark, dir, landing, 20250901, 1000).contains(3))
-      assert(ManifestTable.readLatest(spark, dir).where(col("k") === 2L).count() == 1)
-    }
+    intercept[java.io.IOException](CrashingCommit.crashing(spark, dir)(
+      CopyInto.copyInto(spark, dir, landing, 20250901, 940)))
+    ManifestTable.appendRetrying(Seq((9L, 9L)).toDF("k", "v"), dir, 20250901, 950)
+    assert(CopyInto.ingestedFiles(spark, dir) == Set(s"$landing/a.parquet"))
+    assert(CopyInto.copyInto(spark, dir, landing, 20250901, 1000).contains(3))
+    assert(ManifestTable.readLatest(spark, dir).where(col("k") === 2L).count() == 1)
+  }
+
+  test("a landing path with a quote round-trips through the manifest") {
+    val dir = Scratch.dir("copy_quote")
+    val landing = s"${Scratch.dir("copy_quote_land")}/say \"hi\""
+    drop(landing, "a", Seq((1L, 1L)))
+    assert(CopyInto.copyInto(spark, dir, landing, 20250901, 900).contains(1))
+    assert(CopyInto.ingestedFiles(spark, dir) == Set(s"$landing/a.parquet"))
+    assert(CopyInto.copyInto(spark, dir, landing, 20250901, 1000).isEmpty)
   }
 
   test("content mode: a re-dropped file under a new name is not new data") {

@@ -29,18 +29,31 @@ class IdentitySpec extends SparkSpec {
     val dir = Scratch.dir("ident_crash")
     Identity.appendWithIds((0L until 5L).toDF("k"), dir, "id", "k", 20250901, 900)
 
-    // simulate: v2's sidecar written (high water 99) but never committed
-    val m = classOf[Identity.type].getDeclaredMethods
-      .find(_.getName == "writeSidecar").get
-    m.setAccessible(true)
-    m.invoke(Identity, spark, dir, Int.box(2), Long.box(99L))
-    assert(Identity.highWater(spark, dir) == 5L) // orphan invisible
+    // the append crashes at its commit point: its ids stay unclaimed
+    intercept[java.io.IOException](CrashingCommit.crashing(spark, dir)(
+      Identity.appendWithIds((20L until 30L).toDF("k"), dir, "id", "k", 20250901, 950)))
+    assert(Identity.highWater(spark, dir) == 5L)
 
     // the retry reissues the SAME range — no gap
     Identity.appendWithIds((10L until 13L).toDF("k"), dir, "id", "k", 20250901, 1000)
     val ids = ManifestTable.readLatest(spark, dir)
       .select("id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == (1L to 8L))
+  }
+
+  test("a crashed identity append leaves no high water for a foreign commit at its version to adopt") {
+    val dir = Scratch.dir("ident_adopt")
+    Identity.appendWithIds((0L until 3L).toDF("k"), dir, "id", "k", 20250901, 900)
+    intercept[java.io.IOException](CrashingCommit.crashing(spark, dir)(
+      Identity.appendWithIds((5L until 7L).toDF("k"), dir, "id", "k", 20250901, 940)))
+    // a metadata-only commit takes the crashed attempt's version
+    Properties.set(spark, dir, Map("owner" -> "ops"), 20250901, 950)
+    assert(Identity.highWater(spark, dir) == 3L)
+    assert(Identity.appendWithIds((5L until 7L).toDF("k"), dir, "id", "k",
+      20250901, 1000) == ((3, 5L)))
+    val ids = ManifestTable.readLatest(spark, dir)
+      .select("id").collect().map(_.getLong(0)).sorted
+    assert(ids.toSeq == (1L to 5L))
   }
 
   test("replaying the same batches yields bit-identical ids") {

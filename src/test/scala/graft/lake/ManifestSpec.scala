@@ -1,6 +1,8 @@
 package graft.lake
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import org.json4s.{JInt, JObject, JString}
 
 import graft.SparkSpec
 
@@ -38,7 +40,8 @@ class ManifestSpec extends SparkSpec {
     val v2data = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val staged = ManifestTable.writeDataFiles(v2data, dir, 2)
     // retry of the crashed job re-publishes the staged files
-    ManifestTable.commitManifest(spark, dir, 2, 20250301, 1000, staged)
+    ManifestTable.commitManifest(spark, dir,
+      ManifestTable.snapshots(spark, dir).lastOption, 20250301, 1000, staged)
     assert(ManifestTable.latestVersion(spark, dir) == Some(2))
     assert(ManifestTable.readLatest(spark, dir).count() == 2)
     // time travel to v1 is unaffected by the later commit
@@ -61,9 +64,9 @@ class ManifestSpec extends SparkSpec {
     val dir = tmpTable()
     val df = Seq(1L).toDF("id")
     val staged = ManifestTable.writeDataFiles(df, dir, 1)
-    ManifestTable.commitManifest(spark, dir, 1, 20250301, 900, staged)
+    ManifestTable.commitManifest(spark, dir, None, 20250301, 900, staged)
     intercept[IllegalStateException] {
-      ManifestTable.commitManifest(spark, dir, 1, 20250301, 901, staged)
+      ManifestTable.commitManifest(spark, dir, None, 20250301, 901, staged)
     }
     // the loser's temp file is cleaned up; the winner's manifest stands
     assert(ManifestTable.snapshots(spark, dir).map(_.runTime) == Seq(900))
@@ -228,10 +231,14 @@ class ManifestSpec extends SparkSpec {
     val df = (i: Int) => spark.range(i * 10L, (i + 1) * 10L)
       .selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
     ManifestTable.commit(df(0), dir, 20250901, 900)
-    (1 to 11).foreach(i =>
-      ManifestTable.appendRetrying(df(i), dir, 20250901, 900 + i))
+    // each append also sets a state entry whose strings need escaping
+    val appId = "chk \"x\" \\ y"
+    (1 to 11).foreach(i => ManifestTable.appendStagedRetrying(spark, dir,
+      20250901, 900 + i, ManifestTable.stageDataFiles(df(i), dir),
+      state = _ => Map("stream" ->
+        JObject("app_id" -> JString(appId), "batch_id" -> JInt(i)))))
     // the 10th commit auto-checkpointed; content through the checkpoint
-    // path is IDENTICAL to the manifest-by-manifest read
+    // path — state included — is IDENTICAL to the manifest-by-manifest read
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mdir = new org.apache.hadoop.fs.Path(s"$dir/_manifests")
@@ -239,6 +246,8 @@ class ManifestSpec extends SparkSpec {
     assert(fs.exists(ckpt), "auto-checkpoint at v10 missing")
     assert(fs.exists(new org.apache.hadoop.fs.Path(mdir, "_last_checkpoint")))
     val viaCkpt = ManifestTable.snapshots(spark, dir)
+    assert(viaCkpt.map(_.state.get("stream")) == None +: (1 to 11).map(i =>
+      Some(JObject("app_id" -> JString(appId), "batch_id" -> JInt(i)))))
     // a fresh log open pays manifest reads only for v11, v12
     val before = ManifestTable.manifestReads.get()
     ManifestTable.snapshots(spark, dir)
@@ -261,5 +270,102 @@ class ManifestSpec extends SparkSpec {
       "a stale checkpoint resurrected vacuumed versions")
     assert(!fs.exists(ckpt), "superseded checkpoint not reclaimed")
     assert(ManifestTable.readLatest(spark, dir).count() === 120)
+    assert(ManifestTable.snapshots(spark, dir).last.state === viaCkpt.last.state)
+  }
+
+  test("manifests escape file names: a converted file named with a quote reads back") {
+    val dir = tmpTable()
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1).write.parquet(s"$dir/p")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new Path(s"$dir/p")).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    fs.rename(part, new Path(s"$dir/p/a\"b.parquet"))
+    assert(Convert.convert(spark, dir, 20250901, 900) == 1)
+    assert(ManifestTable.snapshots(spark, dir).map(_.files) == Seq(Seq("p/a\"b.parquet")))
+    assert(ManifestTable.readLatest(spark, dir).count() == 2)
+  }
+
+  test("manifest state survives every commit kind and vacuum") {
+    val dir = tmpTable()
+    val cfg = graft.sinks.Jdbc.JdbcConfig(
+      url = "jdbc:derby:memory:manifeststatespec;create=true",
+      driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    def rows(ks: Seq[Long]) = ks.map(k => (k, k * 10, k)).toDF("k", "v", "id")
+    graft.sinks.Jdbc.append(rows(1L to 4L), cfg, "state_src")
+    graft.sources.JdbcIncr.pull(spark, cfg, "state_src", "k", dir, 20250901, 900)
+    val landing = s"${tmpTable()}/landing"
+    rows(Seq(5L, 6L)).coalesce(1).write.parquet(landing)
+    CopyInto.copyInto(spark, dir, landing, 20250901, 901)
+    Identity.appendWithIds(Seq((7L, 70L)).toDF("k", "v"), dir, "id", "k", 20250901, 902)
+    def state() = (graft.sources.JdbcIncr.committedWatermark(spark, dir),
+      CopyInto.ingestedFiles(spark, dir), Identity.highWater(spark, dir))
+    val before = state()
+    assert(before._1.contains(4L) && before._2.size == 1 && before._3 == 1L)
+
+    val at = Iterator.from(910)
+    ManifestTable.commitRetrying(ManifestTable.readLatest(spark, dir), dir, 20250901, at.next())
+    DeleteVectors.deleteWhere(spark, dir, col("k") === 1L, 20250901, at.next())
+    DeleteVectors.materialize(spark, dir, 20250901, at.next())
+    // v2 predates the identity append: the restore still keeps today's state
+    Restore.restore(spark, dir, 2, 20250901, at.next())
+    ZOrder.optimizeN(spark, dir, Seq("k"), 2, 20250901, at.next())
+    Properties.set(spark, dir, Map("owner" -> "ops"), 20250901, at.next())
+    Constraints.add(spark, dir, "pos", "k > 0", 20250901, at.next())
+    Merge.upsertCow(spark, dir, rows(Seq(5L)), Seq("k"), 20250901, at.next())
+    ReplaceWhere.replaceWhere(spark, dir, "k", 6L, 6L, rows(Seq(6L)), 20250901,
+      at.next(), Seq("k"))
+    val cur = ManifestTable.readLatest(spark, dir)
+    TableDiff.repair(cur.withColumn("v", when(col("k") === 2L, lit(222L))
+      .otherwise(col("v"))), dir, Seq("k"), 4, 20250901, at.next())
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(s"$dir/${ManifestTable.snapshots(spark, dir).last.files.head}"), false)
+    Fsck.repair(spark, dir, 20250901, at.next())
+    ColumnMap.ensureMapping(spark, dir)
+    ColumnMap.renameColumn(spark, dir, "v", "w")
+    assert(ManifestTable.snapshots(spark, dir).map(_.op).toSet == Set("append", "write",
+      "materialize", "restore", "optimize", "setproperty", "constraint", "merge",
+      "replace_where", "repair", "fsck", "rename"))
+    assert(state() == before)
+    Vacuum.vacuum(spark, dir, keepLast = 1)
+    assert(ManifestTable.snapshots(spark, dir).size == 1)
+    assert(state() == before)
+  }
+
+  test("a table whose manifests predate the state field resolves its old sidecars until the first new commit folds them") {
+    val dir = tmpTable()
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def put(rel: String, json: String): Unit = {
+      val out = fs.create(new Path(s"$dir/$rel"), true)
+      try out.write(json.getBytes("UTF-8")) finally out.close()
+    }
+    val files = ManifestTable.writeDataFiles(Seq((1L, "a")).toDF("id", "v"), dir, 1)
+      .map("\"" + _ + "\"").mkString("[", ", ", "]")
+    Seq(1, 2).foreach(v => put(f"_manifests/v$v%08d.json",
+      s"""{"version": $v, "run_date": 20250901, "run_time": ${900 + v}, "files": $files}"""))
+    put("_copy/v00000001.json", """{"version": 1, "files": ["/land/a.parquet"]}""")
+    put("_copy/v00000002.json",
+      """{"version": 2, "files": ["/land/b.parquet"], "digests": ["d2"]}""")
+    put("_ingest/v00000001.json", """{"version": 1, "watermark": 3}""")
+    put("_ingest/v00000002.json", """{"version": 2, "watermark": 7}""")
+    put("_ingest/v00000003.json", """{"version": 3, "watermark": 99}""") // crash orphan
+    put("_identity/v00000001.json", """{"version": 1, "high_water": 5}""")
+    put("_stream/v00000002.json", """{"version": 2, "app_id": "chk", "batch_id": 4}""")
+    def check(): Unit = {
+      assert(graft.sources.JdbcIncr.committedWatermark(spark, dir).contains(7L))
+      assert(CopyInto.ingestedFiles(spark, dir) == Set("/land/a.parquet", "/land/b.parquet"))
+      assert(CopyInto.ingestedDigests(spark, dir) == Set("d2"))
+      assert(Identity.highWater(spark, dir) == 5L)
+      assert(ManifestTable.latestState(spark, dir, "stream") ==
+        Some(JObject("app_id" -> JString("chk"), "batch_id" -> JInt(4))))
+    }
+    check()
+    // the first new commit folds the resolved state into its manifest;
+    // the old sidecars (and the orphan at the new version) no longer matter
+    assert(ManifestTable.appendRetrying(Seq((2L, "b")).toDF("id", "v"), dir,
+      20250901, 1000) == 3)
+    Seq("_copy", "_ingest", "_identity", "_stream")
+      .foreach(d => fs.delete(new Path(s"$dir/$d"), true))
+    check()
+    assert(ManifestTable.readLatest(spark, dir).count() == 2)
   }
 }

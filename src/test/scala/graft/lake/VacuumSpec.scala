@@ -67,7 +67,8 @@ class VacuumSpec extends SparkSpec {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new Path(s"$dir/data/v00000004")))
     // ...and the in-flight writer can still complete its commit.
-    ManifestTable.commitManifest(spark, dir, 4, 20250601, 1200,
+    ManifestTable.commitManifest(spark, dir,
+      ManifestTable.snapshots(spark, dir).lastOption, 20250601, 1200,
       fs.listStatus(new Path(s"$dir/data/v00000004")).toSeq
         .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         .map(s => s"data/v00000004/${s.getPath.getName}"))

@@ -3,14 +3,14 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.lake.ManifestTable
+import graft.lake.{CrashingCommit, InterloperCommit, ManifestTable}
 import graft.sinks.Jdbc
 import graft.sinks.Jdbc.JdbcConfig
 import graft.util.Scratch
 
 /** X112 incremental JDBC ingest: full first load, append-only increments,
-  * version-less no-op when the source is quiet, and watermark resolution
-  * that ignores crash-orphaned sidecars.
+  * version-less no-op when the source is quiet, and a watermark that
+  * crashed or lost attempts leave where it was.
   */
 class JdbcIncrSpec extends SparkSpec {
   import spark.implicits._
@@ -46,18 +46,27 @@ class JdbcIncrSpec extends SparkSpec {
     Jdbc.append(Seq((1L, 10L)).toDF("wm", "v"), cfg, "inc_orph")
     JdbcIncr.pull(spark, cfg, "inc_orph", "wm", dir, 20250601, 900)
 
-    // simulate a crash AFTER the sidecar write but BEFORE the manifest
-    // commit: a v2 sidecar exists, but v2 was never committed
-    val m = classOf[JdbcIncr.type].getDeclaredMethods
-      .find(_.getName == "writeSidecar").get
-    m.setAccessible(true)
-    m.invoke(JdbcIncr, spark, dir, Int.box(2), Long.box(99L))
-
-    // resolution ignores it: the committed watermark is still v1's
-    assert(JdbcIncr.committedWatermark(spark, dir).contains(1L))
-    // and the next pull re-pulls from the COMMITTED watermark
+    // the next pull crashes at its commit point: its watermark never lands
     Jdbc.append(Seq((2L, 20L)).toDF("wm", "v"), cfg, "inc_orph")
+    intercept[java.io.IOException](CrashingCommit.crashing(spark, dir)(
+      JdbcIncr.pull(spark, cfg, "inc_orph", "wm", dir, 20250601, 950)))
+    assert(JdbcIncr.committedWatermark(spark, dir).contains(1L))
+    // and the re-run re-pulls from the COMMITTED watermark
     assert(JdbcIncr.pull(spark, cfg, "inc_orph", "wm", dir, 20250601, 1000).contains(2))
     assert(ManifestTable.readLatest(spark, dir).count() == 2)
+  }
+
+  test("an always-losing pull leaves no watermark for the interlopers at its versions to adopt") {
+    val dir = Scratch.dir("jincr_adopt")
+    Jdbc.append((1L to 3L).map(i => (i, i)).toDF("wm", "v"), cfg, "inc_adopt")
+    JdbcIncr.pull(spark, cfg, "inc_adopt", "wm", dir, 20250601, 900)
+    Jdbc.append(Seq((4L, 4L)).toDF("wm", "v"), cfg, "inc_adopt")
+    intercept[IllegalStateException](InterloperCommit.losing(spark, dir, Int.MaxValue)(
+      JdbcIncr.pull(spark, cfg, "inc_adopt", "wm", dir, 20250601, 950)))
+    assert(ManifestTable.snapshots(spark, dir).map(_.version) == (1 to 7))
+    assert(JdbcIncr.committedWatermark(spark, dir).contains(3L))
+    // the re-run pulls row 4 exactly once
+    assert(JdbcIncr.pull(spark, cfg, "inc_adopt", "wm", dir, 20250601, 1000).contains(8))
+    assert(ManifestTable.readLatest(spark, dir).where(col("wm") === 4L).count() == 1)
   }
 }
