@@ -1,10 +1,8 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.sources.Tables
 import graft.util.{Exact, FixtureCache}
@@ -29,20 +27,21 @@ import graft.util.{Exact, FixtureCache}
   * (`name_<id>`), so the old bytes can never resurrect under the new
   * column — exactly Delta's no-resurrection guarantee.
   *
-  * Mechanics over the X39 log: mapping JSON lives at `_colmap/v<N>.json`,
-  * written BEFORE the manifest commit of the same version (a crash
-  * between the two leaves an orphan mapping that no committed manifest
-  * resolves to — invisible, same staged-data story as X39). Readers
-  * resolve snapshot version -> newest mapping at-or-below it, so time
-  * travel serves each version under the logical names it had THEN.
-  * Schema-change commits (rename/drop/add) reuse the parent's exact file
-  * list with `op` recording the kind — the X102 commit log shows them as
-  * the metadata-only operations they are.
+  * Mechanics over the X39 log: the mapping is the `colmap` entry of each
+  * manifest's state, carried forward by every commit, so time travel
+  * serves each version under the logical names it had THEN, and a
+  * version without the entry (written before the table was mapped)
+  * reads as stored. Schema-change commits (rename/drop/add) are
+  * [[ManifestTable.metadataCommit]]s: the parent's exact file list with
+  * the new mapping in the same put and `op` recording the kind — the
+  * X102 commit log shows them as the metadata-only operations they are.
+  * A crashed or lost schema change leaves nothing behind.
   *
-  * Scale shape: a rename on a 100 TB table writes one JSON of a few
-  * hundred bytes and one manifest — O(columns), not O(data). Reads add a
-  * footer-merged schema union (`mergeSchema` — metadata, no row reading)
-  * plus a per-column alias projection that Catalyst folds into the scan.
+  * Scale shape: a rename on a 100 TB table writes one manifest, its
+  * mapping a few hundred bytes of it — O(columns), not O(data). Reads
+  * add a footer-merged schema union (`mergeSchema` — metadata, no row
+  * reading) plus a per-column alias projection that Catalyst folds into
+  * the scan.
   */
 object ColumnMap extends graft.QueryModule {
 
@@ -62,59 +61,30 @@ object ColumnMap extends graft.QueryModule {
   case class Field(id: Int, logical: String, physical: String, dtype: String,
       default: Option[String] = None, gen: Option[String] = None)
 
-  private def mapDir(dir: String) = s"$dir/_colmap"
-  private def mapName(version: Int) = f"v$version%08d.json"
-  private val MapRe = """v(\d{8})\.json""".r
+  /** This module's entry in the manifest state. */
+  private val Owner = "colmap"
 
-  private def writeMapping(spark: SparkSession, dir: String, version: Int,
-      fields: Seq[Field]): Unit = {
-    val fs = ManifestTable.fsFor(spark, dir)
-    fs.mkdirs(new Path(mapDir(dir)))
-    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
-    val body = fields.map { f =>
-      val d = f.default.map(v => s""", "default": "${esc(v)}"""").getOrElse("")
-      val g = f.gen.map(v => s""", "gen": "${esc(v)}"""").getOrElse("")
-      s"""{"id": ${f.id}, "logical": "${f.logical}", "physical": "${f.physical}", "dtype": "${f.dtype}"$d$g}"""
-    }.mkString("[", ", ", "]")
-    val out = fs.create(new Path(mapDir(dir), mapName(version)), true)
-    try out.write(s"""{"version": $version, "fields": $body}""".getBytes("UTF-8"))
-    finally out.close()
+  private def json(fields: Seq[Field]): JValue = {
+    import org.json4s.JsonDSL._
+    JArray(fields.toList.map(f => ("id" -> f.id) ~ ("logical" -> f.logical) ~
+      ("physical" -> f.physical) ~ ("dtype" -> f.dtype) ~
+      ("default" -> f.default) ~ ("gen" -> f.gen)))
   }
 
-  /** All mapping versions, oldest first. */
-  private def mappings(spark: SparkSession, dir: String): Seq[(Int, Seq[Field])] = {
-    val fs = ManifestTable.fsFor(spark, dir)
-    val md = new Path(mapDir(dir))
-    if (!fs.exists(md)) return Seq.empty
-    fs.listStatus(md).toSeq
-      .flatMap(s => s.getPath.getName match {
-        case MapRe(_) => Some(s.getPath)
-        case _ => None
-      })
-      .map { p =>
-        val in = fs.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        implicit val fmts: Formats = DefaultFormats
-        val j = JsonMethods.parse(text)
-        (j \ "version").extract[Int] ->
-          (j \ "fields").extract[Seq[JValue]].map(f => Field(
-            (f \ "id").extract[Int], (f \ "logical").extract[String],
-            (f \ "physical").extract[String], (f \ "dtype").extract[String],
-            (f \ "default").extractOpt[String], (f \ "gen").extractOpt[String]))
-      }
-      .sortBy(_._1)
+  /** The mapping a snapshot carries; None for an unmapped version. */
+  def mappingOf(snap: ManifestTable.Snapshot): Option[Seq[Field]] = {
+    implicit val fmts: Formats = DefaultFormats
+    snap.state.get(Owner).map(_.extract[List[JValue]].map(f => Field(
+      (f \ "id").extract[Int], (f \ "logical").extract[String],
+      (f \ "physical").extract[String], (f \ "dtype").extract[String],
+      (f \ "default").extractOpt[String], (f \ "gen").extractOpt[String])))
   }
 
-  /** The mapping in force at snapshot `version`: newest at-or-below it.
-    * Orphan mappings above the resolved snapshot (crash leftovers) are
-    * unreachable by construction.
-    */
-  def mappingAt(spark: SparkSession, dir: String, version: Int): Seq[Field] = {
-    val ms = mappings(spark, dir).filter(_._1 <= version)
-    require(ms.nonEmpty, s"no column mapping at or below version $version in $dir")
-    ms.last._2
-  }
+  /** The mapping in force at snapshot `version`. */
+  def mappingAt(spark: SparkSession, dir: String, version: Int): Seq[Field] =
+    ManifestTable.snapshots(spark, dir).find(_.version == version)
+      .flatMap(mappingOf).getOrElse(throw new IllegalArgumentException(
+        s"no column mapping at version $version in $dir"))
 
   /** X215 — schema-first table: commit an EMPTY version 1 whose schema
     * lives entirely in the mapping (no data files to infer from), the
@@ -134,8 +104,8 @@ object ColumnMap extends graft.QueryModule {
           s"unknown column type '$t' for '$n'") }
       Field(i + 1, n, n, dt.catalogString)
     }
-    writeMapping(spark, dir, 1, fields)
-    ManifestTable.commitManifest(spark, dir, None, date, time, Nil)
+    ManifestTable.commitManifest(spark, dir, None, date, time, Nil,
+      state = _ => Map(Owner -> json(fields)))
   }
 
   /** First commit: field ids 1..n in column order, physical = logical. */
@@ -146,8 +116,9 @@ object ColumnMap extends graft.QueryModule {
     val fields = df.schema.fields.zipWithIndex.map { case (f, i) =>
       Field(i + 1, f.name, f.name, f.dataType.catalogString)
     }.toSeq
-    writeMapping(spark, dir, 1, fields)
-    ManifestTable.commit(df, dir, date, time)
+    ManifestTable.commitManifest(spark, dir, None, date, time,
+      ManifestTable.writeDataFiles(df, dir, 1),
+      state = _ => Map(Owner -> json(fields)))
   }
 
   /** Append rows addressed by LOGICAL names; stored under the fields'
@@ -201,14 +172,13 @@ object ColumnMap extends graft.QueryModule {
     * Columns the table has that the batch lacks land as typed NULLs
     * (generated columns compute instead — the X204 rule). Like every
     * schema change here this is a single-writer surface: a lost commit
-    * race refuses loudly rather than leaving an orphan mapping that a
-    * concurrent writer's version could adopt.
+    * race refuses loudly, and its staged files go with it.
     */
   def appendEvolve(df: DataFrame, dir: String, date: Int, time: Int): Int = {
     val spark = df.sparkSession
     val snap = ManifestTable.snapshots(spark, dir).lastOption.getOrElse(
       throw new NoSuchElementException(s"no table at $dir"))
-    val fields = mappingAt(spark, dir, snap.version)
+    val fields = current(spark, dir, snap)
     val extra = df.schema.fields.toSeq
       .filterNot(f => fields.exists(_.logical == f.name))
     val maxId = fields.map(_.id).max
@@ -227,72 +197,48 @@ object ColumnMap extends graft.QueryModule {
     val physical = widened.select(
       evolved.map(f => col(f.logical).cast(f.dtype).as(f.physical)): _*)
     val staged = ManifestTable.stageDataFiles(physical, dir)
-    val v = snap.version + 1
-    if (extra.nonEmpty) writeMapping(spark, dir, v, evolved)
     try {
       ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
-        snap.files ++ staged, deletes = snap.deletes, op = "append")
+        snap.files ++ staged, deletes = snap.deletes, op = "append",
+        state = _ => if (extra.isEmpty) Map.empty else Map(Owner -> json(evolved)))
     } catch { case e: Exception =>
-      // a lost race must leave NOTHING: the orphan mapping at v would
-      // otherwise be adopted by whichever commit claims that version
       ManifestTable.dropStaged(spark, dir, staged)
-      if (extra.nonEmpty) ManifestTable.fsFor(spark, dir)
-        .delete(new Path(mapDir(dir), mapName(v)), false)
       throw e
     }
   }
 
-  /** Metadata-only schema-change commit: same files, same tombstones, a
-    * new mapping one version up.
+  /** The mapping in force at `snap`, or for an unmapped version one
+    * derived from its file schema in column order (logical = physical —
+    * the files already store these names): Delta's `columnMapping = name`
+    * upgrade, landing in the same commit as the schema change that needs
+    * it. Reads footers only — O(files) metadata, zero data bytes.
     */
-  private def schemaCommit(spark: SparkSession, dir: String, op: String,
-      change: Seq[Field] => Seq[Field]): Int = {
-    val snap = ManifestTable.snapshots(spark, dir).lastOption.getOrElse(
-      throw new NoSuchElementException(s"no table at $dir"))
-    val next = change(mappingAt(spark, dir, snap.version))
-    val v = snap.version + 1
-    writeMapping(spark, dir, v, next)
-    ManifestTable.commitManifest(spark, dir, Some(snap), snap.runDate, snap.runTime,
-      snap.files, deletes = snap.deletes, op = op)
-  }
-
-  /** Enable column mapping on an existing UNMAPPED table: derive field
-    * ids from the latest version's file schema in column order (logical
-    * = physical — the files already store these names), written at the
-    * CURRENT version, so every later schema change is era-tracked from
-    * here on. Idempotent (a no-op on mapped tables); Delta's
-    * `columnMapping = name` upgrade move. Reads footers only — O(files)
-    * metadata, zero data bytes.
-    */
-  def ensureMapping(spark: SparkSession, dir: String): Unit = {
-    val snaps = ManifestTable.snapshots(spark, dir)
-    require(snaps.nonEmpty, s"no committed snapshot at $dir")
-    if (mappings(spark, dir).isEmpty) {
-      val snap = snaps.last
+  private def current(spark: SparkSession, dir: String,
+      snap: ManifestTable.Snapshot): Seq[Field] =
+    mappingOf(snap).getOrElse {
       require(snap.files.nonEmpty,
         s"cannot derive a column mapping for an empty table at $dir")
-      val schema = spark.read.option("mergeSchema", "true")
-        .parquet(snap.files.map(f => s"$dir/$f"): _*).schema
-      val fields = schema.fields.zipWithIndex.map { case (f, i) =>
-        Field(i + 1, f.name, f.name, f.dataType.catalogString)
-      }.toSeq
-      writeMapping(spark, dir, snap.version, fields)
+      spark.read.option("mergeSchema", "true")
+        .parquet(snap.files.map(f => s"$dir/$f"): _*).schema.fields.toSeq
+        .zipWithIndex.map { case (f, i) =>
+          Field(i + 1, f.name, f.name, f.dataType.catalogString) }
     }
-  }
 
   def renameColumn(spark: SparkSession, dir: String, from: String, to: String): Int =
-    schemaCommit(spark, dir, "rename", { fields =>
+    ManifestTable.metadataCommit(spark, dir, Owner, "rename", None) { snap =>
+      val fields = current(spark, dir, snap)
       require(fields.exists(_.logical == from), s"no column '$from'")
       require(!fields.exists(_.logical == to), s"column '$to' already exists")
-      fields.map(f => if (f.logical == from) f.copy(logical = to) else f)
-    })
+      json(fields.map(f => if (f.logical == from) f.copy(logical = to) else f))
+    }
 
   def dropColumn(spark: SparkSession, dir: String, name: String): Int =
-    schemaCommit(spark, dir, "drop", { fields =>
+    ManifestTable.metadataCommit(spark, dir, Owner, "drop", None) { snap =>
+      val fields = current(spark, dir, snap)
       require(fields.exists(_.logical == name), s"no column '$name'")
       require(fields.size > 1, "cannot drop the last column")
-      fields.filterNot(_.logical == name)
-    })
+      json(fields.filterNot(_.logical == name))
+    }
 
   /** Re-adding a once-dropped name mints a fresh id and a fresh physical
     * name — old bytes never resurrect.
@@ -306,11 +252,12 @@ object ColumnMap extends graft.QueryModule {
       catch { case _: Exception => false } // ANSI cast throws; same refusal
       require(ok, s"default '$d' does not cast to $dtype")
     }
-    schemaCommit(spark, dir, "add", { fields =>
+    ManifestTable.metadataCommit(spark, dir, Owner, "add", None) { snap =>
+      val fields = current(spark, dir, snap)
       require(!fields.exists(_.logical == name), s"column '$name' already exists")
       val id = fields.map(_.id).max + 1
-      fields :+ Field(id, name, s"${name}_$id", dtype, default)
-    })
+      json(fields :+ Field(id, name, s"${name}_$id", dtype, default))
+    }
   }
 
   /** X204 — `ADD COLUMN … GENERATED ALWAYS AS (expr)`: a column whose
@@ -327,24 +274,31 @@ object ColumnMap extends graft.QueryModule {
     catch { case e: Exception => throw new IllegalArgumentException(
       s"generated expression ($genSql) does not analyze against the " +
         s"table as $dtype: ${e.getMessage}") }
-    schemaCommit(spark, dir, "add", { fields =>
+    ManifestTable.metadataCommit(spark, dir, Owner, "add", None) { snap =>
+      val fields = current(spark, dir, snap)
       require(!fields.exists(_.logical == name), s"column '$name' already exists")
       val id = fields.map(_.id).max + 1
-      fields :+ Field(id, name, s"${name}_$id", dtype, None, Some(genSql))
-    })
+      json(fields :+ Field(id, name, s"${name}_$id", dtype, None, Some(genSql)))
+    }
   }
 
   /** Read a version (default latest) under its then-current LOGICAL
-    * names. `mergeSchema` unions the file schemas from footers (files
-    * from different schema eras differ); fields whose physical column no
-    * file carries yet project as typed NULL.
+    * names (an unmapped version under its stored ones). `mergeSchema`
+    * unions the file schemas from footers (files from different schema
+    * eras differ); fields whose physical column no file carries yet
+    * project as typed NULL.
     */
   def read(spark: SparkSession, dir: String, version: Option[Int] = None): DataFrame = {
     val snaps = ManifestTable.snapshots(spark, dir)
     require(snaps.nonEmpty, s"no committed snapshot at $dir")
     val snap = version.map(v => snaps.find(_.version == v).getOrElse(
       throw new NoSuchElementException(s"no version $v at $dir"))).getOrElse(snaps.last)
-    val fields = mappingAt(spark, dir, snap.version)
+    val fields = mappingOf(snap) match {
+      case Some(fs) => fs
+      // a version written before the table was mapped reads as stored
+      case None => return DeleteVectors.applyTo(spark, dir, snap,
+        ManifestTable.rawVersionScan(spark, dir, snap))
+    }
     // X215: an empty version (schema-first CREATE, or every row deleted
     // by a replace) serves its mapped schema with zero rows — there are
     // no footers to scan

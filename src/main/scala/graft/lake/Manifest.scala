@@ -79,7 +79,11 @@ object ManifestTable extends graft.QueryModule {
     * commit carries its parent's map forward with its own entries set
     * ([[commitManifest]]), in the same put as its file list, so a lost
     * or crashed attempt leaves no state behind for another commit to
-    * adopt (Delta's `txn` action).
+    * adopt (Delta's `txn` action). The table's metadata rides the same
+    * map under three more owners: `properties` ([[Properties]]),
+    * `constraints` ([[Constraints]]) and `colmap` ([[ColumnMap]]),
+    * changed by [[metadataCommit]] (Delta's `metaData` action) or, for
+    * the mapping, with the data of a mapped create or evolving append.
     */
   case class Snapshot(version: Int, runDate: Int, runTime: Int,
       files: Seq[String], deletes: Seq[String] = Nil, op: String = "write",
@@ -142,12 +146,12 @@ object ManifestTable extends graft.QueryModule {
       deletes: Seq[String] = Nil, op: String = "write",
       state: Option[Snapshot] => State = _ => Map.empty): Int = {
     val version = parent.fold(1)(_.version + 1)
-    val carried = parent.fold(Map.empty: State)(_.state) ++ state(parent)
+    val snap = Snapshot(version, date, time, files, deletes, op,
+      parent.fold(Map.empty: State)(_.state) ++ state(parent))
     val fs = fsFor(spark, dir)
     val mdir = new Path(manifestDir(dir))
     fs.mkdirs(mdir)
-    val json = jsonBytes(snapshotJson(
-      Snapshot(version, date, time, files, deletes, op, carried)))
+    val json = jsonBytes(snapshotJson(snap))
     // the commit point — put-if-absent through the storage seam
     // (CommitPrimitive; rename on local FS/HDFS, swappable for a
     // conditional PUT on object stores — docs/STORAGE_CONTRACT.md)
@@ -158,7 +162,7 @@ object ManifestTable extends graft.QueryModule {
     // (table property `graft.checkpoint.interval`, 0 disables). Strictly
     // best-effort — a checkpoint accelerates reads, so its failure must
     // never fail the commit that already published.
-    val interval = try Properties.activeAt(spark, dir, version)
+    val interval = try Properties.of(snap)
       .get("graft.checkpoint.interval").map(_.toInt).getOrElse(10)
     catch { case _: Exception => 10 }
     if (interval > 0 && version % interval == 0)
@@ -190,6 +194,24 @@ object ManifestTable extends graft.QueryModule {
       s"$owner state at $at moved since it was read: a concurrent $owner " +
         "commit landed first; re-run")
     Map(owner -> next)
+  }
+
+  /** The one metadata-only commit: republish the latest snapshot's files
+    * and tombstones with `owner`'s state entry set to `next` of that
+    * snapshot, in the same put — how table properties, CHECK
+    * constraints and the column mapping change. `next` may throw to
+    * refuse, and then nothing is written. A lost race escapes as a
+    * [[LostRace]]. `at` stamps the commit; None keeps the parent's stamp.
+    */
+  private[lake] def metadataCommit(spark: SparkSession, dir: String,
+      owner: String, op: String, at: Option[(Int, Int)])(
+      next: Snapshot => JValue): Int = {
+    val snap = snapshots(spark, dir).lastOption.getOrElse(
+      throw new NoSuchElementException(s"no table at $dir"))
+    val entry = next(snap)
+    val (date, time) = at.getOrElse((snap.runDate, snap.runTime))
+    commitManifest(spark, dir, Some(snap), date, time, snap.files,
+      deletes = snap.deletes, op = op, state = _ => Map(owner -> entry))
   }
 
   /** The latest committed snapshot's `owner` state entry. */
@@ -381,8 +403,9 @@ object ManifestTable extends graft.QueryModule {
     * version newer than the checkpoint is read directly — a checkpoint
     * can therefore never add, drop, or alter a commit, only cheapen it
     * (spec-pinned byte-equality against the manifest-by-manifest read).
-    * When the latest manifest predates the `state` field, its state is
-    * resolved from the old sidecars ([[legacyState]]).
+    * Manifests that predate the `state` field get theirs from the old
+    * side files ([[legacyState]]); a log without such manifests pays
+    * nothing for that.
     */
   def snapshots(spark: SparkSession, dir: String): Seq[Snapshot] = {
     val fs = fsFor(spark, dir)
@@ -405,34 +428,44 @@ object ManifestTable extends graft.QueryModule {
         parseSnapshot(JsonMethods.parse(readText(fs, p)))
       })
     }.sortBy(_._1.version)
-    read.lastOption match {
-      case Some((last, true)) =>
-        read.init.map(_._1) :+ last.copy(state = legacyState(fs, dir, last.version))
-      case _ => read.map(_._1)
+    val legacy = read.collect { case (s, true) => s.version }
+    if (legacy.isEmpty) read.map(_._1)
+    else {
+      val states = legacyState(fs, dir, legacy)
+      read.map { case (s, old) => if (old) s.copy(state = states(s.version)) else s }
     }
   }
 
-  /** The state of a table whose latest manifest predates the `state`
-    * field, read from the per-owner sidecars `_<owner>/v<N>.json` that
-    * older writers left. Each owner's sidecars at or below `latest` merge
-    * in version order — numbers newest-wins, lists union — which is how
-    * each owner resolved them. Nothing writes these files any more; the
-    * first new commit folds this state into its manifest.
+  /** The state of each of `versions`, manifests that predate the `state`
+    * field, read from the per-owner side files `_<owner>/v<N>.json` that
+    * older writers left. Writer state merges an owner's files at or below
+    * the version in version order — numbers newest-wins, lists union —
+    * which is how each writer resolved them. Table metadata takes the
+    * newest file at or below the version whole, never merged, so an
+    * UNSET key or a DROPped constraint stays gone. Nothing writes these
+    * files any more; each new commit carries its parent's state.
     */
-  private def legacyState(fs: FileSystem, dir: String, latest: Int): State = {
+  private def legacyState(fs: FileSystem, dir: String,
+      versions: Seq[Int]): Map[Int, State] = {
+    val writers = Set("copy", "ingest", "identity", "stream")
     val present = fs.listStatus(new Path(dir)).map(_.getPath.getName).toSet
-    Seq("copy", "ingest", "identity", "stream").filter(o => present(s"_$o"))
-      .flatMap { owner =>
-        fs.listStatus(new Path(s"$dir/_$owner")).toSeq
-          .flatMap(st => st.getPath.getName match {
-            case ManifestRe(n) if n.toInt <= latest => Some(n.toInt -> st.getPath)
-            case _ => None
-          })
-          .sortBy(_._1)
-          .map(p => JsonMethods.parse(readText(fs, p._2)).removeField(_._1 == "version"))
+    val files = (writers.toSeq ++ Seq("properties", "constraints", "colmap"))
+      .filter(o => present(s"_$o"))
+      .map(owner => owner -> fs.listStatus(new Path(s"$dir/_$owner")).toSeq
+        .flatMap(st => st.getPath.getName match {
+          case ManifestRe(n) => Some(n.toInt -> st.getPath)
+          case _ => None
+        })
+        .sortBy(_._1)
+        .map { case (n, p) => n -> JsonMethods.parse(readText(fs, p)) })
+    versions.map(v => v -> files.flatMap { case (owner, all) =>
+      val upTo = all.takeWhile(_._1 <= v).map(_._2)
+      val entry =
+        if (writers(owner)) upTo.map(_.removeField(_._1 == "version"))
           .reduceOption[JValue](org.json4s.Merge.merge(_, _))
-          .map(owner -> _)
-      }.toMap
+        else upTo.lastOption.map(j => if (owner == "colmap") j \ "fields" else j)
+      entry.map(owner -> _)
+    }.toMap).toMap
   }
 
   /** Write an X200 log checkpoint at the current latest version: one

@@ -328,8 +328,7 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
     // with pushed filters and column pruning applied INSIDE the plan (see
     // GraftPlanRelation). Plain append-only tables — the overwhelmingly
     // common state — keep the zero-overhead HadoopFsRelation below.
-    val hasColmap = new Path(s"$dataDir/_colmap").getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(new Path(s"$dataDir/_colmap"))
+    val hasColmap = graft.lake.ColumnMap.mappingOf(snap).isDefined
     // X173: SQL DML lands on the relation — `INSERT INTO view SELECT …`
     // routes through InsertableRelation (DataSourceAnalysis matches it
     // BEFORE the bare-HadoopFsRelation case, so Spark never writes raw
@@ -449,9 +448,9 @@ object GraftDataSource {
     // against — the mapping IS the schema, and the first INSERT routes
     // through ColumnMap.append (logical→physical translation, generated-
     // column validation included)
-    if (snaps.last.files.isEmpty && new Path(s"$dir/_colmap").getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(new Path(s"$dir/_colmap"))) {
-      val fields = graft.lake.ColumnMap.mappingAt(spark, dir, snaps.last.version)
+    val mapping = graft.lake.ColumnMap.mappingOf(snaps.last)
+    if (snaps.last.files.isEmpty && mapping.isDefined) {
+      val fields = mapping.get
       require(data.schema.fields.length == fields.length,
         s"graft: INSERT carries ${data.schema.fields.length} columns, " +
           s"table declares ${fields.length}")

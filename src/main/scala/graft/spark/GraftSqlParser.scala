@@ -508,19 +508,16 @@ case class GraftShowCreateCommand(dir: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val snaps = ManifestTable.snapshots(spark, dir)
     require(snaps.nonEmpty, s"graft: no committed snapshot at $dir")
-    val mapped = new org.apache.hadoop.fs.Path(s"$dir/_colmap")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(s"$dir/_colmap"))
-    val cols =
-      if (mapped) graft.lake.ColumnMap.mappingAt(spark, dir, snaps.last.version)
-        .map { f =>
-          s"${f.logical} ${f.dtype}" +
-            f.default.map(v => s" DEFAULT '$v'").getOrElse("") +
-            f.gen.map(g => s" GENERATED ALWAYS AS ($g)").getOrElse("")
-        }
-      else new ManifestFileIndex(spark, dir, snaps.last).dataSchema
+    val cols = graft.lake.ColumnMap.mappingOf(snaps.last) match {
+      case Some(fields) => fields.map { f =>
+        s"${f.logical} ${f.dtype}" +
+          f.default.map(v => s" DEFAULT '$v'").getOrElse("") +
+          f.gen.map(g => s" GENERATED ALWAYS AS ($g)").getOrElse("")
+      }
+      case None => new ManifestFileIndex(spark, dir, snaps.last).dataSchema
         .fields.toSeq.map(f => s"${f.name} ${f.dataType.catalogString}")
-    val props = graft.lake.Properties.active(spark, dir)
+    }
+    val props = graft.lake.Properties.of(snaps.last)
     val ddl = s"CREATE TABLE '$dir' (${cols.mkString(", ")})" +
       (if (props.isEmpty) ""
        else props.toSeq.sortBy(_._1)
@@ -706,15 +703,16 @@ case class GraftDetailCommand(dir: String) extends LeafRunnableCommand {
 /** X185 — `ALTER TABLE '<path>' RENAME COLUMN a TO b | DROP COLUMN c |
   * ADD COLUMN c <type>`: the everyday schema-evolution statements as
   * X110 column-mapping commits. Rename is METADATA-ONLY (same file
-  * list, one tiny mapping JSON — zero data bytes on a 100 TB table);
-  * drop removes the field id (X61 vacuum reclaims the bytes with their
-  * versions); re-adding a dropped name mints a FRESH field id and
+  * list, the new mapping in the manifest — zero data bytes on a 100 TB
+  * table); drop removes the field id (X61 vacuum reclaims the bytes with
+  * their versions); re-adding a dropped name mints a FRESH field id and
   * physical name, so old bytes never resurrect (Delta's no-resurrection
   * rule, already pinned by ColumnMapSpec). An unmapped graft table is
-  * upgraded in place first ([[graft.lake.ColumnMap.ensureMapping]] —
-  * ids derived from the current footer schema), so ALTER works on any
-  * graft table, not just ColumnMap-born ones. Time travel serves each
-  * version under the LOGICAL names it had then — era-correct reads.
+  * upgraded in the same commit as its first schema change (ids derived
+  * from the current footer schema), so ALTER works on any graft table,
+  * not just ColumnMap-born ones, and a refused ALTER writes nothing.
+  * Time travel serves each version under the LOGICAL names it had then
+  * — versions before the upgrade under their stored ones.
   */
 case class GraftAlterColumnCommand(dir: String, op: String, a: String,
     b: String, dflt: Option[String] = None) extends LeafRunnableCommand {
@@ -722,7 +720,6 @@ case class GraftAlterColumnCommand(dir: String, op: String, a: String,
     AttributeReference("op", StringType, nullable = false)(),
     AttributeReference("version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.lake.ColumnMap.ensureMapping(spark, dir)
     val v = op match {
       case "rename" => graft.lake.ColumnMap.renameColumn(spark, dir, a, b)
       case "drop" => graft.lake.ColumnMap.dropColumn(spark, dir, a)
@@ -738,7 +735,8 @@ case class GraftAlterColumnCommand(dir: String, op: String, a: String,
   * ([[graft.lake.Constraints]]). ADD validates EXISTING rows in one
   * combinable aggregate (a constraint the table already violates is a
   * lie and refuses with the count), then lands as a METADATA-ONLY
-  * commit — same file list, one tiny JSON, zero data bytes at 100 TB.
+  * commit — same file list, the new set in the manifest, zero data
+  * bytes at 100 TB.
   * From then on every new-data write surface (SQL INSERT, UPDATE,
   * MERGE, the graft batch writer) validates its STAGED bytes against
   * the active set before publishing. Era-correct like column mapping:
@@ -761,7 +759,7 @@ case class GraftConstraintCommand(dir: String, op: String, name: String,
 }
 
 /** `SHOW CONSTRAINTS '<path>'` — the active set at the latest version,
-  * name-ordered; metadata-only (one sidecar listing, no Spark job).
+  * name-ordered; metadata-only (read from the log, no Spark job).
   */
 case class GraftShowConstraintsCommand(dir: String)
     extends LeafRunnableCommand {
@@ -845,7 +843,7 @@ case class GraftPropertiesCommand(dir: String, op: String,
 }
 
 /** `SHOW TBLPROPERTIES '<path>'` — the active map, key-ordered;
-  * metadata-only (one sidecar listing, no Spark job).
+  * metadata-only (read from the log, no Spark job).
   */
 case class GraftShowPropertiesCommand(dir: String)
     extends LeafRunnableCommand {

@@ -101,4 +101,14 @@ class ColumnMapSpec extends SparkSpec {
       dir, 20250601, 1200)
     assert(ColumnMap.read(spark, dir).count() === 6)
   }
+
+  test("column names with quotes and backslashes round-trip through the mapping") {
+    val dir = Scratch.dir("colmap_quote")
+    ColumnMap.create(Seq((1L, 10.0)).toDF("k", "a\"b"), dir, 20250601, 900)
+    ColumnMap.renameColumn(spark, dir, "a\"b", "c\"d\\e")
+    val got = ColumnMap.read(spark, dir)
+    assert(got.columns.toSeq == Seq("k", "c\"d\\e"))
+    assert(got.head.getDouble(1) == 10.0)
+    assert(ColumnMap.read(spark, dir, Some(1)).columns.toSeq == Seq("k", "a\"b"))
+  }
 }

@@ -489,6 +489,59 @@ class CommitPrimitiveSpec extends SparkSpec {
     exhaustThenRetry("noadopt_msink", Seq("k"))
   }
 
+  /** Crash `change` at its commit point, then let a plain append take the
+    * version it was after; returns that version.
+    */
+  private def crashThenForeignAppend(dir: String)(change: => Any): Int = {
+    intercept[java.io.IOException](CrashingCommit.crashing(spark, dir)(change))
+    ManifestTable.appendRetrying(Seq((9L, 9.0)).toDF("k", "v"), dir, 20250901, 990)
+  }
+
+  private val kd = (0L until 6L).map(i => (i, i.toDouble)).toDF("k", "v")
+
+  test("a crashed SET TBLPROPERTIES leaves no properties for a foreign commit at its version to adopt") {
+    val dir = s"${graft.util.Scratch.dir("crash_props")}/t"
+    ManifestTable.commit(kd, dir, 20250901, 900)
+    Properties.set(spark, dir, Map("owner" -> "ops"), 20250901, 905)
+    assert(crashThenForeignAppend(dir)(Properties.set(spark, dir,
+      Map("graft.optimizeWrite" -> "true"), 20250901, 910)) == 3)
+    assert(Properties.active(spark, dir) == Map("owner" -> "ops"))
+  }
+
+  test("a crashed ADD CONSTRAINT leaves no constraint for a foreign commit at its version to adopt") {
+    val dir = s"${graft.util.Scratch.dir("crash_cons")}/t"
+    ManifestTable.commit(kd, dir, 20250901, 900)
+    Constraints.add(spark, dir, "pos", "k >= 0", 20250901, 905)
+    assert(crashThenForeignAppend(dir)(
+      Constraints.add(spark, dir, "small", "k < 6", 20250901, 910)) == 3)
+    assert(Constraints.active(spark, dir) == Seq(Constraints.Check("pos", "k >= 0")))
+  }
+
+  test("a crashed RENAME COLUMN leaves no mapping for a foreign commit at its version to adopt") {
+    val dir = s"${graft.util.Scratch.dir("crash_colmap")}/t"
+    ColumnMap.create(kd, dir, 20250901, 900)
+    assert(crashThenForeignAppend(dir)(ColumnMap.renameColumn(spark, dir, "v", "w")) == 2)
+    assert(ColumnMap.mappingAt(spark, dir, 2) == ColumnMap.mappingAt(spark, dir, 1))
+    assert(ColumnMap.read(spark, dir).columns.toSeq == Seq("k", "v"))
+    assert(ColumnMap.read(spark, dir).count() == 7)
+  }
+
+  test("a lost race refuses an evolving append and leaves nothing the winner adopts") {
+    val dir = s"${graft.util.Scratch.dir("lose_evolve")}/t"
+    ColumnMap.create(kd, dir, 20250901, 900)
+    intercept[LostRace](losing(dir)(ColumnMap.appendEvolve(
+      Seq((9L, "x")).toDF("k", "tag"), dir, 20250901, 910)))
+    val snaps = ManifestTable.snapshots(spark, dir)
+    assert(snaps.map(_.version) == Seq(1, 2))
+    assert(snaps(1).files == snaps(0).files)
+    assert(ColumnMap.mappingAt(spark, dir, 2) == ColumnMap.mappingAt(spark, dir, 1))
+    // no mapping file and no staged data of the lost attempt beside the log
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def names(rel: String) = fs.listStatus(new Path(s"$dir/$rel")).map(_.getPath.getName).toSet
+    assert(names("") == Set("_manifests", "data"))
+    assert(names("data") == Set("v00000001"))
+  }
+
   test("one lost catalog race: the cut lands past the interloper with both overlays") {
     val root = graft.util.Scratch.dir("lose_cat")
     Catalog.publishCatalog(spark, root, 20250901, 900, Map("t" -> 1))

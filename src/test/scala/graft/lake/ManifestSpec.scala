@@ -303,30 +303,44 @@ class ManifestSpec extends SparkSpec {
     assert(before._1.contains(4L) && before._2.size == 1 && before._3 == 1L)
 
     val at = Iterator.from(910)
-    ManifestTable.commitRetrying(ManifestTable.readLatest(spark, dir), dir, 20250901, at.next())
-    DeleteVectors.deleteWhere(spark, dir, col("k") === 1L, 20250901, at.next())
-    DeleteVectors.materialize(spark, dir, 20250901, at.next())
-    // v2 predates the identity append: the restore still keeps today's state
-    Restore.restore(spark, dir, 2, 20250901, at.next())
-    ZOrder.optimizeN(spark, dir, Seq("k"), 2, 20250901, at.next())
+    // table metadata first, so every later commit kind must carry it; the
+    // rename maps the plain table in its own commit
     Properties.set(spark, dir, Map("owner" -> "ops"), 20250901, at.next())
     Constraints.add(spark, dir, "pos", "k > 0", 20250901, at.next())
-    Merge.upsertCow(spark, dir, rows(Seq(5L)), Seq("k"), 20250901, at.next())
-    ReplaceWhere.replaceWhere(spark, dir, "k", 6L, 6L, rows(Seq(6L)), 20250901,
-      at.next(), Seq("k"))
+    ColumnMap.renameColumn(spark, dir, "v", "w")
+    def meta() = (Properties.active(spark, dir), Constraints.active(spark, dir),
+      ColumnMap.mappingAt(spark, dir, ManifestTable.latestVersion(spark, dir).get))
+    val metaBefore = meta()
+    assert(metaBefore._1 == Map("owner" -> "ops") &&
+      metaBefore._2 == Seq(Constraints.Check("pos", "k > 0")) &&
+      metaBefore._3.map(f => f.logical -> f.physical) == Seq("k" -> "k", "w" -> "v", "id" -> "id"))
+    def keeps(kind: String)(commit: => Any): Unit = {
+      commit
+      assert(meta() == metaBefore, s"$kind dropped the table metadata")
+    }
+    keeps("write")(ManifestTable.commitRetrying(ManifestTable.readLatest(spark, dir), dir,
+      20250901, at.next()))
+    keeps("delete")(DeleteVectors.deleteWhere(spark, dir, col("k") === 1L, 20250901, at.next()))
+    keeps("materialize")(DeleteVectors.materialize(spark, dir, 20250901, at.next()))
+    // v2 predates the identity append and the metadata: the restore still
+    // keeps today's state
+    keeps("restore")(Restore.restore(spark, dir, 2, 20250901, at.next()))
+    keeps("optimize")(ZOrder.optimizeN(spark, dir, Seq("k"), 2, 20250901, at.next()))
+    keeps("merge")(Merge.upsertCow(spark, dir, rows(Seq(5L)), Seq("k"), 20250901, at.next()))
+    keeps("replace_where")(ReplaceWhere.replaceWhere(spark, dir, "k", 6L, 6L, rows(Seq(6L)),
+      20250901, at.next(), Seq("k")))
     val cur = ManifestTable.readLatest(spark, dir)
-    TableDiff.repair(cur.withColumn("v", when(col("k") === 2L, lit(222L))
-      .otherwise(col("v"))), dir, Seq("k"), 4, 20250901, at.next())
+    keeps("repair")(TableDiff.repair(cur.withColumn("v", when(col("k") === 2L, lit(222L))
+      .otherwise(col("v"))), dir, Seq("k"), 4, 20250901, at.next()))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(s"$dir/${ManifestTable.snapshots(spark, dir).last.files.head}"), false)
-    Fsck.repair(spark, dir, 20250901, at.next())
-    ColumnMap.ensureMapping(spark, dir)
-    ColumnMap.renameColumn(spark, dir, "v", "w")
+    keeps("fsck")(Fsck.repair(spark, dir, 20250901, at.next()))
+    keeps("append")(ManifestTable.appendRetrying(rows(Seq(8L)), dir, 20250901, at.next()))
     assert(ManifestTable.snapshots(spark, dir).map(_.op).toSet == Set("append", "write",
       "materialize", "restore", "optimize", "setproperty", "constraint", "merge",
       "replace_where", "repair", "fsck", "rename"))
     assert(state() == before)
-    Vacuum.vacuum(spark, dir, keepLast = 1)
+    keeps("vacuum")(Vacuum.vacuum(spark, dir, keepLast = 1))
     assert(ManifestTable.snapshots(spark, dir).size == 1)
     assert(state() == before)
   }
@@ -367,5 +381,49 @@ class ManifestSpec extends SparkSpec {
       .foreach(d => fs.delete(new Path(s"$dir/$d"), true))
     check()
     assert(ManifestTable.readLatest(spark, dir).count() == 2)
+  }
+
+  test("a table whose manifests predate the state field resolves its old metadata files per version, newest whole, never merged") {
+    val dir = tmpTable()
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def put(rel: String, json: String): Unit = {
+      val out = fs.create(new Path(s"$dir/$rel"), true)
+      try out.write(json.getBytes("UTF-8")) finally out.close()
+    }
+    val files = ManifestTable.writeDataFiles(Seq((1L, "a")).toDF("id", "v"), dir, 1)
+      .map("\"" + _ + "\"").mkString("[", ", ", "]")
+    (1 to 3).foreach(v => put(f"_manifests/v$v%08d.json",
+      s"""{"version": $v, "run_date": 20250901, "run_time": ${900 + v}, "files": $files}"""))
+    put("_properties/v00000001.json", """{"a": "1", "b": "2"}""")
+    put("_properties/v00000003.json", """{"a": "1"}""") // UNSET b
+    put("_constraints/v00000001.json",
+      """[{"name": "c1", "predicate": "id > 0"}, {"name": "c2", "predicate": "v IS NOT NULL"}]""")
+    put("_constraints/v00000002.json", """[{"name": "c1", "predicate": "id > 0"}]""") // DROP c2
+    put("_colmap/v00000002.json", """{"version": 2, "fields": [""" +
+      """{"id": 1, "logical": "id", "physical": "id", "dtype": "bigint"}, """ +
+      """{"id": 2, "logical": "w", "physical": "v", "dtype": "string"}]}""")
+    val (c1, c2) = (Constraints.Check("c1", "id > 0"), Constraints.Check("c2", "v IS NOT NULL"))
+    def eras(): Unit = {
+      assert(Seq(1, 2, 3).map(Properties.activeAt(spark, dir, _)) ==
+        Seq(Map("a" -> "1", "b" -> "2"), Map("a" -> "1", "b" -> "2"), Map("a" -> "1")))
+      assert(Seq(1, 2, 3).map(Constraints.activeAt(spark, dir, _)) ==
+        Seq(Seq(c1, c2), Seq(c1), Seq(c1)))
+      assert(Seq(1, 2, 3).map(v => ColumnMap.read(spark, dir, Some(v)).columns.toSeq) ==
+        Seq(Seq("id", "v"), Seq("id", "w"), Seq("id", "w")))
+    }
+    eras()
+    assert(Properties.active(spark, dir) == Map("a" -> "1"))
+    // the first new commit folds the latest era into its manifest; the
+    // old versions keep resolving their files while those exist
+    assert(ManifestTable.appendRetrying(Seq((2L, "b")).toDF("id", "v"), dir,
+      20250901, 1000) == 4)
+    eras()
+    Seq("_properties", "_constraints", "_colmap")
+      .foreach(d => fs.delete(new Path(s"$dir/$d"), true))
+    assert(Properties.active(spark, dir) == Map("a" -> "1"))
+    assert(Constraints.active(spark, dir) == Seq(c1))
+    val latest = ColumnMap.read(spark, dir)
+    assert(latest.columns.toSeq == Seq("id", "w"))
+    assert(latest.orderBy("id").as[(Long, String)].collect().toSeq == Seq((1L, "a"), (2L, "b")))
   }
 }

@@ -125,6 +125,21 @@ class GraftFormatSpec extends SparkSpec {
     assert(spark.sql("SELECT sum(amount) FROM gfmt_cm").head.getDouble(0) == 10.0)
   }
 
+  test("versionAsOf before an in-place mapping upgrade reads that version as stored") {
+    val dir = Scratch.dir("gfmt_preupgrade")
+    ManifestTable.commit(Seq((1L, 10.0)).toDF("k", "v"), dir, 20250701, 900)
+    ManifestTable.appendRetrying(Seq((2L, 20.0)).toDF("k", "v"), dir, 20250701, 910)
+    GraftDml.extSession(spark).sql(s"ALTER TABLE '$dir' RENAME COLUMN v TO w").collect()
+    def at(v: Int) = spark.read.format("graft").option("versionAsOf", v).load(dir)
+    assert(at(1).columns.toSeq == Seq("k", "v"))
+    assert(at(1).as[(Long, Double)].collect().toSeq == Seq((1L, 10.0)))
+    assert(at(2).columns.toSeq == Seq("k", "v") && at(2).count() == 2)
+    assert(graft.lake.ColumnMap.read(spark, dir, Some(1)).columns.toSeq == Seq("k", "v"))
+    val latest = spark.read.format("graft").load(dir)
+    assert(latest.columns.toSeq == Seq("k", "w"))
+    assert(latest.agg(sum("w")).head.getDouble(0) == 30.0)
+  }
+
   test("string zone maps prune through the format (X78 composition)") {
     val dir = Scratch.dir("gfmt_str")
     // date-string keys, range-clustered into 6 files

@@ -342,6 +342,43 @@ class GraftSqlParserSpec extends SparkSpec {
       "re-added column must not resurrect dropped bytes")
   }
 
+  private def listing(dir: String): Set[String] =
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName).toSet
+
+  test("X185 ALTER TABLE: a refused ALTER on an unmapped table writes nothing") {
+    val dir = mkVersions("sqlp_alter_refused", 1)
+    val log = ManifestTable.snapshots(spark, dir)
+    assert(listing(dir) == Set("_manifests", "data"))
+    val e = intercept[Exception](ext.sql(s"ALTER TABLE '$dir' RENAME COLUMN v TO k"))
+    assert(e.getMessage.contains("column 'k' already exists"))
+    assert(listing(dir) == Set("_manifests", "data"))
+    assert(ManifestTable.snapshots(spark, dir) == log)
+    // reads keep the bare file relation of an unmapped table
+    val rel = spark.read.format("graft").load(dir).queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation }
+    assert(rel.exists(_.isInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]))
+  }
+
+  test("table metadata lives in the log: properties, constraints, ALTER, evolving appends and schema-first creates leave only _manifests and data") {
+    val dir = mkVersions("sqlp_meta_log", 1)
+    ext.sql(s"ALTER TABLE '$dir' SET TBLPROPERTIES ('owner' = 'ops')")
+    ext.sql(s"ALTER TABLE '$dir' ADD CONSTRAINT pos CHECK (k >= 0)")
+    ext.sql(s"ALTER TABLE '$dir' RENAME COLUMN v TO w")
+    ext.sql(s"ALTER TABLE '$dir' ADD COLUMN tag string")
+    graft.lake.ColumnMap.appendEvolve(Seq((100L, 1.0, "x", 7L)).toDF("k", "w", "tag", "extra"),
+      dir, 20250901, 1000)
+    val empty = Scratch.dir("sqlp_meta_log_empty")
+    ext.sql(s"CREATE TABLE '$empty' (k bigint, v double) AT 20250901 900")
+    assert(listing(dir) == Set("_manifests", "data"))
+    assert(listing(empty) == Set("_manifests"))
+    assert(graft.lake.Properties.active(spark, dir) == Map("owner" -> "ops"))
+    assert(graft.lake.Constraints.active(spark, dir).map(_.name) == Seq("pos"))
+    assert(graft.lake.ColumnMap.read(spark, dir).columns.toSeq == Seq("k", "w", "tag", "extra"))
+    assert(graft.lake.ColumnMap.read(spark, dir).count() == 11)
+    assert(graft.lake.ColumnMap.read(spark, empty).columns.toSeq == Seq("k", "v"))
+  }
+
   test("X185 ALTER TABLE: usage refusal; unquoted names delegate to Spark") {
     val e = intercept[IllegalArgumentException](
       ext.sql("ALTER TABLE '/tmp/x' FROBNICATE COLUMN a"))
