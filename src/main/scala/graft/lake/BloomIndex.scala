@@ -110,9 +110,8 @@ object BloomIndex extends graft.QueryModule {
     }.toSeq.sortBy(_.file)
 
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val json = blooms.map(b =>
-      s"""{"file": "${b.file}", "column": "${b.column}", "b64": "${b.b64}"}""")
-      .mkString("[", ",\n ", "]")
+    val json = JsonMethods.compact(JsonMethods.render(
+      Extraction.decompose(blooms)(DefaultFormats)))
     val out = fs.create(bloomPath(dir, version), true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
 

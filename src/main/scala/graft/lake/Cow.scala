@@ -4,11 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Copy-on-write commit tail shared by the SQL DML commands (X179
   * UPDATE/MERGE) and the keyed streaming CoW upsert (X180): publish
-  * `retained ++ staged` as the next version, carrying the X57/X78/X168
-  * stats entries of retained files VERBATIM and computing fresh entries
-  * for the staged files on the same tracked columns — so a reader of the
-  * new version prunes exactly as well as before, and a table with no
-  * sidecar stays without one (absence degrades, never lies).
+  * `retained ++ staged` as the next version. The retained files keep
+  * their X57/X78/X168 stats entries (every commit does), and the staged
+  * files get fresh entries on the parent's tracked columns — so a reader
+  * of the new version prunes exactly as well as before, and a table with
+  * no stats stays without them (absence degrades, never lies).
   */
 object Cow {
 
@@ -26,18 +26,13 @@ object Cow {
       retained: Seq[String], staged: Seq[String], date: Int, time: Int,
       op: String,
       state: Option[ManifestTable.Snapshot] => ManifestTable.State = _ => Map.empty): Int = {
-    ZoneMap.fileStats(spark, dir, snap.version).foreach { stats =>
-      val byFile = stats.map(s => s.file -> s).toMap
-      val statsCols = stats.flatMap(_.lo.keys).distinct
-      val strCols = stats.flatMap(_.slo.keys).distinct
-      val setCols = stats.flatMap(_.vals.keys).distinct
-      val fresh =
-        if (staged.isEmpty) Nil
-        else ZoneMap.statsFor(spark, dir, staged, statsCols, strCols, setCols)
-      ZoneMap.writeStatsSidecar(spark, dir, snap.version + 1,
-        retained.flatMap(byFile.get) ++ fresh)
-    }
+    val tracked = snap.stats.values.toSeq
+    val fresh =
+      if (tracked.isEmpty || staged.isEmpty) Nil
+      else ZoneMap.statsFor(spark, dir, staged, tracked.flatMap(_.lo.keys).distinct,
+        tracked.flatMap(_.slo.keys).distinct, tracked.flatMap(_.vals.keys).distinct)
     ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
-      retained ++ staged, deletes = snap.deletes, op = op, state = state)
+      retained ++ staged, deletes = snap.deletes, op = op, state = state,
+      stats = fresh)
   }
 }

@@ -33,9 +33,9 @@ final class LostRace(msg: String) extends IllegalStateException(msg)
   * }}}
   *
   * Manifest JSON: `{"version", "run_date", "run_time", "files": [...],
-  * "deletes"?: [...], "op"?, "state": {owner: entry}}` with file paths
-  * relative to the table dir, rendered by json4s (so any file name
-  * round-trips). Each version is a COMPLETE
+  * "deletes"?: [...], "op"?, "state": {owner: entry}, "stats"?: [...]}`
+  * with file paths relative to the table dir, rendered by json4s (so any
+  * file or column name round-trips). Each version is a COMPLETE
   * snapshot (the reference's model — every run rewrites the table), so
   * time travel is "read the files of version N", and as-of-T resolution
   * is a scan of the (tiny, driver-side) manifest list — no data listing.
@@ -84,16 +84,26 @@ object ManifestTable extends graft.QueryModule {
     * `constraints` ([[Constraints]]) and `colmap` ([[ColumnMap]]),
     * changed by [[metadataCommit]] (Delta's `metaData` action) or, for
     * the mapping, with the data of a mapped create or evolving append.
+    *
+    * `stats` holds the version's zone-map entries ([[ZoneMap]]) keyed by
+    * file, only ever for files of the version: Delta's per-file `add`
+    * stats. An entry describes an immutable file, so every commit keeps
+    * the entry of each file it keeps ([[commitManifest]]); a file without
+    * one never prunes.
     */
   case class Snapshot(version: Int, runDate: Int, runTime: Int,
       files: Seq[String], deletes: Seq[String] = Nil, op: String = "write",
-      state: State = Map.empty)
+      state: State = Map.empty, stats: Map[String, ZoneMap.FileStats] = Map.empty)
 
   type State = Map[String, JValue]
 
   private def manifestDir(dir: String) = s"$dir/_manifests"
   private def manifestName(version: Int) = f"v$version%08d.json"
   private val ManifestRe = """v(\d{8})\.json""".r
+  // zone maps ANALYZE recomputed for a version after its commit (and
+  // every version of a table written before stats moved into the log)
+  private def statsName(version: Int) = f"v$version%08d.stats.json"
+  private val StatsRe = """v(\d{8})\.stats\.json""".r
   // X200 log checkpoints — names deliberately outside ManifestRe, so a
   // pre-checkpoint reader's listing simply ignores them (forward compat)
   private def checkpointName(version: Int) = f"checkpoint-v$version%08d.json"
@@ -138,16 +148,24 @@ object ManifestTable extends graft.QueryModule {
     * readers cannot see the version at all; after it, they see all of
     * it. The manifest carries `parent`'s state with the entries
     * `state(parent)` returns set on top; that function may throw to
-    * refuse the commit. Throws [[LostRace]] if the version was already
-    * committed. Returns the committed version.
+    * refuse the commit. It also carries the zone-map entries of `parent`
+    * for every file of `files` it keeps, with `stats` (the entries of the
+    * files the commit adds, or of another version's files it
+    * re-references) on top; entries of files outside `files` drop.
+    * Throws [[LostRace]] if the version was already committed. Returns
+    * the committed version.
     */
   def commitManifest(spark: SparkSession, dir: String, parent: Option[Snapshot],
       date: Int, time: Int, files: Seq[String],
       deletes: Seq[String] = Nil, op: String = "write",
-      state: Option[Snapshot] => State = _ => Map.empty): Int = {
+      state: Option[Snapshot] => State = _ => Map.empty,
+      stats: Seq[ZoneMap.FileStats] = Nil): Int = {
     val version = parent.fold(1)(_.version + 1)
+    val kept = files.toSet
     val snap = Snapshot(version, date, time, files, deletes, op,
-      parent.fold(Map.empty: State)(_.state) ++ state(parent))
+      parent.fold(Map.empty: State)(_.state) ++ state(parent),
+      (parent.toSeq.flatMap(_.stats.values) ++ stats)
+        .collect { case e if kept(e.file) => e.file -> e }.toMap)
     val fs = fsFor(spark, dir)
     val mdir = new Path(manifestDir(dir))
     fs.mkdirs(mdir)
@@ -277,21 +295,15 @@ object ManifestTable extends graft.QueryModule {
 
   /** [[commitRetrying]] from already-staged files — the stage-first hook
     * X187 constraint enforcement needs (validate the staged bytes, then
-    * publish exactly those bytes).
-    *
-    * `beforeCommit` receives the snapshot the attempt builds on and the
-    * target version, and runs immediately before the manifest publish on
-    * every attempt: the place a committer writes the version's cache
-    * sidecars (zone maps), which readers only ever apply to the
-    * version's own file list.
+    * publish exactly those bytes), with `stats` the staged files'
+    * zone-map entries.
     */
   def commitStagedRetrying(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
-      beforeCommit: (Option[Snapshot], Int) => Unit = (_, _) => ()): Int =
+      stats: Seq[ZoneMap.FileStats] = Nil): Int =
     retrying("commit", dir, maxRetries) {
-      val latest = snapshots(spark, dir).lastOption
-      beforeCommit(latest, latest.fold(1)(_.version + 1))
-      commitManifest(spark, dir, latest, date, time, staged)
+      commitManifest(spark, dir, snapshots(spark, dir).lastOption, date, time,
+        staged, stats = stats)
     }
 
   /** APPEND commit with optimistic concurrency: the new version is
@@ -310,7 +322,8 @@ object ManifestTable extends graft.QueryModule {
     * log-latest would stack the same rows on top of the orphan —
     * rebasing on the version the last CATALOG cut references makes the
     * replayed append land exactly once (round-6 ADVICE finding). The
-    * state map still carries forward from log-latest.
+    * state map still carries forward from log-latest; the zone-map
+    * entries come with the files, from `base`.
     * Returns the committed version.
     */
   def appendRetrying(df: DataFrame, dir: String, date: Int, time: Int,
@@ -319,16 +332,15 @@ object ManifestTable extends graft.QueryModule {
       stageDataFiles(df, dir), maxRetries, base)
 
   /** [[appendRetrying]] from already-staged files — the stage-first hook
-    * X187 constraint enforcement needs. `beforeCommit` is
-    * [[commitStagedRetrying]]'s cache-sidecar slot; its snapshot is the
-    * one whose files carry forward. `state` is [[commitManifest]]'s,
-    * called with log-latest on every attempt.
+    * X187 constraint enforcement needs. `state` is [[commitManifest]]'s,
+    * called with log-latest on every attempt; `stats` are the staged
+    * files' zone-map entries.
     */
   def appendStagedRetrying(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
       base: Option[Int] = None,
-      beforeCommit: (Option[Snapshot], Int) => Unit = (_, _) => (),
-      state: Option[Snapshot] => State = _ => Map.empty): Int = {
+      state: Option[Snapshot] => State = _ => Map.empty,
+      stats: Seq[ZoneMap.FileStats] = Nil): Int = {
     val baseSnap = base.map { bv =>
       snapshots(spark, dir).find(_.version == bv).getOrElse(
         throw new NoSuchElementException(s"no committed version $bv at $dir"))
@@ -336,11 +348,10 @@ object ManifestTable extends graft.QueryModule {
     retrying("append", dir, maxRetries) {
       val latest = snapshots(spark, dir).lastOption
       val carried = baseSnap.orElse(latest)
-      beforeCommit(carried, latest.fold(1)(_.version + 1))
       commitManifest(spark, dir, latest, date, time,
         carried.map(_.files).getOrElse(Nil) ++ staged,
         deletes = carried.map(_.deletes).getOrElse(Nil), op = "append",
-        state = state)
+        state = state, stats = baseSnap.toSeq.flatMap(_.stats.values) ++ stats)
     }
   }
 
@@ -361,7 +372,9 @@ object ManifestTable extends graft.QueryModule {
       (j \ "run_time").extract[Int], (j \ "files").extract[Seq[String]],
       (j \ "deletes").extractOpt[Seq[String]].getOrElse(Nil),
       (j \ "op").extractOpt[String].getOrElse("write"),
-      state.getOrElse(Map.empty)), state.isEmpty)
+      state.getOrElse(Map.empty),
+      (j \ "stats").extractOpt[Seq[ZoneMap.FileStats]].getOrElse(Nil)
+        .map(e => e.file -> e).toMap), state.isEmpty)
   }
 
   /** The one JSON renderer of the log: manifests, checkpoints and the
@@ -374,8 +387,24 @@ object ManifestTable extends graft.QueryModule {
       ("run_time" -> s.runTime) ~ ("files" -> s.files) ~
       ("deletes" -> Some(s.deletes).filter(_.nonEmpty)) ~
       ("op" -> Some(s.op).filter(_ != "write")) ~
-      ("state" -> JObject(s.state.toList.sortBy(_._1)))
+      ("state" -> JObject(s.state.toList.sortBy(_._1))) ~
+      ("stats" -> (if (s.stats.isEmpty) JNothing else statsJson(s.stats.values.toSeq)))
   }
+
+  /** Zone-map entries, sorted by file. */
+  private def statsJson(entries: Seq[ZoneMap.FileStats]): JValue =
+    Extraction.decompose(entries.sortBy(_.file))(DefaultFormats)
+
+  /** ANALYZE's zone maps for a committed `version`, which it recomputes
+    * without a new commit: published beside the manifest under
+    * `v<N>.stats.json`, atomically replacing any earlier one. [[snapshots]]
+    * reads them as the version's entries; the next commit carries them
+    * into the log like any parent's entries.
+    */
+  private[lake] def writeStatsSidecar(spark: SparkSession, dir: String,
+      version: Int, stats: Seq[ZoneMap.FileStats]): Unit =
+    CommitPrimitive.active(spark).replace(spark,
+      new Path(manifestDir(dir), statsName(version)), jsonBytes(statsJson(stats)))
 
   private def jsonBytes(j: JValue): Array[Byte] =
     JsonMethods.compact(JsonMethods.render(j)).getBytes("UTF-8")
@@ -405,7 +434,10 @@ object ManifestTable extends graft.QueryModule {
     * (spec-pinned byte-equality against the manifest-by-manifest read).
     * Manifests that predate the `state` field get theirs from the old
     * side files ([[legacyState]]); a log without such manifests pays
-    * nothing for that.
+    * nothing for that. Likewise a `v<N>.stats.json` the listing names
+    * (ANALYZE's, or an old table's per-version zone maps) replaces
+    * version N's entries, kept to N's files; a missing or unreadable one
+    * leaves the manifest's entries.
     */
   def snapshots(spark: SparkSession, dir: String): Seq[Snapshot] = {
     val fs = fsFor(spark, dir)
@@ -422,11 +454,23 @@ object ManifestTable extends graft.QueryModule {
       case CheckpointRe(v) => Some(v.toInt)
       case _ => None
     }).maxOption.map(checkpointed(fs, mdir, _)).getOrElse(Map.empty)
+    val sidecars = names.flatMap(_.getName match {
+      case StatsRe(v) => Some(v.toInt)
+      case _ => None
+    }).toSet
     val read = listed.map { case (v, p) =>
-      ckpt.getOrElse(v, {
+      val (s, old) = ckpt.getOrElse(v, {
         manifestReads.incrementAndGet()
         parseSnapshot(JsonMethods.parse(readText(fs, p)))
       })
+      if (!sidecars(v)) (s, old)
+      else (s.copy(stats = try {
+        implicit val fmts: Formats = DefaultFormats
+        val files = s.files.toSet
+        JsonMethods.parse(readText(fs, new Path(mdir, statsName(v))))
+          .extract[Seq[ZoneMap.FileStats]]
+          .collect { case e if files(e.file) => e.file -> e }.toMap
+      } catch { case _: Exception => s.stats }), old)
     }.sortBy(_._1.version)
     val legacy = read.collect { case (s, true) => s.version }
     if (legacy.isEmpty) read.map(_._1)
@@ -511,6 +555,9 @@ object ManifestTable extends graft.QueryModule {
     * shares NOTHING with its source afterwards — vacuuming or rewriting
     * the source can never break it (pinned in ManifestSpec), which is
     * the contract that matters for "hand this snapshot to another team".
+    * The clone carries the version's state (writer state, properties,
+    * constraints, column mapping) and its zone-map entries, remapped with
+    * the files, so it reads and prunes like its source.
     * Copy cost is data-proportional and embarrassingly parallel (the
     * driver loop moves manifests' worth of file names; bytes stream
     * file-by-file — on a real cluster this is a distcp-shaped job).
@@ -565,7 +612,9 @@ object ManifestTable extends graft.QueryModule {
         writeParquet(remapped, dstDir,
           s"deletes/w${java.util.UUID.randomUUID.toString.take(8)}", "error")
       }
-    commitManifest(spark, dstDir, None, date, time, files, deletes = deletes)
+    commitManifest(spark, dstDir, None, date, time, files, deletes = deletes,
+      state = _ => snap.state,
+      stats = snap.stats.values.toSeq.map(e => e.copy(file = remap(e.file))))
   }
 
   /** Exact row count of a committed snapshot from parquet FOOTERS alone —
@@ -578,15 +627,16 @@ object ManifestTable extends graft.QueryModule {
     * (Delta's `numRecords`); footer reads are the formatcompatible
     * fallback and cost ~1 ms/file on the coordinator.
     */
-  def footerCount(spark: SparkSession, dir: String, snap: Snapshot): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def rows(rel: String): Long = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(s"$dir/$rel"), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }
-    snap.files.map(rows).sum - snap.deletes.map(rows).sum
+  def footerCount(spark: SparkSession, dir: String, snap: Snapshot): Long =
+    snap.files.map(footerRows(spark, dir, _)).sum -
+      snap.deletes.map(footerRows(spark, dir, _)).sum
+
+  /** One parquet file's row count from its footer. */
+  private[graft] def footerRows(spark: SparkSession, dir: String, rel: String): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new Path(s"$dir/$rel"), spark.sparkContext.hadoopConfiguration)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getRecordCount finally r.close()
   }
 
   /** The driver-side rows behind [[history]] — exposed so metadata-only

@@ -72,7 +72,7 @@ object Merge extends graft.QueryModule {
     * byte. This path makes the commit cost track the BATCH:
     *
     *  1. candidate files — the batch's key bounds (and, when the X168
-    *     sidecar carries value sets, its distinct key values) prune the
+    *     entries carry value sets, its distinct key values) prune the
     *     manifest's file list driver-side, zero data bytes read: a
     *     key-clustered table (the X48/X106 layout) drops to the few
     *     files whose ranges the batch straddles;
@@ -149,7 +149,7 @@ object Merge extends graft.QueryModule {
   }
 
   /** Files of `snap` that CAN hold a key of `updates` — judged entirely
-    * from the version's stats sidecar (X57 long bounds, X78 string
+    * from the version's zone-map entries (X57 long bounds, X78 string
     * bounds, X168 value sets) against one small aggregate over the
     * batch. Soundness rule everywhere: absence of evidence keeps a file
     * in scope; only a PROVEN-disjoint key column excludes one (any key
@@ -161,9 +161,7 @@ object Merge extends graft.QueryModule {
       snap: ManifestTable.Snapshot, updates: DataFrame,
       keys: Seq[String]): Seq[String] = {
     if (snap.files.isEmpty) return Nil
-    val stats = ZoneMap.fileStats(spark, dir, snap.version)
-      .getOrElse(return snap.files)
-    val byFile = stats.map(s => s.file -> s).toMap
+    val stats = snap.stats.values.toSeq
     import org.apache.spark.sql.types._
     val sch = updates.schema
     val longKeys = keys.filter(k => sch(k).dataType match {
@@ -171,7 +169,7 @@ object Merge extends graft.QueryModule {
       case _ => false
     })
     val strKeys = keys.filter(k => sch(k).dataType == StringType)
-    // evidence only exists for key columns the sidecar actually tracks
+    // evidence only exists for key columns the entries actually track
     val trackedLong = longKeys.filter(k => stats.exists(_.lo.contains(k)))
     val trackedStr = strKeys.filter(k => stats.exists(_.slo.contains(k)))
     val trackedVals = (longKeys ++ strKeys)
@@ -209,7 +207,7 @@ object Merge extends graft.QueryModule {
       (for { bv <- batchVals.get(k); fv <- s.vals.get(k) } yield
         !fv.exists(bv.contains)).getOrElse(false)
     snap.files.filter { f =>
-      byFile.get(f).forall { s =>
+      snap.stats.get(f).forall { s =>
         !(trackedLong.exists(longDisjoint(s, _)) ||
           trackedStr.exists(strDisjoint(s, _)) ||
           trackedVals.exists(valsDisjoint(s, _)))

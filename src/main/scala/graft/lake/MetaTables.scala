@@ -12,14 +12,13 @@ import org.apache.spark.sql.types._
   * how big, what key ranges, how much MOR debt has accumulated?" — are
   * exactly the inputs to compaction (X32), clustering (X48/X106) and
   * materialize (X64) decisions, and the table costs the same for a
-  * 100 MB table as a 100 TB one: manifests + sidecars are metadata,
+  * 100 MB table as a 100 TB one: manifests are metadata,
   * tombstone deltas are proportional to deleted rows, never to data.
   *
-  * Stats resolution: per file, the NEWEST sidecar at any version ≤ the
-  * requested one wins (appends carry parent stats forward, so this is
-  * normally the version's own sidecar; delete commits write none and
-  * inherit). Files without stats surface NULL rows/bounds — absence
-  * degrades to "unknown", never to a wrong number (the X57 rule).
+  * Stats resolution: the requested version's own zone-map entries (every
+  * commit keeps the entries of the files it keeps). Files without stats
+  * surface NULL rows/bounds — absence degrades to "unknown", never to a
+  * wrong number (the X57 rule).
   */
 object MetaTables extends graft.QueryModule {
   /** Shared fixture: an 8-file o_orderkey-range-clustered commit with
@@ -46,7 +45,7 @@ object MetaTables extends graft.QueryModule {
     StructField("tombstones", LongType, nullable = false)))
 
   /** The per-file view of `version` (default: latest). One row per live
-    * data file: sidecar stats (NULL when no sidecar covers the file) and
+    * data file: its zone-map entry (NULL when the file has none) and
     * the file's tombstone count from the version's DV delta.
     */
   def filesTable(spark: SparkSession, dir: String, version: Option[Int] = None): DataFrame = {
@@ -57,11 +56,6 @@ object MetaTables extends graft.QueryModule {
         throw new NoSuchElementException(s"graft: no version $v at $dir"))
       case None => snaps.last
     }
-    // newest sidecar ≤ version wins per file (fold in ascending order)
-    val stats: Map[String, ZoneMap.FileStats] =
-      (1 to snap.version).foldLeft(Map.empty[String, ZoneMap.FileStats]) { (acc, v) =>
-        acc ++ ZoneMap.fileStats(spark, dir, v).getOrElse(Nil).map(s => s.file -> s)
-      }
     // MOR debt: tombstones per file from the cumulative DV delta —
     // proportional to deleted rows, the only non-metadata input
     val tomb: Map[String, Long] =
@@ -71,7 +65,7 @@ object MetaTables extends graft.QueryModule {
         .groupBy("file").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val rows = snap.files.sorted.map { f =>
-      val s = stats.get(f)
+      val s = snap.stats.get(f)
       Row(f,
         s.map(_.rows).filter(_ >= 0).map(java.lang.Long.valueOf).orNull,
         s.map(_.lo).orNull, s.map(_.hi).orNull,
@@ -97,7 +91,7 @@ object MetaTables extends graft.QueryModule {
     *  - `materialize` (X64): tombstone debt ≥ the threshold fraction of
     *    stats rows — when merge-on-read reads pay more than a rewrite.
     *
-    * Files without sidecar stats contribute nothing to the evidence
+    * Files without zone-map stats contribute nothing to the evidence
     * (unknown never fires a rule — the X57 degradation contract).
     */
   def maintenancePlan(spark: SparkSession, dir: String, keyCol: String,

@@ -26,7 +26,7 @@ import graft.util.{Exact, FixtureCache}
   *
   * The rebalanced frame then stages and commits through the standard
   * stage-first tail (X187 constraints validate the staged bytes; X96
-  * optimistic retry on races). Stats sidecars (X57) are written by the
+  * optimistic retry on races). Zone-map stats (X57) are recorded by the
   * caller's chosen commit surface exactly as before — optimized writes
   * change file GEOMETRY, never content or metadata semantics.
   */

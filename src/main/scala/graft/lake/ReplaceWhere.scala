@@ -26,7 +26,7 @@ import graft.sources.Tables
   *     reload, the operator's headline use), or an arbitrary predicate
   *     (no disjointness evidence — every file rewrites, correct but
   *     table-cost; the bands are the scale path);
-  *   - per file, the stats sidecar decides whether its bounds can
+  *   - per file, its zone-map entry decides whether its bounds can
   *     intersect the scope: provably-disjoint files are RETAINED BY
   *     REFERENCE (their paths and their stats entries carry over verbatim
   *     — zero bytes rewritten, reload cost ∝ the replaced band);
@@ -41,13 +41,14 @@ import graft.sources.Tables
   *     plan-level check yet stage different rows; the bytes that are
   *     checked are exactly the bytes that commit;
   *   - one `commitManifest` (op = "replace_where") publishes retained ++
-  *     rewritten ++ new together with a merged stats sidecar, so the next
-  *     band read prunes just as well as before; X64 tombstones survive on
+  *     rewritten ++ new, the retained files keeping their stats entries
+  *     and the others getting fresh ones, so the next band read prunes
+  *     just as well as before; X64 tombstones survive on
   *     retained files (rewritten files bake their subtraction in at read).
   *
   * Files WITHOUT a stats entry on the scope column are rewritten, never
   * retained — the X57 absence-degrades rule: no evidence of disjointness
-  * means the file must be read, or a stale sidecar could resurrect
+  * means the file must be read, or a stale entry could resurrect
   * replaced rows.
   *
   * Single-shot optimistic commit (version = latest+1, the manifest rename
@@ -138,8 +139,8 @@ object ReplaceWhere extends graft.QueryModule {
 
   /** Replace rows of `dir` inside `scope` by `newData`, committed
     * atomically as the next version. `statsCols`/`strCols` are the zone-map
-    * columns for the rewritten+new files' sidecar entries (retained files
-    * keep their old entries). Returns the committed version.
+    * columns for the rewritten+new files' entries (retained files keep
+    * their old entries). Returns the committed version.
     */
   def replaceWhere(spark: SparkSession, dir: String, scope: Scope,
       newData: DataFrame, date: Int, time: Int,
@@ -211,17 +212,16 @@ object ReplaceWhere extends graft.QueryModule {
     ManifestTable.dropStaged(spark, dir, staged)
 
   /** The shared commit tail: retain-by-evidence, rewrite survivors of
-    * straddling files, publish one manifest commit with a merged sidecar.
+    * straddling files, publish one manifest commit with the staged files'
+    * fresh entries.
     */
   private def commitReplace(spark: SparkSession, dir: String, scope: Scope,
       stagedNew: Seq[String], snap: ManifestTable.Snapshot, date: Int,
       time: Int, statsCols: Seq[String], strCols: Seq[String],
       setCols: Seq[String]): Int = {
     val matches: Column = coalesce(scope.pred, lit(false))
-    val stats = ZoneMap.fileStats(spark, dir, snap.version).getOrElse(Nil)
-    val byFile = stats.map(s => s.file -> s).toMap
     val (retained, rewrite) = snap.files.partition(f =>
-      byFile.get(f).exists(scope.disjoint))
+      snap.stats.get(f).exists(scope.disjoint))
 
     // Surviving rows of the straddling files: tombstones applied, then
     // everything the predicate does NOT claim (false or NULL).
@@ -232,16 +232,11 @@ object ReplaceWhere extends graft.QueryModule {
           Tables.cachedScan(spark, rewrite.map(f => s"$dir/$f"))).where(!matches),
         dir)
 
-    val version = snap.version + 1
     val staged = stagedResidual ++ stagedNew
-    val newStats =
-      if (staged.isEmpty) Nil
-      else ZoneMap.statsFor(spark, dir, staged, statsCols, strCols, setCols)
-
-    ZoneMap.writeStatsSidecar(spark, dir, version,
-      retained.flatMap(byFile.get) ++ newStats)
     ManifestTable.commitManifest(spark, dir, Some(snap), date, time,
-      retained ++ staged, deletes = snap.deletes, op = "replace_where")
+      retained ++ staged, deletes = snap.deletes, op = "replace_where",
+      stats = if (staged.isEmpty) Nil
+        else ZoneMap.statsFor(spark, dir, staged, statsCols, strCols, setCols))
   }
 
   /** Numeric-band convenience form (the original X172 signature). */

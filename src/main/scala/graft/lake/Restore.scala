@@ -17,7 +17,8 @@ import graft.util.{Exact, FixtureCache}
   * restored files alive because the new head references them. A restore
   * of a tombstone-carrying version carries its deletion vectors verbatim:
   * the sidecar files are immutable and version-addressed, so the revived
-  * manifest points at them exactly as the original did.
+  * manifest points at them exactly as the original did. Zone-map entries
+  * come back with the files: the target version's own.
   *
   * `op = "restore"` marks the commit in the X102 log — audit surfaces
   * show WHEN the table was rolled back and to what content, rather than
@@ -38,7 +39,8 @@ object Restore extends graft.QueryModule {
       val latest = ManifestTable.snapshots(spark, dir).last
       if (latest.version == toVersion) toVersion // already there
       else ManifestTable.commitManifest(spark, dir, Some(latest), date, time,
-        target.files, deletes = target.deletes, op = "restore")
+        target.files, deletes = target.deletes, op = "restore",
+        stats = target.stats.values.toSeq)
     }
   }
 

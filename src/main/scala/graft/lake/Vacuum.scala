@@ -37,6 +37,8 @@ object Vacuum extends graft.QueryModule {
   private val DataDirRe = """v(\d{8})""".r
   private val StagedDirRe = """w[0-9a-f]{8}""".r
   private val CkptRe = """checkpoint-v(\d{8})\.json""".r
+  // a version's cache sidecars: `v<N>.stats.json`, `v<N>.bloom.json`
+  private val SidecarRe = """v(\d{8})\..+\.json""".r
 
   /** X202 — `VACUUM … DRY RUN`: the exact data files a [[vacuum]] with
     * the same retention would reclaim, WITHOUT deleting anything (one
@@ -115,9 +117,9 @@ object Vacuum extends graft.QueryModule {
       stagedOrphanAgeMs)
   }
 
-  /** The shared reclaim tail: delete expired manifests (+ stats
-    * sidecars), then the reference-counted data/deletes sweep and the
-    * superseded-checkpoint cleanup.
+  /** The shared reclaim tail: delete expired manifests (+ every sidecar
+    * named for an expired version), then the reference-counted
+    * data/deletes sweep and the superseded-checkpoint cleanup.
     */
   private def reclaim(spark: SparkSession, dir: String,
       snaps: Seq[ManifestTable.Snapshot],
@@ -126,19 +128,22 @@ object Vacuum extends graft.QueryModule {
     val expiredSet = expired.map(_.version).toSet
     val retained = snaps.filterNot(s => expiredSet(s.version))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    expired.foreach { s =>
-      // Manifest first (the version atomically stops existing), stats
-      // sidecar with it; file dirs follow in the reference-counted sweep.
-      fs.delete(new Path(f"$dir/_manifests/v${s.version}%08d.json"), false)
-      fs.delete(new Path(f"$dir/_manifests/v${s.version}%08d.stats.json"), false)
+    // Manifests first (the version atomically stops existing), its
+    // sidecars with it; file dirs follow in the reference-counted sweep.
+    expired.foreach(s =>
+      fs.delete(new Path(f"$dir/_manifests/v${s.version}%08d.json"), false))
+    val names = fs.listStatus(new Path(s"$dir/_manifests")).toSeq.map(_.getPath.getName)
+    names.foreach {
+      case n @ SidecarRe(v) if expiredSet(v.toInt) =>
+        fs.delete(new Path(s"$dir/_manifests/$n"), false)
+      case _ => ()
     }
     // X200 checkpoints: all but the newest are superseded bytes (readers
     // key off the newest listed checkpoint; staleness is harmless — the
     // manifest listing stays authoritative — but dead weight accumulates)
-    val ckpts = fs.listStatus(new Path(s"$dir/_manifests")).toSeq
-      .flatMap(_.getPath.getName match {
-        case CkptRe(v) => Some(v.toInt); case _ => None
-      }).sorted
+    val ckpts = names.flatMap {
+      case CkptRe(v) => Some(v.toInt); case _ => None
+    }.sorted
     ckpts.dropRight(1).foreach(v =>
       fs.delete(new Path(f"$dir/_manifests/checkpoint-v$v%08d.json"), false))
     // Reference-counted sweep + orphan GC in one pass: a data/ or

@@ -82,7 +82,7 @@ object ZOrder extends graft.QueryModule {
 
   /** OPTIMIZE ZORDER BY as a manifest commit (X106): fold the latest
     * version — tombstones applied — into `nFiles` z-clustered files,
-    * committed atomically with a fresh X57 zone-map sidecar and
+    * committed atomically with fresh X57 zone-map entries and
     * `op = "optimize"`, the same content-preservation contract as X64's
     * materialize (X75 feed consumers skip the step without reading either
     * version; time travel to the fragmented parent still works; X61 can
@@ -191,10 +191,8 @@ object ZOrder extends graft.QueryModule {
       inScope: ZoneMap.FileStats => Boolean): Option[Int] = {
     val latest = ManifestTable.snapshots(spark, dir).lastOption.getOrElse(
       throw new NoSuchElementException(s"no committed snapshot at $dir"))
-    val stats = ZoneMap.fileStats(spark, dir, latest.version)
-      .getOrElse(Nil).map(f => f.file -> f).toMap
     val (in, out) = latest.files.partition { f =>
-      stats.get(f).map(inScope).getOrElse(true) // no stats -> in scope
+      latest.stats.get(f).forall(inScope) // no stats -> in scope
     }
     if (in.size <= 1) return None
     val fs = new org.apache.hadoop.fs.Path(dir)

@@ -1,17 +1,15 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.sources.Tables
 import graft.util.Exact.dsum
 
 /** File-level zone maps on manifest commits (X57): per-file min/max column
-  * statistics captured at write time into a sidecar next to the X39
-  * manifest, so a reader can prune data files from the MANIFEST alone —
+  * statistics captured at write time into the X39 manifest itself
+  * ([[ManifestTable.Snapshot]]'s `stats`), so a reader can prune data
+  * files from the MANIFEST alone —
   * no directory listing (X39 already removed that) and no parquet-footer
   * round-trips, which at 100 TB / object-store latency is the difference
   * between planning in milliseconds and planning in minutes. This is the
@@ -19,17 +17,21 @@ import graft.util.Exact.dsum
   * X48 Z-ordering exists precisely to make these ranges tight on multiple
   * columns at once.
   *
-  * Commit order: data files → stats sidecar → manifest rename. The rename
-  * remains the single commit point (a crash after the sidecar but before
-  * the rename leaves the version invisible, ManifestSpec semantics), and a
-  * committed-with-stats version always has its sidecar.
+  * Commit order: data files → stats → manifest put, the stats riding the
+  * put itself, so a committed-with-stats version always has them and a
+  * crashed or lost attempt leaves none behind. An entry describes an
+  * immutable file, so every later commit that keeps the file keeps its
+  * entry (DELETE, metadata commits, restore, appends, MERGE) with no code
+  * of its own. ANALYZE TABLE is the one writer of a `v<N>.stats.json`
+  * sidecar: it recomputes a committed version's stats without a new
+  * commit ([[analyze]]).
   *
   * Stats collection is ONE combinable aggregate over the staged files
   * grouped by `_metadata.file_path` — a map-side-combined pass over data
   * the writer just produced (usually still in page cache), not a second
   * full scan of the table's history.
   *
-  * Pruning is driver-side over the (tiny) sidecar, then a scan of ONLY the
+  * Pruning is driver-side over the (tiny) entries, then a scan of ONLY the
   * surviving files with the predicate still applied — the zone map is an
   * optimization, never a semantics change, which is exactly what
   * `q_stats_prune`'s plain-table oracle pins.
@@ -39,7 +41,7 @@ object ZoneMap extends graft.QueryModule {
   /** Per-file `[lo, hi]` ranges for the stat columns, plus the file's row
     * count (X69 stats-only aggregates) and string-typed bounds (X78 —
     * date strings, ULIDs; lexicographic pruning). `rows = -1` and the
-    * empty string maps mark older sidecars — readers then degrade to
+    * empty string maps mark older entries — readers then degrade to
     * scanning, never to a wrong answer (json4s fills the defaults when
     * fields are absent, pinned in ZoneMapSpec).
     */
@@ -47,10 +49,6 @@ object ZoneMap extends graft.QueryModule {
       rows: Long = -1L,
       slo: Map[String, String] = Map.empty, shi: Map[String, String] = Map.empty,
       vals: Map[String, Seq[String]] = Map.empty)
-
-  private def statsName(version: Int) = f"v$version%08d.stats.json"
-  private def statsPath(dir: String, version: Int) =
-    new Path(s"$dir/_manifests", statsName(version))
 
   /** X168: distinct-value sets larger than this per (file, column) are
     * NOT recorded — the file then simply never equality-prunes, the same
@@ -96,9 +94,11 @@ object ZoneMap extends graft.QueryModule {
     }.toSeq.sortBy(_.file)
   }
 
-  /** X189 — (re)build the stats sidecar for the LATEST version in place
+  /** X189 — (re)build the zone maps of the LATEST version in place
     * (`ANALYZE TABLE … COMPUTE STATISTICS`): a table committed without
-    * stats gains X57/X78/X69 pruning with zero data rewrites. Default
+    * stats gains X57/X78/X69 pruning with zero data rewrites and no new
+    * commit, through the one stats sidecar ([[ManifestTable.writeStatsSidecar]]);
+    * the next commit carries the entries into the log. Default
     * column pick: every integral column (long bounds) + every string
     * column (lexicographic bounds); others skipped — X57 bounds are
     * integral by design. Sound under tombstones (bounds over the raw
@@ -121,7 +121,7 @@ object ZoneMap extends graft.QueryModule {
     require(numeric.nonEmpty || strs.nonEmpty,
       s"no integral or string columns among ${pick.mkString(",")}")
     val stats = statsFor(spark, dir, snap.files, numeric, strs)
-    writeStatsSidecar(spark, dir, snap.version, stats)
+    ManifestTable.writeStatsSidecar(spark, dir, snap.version, stats)
     stats
   }
 
@@ -130,11 +130,9 @@ object ZoneMap extends graft.QueryModule {
     */
   def commitStagedWithStats(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], statsCols: Seq[String],
-      strCols: Seq[String] = Nil): Int = {
-    val stats = statsFor(spark, dir, staged, statsCols, strCols)
+      strCols: Seq[String] = Nil): Int =
     ManifestTable.commitStagedRetrying(spark, dir, date, time, staged,
-      beforeCommit = (_, v) => writeStatsSidecar(spark, dir, v, stats))
-  }
+      stats = statsFor(spark, dir, staged, statsCols, strCols))
 
   /** Commit `df` as the next version with zone-map stats on `statsCols`
     * (long-comparable columns) and `strCols` (string columns, X78 —
@@ -147,46 +145,16 @@ object ZoneMap extends graft.QueryModule {
     val parent = ManifestTable.snapshots(spark, dir).lastOption
     val version = parent.fold(1)(_.version + 1)
     val files = ManifestTable.writeDataFiles(df, dir, version)
-    val stats = statsFor(spark, dir, files, statsCols, strCols, setCols)
-    writeStatsSidecar(spark, dir, version, stats)
-    ManifestTable.commitManifest(spark, dir, parent, date, time, files, op = op)
+    ManifestTable.commitManifest(spark, dir, parent, date, time, files, op = op,
+      stats = statsFor(spark, dir, files, statsCols, strCols, setCols))
   }
 
-  private[graft] def writeStatsSidecar(spark: SparkSession, dir: String,
-      version: Int, stats: Seq[FileStats]): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def jstr(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val json = stats.map { s =>
-      val los = s.lo.toSeq.sortBy(_._1).map { case (c, v) => s""""$c": $v""" }.mkString(", ")
-      val his = s.hi.toSeq.sortBy(_._1).map { case (c, v) => s""""$c": $v""" }.mkString(", ")
-      val strField =
-        if (s.slo.isEmpty) ""
-        else {
-          val sl = s.slo.toSeq.sortBy(_._1).map { case (c, v) => s""""$c": ${jstr(v)}""" }.mkString(", ")
-          val sh = s.shi.toSeq.sortBy(_._1).map { case (c, v) => s""""$c": ${jstr(v)}""" }.mkString(", ")
-          s""", "slo": {$sl}, "shi": {$sh}"""
-        }
-      val valsField =
-        if (s.vals.isEmpty) ""
-        else {
-          val vv = s.vals.toSeq.sortBy(_._1).map { case (c, vs) =>
-            s""""$c": ${vs.map(jstr).mkString("[", ", ", "]")}""" }.mkString(", ")
-          s""", "vals": {$vv}"""
-        }
-      s"""{"file": "${s.file}", "lo": {$los}, "hi": {$his}, "rows": ${s.rows}$strField$valsField}"""
-    }.mkString("[", ",\n ", "]")
-    val out = fs.create(statsPath(dir, version), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** APPEND with zone maps maintained (closing the coherence gap where
-    * only replace commits carried stats and every append silently turned
-    * file skipping off): the new version's sidecar = the parent's stats
-    * (verbatim — parent files are immutable) + one combinable pass over
-    * ONLY the appended files. A parent WITHOUT a sidecar degrades
+  /** APPEND with zone maps on the appended files: one combinable pass
+    * over ONLY the appended files; the carried files keep their entries
+    * (verbatim — they are immutable). A parent WITHOUT stats degrades
     * gracefully: its files simply stay un-stats'd, and the
     * never-prune-without-evidence rule keeps them in scope while the new
-    * files still skip. Bounded optimistic retry re-merges against the
+    * files still skip. Bounded optimistic retry re-carries against the
     * new parent on a lost race.
     */
   def appendWithStats(df: DataFrame, dir: String, date: Int, time: Int,
@@ -202,49 +170,44 @@ object ZoneMap extends graft.QueryModule {
       time: Int, staged: Seq[String], statsCols: Seq[String],
       strCols: Seq[String] = Nil): Int =
     ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
-      beforeCommit = appendStats(spark, dir,
-        statsFor(spark, dir, staged, statsCols, strCols)))
+      stats = statsFor(spark, dir, staged, statsCols, strCols))
 
-  /** The `beforeCommit` hook of a stats-maintaining append: the new
-    * version's sidecar is the parent's entries verbatim plus `newStats`.
+  /** The committed snapshot `version` of `dir`. */
+  private def snapshotAt(spark: SparkSession, dir: String,
+      version: Int): ManifestTable.Snapshot =
+    ManifestTable.snapshots(spark, dir).find(_.version == version)
+      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir"))
+
+  /** The zone-map entries of `version`, sorted by file; None when it has
+    * none.
     */
-  private[graft] def appendStats(spark: SparkSession, dir: String,
-      newStats: Seq[FileStats]): (Option[ManifestTable.Snapshot], Int) => Unit =
-    (parent, v) => writeStatsSidecar(spark, dir, v,
-      parent.flatMap(p => fileStats(spark, dir, p.version)).getOrElse(Nil) ++ newStats)
-
-  /** The sidecar for `version`, if one was written. */
-  def fileStats(spark: SparkSession, dir: String, version: Int): Option[Seq[FileStats]] = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = statsPath(dir, version)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    implicit val fmts: Formats = DefaultFormats
-    Some(JsonMethods.parse(text).extract[Seq[FileStats]])
-  }
+  def fileStats(spark: SparkSession, dir: String, version: Int): Option[Seq[FileStats]] =
+    ManifestTable.snapshots(spark, dir).find(_.version == version)
+      .map(_.stats.values.toSeq.sortBy(_.file)).filter(_.nonEmpty)
 
   /** Files of `version` whose `[lo, hi]` range on `column` intersects
-    * `[lo, hi]` — the driver-side prune. Falls back to ALL files when no
-    * sidecar exists (stats are an optimization, never required).
+    * `[lo, hi]` — the driver-side prune. A file without bounds on
+    * `column` stays in scope (stats are an optimization, never required).
     */
   def candidateFiles(spark: SparkSession, dir: String, version: Int,
-      column: String, lo: Long, hi: Long): Seq[String] = {
-    val all = ManifestTable.snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir"))
-      .files
-    fileStats(spark, dir, version) match {
-      case None => all
-      case Some(stats) =>
-        val ranged = stats.filter(s =>
-          s.lo.contains(column) && s.hi(column) >= lo && s.lo(column) <= hi)
-          .map(_.file).filter(all.toSet)
-        // Files the stats pass somehow missed stay in scope — never prune
-        // on absence of evidence.
-        val known = stats.map(_.file).toSet
-        ranged ++ all.filterNot(known.contains)
-    }
-  }
+      column: String, lo: Long, hi: Long): Seq[String] =
+    rangeCandidates(snapshotAt(spark, dir, version), column, lo, hi)
+
+  private def rangeCandidates(snap: ManifestTable.Snapshot, column: String,
+      lo: Long, hi: Long): Seq[String] =
+    snap.files.filter(f => snap.stats.get(f).forall(s =>
+      !s.lo.contains(column) || (s.hi(column) >= lo && s.lo(column) <= hi)))
+
+  /** `cand` of `snap` with tombstones applied and `pred` on top; an empty
+    * `cand` reads the full version, for the right schema of an empty result.
+    */
+  private def scanPruned(spark: SparkSession, dir: String,
+      snap: ManifestTable.Snapshot, cand: Seq[String], pred: Column): DataFrame =
+    if (cand.isEmpty) ManifestTable.readVersion(spark, dir, snap.version).where(pred)
+    // X64 tombstones still subtract on the pruned scan — zone maps narrow
+    // the file list, never the delete semantics
+    else DeleteVectors.applyTo(spark, dir, snap,
+      graft.sources.Tables.cachedScan(spark, cand.map(f => s"$dir/$f"))).where(pred)
 
   /** Read `version` with `column BETWEEN lo AND hi`, scanning only the
     * files the zone map cannot rule out. The predicate is STILL applied —
@@ -252,18 +215,9 @@ object ZoneMap extends graft.QueryModule {
     */
   def readRange(spark: SparkSession, dir: String, version: Int,
       column: String, lo: Long, hi: Long): DataFrame = {
-    val cand = candidateFiles(spark, dir, version, column, lo, hi)
-    val pred: Column = col(column) >= lo && col(column) <= hi
-    if (cand.isEmpty) {
-      // Empty result with the right schema: scan the full version, filter.
-      ManifestTable.readVersion(spark, dir, version).where(pred)
-    } else {
-      // X64 tombstones still subtract on the pruned scan — zone maps
-      // narrow the file list, never the delete semantics
-      val snap = ManifestTable.snapshots(spark, dir).find(_.version == version).get
-      DeleteVectors.applyTo(spark, dir, snap,
-        graft.sources.Tables.cachedScan(spark, cand.map(f => s"$dir/$f"))).where(pred)
-    }
+    val snap = snapshotAt(spark, dir, version)
+    scanPruned(spark, dir, snap, rangeCandidates(snap, column, lo, hi),
+      col(column) >= lo && col(column) <= hi)
   }
 
   /** X78: read `version` with `column BETWEEN lo AND hi` on a STRING
@@ -273,23 +227,10 @@ object ZoneMap extends graft.QueryModule {
     */
   def readRangeStr(spark: SparkSession, dir: String, version: Int,
       column: String, lo: String, hi: String): DataFrame = {
-    val snap = ManifestTable.snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir"))
-    val pred: Column = col(column) >= lo && col(column) <= hi
-    val cand = fileStats(spark, dir, version) match {
-      case None => snap.files
-      case Some(stats) =>
-        val ranged = stats.filter(s =>
-          s.slo.contains(column) && s.shi(column) >= lo && s.slo(column) <= hi)
-          .map(_.file).filter(snap.files.toSet)
-        val known = stats.filter(_.slo.contains(column)).map(_.file).toSet
-        ranged ++ snap.files.filterNot(known.contains)
-    }
-    if (cand.isEmpty)
-      ManifestTable.readVersion(spark, dir, version).where(pred)
-    else
-      DeleteVectors.applyTo(spark, dir, snap,
-        graft.sources.Tables.cachedScan(spark, cand.map(f => s"$dir/$f"))).where(pred)
+    val snap = snapshotAt(spark, dir, version)
+    scanPruned(spark, dir, snap, snap.files.filter(f => snap.stats.get(f).forall(s =>
+        !s.slo.contains(column) || (s.shi(column) >= lo && s.slo(column) <= hi))),
+      col(column) >= lo && col(column) <= hi)
   }
 
   /** X168: files that can hold `column ∈ values`, judged by the per-file
@@ -300,21 +241,13 @@ object ZoneMap extends graft.QueryModule {
     * recorded set for the column stay in scope — absence never prunes.
     */
   def candidateFilesEq(spark: SparkSession, dir: String, version: Int,
-      column: String, values: Seq[String]): Seq[String] = {
-    val all = ManifestTable.snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir"))
-      .files
-    fileStats(spark, dir, version) match {
-      case None => all
-      case Some(stats) =>
-        val vset = values.toSet
-        val hit = stats.filter(s => s.vals.get(column)
-            .forall(_.exists(vset.contains))) // no set recorded ⇒ stays
-          .map(_.file).filter(all.toSet)
-        val known = stats.map(_.file).toSet
-        hit ++ all.filterNot(known.contains)
-    }
-  }
+      column: String, values: Seq[String]): Seq[String] =
+    eqCandidates(snapshotAt(spark, dir, version), column, values)
+
+  private def eqCandidates(snap: ManifestTable.Snapshot, column: String,
+      values: Seq[String]): Seq[String] =
+    snap.files.filter(f => snap.stats.get(f).flatMap(_.vals.get(column))
+      .forall(_.exists(values.contains)))
 
   /** Read `version` with `column IN (values)`, scanning only files whose
     * value sets intersect. Same safety rules as [[readRange]]: the
@@ -322,80 +255,66 @@ object ZoneMap extends graft.QueryModule {
     */
   def readEq(spark: SparkSession, dir: String, version: Int,
       column: String, values: Seq[String]): DataFrame = {
-    val cand = candidateFilesEq(spark, dir, version, column, values)
-    val pred: Column = col(column).isin(values: _*)
-    if (cand.isEmpty)
-      ManifestTable.readVersion(spark, dir, version).where(pred)
-    else {
-      val snap = ManifestTable.snapshots(spark, dir).find(_.version == version).get
-      DeleteVectors.applyTo(spark, dir, snap,
-        graft.sources.Tables.cachedScan(spark, cand.map(f => s"$dir/$f"))).where(pred)
-    }
+    val snap = snapshotAt(spark, dir, version)
+    scanPruned(spark, dir, snap, eqCandidates(snap, column, values),
+      col(column).isin(values: _*))
   }
 
   /** X69 stats-only aggregates — the Iceberg/Delta "metadata query" trick:
-    * `count(*)` (and range counts) answered from the sidecar row counts,
+    * `count(*)` (and range counts) answered from the entries' row counts,
     * scanning at most the files that STRADDLE the predicate boundary.
+    * Row counts and bounds describe a file's raw rows, so on a version
+    * with tombstones (X64) they answer nothing: `metaCount`/`metaMinMax`
+    * return None and every unskipped file straddles.
     */
 
   /** Full-table `count(*)` from stats alone — zero data files opened.
-    * None when any file lacks a row count (pre-X69 sidecar or no sidecar):
-    * degrade to scanning, never guess.
+    * None when any file lacks a row count (pre-X69 entries or no stats)
+    * or the version has tombstones: degrade to scanning, never guess.
     */
   def metaCount(spark: SparkSession, dir: String, version: Int): Option[Long] = {
-    val all = ManifestTable.snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir")).files
-    fileStats(spark, dir, version).flatMap { stats =>
-      val byFile = stats.map(s => s.file -> s.rows).toMap
-      val counts = all.map(f => byFile.getOrElse(f, -1L))
-      if (counts.exists(_ < 0)) None else Some(counts.sum)
-    }
+    val snap = snapshotAt(spark, dir, version)
+    val counts = snap.files.map(f => snap.stats.get(f).fold(-1L)(_.rows))
+    if (snap.deletes.nonEmpty || counts.exists(_ < 0)) None else Some(counts.sum)
   }
 
   /** Stats-only `(min, max)` of `column` — exact because zone-map bounds
     * are attained values (per-file min/max), unlike row counts they need
     * no boundary scan ever. None when any file lacks bounds for the
-    * column.
+    * column, or a tombstone may have deleted the attaining row.
     */
   def metaMinMax(spark: SparkSession, dir: String, version: Int,
       column: String): Option[(Long, Long)] = {
-    val all = ManifestTable.snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir")).files
-    fileStats(spark, dir, version).flatMap { stats =>
-      val byFile = stats.filter(_.lo.contains(column)).map(s => s.file -> s).toMap
-      if (all.exists(f => !byFile.contains(f)) || all.isEmpty) None
-      else Some((all.map(f => byFile(f).lo(column)).min,
-        all.map(f => byFile(f).hi(column)).max))
-    }
+    val snap = snapshotAt(spark, dir, version)
+    val bounded = snap.files.flatMap(snap.stats.get).filter(_.lo.contains(column))
+    if (snap.deletes.nonEmpty || snap.files.isEmpty ||
+        bounded.size < snap.files.size) None
+    else Some((bounded.map(_.lo(column)).min, bounded.map(_.hi(column)).max))
   }
 
   /** `(skip, inside, straddle)` classification of `version`'s files for
     * `column BETWEEN lo AND hi`. Files without usable stats classify as
-    * straddling (scan — absence of evidence never prunes, X57 rule).
+    * straddling (scan — absence of evidence never prunes, X57 rule), and
+    * so does every unskipped file of a version with tombstones.
     */
   def classifyRange(spark: SparkSession, dir: String, version: Int,
       column: String, lo: Long, hi: Long): (Seq[String], Seq[FileStats], Seq[String]) = {
-    val all = ManifestTable.snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir")).files
-    fileStats(spark, dir, version) match {
-      case None => (Nil, Nil, all)
-      case Some(stats) =>
-        val byFile = stats.filter(s => s.lo.contains(column)).map(s => s.file -> s).toMap
-        val (skip, inside, straddle) = all.foldLeft(
-          (Vector.empty[String], Vector.empty[FileStats], Vector.empty[String])) {
-          case ((sk, in, st), f) => byFile.get(f) match {
-            case Some(s) if s.hi(column) < lo || s.lo(column) > hi => (sk :+ f, in, st)
-            case Some(s) if s.rows >= 0 && lo <= s.lo(column) && s.hi(column) <= hi =>
-              (sk, in :+ s, st)
-            case _ => (sk, in, st :+ f)
-          }
-        }
-        (skip, inside, straddle)
+    val snap = snapshotAt(spark, dir, version)
+    val (skip, inside, straddle) = snap.files.foldLeft(
+      (Vector.empty[String], Vector.empty[FileStats], Vector.empty[String])) {
+      case ((sk, in, st), f) => snap.stats.get(f).filter(_.lo.contains(column)) match {
+        case Some(s) if s.hi(column) < lo || s.lo(column) > hi => (sk :+ f, in, st)
+        case Some(s) if s.rows >= 0 && snap.deletes.isEmpty &&
+            lo <= s.lo(column) && s.hi(column) <= hi => (sk, in :+ s, st)
+        case _ => (sk, in, st :+ f)
+      }
     }
+    (skip, inside, straddle)
   }
 
   /** `count(*) WHERE column BETWEEN lo AND hi`: fully-inside files answer
-    * from their stats row counts; only straddling files are scanned.
+    * from their stats row counts; only straddling files are scanned, with
+    * the version's tombstones applied.
     * Returns `(count, files scanned)`.
     */
   def countRange(spark: SparkSession, dir: String, version: Int,
@@ -403,8 +322,8 @@ object ZoneMap extends graft.QueryModule {
     val (_, inside, straddle) = classifyRange(spark, dir, version, column, lo, hi)
     val boundary =
       if (straddle.isEmpty) 0L
-      else graft.sources.Tables.cachedScan(spark, straddle.map(f => s"$dir/$f"))
-        .where(col(column) >= lo && col(column) <= hi).count()
+      else scanPruned(spark, dir, snapshotAt(spark, dir, version), straddle,
+        col(column) >= lo && col(column) <= hi).count()
     (inside.map(_.rows).sum + boundary, straddle.size)
   }
 
@@ -523,7 +442,7 @@ object ZoneMap extends graft.QueryModule {
       val dir = prunedCommitDir(s, d)
       val (lo, hi) = keyBounds(s, d)
       val full = metaCount(s, dir, 1).getOrElse(
-        sys.error(s"stats sidecar missing at $dir"))
+        sys.error(s"zone-map stats missing at $dir"))
       val (rangeCnt, _) = countRange(s, dir, 1, "o_orderkey", lo, hi)
       Seq(("full", full), ("range", rangeCnt)).toDF("scope", "n_rows")
         .orderBy("scope")

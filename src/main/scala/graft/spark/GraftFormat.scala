@@ -35,7 +35,7 @@ import graft.util.{Exact, FixtureCache}
   *    (the X39 contract: readers can't see half-written versions, and an
   *    object-store table needs no recursive list);
   *  - `listFiles` receives the query's data filters and consults the
-  *    version's X57 zone-map sidecar to SKIP whole files whose [lo, hi]
+  *    version's X57 zone-map entries to SKIP whole files whose [lo, hi]
   *    ranges can't match — driver-side pruning before any task launches,
   *    composing with the footer-level pushdown that prunes row groups
   *    WITHIN surviving files. Translation is conservative: only
@@ -558,8 +558,7 @@ class GraftPlanRelation(spark: SparkSession, plan: org.apache.spark.sql.DataFram
 }
 
 /** FileIndex over one committed snapshot: the manifest IS the listing,
-  * and the version's zone-map sidecar (when present) skips files at plan
-  * time.
+  * and the version's zone-map entries skip files at plan time.
   */
 class ManifestFileIndex(spark: SparkSession, dir: String,
     snap: ManifestTable.Snapshot) extends FileIndex {
@@ -571,8 +570,6 @@ class ManifestFileIndex(spark: SparkSession, dir: String,
   // version), the same metadata the commit wrote; no directory walks.
   private val statuses = snap.files.map(f =>
     fs.getFileStatus(new Path(s"$dir/$f")))
-
-  private lazy val stats = ZoneMap.fileStats(spark, dir, snap.version)
 
   lazy val dataSchema: StructType =
     ManifestTable.cachedSchema(spark, dir, snap.version, "merged") {
@@ -624,30 +621,21 @@ class ManifestFileIndex(spark: SparkSession, dir: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = stats match {
-      case None => statuses
-      case Some(st) =>
-        val byFile = st.map(s => s.file -> s).toMap
-        val bounds = dataFilters.flatMap(boundOf)
-        statuses.filter { f =>
-          // URI paths on both sides: FileStatus paths carry a scheme
-          // ("file:/..."), the manifest's relative entries don't
-          val rel = f.getPath.toUri.getPath.stripPrefix(
-            new Path(dir).toUri.getPath).stripPrefix("/")
-          byFile.get(rel) match {
-            case None => true // unknown file: never prune without evidence
-            case Some(s) =>
-              bounds.forall { case (col, lo, hi, slo, shi) =>
-                val longOk =
-                  if (!s.lo.contains(col)) true
-                  else lo.forall(s.hi(col) >= _) && hi.forall(s.lo(col) <= _)
-                val strOk =
-                  if (!s.slo.contains(col)) true
-                  else slo.forall(s.shi(col) >= _) && shi.forall(s.slo(col) <= _)
-                longOk && strOk
-              }
-          }
+    val bounds = dataFilters.flatMap(boundOf)
+    // statuses follow snap.files one to one, so the manifest's relative
+    // path keys each file's entry
+    val kept = snap.files.zip(statuses).collect {
+      case (rel, f) if snap.stats.get(rel).forall { s => // unknown file: never prune
+        bounds.forall { case (col, lo, hi, slo, shi) =>
+          val longOk =
+            if (!s.lo.contains(col)) true
+            else lo.forall(s.hi(col) >= _) && hi.forall(s.lo(col) <= _)
+          val strOk =
+            if (!s.slo.contains(col)) true
+            else slo.forall(s.shi(col) >= _) && shi.forall(s.slo(col) <= _)
+          longOk && strOk
         }
+      } => f
     }
     Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }

@@ -71,12 +71,9 @@ object GraftSink extends graft.QueryModule {
         }
         val staged = ManifestTable.stageDataFiles(first, dir)
         // X134 composition: per-batch zone maps keep the sink table prunable
-        val stats: (Option[ManifestTable.Snapshot], Int) => Unit =
-          if (statsCols.isEmpty) (_, _) => ()
-          else ZoneMap.appendStats(spark, dir,
-            ZoneMap.statsFor(spark, dir, staged, statsCols, Nil))
         ManifestTable.appendStagedRetrying(spark, dir, 20250801, 0, staged,
-          beforeCommit = stats, state = txn)
+          state = txn, stats = if (statsCols.isEmpty) Nil
+            else ZoneMap.statsFor(spark, dir, staged, statsCols, Nil))
       } else {
         // X180: each batch lands COPY-ON-WRITE over touched files only
         // (Merge.upsertCow) — commit cost tracks the batch, not the

@@ -181,17 +181,8 @@ class GraftStreamSource(spark: SparkSession, dir: String,
       throw new NoSuchElementException(s"no version $v at $dir"))
     val prevFiles = snaps.find(_.version == v - 1)
       .map(_.files.toSet).getOrElse(Set.empty)
-    val fresh = snap.files.filterNot(prevFiles)
-    val stats = graft.lake.ZoneMap.fileStats(spark, dir, v.toInt)
-      .getOrElse(Nil).map(s => s.file -> s.rows).toMap
-    val conf = spark.sparkContext.hadoopConfiguration
-    def footerRows(rel: String): Long = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(s"$dir/$rel"), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }
-    fresh.map(f => stats.getOrElse(f, footerRows(f))).sum
+    snap.files.filterNot(prevFiles).map(f => snap.stats.get(f).map(_.rows)
+      .filter(_ >= 0).getOrElse(ManifestTable.footerRows(spark, dir, f))).sum
   })
 
   override def getOffset: Option[Offset] = offer().map(LongOffset(_))

@@ -59,4 +59,25 @@ class BloomIndexSpec extends SparkSpec {
     val all = ManifestTable.snapshots(spark, dir).find(_.version == 1).get.files
     assert(BloomIndex.fileBlooms(spark, dir, 1).exists(_.size == all.size))
   }
+
+  test("a bloom column named with a quote round-trips its sidecar") {
+    val qdir = graft.util.Scratch.dir("bloom_quote")
+    val df = (0L until 32L).map(k => (k, k % 4)).toDF("k\"q", "t").repartition(4, col("t"))
+    BloomIndex.commitWithBloom(df, qdir, 20250601, 1200, "k\"q")
+    assert(BloomIndex.fileBlooms(spark, qdir, 1).exists(_.forall(_.column == "k\"q")))
+    assert(BloomIndex.readIn(spark, qdir, 1, "k\"q", Seq(5L, 6L))
+      .select(col("`k\"q`")).as[Long].collect().toSet == Set(5L, 6L))
+  }
+
+  test("vacuum deletes the bloom sidecar of every expired version") {
+    val vdir = graft.util.Scratch.dir("bloom_vacuum")
+    val df = (0L until 16L).map(k => (k, s"p$k")).toDF("k", "p").repartition(2)
+    BloomIndex.commitWithBloom(df, vdir, 20250601, 1200, "k")
+    BloomIndex.commitWithBloom(df, vdir, 20250601, 1300, "k")
+    Vacuum.vacuum(spark, vdir, keepLast = 1)
+    val fs = new org.apache.hadoop.fs.Path(vdir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$vdir/_manifests/v00000001.bloom.json")))
+    assert(BloomIndex.fileBlooms(spark, vdir, 2).nonEmpty)
+  }
 }

@@ -196,6 +196,25 @@ class ManifestSpec extends SparkSpec {
       ManifestTable.cloneVersion(spark, src, dst, 20250901, 1400))
   }
 
+  test("X108 clone carries the source version's state and zone maps") {
+    val src = tmpTable()
+    val dst = tmpTable() + "/t"
+    ZoneMap.commitWithStats((0L until 80L).map(k => (k, k * 10)).toDF("k", "price")
+      .repartitionByRange(4, $"k"), src, 20250901, 900, Seq("k"))
+    ColumnMap.renameColumn(spark, src, "price", "amount")
+    Properties.set(spark, src, Map("owner" -> "ops"), 20250901, 910)
+    ManifestTable.cloneVersion(spark, src, dst, 20250901, 1000)
+    Seq(src, dst).foreach { d =>
+      val v = ManifestTable.latestVersion(spark, d).get
+      assert(ColumnMap.read(spark, d).columns.toSeq == Seq("k", "amount"), d)
+      assert(Properties.active(spark, d) == Map("owner" -> "ops"), d)
+      assert(ZoneMap.candidateFiles(spark, d, v, "k", 0L, 10L).size == 1,
+        s"$d must prune on its zone maps")
+    }
+    assert(ColumnMap.read(spark, dst).where($"k" === 7L).select("amount")
+      .as[Long].collect().toSeq == Seq(70L))
+  }
+
   test("X102 history: operation kinds derive from manifest metadata alone") {
     val dir = tmpTable()
     ManifestTable.commit(
@@ -314,33 +333,59 @@ class ManifestSpec extends SparkSpec {
     assert(metaBefore._1 == Map("owner" -> "ops") &&
       metaBefore._2 == Seq(Constraints.Check("pos", "k > 0")) &&
       metaBefore._3.map(f => f.logical -> f.physical) == Seq("k" -> "k", "w" -> "v", "id" -> "id"))
-    def keeps(kind: String)(commit: => Any): Unit = {
-      commit
+    // the stats-carrying input: every commit kind must keep, unchanged,
+    // the zone-map entry of each file it keeps (restore: of each file it
+    // brings back)
+    val sdir = tmpTable()
+    ZoneMap.commitWithStats(rows(1L to 40L).repartitionByRange(4, $"k"), sdir,
+      20250901, 900, Seq("k"))
+    ZoneMap.appendWithStats(rows(41L to 60L).repartitionByRange(2, $"k"), sdir,
+      20250901, 901, Seq("k"))
+    def entries(): Map[String, ZoneMap.FileStats] = ZoneMap.fileStats(spark, sdir,
+      ManifestTable.latestVersion(spark, sdir).get).getOrElse(Nil).map(e => e.file -> e).toMap
+    val seen = scala.collection.mutable.Map(entries().toSeq: _*)
+    assert(seen.size == 6)
+    def keeps(kind: String)(commit: String => Any): Unit = {
+      commit(dir)
       assert(meta() == metaBefore, s"$kind dropped the table metadata")
+      commit(sdir)
+      val now = entries()
+      ManifestTable.snapshots(spark, sdir).last.files.filter(seen.contains).foreach(f =>
+        assert(now.get(f) == seen.get(f), s"$kind changed or dropped the zone-map entry of $f"))
+      seen ++= now
     }
-    keeps("write")(ManifestTable.commitRetrying(ManifestTable.readLatest(spark, dir), dir,
-      20250901, at.next()))
-    keeps("delete")(DeleteVectors.deleteWhere(spark, dir, col("k") === 1L, 20250901, at.next()))
-    keeps("materialize")(DeleteVectors.materialize(spark, dir, 20250901, at.next()))
+    keeps("write")(d => if (d == sdir) ZoneMap.commitWithStats(
+        ManifestTable.readLatest(spark, d).repartitionByRange(4, $"k"), d, 20250901,
+        at.next(), Seq("k"))
+      else ManifestTable.commitRetrying(ManifestTable.readLatest(spark, d), d,
+        20250901, at.next()))
+    keeps("delete")(DeleteVectors.deleteWhere(spark, _, col("k") === 1L, 20250901, at.next()))
+    keeps("materialize")(DeleteVectors.materialize(spark, _, 20250901, at.next()))
     // v2 predates the identity append and the metadata: the restore still
-    // keeps today's state
-    keeps("restore")(Restore.restore(spark, dir, 2, 20250901, at.next()))
-    keeps("optimize")(ZOrder.optimizeN(spark, dir, Seq("k"), 2, 20250901, at.next()))
-    keeps("merge")(Merge.upsertCow(spark, dir, rows(Seq(5L)), Seq("k"), 20250901, at.next()))
-    keeps("replace_where")(ReplaceWhere.replaceWhere(spark, dir, "k", 6L, 6L, rows(Seq(6L)),
+    // keeps today's state, and brings back v2's files with their entries
+    keeps("restore")(Restore.restore(spark, _, 2, 20250901, at.next()))
+    assert(entries().size == 6)
+    keeps("optimize")(ZOrder.optimizeN(spark, _, Seq("k"), 2, 20250901, at.next()))
+    keeps("merge")(Merge.upsertCow(spark, _, rows(Seq(5L)), Seq("k"), 20250901, at.next()))
+    keeps("replace_where")(ReplaceWhere.replaceWhere(spark, _, "k", 6L, 6L, rows(Seq(6L)),
       20250901, at.next(), Seq("k")))
-    val cur = ManifestTable.readLatest(spark, dir)
-    keeps("repair")(TableDiff.repair(cur.withColumn("v", when(col("k") === 2L, lit(222L))
-      .otherwise(col("v"))), dir, Seq("k"), 4, 20250901, at.next()))
+    keeps("repair") { d =>
+      val cur = ManifestTable.readLatest(spark, d)
+      TableDiff.repair(cur.withColumn("v", when(col("k") === 2L, lit(222L))
+        .otherwise(col("v"))), d, Seq("k"), 4, 20250901, at.next())
+    }
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(s"$dir/${ManifestTable.snapshots(spark, dir).last.files.head}"), false)
-    keeps("fsck")(Fsck.repair(spark, dir, 20250901, at.next()))
-    keeps("append")(ManifestTable.appendRetrying(rows(Seq(8L)), dir, 20250901, at.next()))
+    keeps("fsck") { d =>
+      fs.delete(new Path(s"$d/${ManifestTable.snapshots(spark, d).last.files.head}"), false)
+      Fsck.repair(spark, d, 20250901, at.next())
+    }
+    keeps("append")(ManifestTable.appendRetrying(rows(Seq(8L)), _, 20250901, at.next()))
     assert(ManifestTable.snapshots(spark, dir).map(_.op).toSet == Set("append", "write",
       "materialize", "restore", "optimize", "setproperty", "constraint", "merge",
       "replace_where", "repair", "fsck", "rename"))
     assert(state() == before)
-    keeps("vacuum")(Vacuum.vacuum(spark, dir, keepLast = 1))
+    assert(entries().nonEmpty)
+    keeps("vacuum")(Vacuum.vacuum(spark, _, keepLast = 1))
     assert(ManifestTable.snapshots(spark, dir).size == 1)
     assert(state() == before)
   }

@@ -117,8 +117,62 @@ class ZoneMapSpec extends SparkSpec {
     val dir = Scratch.dir("zm_oldstats")
     ZoneMap.commitWithStats(keyedRows.repartitionByRange(4, $"k"),
       dir, 20250401, 900, Seq("k"))
-    // rewrite the sidecar the way the pre-X69 writer would have (no
-    // "rows" field) — json4s must fill the -1 default
+    // write the sidecar the way the pre-X69 writer did (no "rows" field)
+    // — the parser must fill the -1 default
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = new org.apache.hadoop.fs.Path(s"$dir/_manifests/v00000001.stats.json")
+    val rowsLess = ZoneMap.fileStats(spark, dir, 1).get.map(s =>
+      s"""{"file": "${s.file}", "lo": {"k": ${s.lo("k")}}, "hi": {"k": ${s.hi("k")}}}""")
+      .mkString("[", ",\n ", "]")
+    val out = fs.create(p, true)
+    try out.write(rowsLess.getBytes("UTF-8")) finally out.close()
+    assert(ZoneMap.fileStats(spark, dir, 1).get.forall(_.rows == -1L))
+    assert(ZoneMap.metaCount(spark, dir, 1).isEmpty)
+    val (cnt, scanned) = ZoneMap.countRange(spark, dir, 1, "k", 100, 299)
+    assert(cnt == 200L)
+    assert(scanned > 0, "rows-less stats cannot answer from metadata")
+  }
+
+  test("X69: stats-only answers degrade to scanning on a version with tombstones") {
+    val dir = Scratch.dir("zm_count_dv")
+    ManifestTable.commit(keyedRows.repartitionByRange(4, $"k"), dir, 20250401, 900)
+    DeleteVectors.deleteWhere(spark, dir, $"k" < 100L, 20250401, 1000)
+    ZoneMap.analyze(spark, dir)
+    // the entries count raw rows: 800 of them, but only 700 are live and
+    // the smallest live key is 100
+    assert(ZoneMap.fileStats(spark, dir, 2).get.map(_.rows).sum == 800L)
+    assert(ZoneMap.metaCount(spark, dir, 2).isEmpty)
+    assert(ZoneMap.metaMinMax(spark, dir, 2, "k").isEmpty)
+    val (_, inside, straddle) = ZoneMap.classifyRange(spark, dir, 2, "k", 0, 799)
+    assert(inside.isEmpty && straddle.size == 4)
+    assert(ZoneMap.countRange(spark, dir, 2, "k", 0, 199)._1 == 100L)
+    assert(ZoneMap.countRange(spark, dir, 2, "k", 0, 799)._1 == 700L)
+  }
+
+  test("zone maps round-trip a column named with a quote") {
+    val dir = Scratch.dir("zm_quote")
+    val rows = keyedRows.withColumnRenamed("k", "k\"q").withColumnRenamed("payload", "p\\s")
+    ZoneMap.commitWithStats(rows.repartitionByRange(4, col("`k\"q`")), dir,
+      20250401, 900, Seq("k\"q"), strCols = Seq("p\\s"), setCols = Seq("grp"))
+    val stats = ZoneMap.fileStats(spark, dir, 1).get
+    assert(stats.size == 4 && stats.forall(s => s.lo.contains("k\"q") &&
+      s.slo.contains("p\\s") && s.vals("grp").nonEmpty))
+    assert(ZoneMap.candidateFiles(spark, dir, 1, "k\"q", 0, 10).size == 1)
+    assert(ZoneMap.metaMinMax(spark, dir, 1, "k\"q").contains((0L, 799L)))
+  }
+
+  test("an ANALYZE or old-table sidecar is read as its version's entries, and the next commit folds them into the log") {
+    val dir = Scratch.dir("zm_fold")
+    ManifestTable.commit(keyedRows.repartitionByRange(4, $"k"), dir, 20250401, 900)
+    assert(ZoneMap.fileStats(spark, dir, 1).isEmpty)
+    val analyzed = ZoneMap.analyze(spark, dir, Some(Seq("k")))
+    // the sidecar is the version's entries; no new commit
+    assert(ManifestTable.snapshots(spark, dir).map(_.version) == Seq(1))
+    assert(ZoneMap.fileStats(spark, dir, 1).contains(analyzed))
+    assert(ZoneMap.candidateFiles(spark, dir, 1, "k", 0, 10).size == 1)
+    // an old table's sidecar may name files its version does not hold:
+    // the resolver keeps the version's own
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(s"$dir/_manifests/v00000001.stats.json")
@@ -126,14 +180,19 @@ class ZoneMapSpec extends SparkSpec {
       val in = fs.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     }
-    val stripped = text.replaceAll(""",\s*"rows":\s*-?\d+""", "")
     val out = fs.create(p, true)
-    try out.write(stripped.getBytes("UTF-8")) finally out.close()
-    assert(ZoneMap.fileStats(spark, dir, 1).get.forall(_.rows == -1L))
-    assert(ZoneMap.metaCount(spark, dir, 1).isEmpty)
-    val (cnt, scanned) = ZoneMap.countRange(spark, dir, 1, "k", 100, 299)
-    assert(cnt == 200L)
-    assert(scanned > 0, "rows-less stats cannot answer from metadata")
+    try out.write(text.replaceFirst("\\[",
+      """[{"file": "data/v00000009/gone.parquet", "lo": {"k": 0}, "hi": {"k": 0}, "rows": 1},""")
+      .getBytes("UTF-8")) finally out.close()
+    assert(ZoneMap.fileStats(spark, dir, 1).contains(analyzed))
+    // the next commit, of any kind, carries the entries in its manifest
+    ManifestTable.appendRetrying(Seq((900L, 1L, "x")).toDF("k", "grp", "payload"),
+      dir, 20250401, 1000)
+    fs.delete(p, false)
+    assert(ZoneMap.fileStats(spark, dir, 1).isEmpty)
+    assert(ZoneMap.fileStats(spark, dir, 2).contains(analyzed))
+    assert(ZoneMap.candidateFiles(spark, dir, 2, "k", 0, 10).size == 2,
+      "the analyzed file and the appended stats-less one")
   }
 
   test("X134 appendWithStats: skipping survives appends; stats-less parents degrade safely") {
