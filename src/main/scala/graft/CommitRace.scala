@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.lake.{Catalog, DeleteVectors, ManifestTable}
+import graft.lake.{Catalog, DeleteVectors, LostRace, ManifestTable, ZOrder}
 
 /** Two-PROCESS optimistic-commit race runner (dev harness, driven by
   * `tools/commit_race.sh`).
@@ -21,8 +21,10 @@ import graft.lake.{Catalog, DeleteVectors, ManifestTable}
   *
   * Modes (first arg):
   *  - `seed <dir>`            — commit v1: ids 1..10 tagged "base"
-  *  - `append <dir> <tag> <rounds> <startFile>` — wait for startFile,
-  *    then `rounds` × appendRetrying of one `(id, tag)` row each; writes
+  *  - `append <dir> <tag> <rounds> <startFile> [optimize]` — wait for
+  *    startFile, then `rounds` × appendRetrying of one `(id, tag)` row
+  *    each, with `optimize` each followed by an OPTIMIZE (a bin-pack to
+  *    one file, which makes one attempt and may lose its race); writes
   *    its committed version list to `<dir>/_versions_<tag>.txt`
   *  - `delete <dir> <rounds> <startFile>` — `rounds` × delete of base id
   *    `2k` (k = 1..rounds ≤ 5): predicates touch only seeded rows, so the
@@ -45,6 +47,10 @@ import graft.lake.{Catalog, DeleteVectors, ManifestTable}
   *  - `check-cat <root> <aRounds>` — cut versions contiguous with no
   *    gaps, per-writer strictly increasing, the final cut references BOTH
   *    writers' final table versions, and both tables read back exactly
+  *  - `check-appendopt <dir> <rounds>` — after an `append … optimize`
+  *    race: every version in the log reads (no writer ever touched
+  *    another's committed files), and the latest holds exactly the seeded
+  *    rows plus both writers' appends
   *
   * Retry budget is deliberately generous (100): unlike the barrier-synced
   * spec, an unsynchronized process can lose many consecutive races in a
@@ -95,15 +101,21 @@ object CommitRace {
     case "append" =>
       val s = session(); import s.implicits._
       val (dir, tag, rounds) = (args(1), args(2), args(3).toInt)
+      val optimize = args.lift(5).contains("optimize")
       awaitStart(args(4), tag)
+      var lost = 0
       val versions = (1 to rounds).map { i =>
-        ManifestTable.appendRetrying(
+        val v = ManifestTable.appendRetrying(
           Seq((1000L * (tag.hashCode.abs % 97 + 1) + i, tag)).toDF("id", "tag"),
           dir, 20250816, 900 + i, maxRetries = Retries)
+        if (optimize)
+          try ZOrder.binPack(s, dir, Long.MaxValue / 4, 20250816, 900 + i)
+          catch { case _: LostRace => lost += 1 }
+        v
       }
       Files.writeString(Paths.get(s"$dir/_versions_$tag.txt"),
         versions.mkString(","))
-      println(s"RACE append $tag versions=${versions.mkString(",")}")
+      println(s"RACE append $tag versions=${versions.mkString(",")} lost_optimize=$lost")
       s.stop()
 
     case "delete" =>
@@ -112,7 +124,7 @@ object CommitRace {
       require(rounds <= 5, "only 5 even base ids exist to delete")
       awaitStart(args(3), "del")
       val versions = (1 to rounds).map { k =>
-        DeleteVectors.deleteWhereRetrying(s, dir, col("id") === (2L * k),
+        DeleteVectors.deleteWhere(s, dir, col("id") === (2L * k),
           20250816, 900 + k, maxRetries = Retries)
       }
       Files.writeString(Paths.get(s"$dir/_versions_del.txt"),
@@ -168,7 +180,7 @@ object CommitRace {
       val (dir, tag, rounds) = (args(1), args(2), args(3).toInt)
       awaitStart(args(4), tag)
       val versions = (1 to rounds).map { i =>
-        ManifestTable.commitRetrying(Seq((1L, tag)).toDF("id", "v"),
+        ManifestTable.commit(Seq((1L, tag)).toDF("id", "v"),
           dir, 20250816, 900 + i, maxRetries = Retries)
       }
       Files.writeString(Paths.get(s"$dir/_versions_$tag.txt"),
@@ -215,6 +227,25 @@ object CommitRace {
       Files.writeString(Paths.get(s"$root/_versions_$tag.txt"),
         versions.mkString(","))
       println(s"RACE cat $tag versions=${versions.mkString(",")}")
+      s.stop()
+
+    case "check-appendopt" =>
+      val s = session(); import s.implicits._
+      val (dir, rounds) = (args(1), args(2).toInt)
+      val (va, vb) = (readVersions(dir, "a"), readVersions(dir, "b"))
+      assert(strictlyIncreasing(va) && strictlyIncreasing(vb),
+        s"per-writer versions must strictly increase: a=$va b=$vb")
+      val snaps = ManifestTable.snapshots(s, dir)
+      assert(snaps.map(_.version) == (1 to snaps.size),
+        "log must hold every version exactly once")
+      // every version reads: a losing OPTIMIZE deleted no committed file
+      snaps.foreach(v => ManifestTable.readVersion(s, dir, v.version).count())
+      val got = ManifestTable.readLatest(s, dir)
+        .groupBy("tag").count().as[(String, Long)].collect().toMap
+      assert(got == Map("base" -> 10L, "a" -> rounds.toLong, "b" -> rounds.toLong),
+        s"no lost or doubled append: $got")
+      println(s"RACE check-appendopt OK versions=${snaps.size} " +
+        s"optimized=${snaps.count(_.op == "optimize")}")
       s.stop()
 
     case "check-cat" =>

@@ -26,7 +26,7 @@ import graft.sources.Tables
   *
   * At real scale step 3 composes with the layout tiers instead of a full
   * state scan: state files committed fp-sorted carry zone maps (X57/X78)
-  * and per-file Bloom sidecars (X81), so a batch's fingerprint set prunes
+  * and per-file Bloom filters (X81), so a batch's fingerprint set prunes
   * to the handful of state files it can touch — the probe cost tracks the
   * BATCH, not the corpus. The admission decision itself is what this
   * operator pins: per-doc outcome (`new` / `dup_in_batch` /

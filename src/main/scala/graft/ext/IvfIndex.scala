@@ -123,7 +123,7 @@ object IvfIndex {
     */
   def delete(s: SparkSession, pred: org.apache.spark.sql.Column, root: String,
       date: Int, time: Int): Int = {
-    val lv = graft.lake.DeleteVectors.deleteWhereRetrying(
+    val lv = graft.lake.DeleteVectors.deleteWhere(
       s, s"$root/lists", pred, date, time)
     Catalog.publishCatalog(s, root, date, time, Map("lists" -> lv))
   }

@@ -3,15 +3,12 @@ package graft.lake
 import java.io.ByteArrayInputStream
 import java.util.Base64
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
-import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 import graft.sources.Tables
 
@@ -23,10 +20,11 @@ import graft.sources.Tables
   * straddling the key and scans the world. A few-KB Bloom filter per
   * file answers "might this file contain key x?" regardless of layout —
   * Parquet added exactly this as its column bloom filters; keeping them
-  * in the MANIFEST sidecar (like Iceberg puts them in puffin files)
-  * means planning stays metadata-only: no footer round-trips, no file
-  * opens, at object-store latency the difference between one GET of a
-  * small sidecar and one GET per file.
+  * in the MANIFEST's per-file entries ([[ZoneMap.FileStats]]' `blooms`,
+  * next to the zone maps) means planning stays metadata-only: no footer
+  * round-trips, no file opens, at object-store latency the difference
+  * between one GET of the manifest and one GET per file. Every commit
+  * keeps the entry of each file it keeps, filter included.
   *
   * Build shape: ONE distributed aggregate over the staged files,
   * `groupBy(_metadata.file_path).agg(bloom_filter_agg(xxhash64(key)))` —
@@ -34,9 +32,9 @@ import graft.sources.Tables
   * the same native machinery X36 uses for the runtime semi-join filter.
   * Driver traffic is one serialized filter per file, sized from the
   * staged row counts and capped, same class of payload as the zone-map
-  * sidecar itself.
+  * entries themselves.
   *
-  * Read shape: deserialize the (tiny) sidecar, test each lookup key
+  * Read shape: decode the version's filters, test each lookup key
   * against each file's filter driver-side, scan only files some key
   * might live in — with the predicate STILL applied, so a Bloom false
   * positive costs a wasted scan, never a wrong row, and pruning is
@@ -48,21 +46,11 @@ import graft.sources.Tables
   */
 object BloomIndex extends graft.QueryModule {
 
-  /** One file's serialized Bloom filter for `column` (base64 in the
-    * sidecar JSON; the bytes are `BloomFilter.writeTo` format, readable
-    * by `BloomFilter.readFrom`).
-    */
-  case class FileBloom(file: String, column: String, b64: String)
-
-  private def bloomName(version: Int) = f"v$version%08d.bloom.json"
-  private def bloomPath(dir: String, version: Int) =
-    new Path(s"$dir/_manifests", bloomName(version))
-
   /** Hash seed shared by build and probe (and by X36). */
   private val Seed = 42L
 
   /** Cap per-file filter size (1 MiB of bits) — an overestimated row
-    * count degrades to a bounded sidecar, never an unbounded allocation.
+    * count degrades to a bounded entry, never an unbounded allocation.
     */
   val MaxBitsPerFile: Long = 8388608L
 
@@ -74,18 +62,17 @@ object BloomIndex extends graft.QueryModule {
     XxHash64(Seq(Literal(v)), Seed).eval(InternalRow.empty).asInstanceOf[Long]
 
   /** Commit `df` as the next version with a per-file Bloom index on
-    * `bloomCol` (an integral key column, hashed as long). Commit order:
-    * data files → bloom sidecar → manifest rename (the rename stays the
-    * single commit point, ManifestSpec semantics). Returns the version.
+    * `bloomCol` (an integral key column, hashed as long): stage, build
+    * one filter per staged file, and publish them in the files'
+    * manifest entries through the retrying replace — the same put as the
+    * file list, so a lost or crashed attempt leaves no filter behind.
+    * Returns the version.
     */
   def commitWithBloom(df: DataFrame, dir: String, date: Int, time: Int,
       bloomCol: String, fpp: Double = 0.01): Int = {
     val spark = df.sparkSession
-    val parent = ManifestTable.snapshots(spark, dir).lastOption
-    val version = parent.fold(1)(_.version + 1)
-    val files = ManifestTable.writeDataFiles(df, dir, version)
-
-    val staged = spark.read.parquet(f"$dir/data/v$version%08d")
+    val files = ManifestTable.stageDataFiles(df, dir)
+    val staged = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
     // Size filters from the staged data itself: rows per file upper-bounds
     // the file's distinct keys. One cheap count over just-written files.
     val perFile = math.max(staged.count() / math.max(files.size, 1), 1L)
@@ -96,62 +83,51 @@ object BloomIndex extends graft.QueryModule {
         GraftShim.expression(hashCol(col(bloomCol).cast("long"))),
         Literal(perFile), Literal(numBits)).toAggregateExpression())
 
-    val rows = staged
+    val entries = staged
       .groupBy(col("_metadata.file_path").as("file_path"))
       .agg(bloomAgg.as("bloom"))
       .collect() // one filter per staged file — driver-sized by construction
-
-    val blooms = rows.map { r =>
-      val name = r.getAs[String]("file_path").split('/').last
-      val rel = files.find(_.endsWith(name)).getOrElse(
-        throw new IllegalStateException(s"staged file $name missing from listing"))
-      FileBloom(rel, bloomCol,
-        Base64.getEncoder.encodeToString(r.getAs[Array[Byte]]("bloom")))
-    }.toSeq.sortBy(_.file)
-
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val json = JsonMethods.compact(JsonMethods.render(
-      Extraction.decompose(blooms)(DefaultFormats)))
-    val out = fs.create(bloomPath(dir, version), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-
-    ManifestTable.commitManifest(spark, dir, parent, date, time, files)
+      .map { r =>
+        val name = r.getAs[String]("file_path").split('/').last
+        val rel = files.find(_.endsWith(name)).getOrElse(
+          throw new IllegalStateException(s"staged file $name missing from listing"))
+        ZoneMap.FileStats(rel, Map.empty, Map.empty, blooms = Map(bloomCol ->
+          Base64.getEncoder.encodeToString(r.getAs[Array[Byte]]("bloom"))))
+      }.toSeq
+    ManifestTable.commitStaged(spark, dir, date, time, files, stats = entries)
   }
 
-  /** The bloom sidecar for `version`, if one was written. */
-  def fileBlooms(spark: SparkSession, dir: String, version: Int): Option[Seq[FileBloom]] = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = bloomPath(dir, version)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    implicit val fmts: Formats = DefaultFormats
-    Some(JsonMethods.parse(text).extract[Seq[FileBloom]])
-  }
-
-  /** Files of `version` that might contain ANY of `keys` in `column`
-    * per the Bloom sidecar. Files without a filter for `column` stay in
-    * scope; no sidecar → all files.
+  /** The base64 Bloom filters on `column` of `version`'s files, keyed by
+    * file; a file without one is absent.
     */
-  def candidateFilesIn(spark: SparkSession, dir: String, version: Int,
-      column: String, keys: Seq[Long]): Seq[String] = {
-    val all = ManifestTable.snapshots(spark, dir).find(_.version == version)
+  def fileBlooms(spark: SparkSession, dir: String, version: Int,
+      column: String): Map[String, String] =
+    snapshotAt(spark, dir, version).stats.flatMap { case (f, e) =>
+      e.blooms.get(column).map(f -> _) }
+
+  private def snapshotAt(spark: SparkSession, dir: String,
+      version: Int): ManifestTable.Snapshot =
+    ManifestTable.snapshots(spark, dir).find(_.version == version)
       .getOrElse(throw new NoSuchElementException(s"no version $version at $dir"))
-      .files
-    fileBlooms(spark, dir, version) match {
-      case None => all
-      case Some(blooms) =>
-        val hashes = keys.map(hashValue)
-        val indexed = blooms.filter(_.column == column)
-        val hit = indexed.filter { fb =>
-          val filter = BloomFilter.readFrom(
-            new ByteArrayInputStream(Base64.getDecoder.decode(fb.b64)))
-          hashes.exists(filter.mightContainLong)
-        }.map(_.file)
-        val known = indexed.map(_.file).toSet
-        hit ++ all.filterNot(known.contains)
-    }
+
+  /** Files of `snap` that might contain ANY of `keys` in `column` per
+    * their Bloom filters; a file without a filter on `column` stays in
+    * scope.
+    */
+  private def candidates(snap: ManifestTable.Snapshot, column: String,
+      keys: Seq[Long]): Seq[String] = {
+    val hashes = keys.map(hashValue)
+    snap.files.filter(f => snap.stats.get(f).flatMap(_.blooms.get(column)).forall { b64 =>
+      val filter = BloomFilter.readFrom(
+        new ByteArrayInputStream(Base64.getDecoder.decode(b64)))
+      hashes.exists(filter.mightContainLong)
+    })
   }
+
+  /** Files of `version` that might contain ANY of `keys` in `column`. */
+  def candidateFilesIn(spark: SparkSession, dir: String, version: Int,
+      column: String, keys: Seq[Long]): Seq[String] =
+    candidates(snapshotAt(spark, dir, version), column, keys)
 
   /** Read `version` with `column IN keys`, scanning only files the Bloom
     * index cannot rule out. The predicate is STILL applied — pruning must
@@ -159,15 +135,12 @@ object BloomIndex extends graft.QueryModule {
     */
   def readIn(spark: SparkSession, dir: String, version: Int,
       column: String, keys: Seq[Long]): DataFrame = {
-    val cand = candidateFilesIn(spark, dir, version, column, keys)
+    val snap = snapshotAt(spark, dir, version)
+    val cand = candidates(snap, column, keys)
     val pred: Column = col(column).cast("long").isin(keys: _*)
-    if (cand.isEmpty) {
-      ManifestTable.readVersion(spark, dir, version).where(pred)
-    } else {
-      val snap = ManifestTable.snapshots(spark, dir).find(_.version == version).get
-      DeleteVectors.applyTo(spark, dir, snap,
-        graft.sources.Tables.cachedScan(spark, cand.map(f => s"$dir/$f"))).where(pred)
-    }
+    if (cand.isEmpty) ManifestTable.readVersion(spark, dir, version).where(pred)
+    else DeleteVectors.applyTo(spark, dir, snap,
+      graft.sources.Tables.cachedScan(spark, cand.map(f => s"$dir/$f"))).where(pred)
   }
 
   /** Time-clustered commit with a Bloom index on the primary key — the

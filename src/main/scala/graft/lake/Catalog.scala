@@ -86,7 +86,7 @@ object Catalog extends graft.QueryModule {
     writes.map { case (name, df) =>
       require(!name.startsWith("_") && name.matches("[A-Za-z0-9._-]+"),
         s"illegal table name '$name'")
-      name -> ManifestTable.commitRetrying(df, s"$root/$name", date, time)
+      name -> ManifestTable.commit(df, s"$root/$name", date, time)
     }.toMap
 
   /** Step 2 — THE commit point: publish a new catalog version whose table
@@ -165,7 +165,7 @@ object Catalog extends graft.QueryModule {
         s"table '$t' not in catalog version ${latestCut.version}")
     }
     val tvs = preds.map { case (t, p) =>
-      t -> DeleteVectors.deleteWhereRetrying(spark, s"$root/$t", p, date, time)
+      t -> DeleteVectors.deleteWhere(spark, s"$root/$t", p, date, time)
     }.toMap
     publishCatalog(spark, root, date, time, tvs)
   }

@@ -117,7 +117,7 @@ object ColumnMap extends graft.QueryModule {
       Field(i + 1, f.name, f.name, f.dataType.catalogString)
     }.toSeq
     ManifestTable.commitManifest(spark, dir, None, date, time,
-      ManifestTable.writeDataFiles(df, dir, 1),
+      ManifestTable.stageDataFiles(df, dir),
       state = _ => Map(Owner -> json(fields)))
   }
 

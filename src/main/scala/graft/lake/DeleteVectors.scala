@@ -18,16 +18,17 @@ import graft.util.Exact.dsum
   * [[materialize]]) folds the tombstones back into fresh data files when
   * their read-side cost outweighs the write-side saving.
   *
-  * Representation: one parquet sidecar per delete commit under
-  * `deletes/vNNNNNNNN/`, rows `(file: String, pos: Long)` where `file` is
-  * the manifest-relative data path and `pos` the parquet row index
+  * Representation: one parquet sidecar per delete commit, staged under a
+  * writer-unique `deletes/w<8 hex>/` like any data file, rows
+  * `(file: String, pos: Long)` where `file` is the manifest-relative data
+  * path and `pos` the parquet row index
   * (`_metadata.row_index`). Each delete commit writes the version's FULL
   * cumulative vector (prior tombstones unioned in), so a read touches
   * exactly one sidecar — version N's — never a chain.
   *
   * Commit protocol is X39's unchanged: stage the sidecar, then publish a
-  * manifest referencing the SAME data files plus the sidecar via an atomic
-  * rename. A crash before the rename leaves the delete invisible; time
+  * manifest referencing the SAME data files plus the sidecar in one put.
+  * A crash or lost race before the put leaves the delete invisible; time
   * travel to any pre-delete version still sees every row.
   *
   * Scale shape: the delete build scans only the predicate's column
@@ -42,7 +43,7 @@ object DeleteVectors extends graft.QueryModule {
   /** The manifest-relative path of each scanned row's file: everything
     * after the TABLE ROOT in the `_metadata.file_path` URI. Computed by
     * stripping the root prefix — NOT by pattern-matching the
-    * `data/v<NN>` layout — because a manifest may legitimately
+    * `data/w<hex>` layout — because a manifest may legitimately
     * reference files anywhere under the root: X193 `CONVERT TO GRAFT`
     * imports a plain parquet directory whose files sit at the root
     * itself (the layout-shaped regex silently extracted "" there,
@@ -64,7 +65,7 @@ object DeleteVectors extends graft.QueryModule {
       df: DataFrame): DataFrame = {
     if (snap.deletes.isEmpty) df
     else {
-      // sidecar schema is fixed by deleteAttempt — explicit schema skips
+      // sidecar schema is fixed by stageTombstones — explicit schema skips
       // the footer-inference job on every read
       val dv = spark.read
         .schema("file STRING, pos BIGINT")
@@ -83,20 +84,13 @@ object DeleteVectors extends graft.QueryModule {
     * and a cumulative deletion-vector sidecar. Rows already deleted stay
     * deleted (the new vector unions the old); a predicate matching nothing
     * still commits (an auditable no-op version). Returns the new version.
-    */
-  def deleteWhere(spark: SparkSession, dir: String, predicate: Column,
-      date: Int, time: Int): Int =
-    deleteAttempt(spark, dir, predicate, date, time, sidecarRel = None,
-      base = None)
-
-  /** DELETE commit with optimistic concurrency (X96): losing the rename
-    * race RECOMPUTES the tombstones against the new latest version rather
-    * than rebasing the old sidecar — the concurrent commit may have
-    * appended or rewritten rows the predicate must see, so re-evaluation
-    * is the only rebase rule that keeps the delete serializable as
-    * "predicate applied to my parent version". Each attempt stages its
-    * sidecar under a writer-unique `deletes/w<8 hex>` dir so concurrent
-    * delete writers can never clobber each other's staged vectors.
+    *
+    * Optimistic concurrency (X96): losing the commit race RECOMPUTES the
+    * tombstones against the new latest version rather than rebasing the
+    * old sidecar — the concurrent commit may have appended or rewritten
+    * rows the predicate must see, so re-evaluation is the only rebase rule
+    * that keeps the delete serializable as "predicate applied to my parent
+    * version". Each attempt stages its own sidecar.
     *
     * `base`: when set, the tombstones are computed against THAT committed
     * version and ITS file list carries into the new commit — the same
@@ -107,64 +101,57 @@ object DeleteVectors extends graft.QueryModule {
     * the delete commit. The target version number still races past
     * log-latest, so the orphan is never overwritten either.
     */
-  def deleteWhereRetrying(spark: SparkSession, dir: String, predicate: Column,
+  def deleteWhere(spark: SparkSession, dir: String, predicate: Column,
       date: Int, time: Int, maxRetries: Int = 5,
       base: Option[Int] = None): Int =
     ManifestTable.retrying("delete commit", dir, maxRetries) {
-      deleteAttempt(spark, dir, predicate, date, time,
-        Some(s"deletes/w${java.util.UUID.randomUUID.toString.take(8)}"), base)
+      val snaps = ManifestTable.snapshots(spark, dir)
+      require(snaps.nonEmpty, s"no committed snapshot at $dir")
+      val latest = snaps.last
+      // `parent` is the version the delete is semantically applied to: the
+      // caller-declared base (catalog-referenced, for two-phase commits) or
+      // log-latest. Its files — not log-latest's — carry into the commit.
+      val parent = base.map(bv => snaps.find(_.version == bv).getOrElse(
+        throw new NoSuchElementException(s"no committed version $bv at $dir")))
+        .getOrElse(latest)
+      ManifestTable.commitManifest(spark, dir, Some(latest), date, time,
+        parent.files, deletes = stageTombstones(spark, dir, parent, predicate))
     }
 
-  /** One delete-commit attempt against the CURRENT latest snapshot.
-    * `sidecarRel = None` stages at the version-named dir (single-writer
-    * layout, pinned in DeleteVectorSpec); retrying callers pass a
-    * writer-unique dir instead.
+  /** Stage `parent`'s cumulative deletion vector with the rows matching
+    * `hit` added: the raw scan (tombstones NOT applied) finds their
+    * positions — re-deleting an already-deleted position writes the same
+    * `(file, pos)` row, and the union dedups it. Returns the sidecar's
+    * table-relative files.
     */
-  private def deleteAttempt(spark: SparkSession, dir: String,
-      predicate: Column, date: Int, time: Int,
-      sidecarRel: Option[String], base: Option[Int]): Int = {
-    val snaps = ManifestTable.snapshots(spark, dir)
-    require(snaps.nonEmpty, s"no committed snapshot at $dir")
-    val latest = snaps.last
-    // `parent` is the version the delete is semantically applied to: the
-    // caller-declared base (catalog-referenced, for two-phase commits) or
-    // log-latest. Its files — not log-latest's — carry into the commit.
-    val parent = base.map(bv => snaps.find(_.version == bv).getOrElse(
-      throw new NoSuchElementException(s"no committed version $bv at $dir")))
-      .getOrElse(latest)
-    val version = latest.version + 1
-
-    // Raw scan (tombstones NOT applied): re-deleting an already-deleted
-    // position writes the same (file, pos) row, and the union dedups it.
-    val raw = ManifestTable.rawVersionScan(spark, dir, parent)
-    val newDel = raw.where(predicate)
+  private[lake] def stageTombstones(spark: SparkSession, dir: String,
+      parent: ManifestTable.Snapshot, hit: Column): Seq[String] = {
+    val newDel = ManifestTable.rawVersionScan(spark, dir, parent).where(hit)
       .select(relFileIn(dir).as("file"), col("_metadata.row_index").as("pos"))
     val oldDel =
       if (parent.deletes.isEmpty) newDel.limit(0)
       else spark.read.schema("file STRING, pos BIGINT")
         .parquet(parent.deletes.map(f => s"$dir/$f"): _*)
-    val delFiles = ManifestTable.writeParquet(
-      oldDel.unionByName(newDel).dropDuplicates("file", "pos"), dir,
-      sidecarRel.getOrElse(f"deletes/v$version%08d"), "overwrite")
-    ManifestTable.commitManifest(spark, dir, Some(latest), date, time,
-      parent.files, deletes = delFiles)
+    ManifestTable.stageDataFiles(
+      oldDel.unionByName(newDel).dropDuplicates("file", "pos"), dir, "deletes")
   }
 
   /** Fold the latest version's tombstones into fresh data files — the
     * merge-on-read → copy-on-write compaction. The new version carries no
     * deletion vector, so [[Vacuum]] can later reclaim both the old data
-    * files and the sidecars. Returns the new version.
+    * files and the sidecars. One attempt: a concurrent commit fails it
+    * with [[LostRace]]. Returns the new version.
     */
   def materialize(spark: SparkSession, dir: String, date: Int, time: Int): Int = {
     val latest = ManifestTable.snapshots(spark, dir).lastOption.getOrElse(
       throw new NoSuchElementException(s"no committed snapshot at $dir"))
-    val files = ManifestTable.writeDataFiles(
-      ManifestTable.readVersion(spark, dir, latest.version), dir, latest.version + 1)
+    val files = ManifestTable.stageDataFiles(
+      ManifestTable.readVersion(spark, dir, latest.version), dir)
     // op = "materialize" records the commit's content-preservation
     // contract in the manifest (pinned below and in DeleteVectorSpec), so
     // X75 feed consumers skip the step without reading either version.
-    ManifestTable.commitManifest(spark, dir, Some(latest), date, time, files,
-      op = "materialize")
+    // The rewrite is derived from `latest`, so a lost race fails it.
+    ManifestTable.commitOnce(spark, dir, latest, date, time, files, "materialize")
   }
 
   /** Shared X64/X75 fixture timeline (built once per JVM): v1 full commit

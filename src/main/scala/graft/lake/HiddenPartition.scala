@@ -19,7 +19,7 @@ import org.json4s.jackson.JsonMethods
   * Why this matters at 100 TB: directory-level partition pruning is the
   * cheapest filter in the stack — it happens on the DRIVER against
   * listing metadata, before any task launches or any footer is read
-  * (zone maps (X57) and bloom sidecars (X81) still prune WITHIN the
+  * (zone maps (X57) and Bloom filters (X81) still prune WITHIN the
   * surviving partitions). `days(ts)` keeps time-range scans proportional
   * to the range; `bucket(n, key)` turns point lookups into single-
   * directory reads and enables storage-partitioned joins (X12).

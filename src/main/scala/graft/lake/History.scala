@@ -149,7 +149,7 @@ object History extends graft.QueryModule {
       closed: DataFrame, tail: DataFrame, append: Boolean,
       expectBase: Option[Int] = None,
       extra: Map[String, Int] = Map.empty): Int = {
-    val tv = ManifestTable.commitRetrying(tail, s"$root/tail", date, time)
+    val tv = ManifestTable.commit(tail, s"$root/tail", date, time)
     val cv = if (append) {
       // Rebase the closed append on the version the latest CATALOG cut
       // references, not the closed log's latest: a crash between this
@@ -162,7 +162,7 @@ object History extends graft.QueryModule {
         .flatMap(_.tables.get("closed"))
       ManifestTable.appendRetrying(closed, s"$root/closed", date, time,
         base = base)
-    } else ManifestTable.commitRetrying(closed, s"$root/closed", date, time)
+    } else ManifestTable.commit(closed, s"$root/closed", date, time)
     Catalog.publishCatalog(spark, root, date, time,
       Map("closed" -> cv, "tail" -> tv) ++ extra, expectBase = expectBase)
   }
@@ -350,12 +350,12 @@ object History extends graft.QueryModule {
     // never re-enter any referenced version.
     val baseClosed = Catalog.snapshots(spark, root)
       .find(_.version == baseCut).flatMap(_.tables.get("closed"))
-    val vDel = DeleteVectors.deleteWhereRetrying(spark, s"$root/closed",
+    val vDel = DeleteVectors.deleteWhere(spark, s"$root/closed",
       col(key).isin(keyList: _*), date, time, base = baseClosed)
     val cv = ManifestTable.appendRetrying(closedOf(runs, key), s"$root/closed",
       date, time, base = Some(vDel))
     val untouched = tail.join(broadcast(keys), Seq(key), "left_anti")
-    val tv = ManifestTable.commitRetrying(
+    val tv = ManifestTable.commit(
       tailOf(runs, key).unionByName(untouched), s"$root/tail", date, time)
     Catalog.publishCatalog(spark, root, date, time,
       Map("closed" -> cv, "tail" -> tv), expectBase = Some(baseCut))

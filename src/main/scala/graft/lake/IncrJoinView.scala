@@ -45,7 +45,7 @@ object IncrJoinView extends graft.QueryModule {
     val start = ManifestTable.latestVersion(spark, viewDir).getOrElse {
       ManifestTable.commit(
         project(ManifestTable.readVersion(spark, factDir, 1)).join(dim, joinKey),
-        viewDir, date, time)
+        viewDir, date, time, maxRetries = 0)
       1
     }
     for (v <- start until factV) {
@@ -55,7 +55,9 @@ object IncrJoinView extends graft.QueryModule {
       val next = ManifestTable.readVersion(spark, viewDir, v)
         .join(dels, factCols, "left_anti")
         .unionByName(adds)
-      ManifestTable.commit(next, viewDir, date, time)
+      // view version v mirrors fact version v: a concurrent refresh
+      // fails this one rather than shifting the numbering
+      ManifestTable.commit(next, viewDir, date, time, maxRetries = 0)
     }
     factV
   }

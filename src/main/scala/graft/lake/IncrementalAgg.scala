@@ -62,7 +62,9 @@ object IncrementalAgg extends graft.QueryModule {
       case None => d
       case Some(v) => combine(ManifestTable.readVersion(spark, dir, v), d, keys)
     }
-    ManifestTable.commit(next, dir, date, time)
+    // derived from the version just read: a concurrent increment fails
+    // this one rather than being replaced by it
+    ManifestTable.commit(next, dir, date, time, maxRetries = 0)
   }
 
   /** Read a state version at the double boundary (exact sums inside). */

@@ -28,8 +28,8 @@ final class LostRace(msg: String) extends IllegalStateException(msg)
   *
   * Layout under one table dir:
   * {{{
-  *   data/v00000001/part-*.parquet   -- staged first, invisible until...
-  *   _manifests/v00000001.json       -- ...this rename lands (the commit)
+  *   data/w1a2b3c4d/part-*.parquet   -- staged first, invisible until...
+  *   _manifests/v00000001.json       -- ...this put lands (the commit)
   * }}}
   *
   * Manifest JSON: `{"version", "run_date", "run_time", "files": [...],
@@ -40,26 +40,25 @@ final class LostRace(msg: String) extends IllegalStateException(msg)
   * time travel is "read the files of version N", and as-of-T resolution
   * is a scan of the (tiny, driver-side) manifest list — no data listing.
   *
-  * Concurrency: [[commit]] is the single-writer fast path (the
-  * reference's hourly job) — rename-as-commit makes a concurrent second
-  * committer FAIL loudly (rename onto an existing manifest returns
-  * false) instead of silently interleaving. [[commitRetrying]] /
-  * [[appendRetrying]] layer Delta/Iceberg-style OPTIMISTIC CONCURRENCY
-  * on top: data files are staged once under a writer-unique directory
-  * (so concurrent stagers can never clobber each other), and on a lost
-  * rename race only the tiny manifest is rebased against the new latest
-  * version and re-attempted, bounded-N times. Rebase rules by commit
-  * taxonomy (the X75 step kinds): a REPLACE commit carries its own full
-  * file list, so the rebase is just a version bump (last-replace-wins,
-  * both commits land in serializable version order); an APPEND commit
+  * Concurrency: Delta/Iceberg-style OPTIMISTIC CONCURRENCY. Every writer
+  * stages under a WRITER-UNIQUE dir ([[stageDataFiles]]), so nothing is
+  * named for version N before N's manifest lands and an attempt that
+  * loses its race ([[LostRace]]) never touches a committed file (Delta
+  * names its data files uniquely for the same reason). On a lost race
+  * only the tiny manifest is rebased against the new latest version and
+  * re-attempted, bounded-N times. Rebase rules by commit taxonomy (the X75 step kinds): a
+  * REPLACE commit ([[commit]]) carries its own full file list, so the
+  * rebase is just a version bump (last-replace-wins, both commits land
+  * in serializable version order); an APPEND commit ([[appendRetrying]])
   * re-reads the new latest and carries `latest.files ++ staged` plus
   * `latest.deletes` (tombstones reference immutable files still in the
   * list, so they stay valid); a DELETE commit re-evaluates its predicate
-  * against the new latest ([[DeleteVectors.deleteWhereRetrying]]) —
-  * recomputing, not rebasing, because the concurrent commit may have
-  * added or rewritten rows the predicate must see. Readers are always
-  * safe: a manifest is either fully present or absent, and data files
-  * are immutable once published.
+  * against the new latest ([[DeleteVectors.deleteWhere]]) — recomputing,
+  * not rebasing, because the concurrent commit may have added or
+  * rewritten rows the predicate must see. Rewrites derived from the
+  * snapshot they read (OPTIMIZE, REORG) make one attempt and throw
+  * [[LostRace]]. Readers are always safe: a manifest is either fully
+  * present or absent, and data files are immutable once published.
   */
 object ManifestTable extends graft.QueryModule {
 
@@ -120,33 +119,10 @@ object ManifestTable extends graft.QueryModule {
   private[lake] def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Stage the data files for `version` WITHOUT committing them — step 1
-    * of the two-step commit; public so a crash between the steps can be
-    * exercised directly (ManifestSpec). Returns the staged file paths
-    * relative to the table dir.
-    */
-  def writeDataFiles(df: DataFrame, dir: String, version: Int): Seq[String] =
-    writeParquet(df, dir, f"data/v$version%08d", "overwrite")
-
-  /** Write `df` as parquet under the table-relative dir `rel` with save
-    * `mode`, and return the written files' table-relative paths, sorted —
-    * the one staged-file writer behind data, staging and tombstone dirs.
-    */
-  private[lake] def writeParquet(df: DataFrame, dir: String, rel: String,
-      mode: String): Seq[String] = {
-    val dataDir = s"$dir/$rel"
-    df.write.mode(mode).parquet(dataDir)
-    fsFor(df.sparkSession, dataDir).listStatus(new Path(dataDir)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"$rel/${s.getPath.getName}")
-      .sorted
-  }
-
-  /** Step 2: publish the version after `parent` (version 1 for a new
-    * table) by writing its manifest to a temp name and atomically
-    * renaming it into place. The rename IS the commit point — before it,
-    * readers cannot see the version at all; after it, they see all of
-    * it. The manifest carries `parent`'s state with the entries
+  /** Publish the version after `parent` (version 1 for a new table) by
+    * putting its manifest through the [[CommitPrimitive]]. The put IS
+    * the commit point — before it, readers cannot see the version at
+    * all; after it, they see all of it. The manifest carries `parent`'s state with the entries
     * `state(parent)` returns set on top; that function may throw to
     * refuse the commit. It also carries the zone-map entries of `parent`
     * for every file of `files` it keeps, with `stats` (the entries of the
@@ -188,16 +164,6 @@ object ManifestTable extends graft.QueryModule {
     version
   }
 
-  /** Atomic snapshot write: stage data files, then publish the manifest.
-    * Returns the committed version number.
-    */
-  def commit(df: DataFrame, dir: String, date: Int, time: Int): Int = {
-    val spark = df.sparkSession
-    val parent = snapshots(spark, dir).lastOption
-    commitManifest(spark, dir, parent, date, time,
-      writeDataFiles(df, dir, parent.fold(1)(_.version + 1)))
-  }
-
   /** The state hook of a single-writer owner: set `owner`'s entry to
     * `next`, refusing with an IllegalStateException (which escapes
     * [[retrying]]) when the parent's entry is no longer `seen`, the one
@@ -236,17 +202,24 @@ object ManifestTable extends graft.QueryModule {
   def latestState(spark: SparkSession, dir: String, owner: String): Option[JValue] =
     snapshots(spark, dir).lastOption.flatMap(_.state.get(owner))
 
-  /** Stage data files under a WRITER-UNIQUE directory (`data/w<8 hex>`),
-    * detached from any version number — step 1 of the optimistic-
-    * concurrency commit. Unlike [[writeDataFiles]]' version-named dirs,
-    * two concurrent stagers can never overwrite each other here, which is
-    * what makes manifest-only rebase sound: the staged bytes are
-    * immutable for the rest of the attempt loop. Returns table-relative
-    * paths.
+  /** Stage `df` as parquet under a WRITER-UNIQUE directory
+    * (`<root>/w<8 hex>`, save mode `error`), detached from any version
+    * number — step 1 of every commit. `root` is `data` for data files
+    * and `deletes` for tombstone sidecars. Two concurrent stagers can
+    * never overwrite each other, and a losing attempt never touches a
+    * committed file, which is what makes manifest-only rebase sound: the
+    * staged bytes are immutable for the rest of the attempt loop.
+    * Returns the written files' table-relative paths, sorted.
     */
-  def stageDataFiles(df: DataFrame, dir: String): Seq[String] =
-    writeParquet(df, dir, s"data/w${java.util.UUID.randomUUID.toString.take(8)}",
-      "error")
+  def stageDataFiles(df: DataFrame, dir: String, root: String = "data"): Seq[String] = {
+    val rel = s"$root/w${java.util.UUID.randomUUID.toString.take(8)}"
+    val out = s"$dir/$rel"
+    df.write.mode("error").parquet(out)
+    fsFor(df.sparkSession, out).listStatus(new Path(out)).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map(s => s"$rel/${s.getPath.getName}")
+      .sorted
+  }
 
   /** Delete staged-but-uncommitted data dirs (refusal / scratch cleanup —
     * the complement of [[stageDataFiles]]). Accepts the relative paths
@@ -282,29 +255,42 @@ object ManifestTable extends graft.QueryModule {
     result.get
   }
 
-  /** REPLACE commit with optimistic concurrency: the snapshot carries its
-    * own complete file list, so losing a race only bumps the target
-    * version — both writers' commits land, in serializable (version)
-    * order, last replace wins the final state. Returns the committed
-    * version.
+  /** REPLACE commit with optimistic concurrency: stage `df`, then
+    * publish it. The snapshot carries its own complete file list, so
+    * losing a race only bumps the target version — both writers' commits
+    * land, in serializable (version) order, last replace wins the final
+    * state. A replace derived from the table it replaces passes
+    * `maxRetries = 0`, so a concurrent commit fails it instead of being
+    * overwritten. Returns the committed version.
     */
-  def commitRetrying(df: DataFrame, dir: String, date: Int, time: Int,
+  def commit(df: DataFrame, dir: String, date: Int, time: Int,
       maxRetries: Int = 5): Int =
-    commitStagedRetrying(df.sparkSession, dir, date, time,
-      stageDataFiles(df, dir), maxRetries)
+    commitStaged(df.sparkSession, dir, date, time, stageDataFiles(df, dir),
+      maxRetries)
 
-  /** [[commitRetrying]] from already-staged files — the stage-first hook
-    * X187 constraint enforcement needs (validate the staged bytes, then
+  /** [[commit]] from already-staged files — the stage-first hook X187
+    * constraint enforcement needs (validate the staged bytes, then
     * publish exactly those bytes), with `stats` the staged files'
     * zone-map entries.
     */
-  def commitStagedRetrying(spark: SparkSession, dir: String, date: Int,
+  def commitStaged(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
-      stats: Seq[ZoneMap.FileStats] = Nil): Int =
+      stats: Seq[ZoneMap.FileStats] = Nil, op: String = "write"): Int =
     retrying("commit", dir, maxRetries) {
       commitManifest(spark, dir, snapshots(spark, dir).lastOption, date, time,
-        staged, stats = stats)
+        staged, op = op, stats = stats)
     }
+
+  /** One attempt to publish `staged` on top of `parent`, for rewrites
+    * derived from `parent` (OPTIMIZE, REORG): a lost race drops the
+    * staged files, since no retry will publish them, and escapes as
+    * [[LostRace]].
+    */
+  private[lake] def commitOnce(spark: SparkSession, dir: String,
+      parent: Snapshot, date: Int, time: Int, staged: Seq[String],
+      op: String): Int =
+    try commitManifest(spark, dir, Some(parent), date, time, staged, op = op)
+    catch { case e: LostRace => dropStaged(spark, dir, staged); throw e }
 
   /** APPEND commit with optimistic concurrency: the new version is
     * `latest.files ++ staged`, re-read on every attempt so a concurrent
@@ -391,9 +377,12 @@ object ManifestTable extends graft.QueryModule {
       ("stats" -> (if (s.stats.isEmpty) JNothing else statsJson(s.stats.values.toSeq)))
   }
 
-  /** Zone-map entries, sorted by file. */
+  /** Zone-map entries, sorted by file; an entry without Bloom filters
+    * renders no `blooms` field.
+    */
   private def statsJson(entries: Seq[ZoneMap.FileStats]): JValue =
     Extraction.decompose(entries.sortBy(_.file))(DefaultFormats)
+      .removeField(_ == ("blooms", JObject(Nil)))
 
   /** ANALYZE's zone maps for a committed `version`, which it recomputes
     * without a new commit: published beside the manifest under
@@ -576,13 +565,10 @@ object ManifestTable extends graft.QueryModule {
     require(!fs.exists(new Path(manifestDir(dstDir))),
       s"clone target $dstDir already has a manifest log")
     // Files land under WRITER-UNIQUE `w<8 hex>` dirs (one per source
-    // dir, names preserved): keeping the source's version-numbered dirs
-    // would collide with the clone's OWN future commits (its first
-    // delete would overwrite-and-orphan a preserved `deletes/v...`
-    // dir), and X96 staging already guarantees w-dirs never collide
-    // with version-named writes. X64 tombstones key data files by
-    // relative path, so the sidecar contents are REWRITTEN through the
-    // same dir mapping — tombstones follow their files.
+    // dir, names preserved), the layout every commit stages in. X64
+    // tombstones key data files by relative path, so the sidecar contents
+    // are REWRITTEN through the same dir mapping — tombstones follow
+    // their files.
     val dirMap: Map[String, String] =
       (snap.files ++ snap.deletes)
         .map(_.split('/').dropRight(1).mkString("/")).distinct
@@ -609,8 +595,7 @@ object ManifestTable extends graft.QueryModule {
               "^" + java.util.regex.Pattern.quote(od) + "/",
               java.util.regex.Matcher.quoteReplacement(nd) + "/"))
         }
-        writeParquet(remapped, dstDir,
-          s"deletes/w${java.util.UUID.randomUUID.toString.take(8)}", "error")
+        stageDataFiles(remapped, dstDir, "deletes")
       }
     commitManifest(spark, dstDir, None, date, time, files, deletes = deletes,
       state = _ => snap.state,
@@ -737,7 +722,7 @@ object ManifestTable extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Atomic visibility made observable: the fixture commits version 1
     // (orderkey % 3 = 0) and version 2 (orderkey % 3 <= 1), then STAGES a
-    // version-3 write without its manifest — the half-written state a
+    // write without its manifest — the half-written state a
     // crashed or in-flight writer leaves behind. The query reads "latest"
     // (must be exactly v2 — the staged files are invisible) and
     // time-travels back to v1; the oracle recomputes both from the plain
@@ -750,7 +735,7 @@ object ManifestTable extends graft.QueryModule {
           .select("o_orderkey", "o_custkey", "o_totalprice")
         commit(o.where(col("o_orderkey") % 3 === 0), dir, 20250301, 900)
         commit(o.where(col("o_orderkey") % 3 <= 1), dir, 20250301, 1000)
-        writeDataFiles(o.where(col("o_orderkey") % 3 === 2), dir, 3) // no commit
+        stageDataFiles(o.where(col("o_orderkey") % 3 === 2), dir) // no commit
       }
       def summarize(tag: String, df: DataFrame): DataFrame =
         df.agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("sum_total"))

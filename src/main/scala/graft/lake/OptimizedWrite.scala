@@ -68,7 +68,7 @@ object OptimizedWrite extends graft.QueryModule {
   /** REPLACE commit of the rebalanced frame. */
   def commit(df: DataFrame, dir: String, date: Int, time: Int,
       targetBytes: Long = DefaultTargetBytes): Int =
-    ManifestTable.commitStagedRetrying(df.sparkSession, dir, date, time,
+    ManifestTable.commitStaged(df.sparkSession, dir, date, time,
       staged(df, dir, targetBytes))
 
   /** APPEND commit of the rebalanced frame. */

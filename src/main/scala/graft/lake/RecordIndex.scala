@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,9 +19,12 @@ import graft.sources.Tables
   *    it every upsert is a full-table join; with it, cost ∝ touched
   *    files).
   *
-  * The index is itself a parquet table under `_index/v%08d` (written
-  * BEFORE the manifest rename, so the commit point stays the single
-  * atomic rename and a crashed index write leaves no visible version).
+  * The index is itself a parquet table under `_index/v%08d`, written
+  * only AFTER its version's manifest has landed (ANALYZE's post-commit
+  * shape), so a lost or crashed attempt leaves no index for a foreign
+  * commit at that version to adopt; a version without an index (a
+  * crash between the put and the index write, or another writer's
+  * commit) answers lookups by scanning.
   * It stores `(key, file, pos)` from the writer's own
   * `_metadata.file_path/row_index`; at 100 TB the index is just another
   * keyed table — bucketed by key with its own zone maps, probed with an
@@ -36,39 +40,44 @@ object RecordIndex extends graft.QueryModule {
   private def indexRel(version: Int) = f"_index/v$version%08d"
 
   /** Commit `df` as the next version with a record index on `keyCol`.
-    * Order: data files → index table → manifest rename (the commit
-    * point). Returns the version.
+    * Order: staged data files → manifest put (the commit point, through
+    * the retrying replace) → index table of the landed version. Returns
+    * the version.
     */
   def commitWithIndex(df: DataFrame, dir: String, date: Int, time: Int,
       keyCol: String): Int = {
     val spark = df.sparkSession
-    val parent = ManifestTable.snapshots(spark, dir).lastOption
-    val version = parent.fold(1)(_.version + 1)
-    val files = ManifestTable.writeDataFiles(df, dir, version)
-    val staged = spark.read.parquet(f"$dir/data/v$version%08d")
+    val files = ManifestTable.stageDataFiles(df, dir)
+    val staged = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
     val dup = staged.groupBy(col(keyCol)).count().where(col("count") > 1).count()
+    if (dup > 0) ManifestTable.dropStaged(spark, dir, files)
     require(dup == 0L,
       s"record index: $dup duplicate key(s) in '$keyCol' — positions would be ambiguous")
+    val version = ManifestTable.commitStaged(spark, dir, date, time, files)
     staged
       .select(col(keyCol).cast("long").as("key"),
         // store the rel path the manifest lists, not the absolute URI
-        regexp_extract(col("_metadata.file_path"), "(data/v\\d{8}/[^/]+)$", 1).as("file"),
+        DeleteVectors.relFileIn(dir).as("file"),
         col("_metadata.row_index").as("pos"))
-      .write.mode("overwrite").parquet(s"$dir/${indexRel(version)}")
-    ManifestTable.commitManifest(spark, dir, parent, date, time, files)
+      .write.mode("error").parquet(s"$dir/${indexRel(version)}")
+    version
   }
 
-  /** The index table of `version` (immutable once its version is
-    * committed — schema cached like any fixture relation).
+  /** The index table of `version` (immutable once written — schema
+    * cached like any fixture relation).
     */
   def index(spark: SparkSession, dir: String, version: Int): DataFrame =
     Tables.cachedParquet(spark, s"$dir/${indexRel(version)}")
 
   /** Point lookup: exactly the rows whose `keyCol` is in `keys`, opening
-    * only the files the index names. Returns the data rows.
+    * only the files the index names. A version without an index is
+    * scanned whole, with the same predicate. Returns the data rows.
     */
   def pointLookup(spark: SparkSession, dir: String, version: Int,
       keyCol: String, keys: Seq[Long]): DataFrame = {
+    if (!ManifestTable.fsFor(spark, dir).exists(new Path(s"$dir/${indexRel(version)}")))
+      return ManifestTable.readVersion(spark, dir, version)
+        .where(col(keyCol).cast("long").isin(keys: _*))
     val hits = index(spark, dir, version)
       .where(col("key").isin(keys: _*))
       .collect() // lookup-sized by construction

@@ -98,23 +98,11 @@ object TableDiff extends graft.QueryModule {
     val hit = bucketOf(keys, nBuckets).isin(bad.map(Long.box): _*)
 
     val latest = ManifestTable.snapshots(spark, dir).last
-    val version = latest.version + 1
-    // tombstone the divergent buckets on the RAW scan (already-deleted
-    // positions re-tombstone harmlessly — the union dedups), X64 pattern
-    val raw = ManifestTable.rawVersionScan(spark, dir, latest)
-    val newDel = raw.where(hit)
-      .select(DeleteVectors.relFileIn(dir).as("file"),
-        col("_metadata.row_index").as("pos"))
-    val oldDel =
-      if (latest.deletes.isEmpty) newDel.limit(0)
-      else spark.read.schema("file STRING, pos BIGINT")
-        .parquet(latest.deletes.map(f => s"$dir/$f"): _*)
-    val delFiles = ManifestTable.writeParquet(
-      oldDel.unionByName(newDel).dropDuplicates("file", "pos"), dir,
-      f"deletes/v$version%08d", "overwrite")
-
+    // tombstone the divergent buckets (the X64 sidecar) and stage src's
+    // rows for exactly those buckets
+    val delFiles = DeleteVectors.stageTombstones(spark, dir, latest, hit)
     val staged = ManifestTable.stageDataFiles(src.where(hit), dir)
-    ManifestTable.commitManifest(spark, dir, Some(latest), date, time,
+    val version = ManifestTable.commitManifest(spark, dir, Some(latest), date, time,
       latest.files ++ staged, deletes = delFiles, op = "repair")
     Some((version, bad))
   }

@@ -17,83 +17,92 @@ import graft.util.Exact.dsum
   *
   * Deletion order is the crash-safe inverse of X39's commit order:
   * manifest FIRST, then data files. A crash in between leaves orphaned
-  * data that a re-run reclaims, but never a manifest pointing at deleted
-  * files — expired means invisible-then-gone, not broken.
+  * data that a later run reclaims, but never a manifest pointing at
+  * deleted files — expired means invisible-then-gone, not broken.
   *
-  * Reclamation is reference-counted over the RETAINED manifests: X64
-  * delete commits share their predecessor's data files, so a data (or
-  * deletion-vector) directory at or below `latest` survives exactly when
-  * some retained manifest still references a file inside it. The
-  * manifests are driver-side and tiny, so the live set costs nothing to
-  * compute. Staged-but-uncommitted dirs are preserved: the only version a
-  * writer can be staging is `latest+1` (ManifestTable.commit's allocation
-  * rule), and strictly-above-latest dirs are never touched.
-  *
-  * Driver-side work is the manifest listing (tiny by design); data
-  * deletion is one recursive remove per expired version.
+  * One reclaim rule, over the staging dirs under `data/` and `deletes/`
+  * (every commit stages in its own writer-unique dir; tables written
+  * before that hold version-named ones): a dir no RETAINED manifest
+  * references a file in is reclaimed at once if an expired manifest
+  * referenced it, and otherwise once it is older than
+  * `stagedOrphanAgeMs` — a young unreferenced dir may belong to an
+  * in-flight commit attempt (the retention-clock rule Delta's VACUUM
+  * applies to its uniquely named data files). Ownership is
+  * per-file-reference, not per-version: X64 delete commits share their
+  * predecessor's data dirs. The manifests are driver-side and tiny, so
+  * the live set costs nothing to compute; data deletion is one
+  * recursive remove per reclaimed dir.
   */
 object Vacuum extends graft.QueryModule {
 
-  private val DataDirRe = """v(\d{8})""".r
-  private val StagedDirRe = """w[0-9a-f]{8}""".r
   private val CkptRe = """checkpoint-v(\d{8})\.json""".r
-  // a version's cache sidecars: `v<N>.stats.json`, `v<N>.bloom.json`
+  // a version's sidecars: ANALYZE's `v<N>.stats.json` (and any other
+  // `v<N>.<kind>.json` an older writer left)
   private val SidecarRe = """v(\d{8})\..+\.json""".r
+  private val Roots = Set("data", "deletes")
+
+  /** The staging dir (`data/<d>` or `deletes/<d>`) a table-relative file
+    * sits in; None for a file outside them (an X193 converted table's).
+    */
+  private def stagingDir(file: String): Option[String] = file.split('/') match {
+    case Array(root, d, _, _*) if Roots(root) => Some(s"$root/$d")
+    case _ => None
+  }
+
+  /** The staging dirs `snaps` reference a file in. */
+  private def dirsOf(snaps: Seq[ManifestTable.Snapshot]): Set[String] =
+    snaps.flatMap(s => (s.files ++ s.deletes).flatMap(stagingDir)).toSet
+
+  /** The versions of `snaps` a keep-last-`keepLast` retention expires,
+    * after the ref/protect pins (X105): tags pin their target forever,
+    * branches keep the newest keepLast of their own lineage (same policy
+    * as the global log, per branch), and `protect` adds externally
+    * referenced versions — Catalog.vacuumCatalog passes the table
+    * versions its retained cross-table cuts resolve to.
+    */
+  private def expiring(spark: SparkSession, dir: String,
+      snaps: Seq[ManifestTable.Snapshot], keepLast: Int,
+      protect: Set[Int]): Seq[ManifestTable.Snapshot] = {
+    require(keepLast >= 1, "retention must keep at least the latest version")
+    if (snaps.isEmpty) return Nil
+    val pinned = protect ++ Branches.protectedVersions(spark, dir, keepLast)
+    snaps.dropRight(keepLast).filterNot(s => pinned(s.version))
+  }
 
   /** X202 — `VACUUM … DRY RUN`: the exact data files a [[vacuum]] with
-    * the same retention would reclaim, WITHOUT deleting anything (one
-    * row per dead file with its size — Delta's DRY RUN shape). "Dead" =
-    * referenced exclusively by expired versions, under the same ref/
-    * protect pinning rules as the real pass, so the answer is the
-    * contract, not an estimate (VacuumSpec pins set-equality against an
-    * actual vacuum of a twin table). Driver-side metadata only: the
-    * manifests name the files; one `getFileStatus` per dead file prices
-    * them. Staged-orphan dirs are excluded — their reclaim is
-    * age-gated, so a dry run ahead of time cannot speak for them.
+    * the same retention would reclaim at once, WITHOUT deleting anything
+    * (one row per dead file with its size — Delta's DRY RUN shape): the
+    * expired versions' files in the dirs the reclaim rule takes at once,
+    * so the answer is the contract, not an estimate (VacuumSpec pins
+    * set-equality against an actual vacuum). Driver-side metadata only:
+    * the manifests name the files; one `getFileStatus` per dead file
+    * prices them. Unreferenced dirs no expired version names are
+    * excluded — their reclaim is age-gated, so a dry run ahead of time
+    * cannot speak for them.
     */
   def dryRun(spark: SparkSession, dir: String, keepLast: Int,
       protect: Set[Int] = Set.empty): Seq[(String, Long)] = {
-    require(keepLast >= 1, "retention must keep at least the latest version")
     val snaps = ManifestTable.snapshots(spark, dir)
-    if (snaps.isEmpty) return Seq.empty
-    val pinned = protect ++ Branches.protectedVersions(spark, dir, keepLast)
-    val expired = snaps.dropRight(keepLast).filterNot(s => pinned(s.version))
-    val expiredSet = expired.map(_.version).toSet
-    val retained = snaps.filterNot(s => expiredSet(s.version))
-    val live = retained.flatMap(s => s.files ++ s.deletes).toSet
+    val expired = expiring(spark, dir, snaps, keepLast, protect)
+    val doomed = dirsOf(expired) -- dirsOf(snaps.diff(expired))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     expired.flatMap(s => s.files ++ s.deletes).distinct
-      .filterNot(live)
+      .filter(f => stagingDir(f).exists(doomed))
       .map(f => f -> fs.getFileStatus(new Path(s"$dir/$f")).getLen)
       .sortBy(_._1)
   }
 
-  /** Expire all but the newest `keepLast` committed versions. Returns the
-    * expired version numbers. Idempotent: vacuuming twice is a no-op, and
-    * a re-run also reclaims data-only orphans a crashed vacuum (or a
-    * crashed pre-manifest commit whose version number has since been
-    * passed) left behind. Writer-unique staged dirs (`w<8 hex>`, the X96
-    * optimistic-commit staging) carry no version ordering, so an
-    * unreferenced one is reclaimed only once its modification time is
-    * older than `stagedOrphanAgeMs` — younger ones may belong to an
-    * in-flight commit attempt (the retention-clock rule Delta's VACUUM
-    * applies to its UUID-named data files).
+  /** Expire all but the newest `keepLast` committed versions (ref- and
+    * `protect`-pinned versions stay). Returns the expired version
+    * numbers. Idempotent: vacuuming twice is a no-op, and a re-run also
+    * reclaims the unreferenced dirs a crashed vacuum or commit left
+    * behind, once they are older than `stagedOrphanAgeMs`.
     */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int,
       stagedOrphanAgeMs: Long = 24L * 3600 * 1000,
       protect: Set[Int] = Set.empty): Seq[Int] = {
-    require(keepLast >= 1, "retention must keep at least the latest version")
     val snaps = ManifestTable.snapshots(spark, dir)
-    if (snaps.isEmpty) return Seq.empty
-    // Ref-aware retention (X105): a version any ref still resolves to is
-    // NOT garbage — tags pin their target forever, branches keep the
-    // newest keepLast of their own lineage (same policy as the global
-    // log, per branch). `protect` adds externally-referenced versions —
-    // Catalog.vacuumCatalog passes the table versions its retained
-    // cross-table cuts resolve to.
-    val pinned = protect ++ Branches.protectedVersions(spark, dir, keepLast)
-    reclaim(spark, dir, snaps,
-      snaps.dropRight(keepLast).filterNot(s => pinned(s.version)),
+    reclaim(spark, dir, snaps, expiring(spark, dir, snaps, keepLast, protect),
       stagedOrphanAgeMs)
   }
 
@@ -118,18 +127,19 @@ object Vacuum extends graft.QueryModule {
   }
 
   /** The shared reclaim tail: delete expired manifests (+ every sidecar
-    * named for an expired version), then the reference-counted
-    * data/deletes sweep and the superseded-checkpoint cleanup.
+    * named for an expired version), then the staging-dir sweep and the
+    * superseded-checkpoint cleanup.
     */
   private def reclaim(spark: SparkSession, dir: String,
       snaps: Seq[ManifestTable.Snapshot],
       expired: Seq[ManifestTable.Snapshot],
       stagedOrphanAgeMs: Long): Seq[Int] = {
+    if (snaps.isEmpty) return Seq.empty
     val expiredSet = expired.map(_.version).toSet
     val retained = snaps.filterNot(s => expiredSet(s.version))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Manifests first (the version atomically stops existing), its
-    // sidecars with it; file dirs follow in the reference-counted sweep.
+    // sidecars with it; staging dirs follow in the sweep.
     expired.foreach(s =>
       fs.delete(new Path(f"$dir/_manifests/v${s.version}%08d.json"), false))
     val names = fs.listStatus(new Path(s"$dir/_manifests")).toSeq.map(_.getPath.getName)
@@ -146,31 +156,17 @@ object Vacuum extends graft.QueryModule {
     }.sorted
     ckpts.dropRight(1).foreach(v =>
       fs.delete(new Path(f"$dir/_manifests/checkpoint-v$v%08d.json"), false))
-    // Reference-counted sweep + orphan GC in one pass: a data/ or
-    // deletes/ version dir at or below `latest` is dead unless a RETAINED
-    // manifest references a file inside it (X64 delete commits share
-    // their predecessor's data dir, so ownership is per-file-reference,
-    // not per-version). Strictly-above dirs (the in-flight latest+1
-    // staging) are left alone.
-    val latest = snaps.last.version
-    val live: Set[String] = retained.flatMap(s => (s.files ++ s.deletes)
-      .filter(_.count(_ == '/') >= 2)
-      .map(_.split('/').take(2).mkString("/"))).toSet
-    Seq("data", "deletes").foreach { rootName =>
+    // the one reclaim rule (see the object doc)
+    val live = dirsOf(retained)
+    val doomed = dirsOf(expired) -- live
+    val now = System.currentTimeMillis()
+    Roots.foreach { rootName =>
       val root = new Path(s"$dir/$rootName")
-      if (fs.exists(root)) {
-        val now = System.currentTimeMillis()
-        fs.listStatus(root).toSeq.foreach { st =>
-          st.getPath.getName match {
-            case DataDirRe(v) if v.toInt <= latest &&
-                !live(s"$rootName/${st.getPath.getName}") =>
-              fs.delete(st.getPath, true)
-            case StagedDirRe() if !live(s"$rootName/${st.getPath.getName}") &&
-                now - st.getModificationTime > stagedOrphanAgeMs =>
-              fs.delete(st.getPath, true)
-            case _ => ()
-          }
-        }
+      if (fs.exists(root)) fs.listStatus(root).toSeq.filter(_.isDirectory).foreach { st =>
+        val rel = s"$rootName/${st.getPath.getName}"
+        if (!live(rel) &&
+            (doomed(rel) || now - st.getModificationTime > stagedOrphanAgeMs))
+          fs.delete(st.getPath, true)
       }
     }
     expired.map(_.version)

@@ -130,7 +130,9 @@ object ZOrder extends graft.QueryModule {
     * produce one small file per batch; X106 is the same commit WITH
     * z-clustering when there is a filter dimension worth serving.
     * `onlyIfMoreThan` makes it a cheap idempotent policy: a table
-    * already at-or-under the file budget commits nothing.
+    * already at-or-under the file budget commits nothing. The rewrite is
+    * derived from the version it read, so it makes one attempt: a
+    * concurrent commit fails it with [[LostRace]].
     */
   def binPack(spark: SparkSession, dir: String, targetBytes: Long,
       date: Int, time: Int, onlyIfMoreThan: Int = 0): Option[Int] = {
@@ -146,9 +148,8 @@ object ZOrder extends graft.QueryModule {
     if (latest.files.size <= n) return None // already packed to budget
     val folded = ManifestTable.readVersion(spark, dir, latest.version)
       .repartition(n)
-    val files = ManifestTable.writeDataFiles(folded, dir, latest.version + 1)
-    Some(ManifestTable.commitManifest(spark, dir, Some(latest), date, time, files,
-      op = "optimize"))
+    val files = ManifestTable.stageDataFiles(folded, dir)
+    Some(ManifestTable.commitOnce(spark, dir, latest, date, time, files, "optimize"))
   }
 
   /** X196 — banded bin-packing (`OPTIMIZE … WHERE col BETWEEN lo AND

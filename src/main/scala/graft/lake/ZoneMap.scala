@@ -39,16 +39,19 @@ import graft.util.Exact.dsum
 object ZoneMap extends graft.QueryModule {
 
   /** Per-file `[lo, hi]` ranges for the stat columns, plus the file's row
-    * count (X69 stats-only aggregates) and string-typed bounds (X78 —
-    * date strings, ULIDs; lexicographic pruning). `rows = -1` and the
-    * empty string maps mark older entries — readers then degrade to
-    * scanning, never to a wrong answer (json4s fills the defaults when
-    * fields are absent, pinned in ZoneMapSpec).
+    * count (X69 stats-only aggregates), string-typed bounds (X78 —
+    * date strings, ULIDs; lexicographic pruning) and the per-column
+    * Bloom filters of [[BloomIndex]] (column → base64). A column whose
+    * values in the file are all null has no bounds. `rows = -1` and the
+    * empty maps mark older entries — readers then degrade to scanning,
+    * never to a wrong answer (json4s fills the defaults when fields are
+    * absent, pinned in ZoneMapSpec).
     */
   case class FileStats(file: String, lo: Map[String, Long], hi: Map[String, Long],
       rows: Long = -1L,
       slo: Map[String, String] = Map.empty, shi: Map[String, String] = Map.empty,
-      vals: Map[String, Seq[String]] = Map.empty)
+      vals: Map[String, Seq[String]] = Map.empty,
+      blooms: Map[String, String] = Map.empty)
 
   /** X168: distinct-value sets larger than this per (file, column) are
     * NOT recorded — the file then simply never equality-prunes, the same
@@ -80,12 +83,12 @@ object ZoneMap extends graft.QueryModule {
       val name = r.getAs[String]("file_path").split('/').last
       val rel = files.find(_.endsWith(name)).getOrElse(
         throw new IllegalStateException(s"staged file $name missing from listing"))
-      FileStats(rel,
-        statsCols.map(c => c -> r.getAs[Long](s"lo_$c")).toMap,
-        statsCols.map(c => c -> r.getAs[Long](s"hi_$c")).toMap,
+      // an all-null column's bound aggregates are null: no bound, never 0
+      def bounds[T](cs: Seq[String], prefix: String): Map[String, T] =
+        cs.flatMap(c => Option(r.getAs[T](s"$prefix$c")).map(c -> _)).toMap
+      FileStats(rel, bounds[Long](statsCols, "lo_"), bounds[Long](statsCols, "hi_"),
         r.getAs[Long]("n_rows"),
-        strCols.map(c => c -> r.getAs[String](s"slo_$c")).toMap,
-        strCols.map(c => c -> r.getAs[String](s"shi_$c")).toMap,
+        bounds[String](strCols, "slo_"), bounds[String](strCols, "shi_"),
         setCols.flatMap { c =>
           val vs = r.getAs[scala.collection.Seq[String]](s"vals_$c")
           if (vs.size > MaxValsPerFile) None // over cap: absent, never wrong
@@ -120,7 +123,9 @@ object ZoneMap extends graft.QueryModule {
     val strs = pick.filter(c => schema(c).dataType == StringType)
     require(numeric.nonEmpty || strs.nonEmpty,
       s"no integral or string columns among ${pick.mkString(",")}")
-    val stats = statsFor(spark, dir, snap.files, numeric, strs)
+    // the sidecar replaces the version's entries: keep their Bloom filters
+    val stats = statsFor(spark, dir, snap.files, numeric, strs).map(e =>
+      e.copy(blooms = snap.stats.get(e.file).fold(Map.empty[String, String])(_.blooms)))
     ManifestTable.writeStatsSidecar(spark, dir, snap.version, stats)
     stats
   }
@@ -130,24 +135,21 @@ object ZoneMap extends graft.QueryModule {
     */
   def commitStagedWithStats(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], statsCols: Seq[String],
-      strCols: Seq[String] = Nil): Int =
-    ManifestTable.commitStagedRetrying(spark, dir, date, time, staged,
-      stats = statsFor(spark, dir, staged, statsCols, strCols))
+      strCols: Seq[String] = Nil, op: String = "write",
+      setCols: Seq[String] = Nil): Int =
+    ManifestTable.commitStaged(spark, dir, date, time, staged,
+      stats = statsFor(spark, dir, staged, statsCols, strCols, setCols), op = op)
 
   /** Commit `df` as the next version with zone-map stats on `statsCols`
     * (long-comparable columns) and `strCols` (string columns, X78 —
-    * lexicographic bounds). Returns the committed version.
+    * lexicographic bounds): stage, then [[commitStagedWithStats]].
+    * Returns the committed version.
     */
   def commitWithStats(df: DataFrame, dir: String, date: Int, time: Int,
       statsCols: Seq[String], strCols: Seq[String] = Nil,
-      op: String = "write", setCols: Seq[String] = Nil): Int = {
-    val spark = df.sparkSession
-    val parent = ManifestTable.snapshots(spark, dir).lastOption
-    val version = parent.fold(1)(_.version + 1)
-    val files = ManifestTable.writeDataFiles(df, dir, version)
-    ManifestTable.commitManifest(spark, dir, parent, date, time, files, op = op,
-      stats = statsFor(spark, dir, files, statsCols, strCols, setCols))
-  }
+      op: String = "write", setCols: Seq[String] = Nil): Int =
+    commitStagedWithStats(df.sparkSession, dir, date, time,
+      ManifestTable.stageDataFiles(df, dir), statsCols, strCols, op, setCols)
 
   /** APPEND with zone maps on the appended files: one combinable pass
     * over ONLY the appended files; the carried files keep their entries

@@ -32,7 +32,7 @@ import graft.sources.Tables
   *
   * Execution shapes (the 100 TB story, mirroring Delta's):
   *
-  *  - DELETE → X64 deletion vectors ([[DeleteVectors.deleteWhereRetrying]]):
+  *  - DELETE → X64 deletion vectors ([[DeleteVectors.deleteWhere]]):
   *    merge-on-read tombstones, ZERO data files rewritten — cost ∝
   *    matched rows, reclaimed later by X174 maintenance;
   *  - UPDATE → copy-on-write over TOUCHED FILES only: one pruned scan
@@ -226,7 +226,7 @@ case class GraftDeleteCommand(dir: String, params: Map[String, String],
     cond: DmlExpr) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val (date, time) = GraftDataSource.stampOf(params)
-    DeleteVectors.deleteWhereRetrying(spark, dir,
+    DeleteVectors.deleteWhere(spark, dir,
       GraftDmlExec.colOf(cond.e), date, time)
     Seq.empty
   }

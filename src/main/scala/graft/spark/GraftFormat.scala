@@ -110,7 +110,7 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
         val staged = ManifestTable.stageDataFiles(data, dir)
         graft.lake.Constraints.enforceStaged(spark, dir, staged)
         if (append) ManifestTable.appendStagedRetrying(spark, dir, date, time, staged)
-        else ManifestTable.commitStagedRetrying(spark, dir, date, time, staged)
+        else ManifestTable.commitStaged(spark, dir, date, time, staged)
       }
     }
     mode match {
@@ -408,9 +408,12 @@ object GraftDataSource {
     * when the latest version carries ≥ `graft.autoCompact.minFiles`
     * (default 8) files AND the fold would actually shrink the listing
     * (binPack's within-budget no-op), so steady-state writes pay one
-    * property lookup and nothing else. Streaming sinks deliberately do
-    * NOT auto-compact per micro-batch (churn); the X174 maintenance
-    * executor is the streaming answer.
+    * property lookup and nothing else. The write has already committed,
+    * so a compaction that loses its race to a concurrent commit is a
+    * no-op (the next write compacts), never a failed write a caller
+    * would retry. Streaming sinks deliberately do NOT auto-compact per
+    * micro-batch (churn); the X174 maintenance executor is the streaming
+    * answer.
     */
   private[spark] def autoCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String, date: Int, time: Int): Unit = {
@@ -420,8 +423,9 @@ object GraftDataSource {
         .getOrElse(graft.lake.OptimizedWrite.DefaultTargetBytes)
       val minFiles = props.get("graft.autoCompact.minFiles").map(_.toInt)
         .getOrElse(8)
-      graft.lake.ZOrder.binPack(spark, dir, target, date, time,
+      try graft.lake.ZOrder.binPack(spark, dir, target, date, time,
         onlyIfMoreThan = minFiles - 1)
+      catch { case _: graft.lake.LostRace => () }
     }
   }
 
@@ -485,7 +489,7 @@ object GraftDataSource {
       val staged = ManifestTable.stageDataFiles(aligned, dir)
       graft.lake.Constraints.enforceStaged(spark, dir, staged)
       if (overwrite)
-        ManifestTable.commitStagedRetrying(spark, dir, date, time, staged)
+        ManifestTable.commitStaged(spark, dir, date, time, staged)
       else ManifestTable.appendStagedRetrying(spark, dir, date, time, staged)
     }
     autoCompact(spark, dir, date, time) // X214: property-gated, no-op without debt

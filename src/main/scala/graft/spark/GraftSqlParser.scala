@@ -923,7 +923,7 @@ case class GraftCtasCommand(dir: String, orReplace: Boolean, query: String,
     val df = spark.sql(query)
     val staged = ManifestTable.stageDataFiles(df, dir)
     graft.lake.Constraints.enforceStaged(spark, dir, staged)
-    val v = ManifestTable.commitStagedRetrying(spark, dir, date, time, staged)
+    val v = ManifestTable.commitStaged(spark, dir, date, time, staged)
     Seq(Row(v.toLong))
   }
 }

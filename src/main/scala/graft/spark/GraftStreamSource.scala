@@ -366,7 +366,7 @@ object GraftStream extends graft.QueryModule {
           .select(col("o_orderkey").as("k"), col("o_totalprice").as("p"))
         ManifestTable.commit(o.where(col("k") % 4 === 0), tbl, 20250801, 900)
         ManifestTable.appendRetrying(o.where(col("k") % 4 === 1), tbl, 20250801, 1000)
-        graft.lake.DeleteVectors.deleteWhereRetrying(
+        graft.lake.DeleteVectors.deleteWhere(
           s, tbl, col("k") % 16 === 0, 20250801, 1100)
         ManifestTable.appendRetrying(o.where(col("k") % 4 === 2), tbl, 20250801, 1200)
         runCdfOnce(s, tbl, "k", sink, chk)

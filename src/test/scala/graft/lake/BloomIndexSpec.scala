@@ -54,17 +54,17 @@ class BloomIndexSpec extends SparkSpec {
   }
 
   test("commit order: bloom sidecar belongs to a committed manifest version") {
-    // The committed version always has its sidecar (written before the
-    // manifest rename), covering every data file.
+    // The committed version always has its filters (published by the
+    // manifest put itself), covering every data file.
     val all = ManifestTable.snapshots(spark, dir).find(_.version == 1).get.files
-    assert(BloomIndex.fileBlooms(spark, dir, 1).exists(_.size == all.size))
+    assert(BloomIndex.fileBlooms(spark, dir, 1, "k").keySet == all.toSet)
   }
 
   test("a bloom column named with a quote round-trips its sidecar") {
     val qdir = graft.util.Scratch.dir("bloom_quote")
     val df = (0L until 32L).map(k => (k, k % 4)).toDF("k\"q", "t").repartition(4, col("t"))
     BloomIndex.commitWithBloom(df, qdir, 20250601, 1200, "k\"q")
-    assert(BloomIndex.fileBlooms(spark, qdir, 1).exists(_.forall(_.column == "k\"q")))
+    assert(BloomIndex.fileBlooms(spark, qdir, 1, "k\"q").nonEmpty)
     assert(BloomIndex.readIn(spark, qdir, 1, "k\"q", Seq(5L, 6L))
       .select(col("`k\"q`")).as[Long].collect().toSet == Set(5L, 6L))
   }
@@ -77,7 +77,27 @@ class BloomIndexSpec extends SparkSpec {
     Vacuum.vacuum(spark, vdir, keepLast = 1)
     val fs = new org.apache.hadoop.fs.Path(vdir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$vdir/_manifests/v00000001.bloom.json")))
-    assert(BloomIndex.fileBlooms(spark, vdir, 2).nonEmpty)
+    // the filters ride the manifests: the expired version's went with it
+    val names = fs.listStatus(new org.apache.hadoop.fs.Path(s"$vdir/_manifests"))
+      .map(_.getPath.getName).toSet
+    assert(names("v00000002.json") && !names("v00000001.json") &&
+      !names.exists(_.contains("bloom")), names)
+    assert(BloomIndex.fileBlooms(spark, vdir, 2, "k").nonEmpty)
+  }
+
+  test("a lost race leaves no filter behind: the interloper's version reads only its own rows") {
+    val ldir = s"${graft.util.Scratch.dir("bloom_lose")}/t"
+    val base = (0L until 100L).map(k => (k, s"p$k")).toDF("k", "p").repartition(4)
+    BloomIndex.commitWithBloom(base, ldir, 20250601, 1200, "k")
+    val more = (100L until 110L).map(k => (k, s"q$k")).toDF("k", "p").repartition(2)
+    val landed = InterloperCommit.losing(spark, ldir)(
+      BloomIndex.commitWithBloom(more, ldir, 20250601, 1300, "k"))
+    // the interloper took v2 with v1's content; the replace landed at v3
+    assert(BloomIndex.readIn(spark, ldir, 2, "k", Seq(105L)).count() == 0)
+    assert(BloomIndex.candidateFilesIn(spark, ldir, 2, "k", Seq(105L)).toSet
+      .subsetOf(ManifestTable.snapshots(spark, ldir)(1).files.toSet))
+    assert(landed == 3)
+    assert(BloomIndex.readIn(spark, ldir, 3, "k", Seq(105L)).select("p").as[String]
+      .collect().toSeq == Seq("q105"))
   }
 }

@@ -122,7 +122,7 @@ class CatalogSpec extends SparkSpec {
 
     // the per-table delete commits land...
     val tvs = Seq("a", "b").map(t => t ->
-      DeleteVectors.deleteWhereRetrying(spark, s"$root/$t",
+      DeleteVectors.deleteWhere(spark, s"$root/$t",
         col("uid") % 4 === 1, 20250901, 1000)).toMap
     // ...but the publish "crashes": both tables still serve PRE-delete
     assert(Catalog.readTable(spark, root, "a").count() == 40)

@@ -211,7 +211,7 @@ class CommitPrimitiveSpec extends SparkSpec {
         val b2 = new java.util.concurrent.CyclicBarrier(2)
         def replace(tag: String) = java.util.concurrent.CompletableFuture.supplyAsync { () =>
           b2.await(30, java.util.concurrent.TimeUnit.SECONDS)
-          ManifestTable.commitRetrying(Seq((1L, tag)).toDF("id", "v"), dir2, 20250401, 900)
+          ManifestTable.commit(Seq((1L, tag)).toDF("id", "v"), dir2, 20250401, 900)
         }
         val (ra, rb) = (replace("a"), replace("b"))
         val (wa, wb) = (ra.get(), rb.get())
@@ -308,14 +308,14 @@ class CommitPrimitiveSpec extends SparkSpec {
     val rep = s"${graft.util.Scratch.dir("lose_rep")}/t"
     ManifestTable.commit(kv, rep, 20250901, 900)
     landedPastInterloper(rep, 1, losing(rep)(
-      ManifestTable.commitRetrying(Seq((9L, 9L)).toDF("k", "v"), rep, 20250901, 910)))
+      ManifestTable.commit(Seq((9L, 9L)).toDF("k", "v"), rep, 20250901, 910)))
     assert(ManifestTable.readLatest(spark, rep).count() == 1)
 
     val del = s"${graft.util.Scratch.dir("lose_del")}/t"
     ManifestTable.commit(kv, del, 20250901, 900)
     DeleteVectors.deleteWhere(spark, del, col("k") === 0L, 20250901, 905)
     landedPastInterloper(del, 2, losing(del)(
-      DeleteVectors.deleteWhereRetrying(spark, del, col("k") < 3L, 20250901, 910)))
+      DeleteVectors.deleteWhere(spark, del, col("k") < 3L, 20250901, 910)))
     assert(ManifestTable.readLatest(spark, del).count() == 3)
 
     val res = s"${graft.util.Scratch.dir("lose_res")}/t"
@@ -539,7 +539,7 @@ class CommitPrimitiveSpec extends SparkSpec {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def names(rel: String) = fs.listStatus(new Path(s"$dir/$rel")).map(_.getPath.getName).toSet
     assert(names("") == Set("_manifests", "data"))
-    assert(names("data") == Set("v00000001"))
+    assert(names("data") == snaps(0).files.map(_.split('/')(1)).toSet)
   }
 
   test("one lost catalog race: the cut lands past the interloper with both overlays") {
@@ -551,6 +551,33 @@ class CommitPrimitiveSpec extends SparkSpec {
     assert(cuts.map(_.version) == Seq(1, 2, 3))
     assert(cuts(1).tables == Map("t" -> 1))
     assert(cuts(2).tables == Map("t" -> 1, "u" -> 4))
+  }
+
+  test("two racing OPTIMIZEs: each lands or loses its race, and the latest version reads every row") {
+    val rows = (0L until 64L).map(i => (i, i * 10)).toDF("k", "v")
+    (0 until 10).foreach { trial =>
+      val dir = s"${graft.util.Scratch.dir(s"race_opt$trial")}/t"
+      ManifestTable.commit(rows.repartition(16), dir, 20250901, 900)
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      // the second compaction starts 0-450 ms after the first, so the race
+      // falls on every step of the other's attempt across the trials
+      def optimize(delayMs: Long) = java.util.concurrent.CompletableFuture.supplyAsync { () =>
+        gate.await()
+        Thread.sleep(delayMs)
+        try Right(ZOrder.binPack(spark, dir, Long.MaxValue / 4, 20250901, 910))
+        catch { case e: LostRace => Left(e) }
+      }
+      val (a, b) = (optimize(0L), optimize(50L * trial))
+      gate.countDown()
+      val outcomes = Seq(a.get(), b.get()) // any other failure escapes here
+      assert(outcomes.count(_.isRight) >= 1, s"trial $trial: no OPTIMIZE landed")
+      val latest = ManifestTable.readLatest(spark, dir).select("k", "v")
+        .as[(Long, Long)].collect().sorted.toSeq
+      assert(latest == (0L until 64L).map(i => (i, i * 10)), s"trial $trial")
+      ManifestTable.snapshots(spark, dir).foreach(s =>
+        assert(ManifestTable.readVersion(spark, dir, s.version).count() == 64,
+          s"trial $trial: version ${s.version}"))
+    }
   }
 
   test("a primitive that always loses exhausts the loop with a plain IllegalStateException, never a LostRace") {

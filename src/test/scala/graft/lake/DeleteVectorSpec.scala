@@ -28,6 +28,9 @@ class DeleteVectorSpec extends SparkSpec {
     walk(root).sortBy(_._1)
   }
 
+  /** The staging dir of a table-relative file. */
+  private def dirOf(file: String): String = file.split('/').init.mkString("/")
+
   private def seed(dir: String): Unit = {
     val df = (1L to 100L).map(i => (i, s"row$i", i % 7)).toDF("id", "v", "grp")
       .repartition(4)
@@ -82,6 +85,8 @@ class DeleteVectorSpec extends SparkSpec {
     assert(v3 == 3)
     val snaps = ManifestTable.snapshots(spark, dir)
     assert(snaps.find(_.version == 3).get.deletes.isEmpty)
+    val v1Dir = dirOf(snaps.head.files.head)
+    val v2DvDir = dirOf(snaps(1).deletes.head)
     assert(ManifestTable.readVersion(spark, dir, 3).select("id").as[Long].collect().toSet ==
       (1L to 50L).toSet)
     // retention of 1 keeps only v3, which references no v1 file — both the
@@ -89,22 +94,23 @@ class DeleteVectorSpec extends SparkSpec {
     val expired = Vacuum.vacuum(spark, dir, keepLast = 1)
     assert(expired == Seq(1, 2))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new Path(s"$dir/data/v00000001")), "v1 data dir survived")
-    assert(!fs.exists(new Path(s"$dir/deletes/v00000002")), "v2 DV dir survived")
+    assert(!fs.exists(new Path(s"$dir/$v1Dir")), "v1 data dir survived")
+    assert(!fs.exists(new Path(s"$dir/$v2DvDir")), "v2 DV dir survived")
     assert(ManifestTable.readLatest(spark, dir).count() == 50)
   }
 
   test("vacuum keeps a shared data dir while a retained delete commit references it") {
     val dir = tmpTable()
     seed(dir)
+    val v1Dir = dirOf(ManifestTable.snapshots(spark, dir).head.files.head)
     DeleteVectors.deleteWhere(spark, dir, col("id") > 90, 20250801, 1000)
-    // keepLast=1 retains only v2 — whose data files all live in data/v1:
+    // keepLast=1 retains only v2 — whose data files all live in v1's dir:
     // the v1 MANIFEST goes, the v1 DATA DIR must stay
     val expired = Vacuum.vacuum(spark, dir, keepLast = 1)
     assert(expired == Seq(1))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new Path(s"$dir/_manifests/v00000001.json")))
-    assert(fs.exists(new Path(s"$dir/data/v00000001")),
+    assert(fs.exists(new Path(s"$dir/$v1Dir")),
       "vacuum deleted a data dir still referenced by the retained delete commit")
     assert(ManifestTable.readVersion(spark, dir, 2).count() == 90)
     // vacuum is still idempotent with the reference-counted sweep
@@ -115,14 +121,13 @@ class DeleteVectorSpec extends SparkSpec {
   test("crash before the delete's manifest rename leaves the delete invisible") {
     val dir = tmpTable()
     seed(dir)
-    // simulate the crash: stage a DV sidecar by hand, write no manifest
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(("data/v00000001/nonexistent.parquet", 0L)).toDF("file", "pos")
-      .write.mode("overwrite").parquet(s"$dir/deletes/v00000002")
+    // simulate the crash: stage a DV sidecar, write no manifest
+    val v1 = ManifestTable.snapshots(spark, dir).head
+    ManifestTable.stageDataFiles(Seq((v1.files.head, 0L)).toDF("file", "pos"), dir, "deletes")
     assert(ManifestTable.latestVersion(spark, dir) == Some(1))
     assert(ManifestTable.readLatest(spark, dir).count() == 100)
     // the retry path: a fresh deleteWhere allocates version 2 and commits
-    // over the stale staging atomically
+    // its own sidecar, never the stale one
     DeleteVectors.deleteWhere(spark, dir, col("id") === 42, 20250801, 1000)
     assert(ManifestTable.readLatest(spark, dir).count() == 99)
   }

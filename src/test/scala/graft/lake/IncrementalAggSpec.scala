@@ -54,8 +54,8 @@ class IncrementalAggSpec extends SparkSpec {
     IncrementalAgg.increment(spark, dir, batch(0), Seq("event_type"), "value", 20250301, 900)
     val before = state(dir, 1)
     // simulate the crash between data staging and manifest publish
-    ManifestTable.writeDataFiles(
-      IncrementalAgg.delta(batch(1), Seq("event_type"), "value"), dir, 2)
+    ManifestTable.stageDataFiles(
+      IncrementalAgg.delta(batch(1), Seq("event_type"), "value"), dir)
     assert(ManifestTable.latestVersion(spark, dir).contains(1))
     assert(state(dir, 1) == before)
     // and the retry completes normally on top

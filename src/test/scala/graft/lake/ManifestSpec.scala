@@ -25,8 +25,8 @@ class ManifestSpec extends SparkSpec {
     // simulated crash: the v2 writer dies after staging its data files,
     // before its manifest rename — exactly the partial state a reader
     // racing the reference's directory convention would half-see
-    ManifestTable.writeDataFiles(
-      Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("id", "v"), dir, 2)
+    ManifestTable.stageDataFiles(
+      Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("id", "v"), dir)
     assert(ManifestTable.latestVersion(spark, dir) == Some(1))
     assert(ManifestTable.snapshots(spark, dir).map(_.version) == Seq(1))
     val got = ManifestTable.readLatest(spark, dir)
@@ -38,7 +38,7 @@ class ManifestSpec extends SparkSpec {
     val dir = tmpTable()
     ManifestTable.commit(Seq((1L, "a")).toDF("id", "v"), dir, 20250301, 900)
     val v2data = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    val staged = ManifestTable.writeDataFiles(v2data, dir, 2)
+    val staged = ManifestTable.stageDataFiles(v2data, dir)
     // retry of the crashed job re-publishes the staged files
     ManifestTable.commitManifest(spark, dir,
       ManifestTable.snapshots(spark, dir).lastOption, 20250301, 1000, staged)
@@ -63,7 +63,7 @@ class ManifestSpec extends SparkSpec {
   test("a second committer of the same version fails loudly, never interleaves") {
     val dir = tmpTable()
     val df = Seq(1L).toDF("id")
-    val staged = ManifestTable.writeDataFiles(df, dir, 1)
+    val staged = ManifestTable.stageDataFiles(df, dir)
     ManifestTable.commitManifest(spark, dir, None, 20250301, 900, staged)
     intercept[IllegalStateException] {
       ManifestTable.commitManifest(spark, dir, None, 20250301, 901, staged)
@@ -111,7 +111,7 @@ class ManifestSpec extends SparkSpec {
     }
     val fb = java.util.concurrent.CompletableFuture.supplyAsync { () =>
       barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
-      DeleteVectors.deleteWhereRetrying(spark, dir, col("id") % 2 === 0,
+      DeleteVectors.deleteWhere(spark, dir, col("id") % 2 === 0,
         20250401, 901)
     }
     val (va, vb) = (fa.get(), fb.get())
@@ -134,7 +134,7 @@ class ManifestSpec extends SparkSpec {
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     def replace(tag: String) = java.util.concurrent.CompletableFuture.supplyAsync { () =>
       barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
-      ManifestTable.commitRetrying(Seq((1L, tag)).toDF("id", "v"), dir, 20250401, 900)
+      ManifestTable.commit(Seq((1L, tag)).toDF("id", "v"), dir, 20250401, 900)
     }
     val (fa, fb) = (replace("a"), replace("b"))
     val (va, vb) = (fa.get(), fb.get())
@@ -160,8 +160,8 @@ class ManifestSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/stray")
     val strayFile = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/stray"))
       .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    fs.rename(strayFile, new org.apache.hadoop.fs.Path(
-      s"$dir/data/v00000001/zzz-stray.parquet"))
+    val v1Dir = ManifestTable.snapshots(spark, dir).head.files.head.split('/').init.mkString("/")
+    fs.rename(strayFile, new org.apache.hadoop.fs.Path(s"$dir/$v1Dir/zzz-stray.parquet"))
     assert(ManifestTable.snapshots(spark, dir).map(_.version) == Seq(1))
     val got = ManifestTable.readLatest(spark, dir)
       .as[(Long, String)].collect().toSeq
@@ -357,7 +357,7 @@ class ManifestSpec extends SparkSpec {
     keeps("write")(d => if (d == sdir) ZoneMap.commitWithStats(
         ManifestTable.readLatest(spark, d).repartitionByRange(4, $"k"), d, 20250901,
         at.next(), Seq("k"))
-      else ManifestTable.commitRetrying(ManifestTable.readLatest(spark, d), d,
+      else ManifestTable.commit(ManifestTable.readLatest(spark, d), d,
         20250901, at.next()))
     keeps("delete")(DeleteVectors.deleteWhere(spark, _, col("k") === 1L, 20250901, at.next()))
     keeps("materialize")(DeleteVectors.materialize(spark, _, 20250901, at.next()))
@@ -397,7 +397,7 @@ class ManifestSpec extends SparkSpec {
       val out = fs.create(new Path(s"$dir/$rel"), true)
       try out.write(json.getBytes("UTF-8")) finally out.close()
     }
-    val files = ManifestTable.writeDataFiles(Seq((1L, "a")).toDF("id", "v"), dir, 1)
+    val files = ManifestTable.stageDataFiles(Seq((1L, "a")).toDF("id", "v"), dir)
       .map("\"" + _ + "\"").mkString("[", ", ", "]")
     Seq(1, 2).foreach(v => put(f"_manifests/v$v%08d.json",
       s"""{"version": $v, "run_date": 20250901, "run_time": ${900 + v}, "files": $files}"""))
@@ -435,7 +435,7 @@ class ManifestSpec extends SparkSpec {
       val out = fs.create(new Path(s"$dir/$rel"), true)
       try out.write(json.getBytes("UTF-8")) finally out.close()
     }
-    val files = ManifestTable.writeDataFiles(Seq((1L, "a")).toDF("id", "v"), dir, 1)
+    val files = ManifestTable.stageDataFiles(Seq((1L, "a")).toDF("id", "v"), dir)
       .map("\"" + _ + "\"").mkString("[", ", ", "]")
     (1 to 3).foreach(v => put(f"_manifests/v$v%08d.json",
       s"""{"version": $v, "run_date": 20250901, "run_time": ${900 + v}, "files": $files}"""))

@@ -108,7 +108,7 @@ class MergeCowSpec extends SparkSpec {
 
   test("a tombstoned key re-inserts cleanly; the old tombstone stays effective") {
     val dir = mkTable("cow_dv")
-    DeleteVectors.deleteWhereRetrying(spark, dir, $"k" === 10, 20250801, 950)
+    DeleteVectors.deleteWhere(spark, dir, $"k" === 10, 20250801, 950)
     val updates = Seq((10L, "re", 1.5)).toDF("k", "name", "bal")
     val v3 = Merge.upsertCow(spark, dir, updates, Seq("k"), 20250801, 1000)
     val rows = ManifestTable.readVersion(spark, dir, v3)

@@ -54,7 +54,8 @@ class RecordIndexSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(routed("__insert__") === 2L)
     assert(routed.filterKeys(_ != "__insert__").values.sum === 3L)
-    assert(routed.keys.filter(_ != "__insert__").forall(_.startsWith("data/v")))
+    val files = ManifestTable.snapshots(spark, dir).head.files.toSet
+    assert(routed.keys.filter(_ != "__insert__").forall(files.contains))
   }
 
   test("duplicate keys refuse at build (ambiguous positions)") {
@@ -63,7 +64,24 @@ class RecordIndexSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       RecordIndex.commitWithIndex(df, dir, 20250701, 900, "k"))
     assert(e.getMessage.contains("duplicate"))
-    // the refused commit left no visible version (index written pre-rename)
+    // the refused commit left no visible version and no staged data
     assert(ManifestTable.snapshots(spark, dir).isEmpty)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_index")))
+  }
+
+  test("a lost race leaves no index behind: the interloper's version reads only its own rows") {
+    val dir = s"${Scratch.dir("ri_lose")}/t"
+    RecordIndex.commitWithIndex((0L until 100L).map(i => (i, i * 10)).toDF("k", "v")
+      .repartition(4), dir, 20250701, 900, "k")
+    val landed = InterloperCommit.losing(spark, dir)(RecordIndex.commitWithIndex(
+      (100L until 110L).map(i => (i, i * 10)).toDF("k", "v"), dir, 20250701, 910, "k"))
+    // the interloper took v2 with v1's content; the replace landed at v3
+    assert(RecordIndex.pointLookup(spark, dir, 2, "k", Seq(105L)).count() == 0)
+    assert(RecordIndex.pointLookup(spark, dir, 2, "k", Seq(5L))
+      .select("v").as[Long].collect().toSeq == Seq(50L))
+    assert(landed == 3)
+    assert(RecordIndex.pointLookup(spark, dir, 3, "k", Seq(105L))
+      .select("v").as[Long].collect().toSeq == Seq(1050L))
   }
 }

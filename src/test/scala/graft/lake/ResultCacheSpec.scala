@@ -51,7 +51,7 @@ class ResultCacheSpec extends SparkSpec {
     // and the sweep still reclaims a genuinely-stale sibling afterwards
     ManifestTable.appendRetrying(Seq((2L, 5L)).toDF("k", "v"), s"$root/t", 20250701, 930)
     ResultCache.cached(spark, root, "sum_v", Seq(s"$root/t"))(agg()).count()
-    ManifestTable.commitRetrying(Seq((9L, 9L)).toDF("k", "v"), s"$root/t", 20250701, 940)
+    ManifestTable.commit(Seq((9L, 9L)).toDF("k", "v"), s"$root/t", 20250701, 940)
     // t is now at v3; both v1- and v2-keyed entries are live versions still
     // on the log, so nothing reclaims — but the sweep must complete cleanly
     assert(ResultCache.vacuum(spark, root, graceMs = Long.MaxValue) >= 0)

@@ -11,6 +11,14 @@ import graft.util.Scratch
 class VacuumSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The staging dir of each committed version's files, by version. */
+  private def dirs(dir: String): Map[Int, String] =
+    ManifestTable.snapshots(spark, dir).map(s =>
+      s.version -> s.files.head.split('/').init.mkString("/")).toMap
+
+  private def fs(dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def commit3(dir: String): Unit = {
     ManifestTable.commit(Seq((1, "a")).toDF("k", "s"), dir, 20250601, 900)
     ManifestTable.commit(Seq((2, "b")).toDF("k", "s"), dir, 20250601, 1000)
@@ -20,6 +28,7 @@ class VacuumSpec extends SparkSpec {
   test("expires exactly the versions beyond retention; survivors read intact") {
     val dir = Scratch.dir("vac_basic")
     commit3(dir)
+    val d = dirs(dir)
     assert(Vacuum.vacuum(spark, dir, keepLast = 2) == Seq(1))
     assert(ManifestTable.snapshots(spark, dir).map(_.version) == Seq(2, 3))
     assert(intercept[NoSuchElementException](
@@ -27,9 +36,8 @@ class VacuumSpec extends SparkSpec {
     assert(ManifestTable.readVersion(spark, dir, 2)
       .select("s").as[String].collect().toSeq == Seq("b"))
     // Expired data directory is actually reclaimed, not just unlisted.
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new Path(s"$dir/data/v00000001")))
-    assert(fs.exists(new Path(s"$dir/data/v00000002")))
+    assert(!fs(dir).exists(new Path(s"$dir/${d(1)}")))
+    assert(fs(dir).exists(new Path(s"$dir/${d(2)}")))
   }
 
   test("X217 time-based retention: cutoff expires by stamp, head and tags survive") {
@@ -62,34 +70,36 @@ class VacuumSpec extends SparkSpec {
   test("staged-but-uncommitted latest+1 write survives vacuum") {
     val dir = Scratch.dir("vac_staged")
     commit3(dir)
-    ManifestTable.writeDataFiles(Seq((4, "d")).toDF("k", "s"), dir, 4) // in-flight
+    val staged = ManifestTable.stageDataFiles(Seq((4, "d")).toDF("k", "s"), dir) // in-flight
     Vacuum.vacuum(spark, dir, keepLast = 1)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new Path(s"$dir/data/v00000004")))
+    assert(staged.forall(f => fs(dir).exists(new Path(s"$dir/$f"))))
     // ...and the in-flight writer can still complete its commit.
     ManifestTable.commitManifest(spark, dir,
-      ManifestTable.snapshots(spark, dir).lastOption, 20250601, 1200,
-      fs.listStatus(new Path(s"$dir/data/v00000004")).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => s"data/v00000004/${s.getPath.getName}"))
+      ManifestTable.snapshots(spark, dir).lastOption, 20250601, 1200, staged)
     assert(ManifestTable.latestVersion(spark, dir).contains(4))
+    assert(ManifestTable.readLatest(spark, dir).select("s").as[String]
+      .collect().toSeq == Seq("d"))
   }
 
   test("manifest-before-data delete order: a data-only orphan is invisible") {
     val dir = Scratch.dir("vac_order")
     commit3(dir)
+    val d = dirs(dir)
     // Simulate a crash AFTER the manifest delete but before the data
     // delete: remove v1's manifest by hand; the snapshot list must not
     // serve v1 even though its data files still exist.
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(s"$dir/_manifests/v00000001.json"), false)
+    fs(dir).delete(new Path(s"$dir/_manifests/v00000001.json"), false)
     assert(ManifestTable.snapshots(spark, dir).map(_.version) == Seq(2, 3))
-    // A re-run's orphan GC reclaims the data-only leftover...
+    // The data-only leftover is an unreferenced dir no expired manifest
+    // names any more: like any such dir it waits for the age gate...
     Vacuum.vacuum(spark, dir, keepLast = 2)
-    assert(!fs.exists(new Path(s"$dir/data/v00000001")))
+    assert(fs(dir).exists(new Path(s"$dir/${d(1)}")))
+    // ...and a re-run past it reclaims the leftover
+    Vacuum.vacuum(spark, dir, keepLast = 2, stagedOrphanAgeMs = 0L)
+    assert(!fs(dir).exists(new Path(s"$dir/${d(1)}")))
     // ...while the retained versions' data stays.
-    assert(fs.exists(new Path(s"$dir/data/v00000002")))
-    assert(fs.exists(new Path(s"$dir/data/v00000003")))
+    assert(fs(dir).exists(new Path(s"$dir/${d(2)}")))
+    assert(fs(dir).exists(new Path(s"$dir/${d(3)}")))
   }
 
   test("X96 staged writer dirs: referenced or young survive, old orphans reclaim") {
@@ -158,6 +168,21 @@ class VacuumSpec extends SparkSpec {
     // cuts — it must survive b's keepLast=2 window
     assert(Catalog.readTable(spark, root, "b").select("v").as[String]
       .collect().toSet == Set("b3"))
+  }
+
+  test("DRY RUN lists exactly the files a vacuum reclaims, on an appendRetrying-built table") {
+    val dir = Scratch.dir("vac_dry")
+    ManifestTable.appendRetrying(Seq((1, "a")).toDF("k", "s"), dir, 20250601, 900)
+    ManifestTable.appendRetrying(Seq((2, "b")).toDF("k", "s"), dir, 20250601, 1000)
+    ManifestTable.commit(Seq((3, "c")).toDF("k", "s"), dir, 20250601, 1100)
+    val all = ManifestTable.snapshots(spark, dir).flatMap(_.files).distinct
+    val listed = Vacuum.dryRun(spark, dir, keepLast = 1).map(_._1)
+    assert(listed.size == 2, s"v1 and v2's appended files: $listed")
+    assert(Vacuum.vacuum(spark, dir, keepLast = 1) == Seq(1, 2))
+    val reclaimed = all.filterNot(f => fs(dir).exists(new Path(s"$dir/$f")))
+    assert(listed.toSet == reclaimed.toSet)
+    assert(ManifestTable.readLatest(spark, dir).select("s").as[String]
+      .collect().toSeq == Seq("c"))
   }
 
   test("retention must keep at least one version") {

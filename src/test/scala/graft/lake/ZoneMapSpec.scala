@@ -61,7 +61,7 @@ class ZoneMapSpec extends SparkSpec {
     ZoneMap.commitWithStats(keyedRows, dir, 20250401, 900, Seq("k"))
     // Version 2 staged without manifest (crash window) — stats or not,
     // readers still resolve only v1.
-    ManifestTable.writeDataFiles(keyedRows.where($"k" < 10), dir, 2)
+    ManifestTable.stageDataFiles(keyedRows.where($"k" < 10), dir)
     assert(ManifestTable.latestVersion(spark, dir).contains(1))
     assert(ZoneMap.fileStats(spark, dir, 1).nonEmpty)
   }
@@ -148,6 +148,27 @@ class ZoneMapSpec extends SparkSpec {
     assert(inside.isEmpty && straddle.size == 4)
     assert(ZoneMap.countRange(spark, dir, 2, "k", 0, 199)._1 == 100L)
     assert(ZoneMap.countRange(spark, dir, 2, "k", 0, 799)._1 == 700L)
+  }
+
+  test("a file whose column is all null records no bounds for it, so stats-only answers never see a 0") {
+    val dir = Scratch.dir("zm_allnull")
+    val rows = Seq[(Option[Long], Option[String], Int)]((None, None, 0), (None, None, 0),
+      (Some(5L), Some("m"), 1), (Some(9L), Some("q"), 1)).toDF("k", "s", "f")
+    ZoneMap.commitWithStats(rows.repartitionByRange(2, $"f"), dir, 20250401, 900, Seq("k"),
+      strCols = Seq("s"))
+    val stats = ZoneMap.fileStats(spark, dir, 1).get
+    assert(stats.size == 2)
+    val (nulls, vals) = stats.partition(e => !e.lo.contains("k"))
+    assert(nulls.size == 1 && nulls.head.hi.isEmpty && nulls.head.slo.isEmpty &&
+      nulls.head.shi.isEmpty, s"the all-null file recorded bounds: ${nulls.headOption}")
+    assert(vals.head.lo == Map("k" -> 5L) && vals.head.hi == Map("k" -> 9L) &&
+      vals.head.slo == Map("s" -> "m") && vals.head.shi == Map("s" -> "q"))
+    // a file without bounds answers nothing from stats alone...
+    assert(ZoneMap.metaMinMax(spark, dir, 1, "k").isEmpty)
+    // ...and stays in scope for pruned reads
+    assert(ZoneMap.candidateFiles(spark, dir, 1, "k", 0, 0).size == 1)
+    assert(ZoneMap.readRange(spark, dir, 1, "k", 5, 9).count() == 2)
+    assert(ZoneMap.readRangeStr(spark, dir, 1, "s", "a", "z").count() == 2)
   }
 
   test("zone maps round-trip a column named with a quote") {

@@ -364,6 +364,35 @@ class GraftSinkSpec extends SparkSpec {
     assert(ManifestTable.snapshots(spark, plain).count(_.op == "optimize") === 0)
   }
 
+  test("X214 autoCompact: a compaction that loses its race is a no-op, and the next write compacts") {
+    val dir = Scratch.dir("sink_autoc_lose")
+    def app(lo: Long, t: String): Unit =
+      spark.range(lo, lo + 5).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+        .coalesce(1).write.format("graft").mode(SaveMode.Append)
+        .option("runDate", "20250901").option("runTime", t).save(dir)
+    spark.range(0, 5).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+      .coalesce(1).write.format("graft").mode(SaveMode.Overwrite).save(dir)
+    app(10, "901")
+    app(20, "902") // 3 files of debt
+    graft.spark.GraftDml.extSession(spark).sql(
+      s"ALTER TABLE '$dir' SET TBLPROPERTIES ('graft.autoCompact' = 'true', " +
+        "'graft.autoCompact.minFiles' = '3')")
+    // the write it follows has landed: a concurrent commit taking the
+    // compaction's version must not fail it, or a caller's retry of the
+    // write would append its rows twice
+    graft.lake.InterloperCommit.losing(spark, dir)(
+      GraftDataSource.autoCompact(spark, dir, 20250901, 903))
+    val snaps = ManifestTable.snapshots(spark, dir)
+    assert(snaps.count(_.op == "optimize") === 0)
+    assert(snaps.last.files.size === 3)
+    assert(spark.read.format("graft").load(dir).count() === 15)
+    app(30, "904") // the next write compacts
+    val after = ManifestTable.snapshots(spark, dir)
+    assert(after.count(_.op == "optimize") === 1 && after.last.files.size === 1)
+    assert(spark.read.format("graft").load(dir).select("k").as[Long].collect().sorted.toSeq ===
+      Seq(0L, 10L, 20L, 30L).flatMap(lo => lo until lo + 5))
+  }
+
   test("X216 WRITE ORDERED BY: appends range-cluster + record stats; band reads prune; refusals") {
     val dir = Scratch.dir("sink_worder")
     // v1: unordered, no stats — must stay in scope forever

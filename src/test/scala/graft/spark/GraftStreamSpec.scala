@@ -190,7 +190,7 @@ class GraftStreamSpec extends SparkSpec {
       tbl, 20250801, 900)
     ManifestTable.appendRetrying((10L until 15L).map(i => (i, i)).toDF("k", "v"),
       tbl, 20250801, 1000)
-    DeleteVectors.deleteWhereRetrying(spark, tbl, col("k") < 2, 20250801, 1100)
+    DeleteVectors.deleteWhere(spark, tbl, col("k") < 2, 20250801, 1100)
 
     GraftStream.runCdfOnce(spark, tbl, "k", sink, chk)
     val feed1 = spark.read.parquet(sink)

@@ -8,7 +8,7 @@
 #         tools/commit_race.sh [rounds=8] [repeats=5]
 #         SPARK_GRAFT_COMMIT_IMPL=graft.lake.HttpCasCommit tools/commit_race.sh
 #
-# Each repeat runs FOUR races on fresh tables/catalogs:
+# Each repeat runs FIVE races on fresh tables/catalogs:
 #   1. append/append     — writers a+b; check-append (per-writer versions
 #      STRICTLY increase, union contiguous, no lost row, handoffs>=1)
 #   2. append/delete     — appender vs deleter of seeded even ids;
@@ -17,6 +17,9 @@
 #      by the highest version, all versions time-travelable
 #   4. catalog tx        — X99: two writers transact over DISJOINT tables
 #      through ONE catalog log; final cut references both
+#   5. append+optimize   — writers a+b each loop "append one row, then
+#      OPTIMIZE" on one table; every version in the log reads and the
+#      final rows are exact (a losing OPTIMIZE touches no committed file)
 #
 # Start gun is two-phase: each writer touches <START>.ready.<tag> once its
 # SparkSession is up; we fire START only after BOTH ready flags exist, so
@@ -131,6 +134,20 @@ for i in $(seq 1 "$REPEATS"); do
   OUT=$(run check-cat "$ROOT" "$ROUNDS" 2>&1 | grep RACE)
   echo "$OUT"
   TOTAL_HANDOFFS=$(( TOTAL_HANDOFFS + $(echo "$OUT" | sed -n 's/.*handoffs=//p') ))
+
+  echo "=== repeat $i/$REPEATS: append+optimize / append+optimize ==="
+  DIR=$(mktemp -d /tmp/graft_race_ao.XXXXXX)/t
+  START="$DIR.start"
+  run seed "$DIR"
+  run append "$DIR" a "$ROUNDS" "$START" optimize > "$DIR.a.log" 2>&1 &
+  PA=$!
+  run append "$DIR" b "$ROUNDS" "$START" optimize > "$DIR.b.log" 2>&1 &
+  PB=$!
+  fire_gun "$START" a b
+  wait $PA || { echo "writer a FAILED"; tail -5 "$DIR.a.log"; exit 1; }
+  wait $PB || { echo "writer b FAILED"; tail -5 "$DIR.b.log"; exit 1; }
+  grep -h "RACE append" "$DIR.a.log" "$DIR.b.log"
+  run check-appendopt "$DIR" "$ROUNDS" 2>&1 | grep RACE
 done
 MAXH=$(( 2 * REPEATS * (2 * ROUNDS - 1) ))
 echo "commit_race: all $REPEATS repeats passed (impl=${SPARK_GRAFT_COMMIT_IMPL:-rename});" \
