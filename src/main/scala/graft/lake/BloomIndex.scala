@@ -3,12 +3,15 @@ package graft.lake
 import java.io.ByteArrayInputStream
 import java.util.Base64
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
+import org.json4s.{DefaultFormats, Extraction, Formats}
+import org.json4s.jackson.JsonMethods
 
 import graft.sources.Tables
 
@@ -19,12 +22,12 @@ import graft.sources.Tables
   * every event/orders table actually has) finds every file's [min, max]
   * straddling the key and scans the world. A few-KB Bloom filter per
   * file answers "might this file contain key x?" regardless of layout —
-  * Parquet added exactly this as its column bloom filters; keeping them
-  * in the MANIFEST's per-file entries ([[ZoneMap.FileStats]]' `blooms`,
-  * next to the zone maps) means planning stays metadata-only: no footer
-  * round-trips, no file opens, at object-store latency the difference
-  * between one GET of the manifest and one GET per file. Every commit
-  * keeps the entry of each file it keeps, filter included.
+  * Parquet added exactly this as its column bloom filters. A commit's
+  * filters go into ONE `_blooms.json` (file name → base64) in its
+  * writer-unique staging dir, named by each file's manifest entry
+  * ([[ZoneMap.FileStats]]' `blooms`): no footer round-trips, one small
+  * GET per filtered commit, and the filters share their files' lifetime
+  * while the manifest every later commit rewrites carries only a path.
   *
   * Build shape: ONE distributed aggregate over the staged files,
   * `groupBy(_metadata.file_path).agg(bloom_filter_agg(xxhash64(key)))` —
@@ -63,10 +66,9 @@ object BloomIndex extends graft.QueryModule {
 
   /** Commit `df` as the next version with a per-file Bloom index on
     * `bloomCol` (an integral key column, hashed as long): stage, build
-    * one filter per staged file, and publish them in the files'
-    * manifest entries through the retrying replace — the same put as the
-    * file list, so a lost or crashed attempt leaves no filter behind.
-    * Returns the version.
+    * one filter per staged file into the staging dir's `_blooms.json`,
+    * and publish through the retrying replace with each file's entry
+    * naming it. Returns the version.
     */
   def commitWithBloom(df: DataFrame, dir: String, date: Int, time: Int,
       bloomCol: String, fpp: Double = 0.01): Int = {
@@ -83,41 +85,50 @@ object BloomIndex extends graft.QueryModule {
         GraftShim.expression(hashCol(col(bloomCol).cast("long"))),
         Literal(perFile), Literal(numBits)).toAggregateExpression())
 
-    val entries = staged
+    val filters = staged
       .groupBy(col("_metadata.file_path").as("file_path"))
       .agg(bloomAgg.as("bloom"))
       .collect() // one filter per staged file — driver-sized by construction
-      .map { r =>
-        val name = r.getAs[String]("file_path").split('/').last
-        val rel = files.find(_.endsWith(name)).getOrElse(
-          throw new IllegalStateException(s"staged file $name missing from listing"))
-        ZoneMap.FileStats(rel, Map.empty, Map.empty, blooms = Map(bloomCol ->
-          Base64.getEncoder.encodeToString(r.getAs[Array[Byte]]("bloom"))))
-      }.toSeq
-    ManifestTable.commitStaged(spark, dir, date, time, files, stats = entries)
+      .map(r => name(r.getAs[String]("file_path")) ->
+        Base64.getEncoder.encodeToString(r.getAs[Array[Byte]]("bloom")))
+      .toMap
+    val rel = s"${files.head.split('/').dropRight(1).mkString("/")}/_blooms.json"
+    val out = ManifestTable.fsFor(spark, dir).create(new Path(s"$dir/$rel"), false)
+    try out.write(JsonMethods.compact(JsonMethods.render(
+      Extraction.decompose(filters)(DefaultFormats))).getBytes("UTF-8"))
+    finally out.close()
+    ManifestTable.commitStaged(spark, dir, date, time, files, stats = files
+      .filter(f => filters.contains(name(f)))
+      .map(ZoneMap.FileStats(_, Map.empty, Map.empty, blooms = Map(bloomCol -> rel))))
   }
 
-  /** The base64 Bloom filters on `column` of `version`'s files, keyed by
-    * file; a file without one is absent.
-    */
-  def fileBlooms(spark: SparkSession, dir: String, version: Int,
-      column: String): Map[String, String] =
-    snapshotAt(spark, dir, version).stats.flatMap { case (f, e) =>
-      e.blooms.get(column).map(f -> _) }
+  private def name(file: String): String = file.split('/').last
 
-  private def snapshotAt(spark: SparkSession, dir: String,
-      version: Int): ManifestTable.Snapshot =
-    ManifestTable.snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir"))
+  /** The base64 Bloom filters on `column` of `snap`'s files, keyed by
+    * file (a file without one is absent), reading each named filters
+    * file once.
+    */
+  def fileBlooms(spark: SparkSession, dir: String,
+      snap: ManifestTable.Snapshot, column: String): Map[String, String] = {
+    val named = snap.files.flatMap(f =>
+      snap.stats.get(f).flatMap(_.blooms.get(column)).map(f -> _))
+    implicit val fmts: Formats = DefaultFormats
+    val fs = ManifestTable.fsFor(spark, dir)
+    val read = named.map(_._2).distinct.map(rel => rel -> JsonMethods.parse(
+      ManifestTable.readText(fs, new Path(s"$dir/$rel"))).extract[Map[String, String]]).toMap
+    named.flatMap { case (f, rel) => read(rel).get(name(f)).map(f -> _) }.toMap
+  }
 
   /** Files of `snap` that might contain ANY of `keys` in `column` per
     * their Bloom filters; a file without a filter on `column` stays in
     * scope.
     */
-  private def candidates(snap: ManifestTable.Snapshot, column: String,
+  private def candidates(spark: SparkSession, dir: String,
+      snap: ManifestTable.Snapshot, column: String,
       keys: Seq[Long]): Seq[String] = {
     val hashes = keys.map(hashValue)
-    snap.files.filter(f => snap.stats.get(f).flatMap(_.blooms.get(column)).forall { b64 =>
+    val filters = fileBlooms(spark, dir, snap, column)
+    snap.files.filter(f => filters.get(f).forall { b64 =>
       val filter = BloomFilter.readFrom(
         new ByteArrayInputStream(Base64.getDecoder.decode(b64)))
       hashes.exists(filter.mightContainLong)
@@ -127,7 +138,7 @@ object BloomIndex extends graft.QueryModule {
   /** Files of `version` that might contain ANY of `keys` in `column`. */
   def candidateFilesIn(spark: SparkSession, dir: String, version: Int,
       column: String, keys: Seq[Long]): Seq[String] =
-    candidates(snapshotAt(spark, dir, version), column, keys)
+    candidates(spark, dir, ManifestTable.snapshot(spark, dir, version), column, keys)
 
   /** Read `version` with `column IN keys`, scanning only files the Bloom
     * index cannot rule out. The predicate is STILL applied — pruning must
@@ -135,8 +146,8 @@ object BloomIndex extends graft.QueryModule {
     */
   def readIn(spark: SparkSession, dir: String, version: Int,
       column: String, keys: Seq[Long]): DataFrame = {
-    val snap = snapshotAt(spark, dir, version)
-    val cand = candidates(snap, column, keys)
+    val snap = ManifestTable.snapshot(spark, dir, version)
+    val cand = candidates(spark, dir, snap, column, keys)
     val pred: Column = col(column).cast("long").isin(keys: _*)
     if (cand.isEmpty) ManifestTable.readVersion(spark, dir, version).where(pred)
     else DeleteVectors.applyTo(spark, dir, snap,

@@ -151,7 +151,7 @@ object DeleteVectors extends graft.QueryModule {
     // contract in the manifest (pinned below and in DeleteVectorSpec), so
     // X75 feed consumers skip the step without reading either version.
     // The rewrite is derived from `latest`, so a lost race fails it.
-    ManifestTable.commitOnce(spark, dir, latest, date, time, files, "materialize")
+    ManifestTable.commitOnce(spark, dir, Some(latest), date, time, files, "materialize")
   }
 
   /** Shared X64/X75 fixture timeline (built once per JVM): v1 full commit

@@ -42,22 +42,23 @@ object IncrJoinView extends graft.QueryModule {
       throw new NoSuchElementException(s"no committed fact table at $factDir"))
     val cols = factCols.map(col)
     def project(df: DataFrame) = df.select(cols: _*)
+    // view version v mirrors fact version v: a concurrent refresh fails
+    // a step (LostRace) rather than shifting the numbering
+    def publish(parent: Option[ManifestTable.Snapshot], df: DataFrame): Unit =
+      ManifestTable.commitOnce(spark, viewDir, parent, date, time,
+        ManifestTable.stageDataFiles(df, viewDir))
     val start = ManifestTable.latestVersion(spark, viewDir).getOrElse {
-      ManifestTable.commit(
-        project(ManifestTable.readVersion(spark, factDir, 1)).join(dim, joinKey),
-        viewDir, date, time, maxRetries = 0)
+      publish(None, project(ManifestTable.readVersion(spark, factDir, 1)).join(dim, joinKey))
       1
     }
     for (v <- start until factV) {
       val feed = ChangeFeed.changeFeed(spark, factDir, v, v + 1, factCols)
       val dels = project(feed.where(col("change") === "deleted"))
       val adds = project(feed.where(col("change") === "added")).join(dim, joinKey)
-      val next = ManifestTable.readVersion(spark, viewDir, v)
-        .join(dels, factCols, "left_anti")
-        .unionByName(adds)
-      // view version v mirrors fact version v: a concurrent refresh
-      // fails this one rather than shifting the numbering
-      ManifestTable.commit(next, viewDir, date, time, maxRetries = 0)
+      publish(ManifestTable.snapshots(spark, viewDir).find(_.version == v),
+        ManifestTable.readVersion(spark, viewDir, v)
+          .join(dels, factCols, "left_anti")
+          .unionByName(adds))
     }
     factV
   }

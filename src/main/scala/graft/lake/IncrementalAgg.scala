@@ -53,18 +53,17 @@ object IncrementalAgg extends graft.QueryModule {
   }
 
   /** Fold one batch into the manifest-versioned state at `dir`; returns
-    * the committed version. The first increment bootstraps version 1.
+    * the committed version. The first increment bootstraps version 1; a
+    * concurrent increment landing first fails this one ([[LostRace]]).
     */
   def increment(spark: SparkSession, dir: String, batch: DataFrame,
       keys: Seq[String], valueCol: String, date: Int, time: Int): Int = {
     val d = delta(batch, keys, valueCol)
-    val next = ManifestTable.latestVersion(spark, dir) match {
-      case None => d
-      case Some(v) => combine(ManifestTable.readVersion(spark, dir, v), d, keys)
-    }
-    // derived from the version just read: a concurrent increment fails
-    // this one rather than being replaced by it
-    ManifestTable.commit(next, dir, date, time, maxRetries = 0)
+    val parent = ManifestTable.snapshots(spark, dir).lastOption
+    val next = parent.fold(d)(p =>
+      combine(ManifestTable.readVersion(spark, dir, p.version), d, keys))
+    ManifestTable.commitOnce(spark, dir, parent, date, time,
+      ManifestTable.stageDataFiles(next, dir))
   }
 
   /** Read a state version at the double boundary (exact sums inside). */

@@ -29,11 +29,14 @@ final class LostRace(msg: String) extends IllegalStateException(msg)
   * Layout under one table dir:
   * {{{
   *   data/w1a2b3c4d/part-*.parquet   -- staged first, invisible until...
+  *   data/w1a2b3c4d/_blooms.json     -- (its Bloom filters, if built)
+  *   data/w1a2b3c4d/_index/          -- (its record index, if built)
   *   _manifests/v00000001.json       -- ...this put lands (the commit)
   * }}}
   *
   * Manifest JSON: `{"version", "run_date", "run_time", "files": [...],
-  * "deletes"?: [...], "op"?, "state": {owner: entry}, "stats"?: [...]}`
+  * "deletes"?: [...], "op"?, "state": {owner: entry}, "stats"?: [...],
+  * "index"?}`
   * with file paths relative to the table dir, rendered by json4s (so any
   * file or column name round-trips). Each version is a COMPLETE
   * snapshot (the reference's model — every run rewrites the table), so
@@ -46,19 +49,21 @@ final class LostRace(msg: String) extends IllegalStateException(msg)
   * loses its race ([[LostRace]]) never touches a committed file (Delta
   * names its data files uniquely for the same reason). On a lost race
   * only the tiny manifest is rebased against the new latest version and
-  * re-attempted, bounded-N times. Rebase rules by commit taxonomy (the X75 step kinds): a
-  * REPLACE commit ([[commit]]) carries its own full file list, so the
-  * rebase is just a version bump (last-replace-wins, both commits land
-  * in serializable version order); an APPEND commit ([[appendRetrying]])
-  * re-reads the new latest and carries `latest.files ++ staged` plus
-  * `latest.deletes` (tombstones reference immutable files still in the
-  * list, so they stay valid); a DELETE commit re-evaluates its predicate
-  * against the new latest ([[DeleteVectors.deleteWhere]]) — recomputing,
-  * not rebasing, because the concurrent commit may have added or
-  * rewritten rows the predicate must see. Rewrites derived from the
-  * snapshot they read (OPTIMIZE, REORG) make one attempt and throw
-  * [[LostRace]]. Readers are always safe: a manifest is either fully
-  * present or absent, and data files are immutable once published.
+  * re-attempted, bounded-N times. Rebase rules by commit taxonomy (the
+  * X75 step kinds): a REPLACE commit ([[commit]]) carries its own full
+  * file list, so the rebase is just a version bump (last-replace-wins,
+  * both commits land in serializable version order); an APPEND commit
+  * ([[appendRetrying]]) re-reads the new latest and carries
+  * `latest.files ++ staged` plus `latest.deletes` (tombstones reference
+  * immutable files still in the list, so they stay valid); a DELETE
+  * commit re-evaluates its predicate against the new latest
+  * ([[DeleteVectors.deleteWhere]]) — recomputing, not rebasing, because
+  * the concurrent commit may have added or rewritten rows the predicate
+  * must see. Rewrites derived from the snapshot they read (OPTIMIZE,
+  * REORG, incremental aggregate and view steps) make one attempt on it
+  * ([[commitOnce]]) and throw [[LostRace]]. Readers are always safe: a
+  * manifest is either fully present or absent, and data files are
+  * immutable once published.
   */
 object ManifestTable extends graft.QueryModule {
 
@@ -89,10 +94,13 @@ object ManifestTable extends graft.QueryModule {
     * stats. An entry describes an immutable file, so every commit keeps
     * the entry of each file it keeps ([[commitManifest]]); a file without
     * one never prunes.
+    * `index` names the version's record index ([[RecordIndex]]); it
+    * describes this version alone, so no later commit carries it.
     */
   case class Snapshot(version: Int, runDate: Int, runTime: Int,
       files: Seq[String], deletes: Seq[String] = Nil, op: String = "write",
-      state: State = Map.empty, stats: Map[String, ZoneMap.FileStats] = Map.empty)
+      state: State = Map.empty, stats: Map[String, ZoneMap.FileStats] = Map.empty,
+      index: Option[String] = None)
 
   type State = Map[String, JValue]
 
@@ -128,6 +136,7 @@ object ManifestTable extends graft.QueryModule {
     * for every file of `files` it keeps, with `stats` (the entries of the
     * files the commit adds, or of another version's files it
     * re-references) on top; entries of files outside `files` drop.
+    * `index` names the version's record index, if it has one.
     * Throws [[LostRace]] if the version was already committed. Returns
     * the committed version.
     */
@@ -135,13 +144,13 @@ object ManifestTable extends graft.QueryModule {
       date: Int, time: Int, files: Seq[String],
       deletes: Seq[String] = Nil, op: String = "write",
       state: Option[Snapshot] => State = _ => Map.empty,
-      stats: Seq[ZoneMap.FileStats] = Nil): Int = {
+      stats: Seq[ZoneMap.FileStats] = Nil, index: Option[String] = None): Int = {
     val version = parent.fold(1)(_.version + 1)
     val kept = files.toSet
     val snap = Snapshot(version, date, time, files, deletes, op,
       parent.fold(Map.empty: State)(_.state) ++ state(parent),
       (parent.toSeq.flatMap(_.stats.values) ++ stats)
-        .collect { case e if kept(e.file) => e.file -> e }.toMap)
+        .collect { case e if kept(e.file) => e.file -> e }.toMap, index)
     val fs = fsFor(spark, dir)
     val mdir = new Path(manifestDir(dir))
     fs.mkdirs(mdir)
@@ -259,9 +268,8 @@ object ManifestTable extends graft.QueryModule {
     * publish it. The snapshot carries its own complete file list, so
     * losing a race only bumps the target version — both writers' commits
     * land, in serializable (version) order, last replace wins the final
-    * state. A replace derived from the table it replaces passes
-    * `maxRetries = 0`, so a concurrent commit fails it instead of being
-    * overwritten. Returns the committed version.
+    * state. A replace derived from the table it replaces publishes
+    * through [[commitOnce]] instead. Returns the committed version.
     */
   def commit(df: DataFrame, dir: String, date: Int, time: Int,
       maxRetries: Int = 5): Int =
@@ -271,25 +279,27 @@ object ManifestTable extends graft.QueryModule {
   /** [[commit]] from already-staged files — the stage-first hook X187
     * constraint enforcement needs (validate the staged bytes, then
     * publish exactly those bytes), with `stats` the staged files'
-    * zone-map entries.
+    * zone-map entries and `index` their record index.
     */
   def commitStaged(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
-      stats: Seq[ZoneMap.FileStats] = Nil, op: String = "write"): Int =
+      stats: Seq[ZoneMap.FileStats] = Nil, op: String = "write",
+      index: Option[String] = None): Int =
     retrying("commit", dir, maxRetries) {
       commitManifest(spark, dir, snapshots(spark, dir).lastOption, date, time,
-        staged, op = op, stats = stats)
+        staged, op = op, stats = stats, index = index)
     }
 
-  /** One attempt to publish `staged` on top of `parent`, for rewrites
-    * derived from `parent` (OPTIMIZE, REORG): a lost race drops the
-    * staged files, since no retry will publish them, and escapes as
-    * [[LostRace]].
+  /** One attempt to publish `staged` on top of `parent` (None: version
+    * 1), for rewrites derived from the `parent` they read (OPTIMIZE,
+    * REORG, an incremental aggregate or view step), so any commit landing
+    * after that read fails this one: a lost race drops the staged files,
+    * since no retry will publish them, and escapes as [[LostRace]].
     */
   private[lake] def commitOnce(spark: SparkSession, dir: String,
-      parent: Snapshot, date: Int, time: Int, staged: Seq[String],
-      op: String): Int =
-    try commitManifest(spark, dir, Some(parent), date, time, staged, op = op)
+      parent: Option[Snapshot], date: Int, time: Int, staged: Seq[String],
+      op: String = "write"): Int =
+    try commitManifest(spark, dir, parent, date, time, staged, op = op)
     catch { case e: LostRace => dropStaged(spark, dir, staged); throw e }
 
   /** APPEND commit with optimistic concurrency: the new version is
@@ -327,10 +337,7 @@ object ManifestTable extends graft.QueryModule {
       base: Option[Int] = None,
       state: Option[Snapshot] => State = _ => Map.empty,
       stats: Seq[ZoneMap.FileStats] = Nil): Int = {
-    val baseSnap = base.map { bv =>
-      snapshots(spark, dir).find(_.version == bv).getOrElse(
-        throw new NoSuchElementException(s"no committed version $bv at $dir"))
-    }
+    val baseSnap = base.map(snapshot(spark, dir, _))
     retrying("append", dir, maxRetries) {
       val latest = snapshots(spark, dir).lastOption
       val carried = baseSnap.orElse(latest)
@@ -341,7 +348,7 @@ object ManifestTable extends graft.QueryModule {
     }
   }
 
-  private def readText(fs: FileSystem, p: Path): String = {
+  private[lake] def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
@@ -360,7 +367,8 @@ object ManifestTable extends graft.QueryModule {
       (j \ "op").extractOpt[String].getOrElse("write"),
       state.getOrElse(Map.empty),
       (j \ "stats").extractOpt[Seq[ZoneMap.FileStats]].getOrElse(Nil)
-        .map(e => e.file -> e).toMap), state.isEmpty)
+        .map(e => e.file -> e).toMap,
+      (j \ "index").extractOpt[String]), state.isEmpty)
   }
 
   /** The one JSON renderer of the log: manifests, checkpoints and the
@@ -374,7 +382,8 @@ object ManifestTable extends graft.QueryModule {
       ("deletes" -> Some(s.deletes).filter(_.nonEmpty)) ~
       ("op" -> Some(s.op).filter(_ != "write")) ~
       ("state" -> JObject(s.state.toList.sortBy(_._1))) ~
-      ("stats" -> (if (s.stats.isEmpty) JNothing else statsJson(s.stats.values.toSeq)))
+      ("stats" -> (if (s.stats.isEmpty) JNothing else statsJson(s.stats.values.toSeq))) ~
+      ("index" -> s.index)
   }
 
   /** Zone-map entries, sorted by file; an entry without Bloom filters
@@ -538,6 +547,11 @@ object ManifestTable extends graft.QueryModule {
   def latestVersion(spark: SparkSession, dir: String): Option[Int] =
     snapshots(spark, dir).lastOption.map(_.version)
 
+  /** The committed snapshot `version` of `dir`. */
+  def snapshot(spark: SparkSession, dir: String, version: Int): Snapshot =
+    snapshots(spark, dir).find(_.version == version).getOrElse(
+      throw new NoSuchElementException(s"no committed version $version at $dir"))
+
   /** Deep clone (X108 — Delta CLONE's shape): copy one version's data
     * files (and deletion-vector sidecars) byte-for-byte to `dstDir` and
     * commit them there as version 1 of an independent table. The clone
@@ -545,8 +559,9 @@ object ManifestTable extends graft.QueryModule {
     * the source can never break it (pinned in ManifestSpec), which is
     * the contract that matters for "hand this snapshot to another team".
     * The clone carries the version's state (writer state, properties,
-    * constraints, column mapping) and its zone-map entries, remapped with
-    * the files, so it reads and prunes like its source.
+    * constraints, column mapping) and its zone-map entries and Bloom
+    * filters, remapped with the files, so it reads and prunes like its
+    * source. A record index is not copied; lookups on the clone scan.
     * Copy cost is data-proportional and embarrassingly parallel (the
     * driver loop moves manifests' worth of file names; bytes stream
     * file-by-file — on a real cluster this is a distcp-shaped job).
@@ -559,8 +574,7 @@ object ManifestTable extends graft.QueryModule {
     import org.apache.spark.sql.functions.{col, regexp_replace}
     val v = version.getOrElse(latestVersion(spark, srcDir).getOrElse(
       throw new NoSuchElementException(s"no committed snapshot at $srcDir")))
-    val snap = snapshots(spark, srcDir).find(_.version == v).getOrElse(
-      throw new NoSuchElementException(s"no version $v at $srcDir"))
+    val snap = snapshot(spark, srcDir, v)
     val fs = fsFor(spark, srcDir)
     require(!fs.exists(new Path(manifestDir(dstDir))),
       s"clone target $dstDir already has a manifest log")
@@ -577,14 +591,16 @@ object ManifestTable extends graft.QueryModule {
         .toMap
     def remap(rel: String): String =
       s"${dirMap(rel.split('/').dropRight(1).mkString("/"))}/${rel.split('/').last}"
-    val files = snap.files.map { rel =>
+    // a Bloom filters file keys by file name: it copies like a data file
+    val blooms = snap.stats.values.flatMap(_.blooms.values).toSeq.distinct
+    (snap.files ++ blooms).foreach { rel =>
       val dst = new Path(s"$dstDir/${remap(rel)}")
       fs.mkdirs(dst.getParent)
       org.apache.hadoop.fs.FileUtil.copy(
         fs, new Path(s"$srcDir/$rel"), fs, dst, false, true,
         spark.sparkContext.hadoopConfiguration)
-      remap(rel)
-    }.sorted
+    }
+    val files = snap.files.map(remap).sorted
     val deletes =
       if (snap.deletes.isEmpty) Nil
       else {
@@ -599,7 +615,8 @@ object ManifestTable extends graft.QueryModule {
       }
     commitManifest(spark, dstDir, None, date, time, files, deletes = deletes,
       state = _ => snap.state,
-      stats = snap.stats.values.toSeq.map(e => e.copy(file = remap(e.file))))
+      stats = snap.stats.values.toSeq.map(e => e.copy(file = remap(e.file),
+        blooms = e.blooms.map { case (c, p) => c -> remap(p) })))
   }
 
   /** Exact row count of a committed snapshot from parquet FOOTERS alone —
@@ -695,9 +712,7 @@ object ManifestTable extends graft.QueryModule {
     * the bare-scan plan (pinned in DeleteVectorSpec).
     */
   def readVersion(spark: SparkSession, dir: String, version: Int): DataFrame = {
-    val snap = snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(
-        s"no committed version $version at $dir"))
+    val snap = snapshot(spark, dir, version)
     DeleteVectors.applyTo(spark, dir, snap, rawVersionScan(spark, dir, snap))
   }
 

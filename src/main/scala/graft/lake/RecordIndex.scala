@@ -1,6 +1,5 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,12 +18,11 @@ import graft.sources.Tables
   *    it every upsert is a full-table join; with it, cost ∝ touched
   *    files).
   *
-  * The index is itself a parquet table under `_index/v%08d`, written
-  * only AFTER its version's manifest has landed (ANALYZE's post-commit
-  * shape), so a lost or crashed attempt leaves no index for a foreign
-  * commit at that version to adopt; a version without an index (a
-  * crash between the put and the index write, or another writer's
-  * commit) answers lookups by scanning.
+  * The index is itself a parquet table, staged in its files' writer-
+  * unique dir (`data/w<8 hex>/_index`) before the put that names it
+  * (the manifest's `index`): complete whenever named, never named by a
+  * lost attempt, reclaimed by VACUUM with the dir. A version without
+  * one answers lookups by scanning.
   * It stores `(key, file, pos)` from the writer's own
   * `_metadata.file_path/row_index`; at 100 TB the index is just another
   * keyed table — bucketed by key with its own zone maps, probed with an
@@ -37,12 +35,11 @@ import graft.sources.Tables
   * keys refuse, they would make "the" position ambiguous).
   */
 object RecordIndex extends graft.QueryModule {
-  private def indexRel(version: Int) = f"_index/v$version%08d"
 
   /** Commit `df` as the next version with a record index on `keyCol`.
-    * Order: staged data files → manifest put (the commit point, through
-    * the retrying replace) → index table of the landed version. Returns
-    * the version.
+    * Order: staged data files → index table in the same staging dir →
+    * manifest put naming it (the commit point, through the retrying
+    * replace). Returns the version.
     */
   def commitWithIndex(df: DataFrame, dir: String, date: Int, time: Int,
       keyCol: String): Int = {
@@ -53,21 +50,22 @@ object RecordIndex extends graft.QueryModule {
     if (dup > 0) ManifestTable.dropStaged(spark, dir, files)
     require(dup == 0L,
       s"record index: $dup duplicate key(s) in '$keyCol' — positions would be ambiguous")
-    val version = ManifestTable.commitStaged(spark, dir, date, time, files)
+    val rel = s"${files.head.split('/').dropRight(1).mkString("/")}/_index"
     staged
       .select(col(keyCol).cast("long").as("key"),
         // store the rel path the manifest lists, not the absolute URI
         DeleteVectors.relFileIn(dir).as("file"),
         col("_metadata.row_index").as("pos"))
-      .write.mode("error").parquet(s"$dir/${indexRel(version)}")
-    version
+      .write.mode("error").parquet(s"$dir/$rel")
+    ManifestTable.commitStaged(spark, dir, date, time, files, index = Some(rel))
   }
 
-  /** The index table of `version` (immutable once written — schema
-    * cached like any fixture relation).
+  /** The index table of `version`, if its commit built one (immutable —
+    * schema cached like any fixture relation).
     */
-  def index(spark: SparkSession, dir: String, version: Int): DataFrame =
-    Tables.cachedParquet(spark, s"$dir/${indexRel(version)}")
+  def index(spark: SparkSession, dir: String, version: Int): Option[DataFrame] =
+    ManifestTable.snapshot(spark, dir, version).index
+      .map(rel => Tables.cachedParquet(spark, s"$dir/$rel"))
 
   /** Point lookup: exactly the rows whose `keyCol` is in `keys`, opening
     * only the files the index names. A version without an index is
@@ -75,12 +73,12 @@ object RecordIndex extends graft.QueryModule {
     */
   def pointLookup(spark: SparkSession, dir: String, version: Int,
       keyCol: String, keys: Seq[Long]): DataFrame = {
-    if (!ManifestTable.fsFor(spark, dir).exists(new Path(s"$dir/${indexRel(version)}")))
-      return ManifestTable.readVersion(spark, dir, version)
+    val hits = index(spark, dir, version) match {
+      case None => return ManifestTable.readVersion(spark, dir, version)
         .where(col(keyCol).cast("long").isin(keys: _*))
-    val hits = index(spark, dir, version)
-      .where(col("key").isin(keys: _*))
-      .collect() // lookup-sized by construction
+      case Some(idx) => idx.where(col("key").isin(keys: _*))
+        .collect() // lookup-sized by construction
+    }
     val touched = hits.map(_.getAs[String]("file")).distinct.sorted
     if (touched.isEmpty)
       return ManifestTable.readVersion(spark, dir, version).where(lit(false))
@@ -99,7 +97,8 @@ object RecordIndex extends graft.QueryModule {
     */
   def routeUpserts(spark: SparkSession, dir: String, version: Int,
       batch: DataFrame, keyCol: String): DataFrame = {
-    val idx = index(spark, dir, version)
+    val idx = index(spark, dir, version).getOrElse(throw new NoSuchElementException(
+      s"version $version at $dir has no record index"))
     batch.select(col(keyCol).cast("long").as("key"))
       .join(idx, Seq("key"), "left")
       .groupBy(coalesce(col("file"), lit("__insert__")).as("target"))

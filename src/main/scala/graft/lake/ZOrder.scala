@@ -149,7 +149,7 @@ object ZOrder extends graft.QueryModule {
     val folded = ManifestTable.readVersion(spark, dir, latest.version)
       .repartition(n)
     val files = ManifestTable.stageDataFiles(folded, dir)
-    Some(ManifestTable.commitOnce(spark, dir, latest, date, time, files, "optimize"))
+    Some(ManifestTable.commitOnce(spark, dir, Some(latest), date, time, files, "optimize"))
   }
 
   /** X196 — banded bin-packing (`OPTIMIZE … WHERE col BETWEEN lo AND

@@ -40,12 +40,12 @@ object ZoneMap extends graft.QueryModule {
 
   /** Per-file `[lo, hi]` ranges for the stat columns, plus the file's row
     * count (X69 stats-only aggregates), string-typed bounds (X78 —
-    * date strings, ULIDs; lexicographic pruning) and the per-column
-    * Bloom filters of [[BloomIndex]] (column → base64). A column whose
-    * values in the file are all null has no bounds. `rows = -1` and the
-    * empty maps mark older entries — readers then degrade to scanning,
-    * never to a wrong answer (json4s fills the defaults when fields are
-    * absent, pinned in ZoneMapSpec).
+    * date strings, ULIDs; lexicographic pruning) and the file holding
+    * each column's [[BloomIndex]] filter. A column whose values in the
+    * file are all null has no bounds. `rows = -1` and the empty maps mark
+    * older entries — readers then degrade to scanning, never to a wrong
+    * answer (json4s fills the defaults when fields are absent, pinned in
+    * ZoneMapSpec).
     */
   case class FileStats(file: String, lo: Map[String, Long], hi: Map[String, Long],
       rows: Long = -1L,
@@ -174,12 +174,6 @@ object ZoneMap extends graft.QueryModule {
     ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
       stats = statsFor(spark, dir, staged, statsCols, strCols))
 
-  /** The committed snapshot `version` of `dir`. */
-  private def snapshotAt(spark: SparkSession, dir: String,
-      version: Int): ManifestTable.Snapshot =
-    ManifestTable.snapshots(spark, dir).find(_.version == version)
-      .getOrElse(throw new NoSuchElementException(s"no version $version at $dir"))
-
   /** The zone-map entries of `version`, sorted by file; None when it has
     * none.
     */
@@ -193,7 +187,7 @@ object ZoneMap extends graft.QueryModule {
     */
   def candidateFiles(spark: SparkSession, dir: String, version: Int,
       column: String, lo: Long, hi: Long): Seq[String] =
-    rangeCandidates(snapshotAt(spark, dir, version), column, lo, hi)
+    rangeCandidates(ManifestTable.snapshot(spark, dir, version), column, lo, hi)
 
   private def rangeCandidates(snap: ManifestTable.Snapshot, column: String,
       lo: Long, hi: Long): Seq[String] =
@@ -217,7 +211,7 @@ object ZoneMap extends graft.QueryModule {
     */
   def readRange(spark: SparkSession, dir: String, version: Int,
       column: String, lo: Long, hi: Long): DataFrame = {
-    val snap = snapshotAt(spark, dir, version)
+    val snap = ManifestTable.snapshot(spark, dir, version)
     scanPruned(spark, dir, snap, rangeCandidates(snap, column, lo, hi),
       col(column) >= lo && col(column) <= hi)
   }
@@ -229,7 +223,7 @@ object ZoneMap extends graft.QueryModule {
     */
   def readRangeStr(spark: SparkSession, dir: String, version: Int,
       column: String, lo: String, hi: String): DataFrame = {
-    val snap = snapshotAt(spark, dir, version)
+    val snap = ManifestTable.snapshot(spark, dir, version)
     scanPruned(spark, dir, snap, snap.files.filter(f => snap.stats.get(f).forall(s =>
         !s.slo.contains(column) || (s.shi(column) >= lo && s.slo(column) <= hi))),
       col(column) >= lo && col(column) <= hi)
@@ -244,7 +238,7 @@ object ZoneMap extends graft.QueryModule {
     */
   def candidateFilesEq(spark: SparkSession, dir: String, version: Int,
       column: String, values: Seq[String]): Seq[String] =
-    eqCandidates(snapshotAt(spark, dir, version), column, values)
+    eqCandidates(ManifestTable.snapshot(spark, dir, version), column, values)
 
   private def eqCandidates(snap: ManifestTable.Snapshot, column: String,
       values: Seq[String]): Seq[String] =
@@ -257,7 +251,7 @@ object ZoneMap extends graft.QueryModule {
     */
   def readEq(spark: SparkSession, dir: String, version: Int,
       column: String, values: Seq[String]): DataFrame = {
-    val snap = snapshotAt(spark, dir, version)
+    val snap = ManifestTable.snapshot(spark, dir, version)
     scanPruned(spark, dir, snap, eqCandidates(snap, column, values),
       col(column).isin(values: _*))
   }
@@ -275,7 +269,7 @@ object ZoneMap extends graft.QueryModule {
     * or the version has tombstones: degrade to scanning, never guess.
     */
   def metaCount(spark: SparkSession, dir: String, version: Int): Option[Long] = {
-    val snap = snapshotAt(spark, dir, version)
+    val snap = ManifestTable.snapshot(spark, dir, version)
     val counts = snap.files.map(f => snap.stats.get(f).fold(-1L)(_.rows))
     if (snap.deletes.nonEmpty || counts.exists(_ < 0)) None else Some(counts.sum)
   }
@@ -287,7 +281,7 @@ object ZoneMap extends graft.QueryModule {
     */
   def metaMinMax(spark: SparkSession, dir: String, version: Int,
       column: String): Option[(Long, Long)] = {
-    val snap = snapshotAt(spark, dir, version)
+    val snap = ManifestTable.snapshot(spark, dir, version)
     val bounded = snap.files.flatMap(snap.stats.get).filter(_.lo.contains(column))
     if (snap.deletes.nonEmpty || snap.files.isEmpty ||
         bounded.size < snap.files.size) None
@@ -301,7 +295,7 @@ object ZoneMap extends graft.QueryModule {
     */
   def classifyRange(spark: SparkSession, dir: String, version: Int,
       column: String, lo: Long, hi: Long): (Seq[String], Seq[FileStats], Seq[String]) = {
-    val snap = snapshotAt(spark, dir, version)
+    val snap = ManifestTable.snapshot(spark, dir, version)
     val (skip, inside, straddle) = snap.files.foldLeft(
       (Vector.empty[String], Vector.empty[FileStats], Vector.empty[String])) {
       case ((sk, in, st), f) => snap.stats.get(f).filter(_.lo.contains(column)) match {
@@ -324,7 +318,7 @@ object ZoneMap extends graft.QueryModule {
     val (_, inside, straddle) = classifyRange(spark, dir, version, column, lo, hi)
     val boundary =
       if (straddle.isEmpty) 0L
-      else scanPruned(spark, dir, snapshotAt(spark, dir, version), straddle,
+      else scanPruned(spark, dir, ManifestTable.snapshot(spark, dir, version), straddle,
         col(column) >= lo && col(column) <= hi).count()
     (inside.map(_.rows).sum + boundary, straddle.size)
   }

@@ -57,14 +57,16 @@ class BloomIndexSpec extends SparkSpec {
     // The committed version always has its filters (published by the
     // manifest put itself), covering every data file.
     val all = ManifestTable.snapshots(spark, dir).find(_.version == 1).get.files
-    assert(BloomIndex.fileBlooms(spark, dir, 1, "k").keySet == all.toSet)
+    assert(BloomIndex.fileBlooms(spark, dir, ManifestTable.snapshot(spark, dir, 1), "k")
+      .keySet == all.toSet)
   }
 
   test("a bloom column named with a quote round-trips its sidecar") {
     val qdir = graft.util.Scratch.dir("bloom_quote")
     val df = (0L until 32L).map(k => (k, k % 4)).toDF("k\"q", "t").repartition(4, col("t"))
     BloomIndex.commitWithBloom(df, qdir, 20250601, 1200, "k\"q")
-    assert(BloomIndex.fileBlooms(spark, qdir, 1, "k\"q").nonEmpty)
+    assert(BloomIndex.fileBlooms(spark, qdir, ManifestTable.snapshot(spark, qdir, 1), "k\"q")
+      .nonEmpty)
     assert(BloomIndex.readIn(spark, qdir, 1, "k\"q", Seq(5L, 6L))
       .select(col("`k\"q`")).as[Long].collect().toSet == Set(5L, 6L))
   }
@@ -74,15 +76,52 @@ class BloomIndexSpec extends SparkSpec {
     val df = (0L until 16L).map(k => (k, s"p$k")).toDF("k", "p").repartition(2)
     BloomIndex.commitWithBloom(df, vdir, 20250601, 1200, "k")
     BloomIndex.commitWithBloom(df, vdir, 20250601, 1300, "k")
+    val v1Filters = filterFiles(vdir, 1)
     Vacuum.vacuum(spark, vdir, keepLast = 1)
     val fs = new org.apache.hadoop.fs.Path(vdir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the filters ride the manifests: the expired version's went with it
+    // the filters sit in the version's staging dir: they went with it
     val names = fs.listStatus(new org.apache.hadoop.fs.Path(s"$vdir/_manifests"))
       .map(_.getPath.getName).toSet
     assert(names("v00000002.json") && !names("v00000001.json") &&
       !names.exists(_.contains("bloom")), names)
-    assert(BloomIndex.fileBlooms(spark, vdir, 2, "k").nonEmpty)
+    assert(v1Filters.nonEmpty &&
+      v1Filters.forall(f => !fs.exists(new org.apache.hadoop.fs.Path(s"$vdir/$f"))))
+    assert(BloomIndex.fileBlooms(spark, vdir, ManifestTable.snapshot(spark, vdir, 2), "k").nonEmpty)
+  }
+
+  private def filterFiles(d: String, v: Int): Set[String] =
+    ManifestTable.snapshots(spark, d).find(_.version == v).get
+      .stats.values.flatMap(_.blooms.values).toSet
+
+  test("filters live in one staged file the entries name, so later manifests stay small") {
+    val sdir = graft.util.Scratch.dir("bloom_small")
+    val df = (0L until 8000L).map(k => (k, s"p$k")).toDF("k", "p").repartition(4)
+    BloomIndex.commitWithBloom(df, sdir, 20250601, 1200, "k")
+    ManifestTable.appendRetrying(Seq((99999L, "x")).toDF("k", "p"), sdir, 20250601, 1300)
+    val Seq(v1, v2) = ManifestTable.snapshots(spark, sdir)
+    // the append keeps v1's files, and with them their filters
+    val filters = BloomIndex.fileBlooms(spark, sdir, ManifestTable.snapshot(spark, sdir, 2), "k")
+    assert(filters.keySet == v1.files.toSet)
+    assert(filterFiles(sdir, 2).toSeq == v1.files.map(_.split('/').dropRight(1)
+      .mkString("/")).distinct.map(d => s"$d/_blooms.json"))
+    val fs = new org.apache.hadoop.fs.Path(sdir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(v1, v2).foreach { s =>
+      val in = fs.open(new org.apache.hadoop.fs.Path(f"$sdir/_manifests/v${s.version}%08d.json"))
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      assert(text.length < 4096, s"v${s.version} manifest is ${text.length} bytes")
+      filters.values.foreach(b => assert(!text.contains(b)))
+    }
+  }
+
+  test("a clone prunes like its source") {
+    val cdir = graft.util.Scratch.dir("bloom_clone")
+    ManifestTable.cloneVersion(spark, dir, cdir, 20250601, 1300)
+    assert(BloomIndex.candidateFilesIn(spark, cdir, 1, "k", Seq(5L)).size ==
+      BloomIndex.candidateFilesIn(spark, dir, 1, "k", Seq(5L)).size)
+    assert(BloomIndex.readIn(spark, cdir, 1, "k", Seq(5L)).select("p").as[String]
+      .collect().toSeq == Seq("payload5"))
   }
 
   test("a lost race leaves no filter behind: the interloper's version reads only its own rows") {

@@ -112,6 +112,39 @@ object CrashingCommit {
   }
 }
 
+/** A concurrent writer that commits while a job runs: [[during]] is a
+  * row filter that keeps every row, but the first row it sees after
+  * [[arm]] puts a copy of `dir`'s latest manifest as the next version,
+  * the way a writer that read the same parent and staged faster would.
+  * It lands between a commit's read of its parent and its put, the
+  * window a primitive-level interloper cannot reach.
+  */
+object InterloperDuringJob {
+  private val Slot = """v(\d{8})\.json""".r
+  private val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  def arm(): Unit = armed.set(true)
+
+  def during(dir: String): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.udf { () =>
+      if (armed.compareAndSet(true, false)) land(dir)
+      true
+    }.asNondeterministic().apply()
+
+  private def land(dir: String): Unit = {
+    import java.nio.file.{Files, StandardOpenOption}
+    val mdir = new java.io.File(dir, "_manifests")
+    val (v, latest) = mdir.listFiles().toSeq.flatMap(f => f.getName match {
+      case Slot(n) => Some(n.toInt -> f)
+      case _ => None
+    }).maxBy(_._1)
+    val body = JsonMethods.parse(new String(Files.readAllBytes(latest.toPath), "UTF-8"))
+    Files.write(new java.io.File(mdir, f"v${v + 1}%08d.json").toPath,
+      JsonMethods.compact(JsonMethods.render(body.replace(List("version"), JInt(v + 1))))
+        .getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
+  }
+}
+
 object CommitPrimitiveSpec {
   /** Run `body` with the commit primitive `cls` selected. */
   def using[T](spark: SparkSession, cls: Class[_ <: CommitPrimitive])(body: => T): T = {

@@ -76,4 +76,21 @@ class IncrJoinViewSpec extends SparkSpec {
       .select("k").as[Long].collect().toSet
     assert(got == Set(1L, 4L))
   }
+
+  test("a refresh landing while this one stages fails it instead of shifting the view") {
+    val root = graft.util.Scratch.dir("ijv_race")
+    val fact = Seq((1L, 10L, 5.0), (2L, 10L, 7.0)).toDF("k", "fk", "x")
+    val dim = Seq((10L, "ten")).toDF("fk", "label")
+    ManifestTable.commit(fact, s"$root/fact", 20250801, 900)
+    IncrJoinView.refresh(spark, s"$root/fact", s"$root/view", dim,
+      Seq("k", "fk", "x"), "fk", 20250801, 1000)
+    ManifestTable.commit(fact.unionByName(Seq((3L, 10L, 1.0)).toDF("k", "fk", "x")),
+      s"$root/fact", 20250801, 1100)
+    InterloperDuringJob.arm()
+    intercept[LostRace](IncrJoinView.refresh(spark, s"$root/fact", s"$root/view",
+      dim.where(InterloperDuringJob.during(s"$root/view")),
+      Seq("k", "fk", "x"), "fk", 20250801, 1200))
+    // view v2 is the interloper's, not a step published on top of it as v3
+    assert(ManifestTable.latestVersion(spark, s"$root/view").contains(2))
+  }
 }

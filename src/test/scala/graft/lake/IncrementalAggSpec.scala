@@ -62,4 +62,22 @@ class IncrementalAggSpec extends SparkSpec {
     val v = IncrementalAgg.increment(spark, dir, batch(1), Seq("event_type"), "value", 20250301, 901)
     assert(v == 2 && state(dir, 2) == fullAgg(batch(0).unionByName(batch(1))))
   }
+
+  test("incr-agg: an increment landing while this one stages fails it and drops its files") {
+    val dir = graft.util.Scratch.dir("incr_spec4")
+    IncrementalAgg.increment(spark, dir, batch(0), Seq("event_type"), "value", 20250301, 900)
+    val v1Dirs = ManifestTable.snapshots(spark, dir).head.files
+      .map(_.split('/').dropRight(1).mkString("/")).toSet
+    InterloperDuringJob.arm()
+    intercept[LostRace](IncrementalAgg.increment(spark, dir,
+      batch(1).where(InterloperDuringJob.during(dir)),
+      Seq("event_type"), "value", 20250301, 901))
+    // the interloper's v2 stands, and no version folds batch 1 onto v1
+    // behind its back; the loser's staged dir is gone
+    assert(ManifestTable.latestVersion(spark, dir).contains(2))
+    assert(state(dir, 2) == state(dir, 1))
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/data"))
+      .map(st => s"data/${st.getPath.getName}").toSet == v1Dirs)
+  }
 }

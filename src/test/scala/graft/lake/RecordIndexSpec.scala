@@ -30,7 +30,7 @@ class RecordIndexSpec extends SparkSpec {
     val got = df.select("k", "v").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === keys.map(k => k -> k * 10).toMap)
     // the scan's input files are exactly the files the index names
-    val expected = RecordIndex.index(spark, dir, 1)
+    val expected = RecordIndex.index(spark, dir, 1).get
       .where(col("key").isin(keys: _*))
       .select("file").distinct().as[String].collect().toSet.map((f: String) => f.split('/').last)
     val opened = df.queryExecution.executedPlan.collectLeaves()
@@ -68,6 +68,27 @@ class RecordIndexSpec extends SparkSpec {
     assert(ManifestTable.snapshots(spark, dir).isEmpty)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_index")))
+  }
+
+  test("the index stages with its version's files: the manifest names it and vacuum reclaims it with them") {
+    val dir = mk("ri_vacuum")
+    RecordIndex.commitWithIndex((0L until 50L).map(i => (i, i, i * 10)).toDF("k", "j", "v"),
+      dir, 20250701, 910, "k")
+    val Seq(v1, v2) = ManifestTable.snapshots(spark, dir)
+    Seq(v1, v2).foreach(s => assert(s.index.toSeq ==
+      s.files.map(_.split('/').dropRight(1).mkString("/")).distinct.map(d => s"$d/_index")))
+    // a later commit does not carry an index of other files
+    ManifestTable.appendRetrying(Seq((900L, 900L, 9000L)).toDF("k", "j", "v"), dir, 20250701, 920)
+    assert(ManifestTable.snapshots(spark, dir).last.index.isEmpty)
+    assert(RecordIndex.pointLookup(spark, dir, 3, "k", Seq(5L, 900L))
+      .select("v").as[Long].collect().toSet == Set(50L, 9000L))
+    Vacuum.vacuum(spark, dir, keepLast = 2)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${v1.index.get}")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${v2.index.get}")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_index")))
+    assert(RecordIndex.pointLookup(spark, dir, 2, "k", Seq(5L))
+      .select("v").as[Long].collect().toSeq == Seq(50L))
   }
 
   test("a lost race leaves no index behind: the interloper's version reads only its own rows") {
