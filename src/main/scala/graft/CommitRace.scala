@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.lake.{Catalog, DeleteVectors, LostRace, ManifestTable, ZOrder}
+import graft.lake.{Catalog, Constraints, DeleteVectors, LostRace, ManifestTable, ZOrder}
 
 /** Two-PROCESS optimistic-commit race runner (dev harness, driven by
   * `tools/commit_race.sh`).
@@ -21,11 +21,14 @@ import graft.lake.{Catalog, DeleteVectors, LostRace, ManifestTable, ZOrder}
   *
   * Modes (first arg):
   *  - `seed <dir>`            — commit v1: ids 1..10 tagged "base"
-  *  - `append <dir> <tag> <rounds> <startFile> [optimize]` — wait for
-  *    startFile, then `rounds` × appendRetrying of one `(id, tag)` row
-  *    each, with `optimize` each followed by an OPTIMIZE (a bin-pack to
-  *    one file, which makes one attempt and may lose its race); writes
-  *    its committed version list to `<dir>/_versions_<tag>.txt`
+  *  - `append <dir> <tag> <rounds> <startFile> [optimize|violate]` —
+  *    wait for startFile, then `rounds` × appendRetrying of one
+  *    `(id, tag)` row each, with `optimize` each followed by an OPTIMIZE
+  *    (a bin-pack to one file, which makes one attempt and may lose its
+  *    race), with `violate` every odd round's id negative (a row the
+  *    `constraint` toggler's check refuses while it is active; a refused
+  *    append lands no version); writes its committed version list to
+  *    `<dir>/_versions_<tag>.txt`
   *  - `delete <dir> <rounds> <startFile>` — `rounds` × delete of base id
   *    `2k` (k = 1..rounds ≤ 5): predicates touch only seeded rows, so the
   *    final state is ORDER-INDEPENDENT and exactly checkable even though
@@ -47,6 +50,15 @@ import graft.lake.{Catalog, DeleteVectors, LostRace, ManifestTable, ZOrder}
   *  - `check-cat <root> <aRounds>` — cut versions contiguous with no
   *    gaps, per-writer strictly increasing, the final cut references BOTH
   *    writers' final table versions, and both tables read back exactly
+  *  - `constraint <dir> <rounds> <startFile>` — `rounds` toggles of
+  *    CHECK `pos`: DROP when it is active, else ADD it as `id > 0`, or at
+  *    least the smallest id committed when the round starts (the rows
+  *    already there pass, a later violating append does not); an ADD
+  *    refused because a violating row landed since is reported, not fatal
+  *  - `check-constraints <dir>` — after an `append … violate` /
+  *    `constraint` race: every version's rows satisfy that version's own
+  *    constraint set, and the latest holds the seeded rows plus exactly
+  *    the appends that landed
   *  - `check-appendopt <dir> <rounds>` — after an `append … optimize`
   *    race: every version in the log reads (no writer ever touched
   *    another's committed files), and the latest holds exactly the seeded
@@ -102,12 +114,16 @@ object CommitRace {
       val s = session(); import s.implicits._
       val (dir, tag, rounds) = (args(1), args(2), args(3).toInt)
       val optimize = args.lift(5).contains("optimize")
+      val violate = args.lift(5).contains("violate")
       awaitStart(args(4), tag)
-      var lost = 0
-      val versions = (1 to rounds).map { i =>
-        val v = ManifestTable.appendRetrying(
-          Seq((1000L * (tag.hashCode.abs % 97 + 1) + i, tag)).toDF("id", "tag"),
-          dir, 20250816, 900 + i, maxRetries = Retries)
+      var (lost, refused) = (0, 0)
+      val versions = (1 to rounds).flatMap { i =>
+        val id = 1000L * (tag.hashCode.abs % 97 + 1) + i
+        val v = try Some(ManifestTable.appendRetrying(
+          Seq((if (violate && i % 2 == 1) -id else id, tag)).toDF("id", "tag"),
+          dir, 20250816, 900 + i, maxRetries = Retries))
+        catch { case e: IllegalArgumentException if violate &&
+            e.getMessage.startsWith("CHECK constraint violation") => refused += 1; None }
         if (optimize)
           try ZOrder.binPack(s, dir, Long.MaxValue / 4, 20250816, 900 + i)
           catch { case _: LostRace => lost += 1 }
@@ -115,7 +131,50 @@ object CommitRace {
       }
       Files.writeString(Paths.get(s"$dir/_versions_$tag.txt"),
         versions.mkString(","))
-      println(s"RACE append $tag versions=${versions.mkString(",")} lost_optimize=$lost")
+      println(s"RACE append $tag versions=${versions.mkString(",")} " +
+        s"lost_optimize=$lost refused=$refused")
+      s.stop()
+
+    case "constraint" =>
+      val s = session()
+      val (dir, rounds) = (args(1), args(2).toInt)
+      awaitStart(args(3), "con")
+      val toggles = (1 to rounds).map { j =>
+        if (Constraints.active(s, dir).nonEmpty) {
+          Constraints.drop(s, dir, "pos", 20250816, 900 + j); "drop"
+        } else {
+          val floor = ManifestTable.readLatest(s, dir).agg(min("id")).head.getLong(0)
+          try { Constraints.add(s, dir, "pos", s"id > 0 OR id >= $floor", 20250816, 900 + j); "add" }
+          catch {
+            case e: IllegalArgumentException if e.getMessage.contains("existing rows violate") => "refused"
+            case e: IllegalStateException if e.getMessage.contains("consecutive races") => "lost"
+          }
+        }
+      }
+      println(s"RACE constraint toggles=${toggles.mkString(",")}")
+      s.stop()
+
+    case "check-constraints" =>
+      val s = session()
+      val dir = args(1)
+      val snaps = ManifestTable.snapshots(s, dir)
+      assert(snaps.map(_.version) == (1 to snaps.size),
+        "log must hold every version exactly once")
+      val checked = snaps.count { v =>
+        val set = Constraints.activeAt(s, dir, v.version)
+        set.foreach { c =>
+          val bad = ManifestTable.readVersion(s, dir, v.version)
+            .where(!coalesce(expr(c.predicate), lit(false))).count()
+          assert(bad == 0, s"version ${v.version} violates its own ${c.name} " +
+            s"(${c.predicate}): $bad rows")
+        }
+        set.nonEmpty
+      }
+      val landed = readVersions(dir, "a").size
+      val rows = ManifestTable.readLatest(s, dir).count()
+      assert(rows == 10 + landed, s"latest holds $rows rows, want 10 + $landed landed appends")
+      println(s"RACE check-constraints OK versions=${snaps.size} constrained=$checked " +
+        s"appends=$landed")
       s.stop()
 
     case "delete" =>

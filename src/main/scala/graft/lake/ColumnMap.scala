@@ -293,25 +293,36 @@ object ColumnMap extends graft.QueryModule {
     require(snaps.nonEmpty, s"no committed snapshot at $dir")
     val snap = version.map(v => snaps.find(_.version == v).getOrElse(
       throw new NoSuchElementException(s"no version $v at $dir"))).getOrElse(snaps.last)
+    logical(spark, dir, snap, snap.files)
+  }
+
+  /** `files` of `snap` (its tombstones applied) under the snapshot's
+    * logical names — [[read]] of the whole version, and of just the
+    * files a commit adds when the commit checks its CHECK constraints
+    * ([[Constraints]]).
+    */
+  private[lake] def logical(spark: SparkSession, dir: String,
+      snap: ManifestTable.Snapshot, files: Seq[String]): DataFrame = {
     val fields = mappingOf(snap) match {
       case Some(fs) => fs
       // a version written before the table was mapped reads as stored
       case None => return DeleteVectors.applyTo(spark, dir, snap,
-        ManifestTable.rawVersionScan(spark, dir, snap))
+        if (files == snap.files) ManifestTable.rawVersionScan(spark, dir, snap)
+        else spark.read.parquet(files.map(f => s"$dir/$f"): _*))
     }
     // X215: an empty version (schema-first CREATE, or every row deleted
     // by a replace) serves its mapped schema with zero rows — there are
     // no footers to scan
-    if (snap.files.isEmpty)
+    if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(fields.map(f =>
           org.apache.spark.sql.types.StructField(f.logical,
             org.apache.spark.sql.types.DataType.fromDDL(f.dtype)))))
-    def project(files: Seq[String]): DataFrame = {
+    def project(group: Seq[String]): DataFrame = {
       val scan = DeleteVectors.applyTo(spark, dir, snap,
         spark.read.option("mergeSchema", "true")
-          .parquet(files.map(f => s"$dir/$f"): _*))
+          .parquet(group.map(f => s"$dir/$f"): _*))
       val present = scan.columns.toSet
       val base = scan.select(fields.map { f =>
         if (present(f.physical)) col(f.physical).cast(f.dtype).as(f.logical)
@@ -333,12 +344,12 @@ object ColumnMap extends graft.QueryModule {
     }
     val defPhys = fields.filter(f => f.default.isDefined || f.gen.isDefined)
       .map(_.physical).toSet
-    if (defPhys.isEmpty) project(snap.files)
+    if (defPhys.isEmpty) project(files)
     else {
       // group files by WHICH defaulted columns their footers carry —
       // one driver-side cached schema probe per file (the X57 metadata
       // class), groups bounded by schema eras, one union branch each
-      val groups = snap.files.groupBy { f =>
+      val groups = files.groupBy { f =>
         graft.util.SchemaCache.cached(spark, s"$dir/$f")(
           spark.read.parquet(s"$dir/$f").schema)
           .fieldNames.toSet intersect defPhys

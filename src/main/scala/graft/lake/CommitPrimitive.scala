@@ -1,7 +1,8 @@
 package graft.lake
 
+import java.nio.file.{FileAlreadyExistsException, Files}
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The storage commit primitive behind every graft metadata publish —
@@ -62,9 +63,10 @@ object CommitPrimitive {
 /** Default commit primitive: stage to a writer-unique temp name in the
   * target's directory, then rename. Rename-as-commit is atomic — and
   * put-if-absent, because a plain `FileSystem.rename` onto an existing
-  * destination returns false — on local filesystems and HDFS
-  * (`docs/STORAGE_CONTRACT.md` states the contract and the object-store
-  * alternatives). `replace` uses `FileContext`'s `Rename.OVERWRITE`, the
+  * destination returns false — on HDFS; on the local file system the
+  * put is a hard link of the temp file, which the OS creates only while
+  * the name is free (`docs/STORAGE_CONTRACT.md` states the contract and
+  * the object-store alternatives). `replace` uses `FileContext`'s `Rename.OVERWRITE`, the
   * Hadoop atomic-replace contract a ref advance needs.
   */
 object RenameCommit extends CommitPrimitive {
@@ -87,6 +89,22 @@ object RenameCommit extends CommitPrimitive {
       payload: Array[Byte]): Boolean = {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = stage(spark, target, payload)
+    fs match {
+      // the local file system's rename checks the destination and then
+      // renames over it (POSIX rename replaces), so two racing puts can
+      // both return true and the later one's manifest silently replaces
+      // the earlier; a hard link is created only while the name is free
+      case local: LocalFileSystem =>
+        try {
+          Files.createLink(local.pathToFile(target).toPath, local.pathToFile(tmp).toPath)
+          true
+        } catch { case _: FileAlreadyExistsException => false }
+        finally fs.delete(tmp, false)
+      case _ => renameIfAbsent(fs, tmp, target)
+    }
+  }
+
+  private def renameIfAbsent(fs: FileSystem, tmp: Path, target: Path): Boolean =
     if (fs.rename(tmp, target)) true
     else {
       fs.delete(tmp, false)
@@ -100,7 +118,6 @@ object RenameCommit extends CommitPrimitive {
         s"rename-commit to $target failed but no committed object exists " +
           "there: storage fault, not a lost race")
     }
-  }
 
   override def replace(spark: SparkSession, target: Path,
       payload: Array[Byte]): Unit = {

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.json4s._
 
 /** Persistent table CHECK constraints (extension X187) — Delta's
@@ -14,26 +14,29 @@ import org.json4s._
   * Mechanics over the X39 log: the ACTIVE SET is the `constraints`
   * entry of each manifest's state, carried forward by every commit, so
   * time travel serves era-correct constraint metadata the same way
-  * column mapping serves era-correct names. ADD validates the CURRENT
-  * contents first — one combinable aggregate over the latest version
-  * (X76's evaluate: all rules in one pass, violations = false-or-NULL) —
-  * then lands a METADATA-ONLY commit ([[ManifestTable.metadataCommit]]:
+  * column mapping serves era-correct names. ADD validates the contents
+  * of the snapshot it lands on — one combinable aggregate (X76's
+  * evaluate: all rules in one pass, violations = false-or-NULL) —
+  * inside a METADATA-ONLY commit ([[ManifestTable.metadataCommit]]:
   * same file list, same tombstones, the new set in the same put; zero
   * data bytes on a 100 TB table). DROP is the same commit shape minus
   * the name. A crashed or lost ADD leaves nothing for a later commit to
   * adopt.
   *
-  * Enforcement contract: every NEW-DATA write surface calls
-  * [[enforceStaged]] on its staged files — SQL `INSERT INTO`/`INSERT
-  * OVERWRITE` (X173), SQL `UPDATE`/`MERGE` (X179 — the rewritten rows
-  * must still satisfy the contract), and the `df.write.format("graft")`
-  * batch writer (X116). A table with no constraints pays one log read
-  * and zero Spark work (the overwhelmingly common case).
-  * Content-preserving maintenance (OPTIMIZE/VACUUM/RESTORE — rewrites
-  * of rows that already passed) is exempt by design, exactly Delta's
-  * behavior. Violations REFUSE the whole write with the per-constraint
-  * counts and stage nothing — partial enforcement is silent corruption
-  * of the contract.
+  * Enforcement contract: the commit enforces, not the writer. The put
+  * ([[ManifestTable.commitManifest]]) checks the data files a version
+  * adds (the files its parent does not list) against the set that
+  * version publishes, read under the version's column mapping, before
+  * it lands — so every write surface is covered, the ones written after
+  * this one too, and a constraint that lands while a batch stages
+  * applies to that batch (the put loses its race and the retry checks
+  * again). A table with no constraints pays one state lookup and zero
+  * Spark work. Content-preserving commits are exempt by their op
+  * (OPTIMIZE `optimize`, REORG `materialize`, RESTORE and CLONE:
+  * rewrites or re-references of rows that already passed), exactly
+  * Delta's behavior. A violation refuses the whole commit with the
+  * per-constraint counts and drops its staged files — partial
+  * enforcement is silent corruption of the contract.
   */
 object Constraints {
 
@@ -56,7 +59,7 @@ object Constraints {
     ManifestTable.snapshots(spark, dir).takeWhile(_.version <= version).lastOption
       .map(of).getOrElse(Seq.empty)
 
-  /** The active set at the latest version — what writers enforce. */
+  /** The active set at the latest version — what the next commit enforces. */
   def active(spark: SparkSession, dir: String): Seq[Check] =
     ManifestTable.snapshots(spark, dir).lastOption.map(of).getOrElse(Seq.empty)
 
@@ -64,60 +67,83 @@ object Constraints {
     JArray(set.toList.map(c =>
       JObject("name" -> JString(c.name), "predicate" -> JString(c.predicate))))
 
-  /** `ADD CONSTRAINT name CHECK (predicate)`: existing rows must already
-    * satisfy the predicate (Delta's rule — a constraint that the current
-    * table violates is a lie, refused with the violation count), then
-    * the set lands as a metadata-only commit. Returns the new version.
+  /** `ADD CONSTRAINT name CHECK (predicate)`: the rows of the snapshot
+    * the set lands on must already satisfy the predicate (Delta's rule —
+    * a constraint that the current table violates is a lie, refused with
+    * the violation count), then the set lands as a metadata-only commit.
+    * The scan reads that snapshot under its logical names, inside the
+    * commit: a write landing while it runs makes the commit lose its
+    * race, and the retry scans the new snapshot. Returns the new version.
     */
   def add(spark: SparkSession, dir: String, name: String, predicate: String,
       date: Int, time: Int): Int = {
     require(name.matches("[A-Za-z_][A-Za-z_0-9]*"),
       s"constraint name '$name' is not an identifier")
-    val current = active(spark, dir)
-    require(!current.exists(_.name == name),
-      s"constraint '$name' already exists")
     // validate the predicate parses BEFORE scanning anything
     spark.sessionState.sqlParser.parseExpression(predicate)
-    val snapshot = ManifestTable.readLatest(spark, dir)
-    val report = Expectations.evaluate(snapshot,
-      Seq(Expectations.Rule(name, predicate)))
-    val bad = report(name)
-    if (bad > 0) throw new IllegalArgumentException(
-      s"cannot add constraint '$name': $bad existing rows violate ($predicate)")
-    ManifestTable.metadataCommit(spark, dir, Owner, "constraint",
-      Some((date, time)))(snap => json(of(snap) :+ Check(name, predicate)))
+    ManifestTable.retrying("add constraint", dir) {
+      ManifestTable.metadataCommit(spark, dir, Owner, "constraint",
+          Some((date, time))) { snap =>
+        val set = of(snap)
+        require(!set.exists(_.name == name), s"constraint '$name' already exists")
+        val bad = violations(spark, dir, snap, snap.files,
+          Seq(Check(name, predicate)))
+        if (bad.nonEmpty) throw new IllegalArgumentException(
+          s"cannot add constraint '$name': ${bad(name)} existing rows violate ($predicate)")
+        json(set :+ Check(name, predicate))
+      }
+    }
   }
 
   /** `DROP CONSTRAINT name` — metadata-only, refuses unknown names. */
   def drop(spark: SparkSession, dir: String, name: String,
       date: Int, time: Int): Int =
-    ManifestTable.metadataCommit(spark, dir, Owner, "constraint",
-        Some((date, time))) { snap =>
-      val set = of(snap)
-      require(set.exists(_.name == name), s"no constraint '$name'")
-      json(set.filterNot(_.name == name))
+    ManifestTable.retrying("drop constraint", dir) {
+      ManifestTable.metadataCommit(spark, dir, Owner, "constraint",
+          Some((date, time))) { snap =>
+        val set = of(snap)
+        require(set.exists(_.name == name), s"no constraint '$name'")
+        json(set.filterNot(_.name == name))
+      }
     }
 
-  /** Stage-first gate (the X172 discipline applied to constraints):
-    * validate the STAGED bytes — a non-deterministic source frame can
-    * never pass validation yet commit different rows, because the rows
-    * validated ARE the rows the manifest will reference. On violation
-    * the staged directory is deleted and the whole write refuses with
-    * the per-constraint counts; nothing half-lands.
+  /** Commits that only rewrite or re-reference committed rows. */
+  private val Exempt = Set("optimize", "materialize", "restore", "clone")
+
+  /** The one CHECK gate, run by the put before `snap` lands on `parent`:
+    * the rows of the files `snap` adds must satisfy the set `snap`
+    * publishes. A violation drops the commit's staged dirs (those no
+    * committed version names) and refuses with an
+    * IllegalArgumentException, which [[ManifestTable.retrying]] lets escape.
     */
-  def enforceStaged(spark: SparkSession, dir: String,
-      staged: Seq[String]): Unit = {
-    val set = active(spark, dir)
-    if (set.isEmpty || staged.isEmpty) return
-    val df = spark.read.parquet(staged.map(f => s"$dir/$f"): _*)
-    val report = Expectations.evaluate(df,
-      set.map(c => Expectations.Rule(c.name, c.predicate)))
-    val bad = report.filter(_._2 > 0)
+  private[lake] def gate(spark: SparkSession, dir: String,
+      parent: Option[ManifestTable.Snapshot], snap: ManifestTable.Snapshot): Unit = {
+    val set = of(snap)
+    if (set.isEmpty || Exempt(snap.op)) return
+    val old = parent.fold(Set.empty[String])(_.files.toSet)
+    val added = snap.files.filterNot(old)
+    if (added.isEmpty) return
+    val bad = violations(spark, dir, snap, added, set)
     if (bad.nonEmpty) {
-      ManifestTable.dropStaged(spark, dir, staged)
+      def dirOf(f: String) = f.split('/').dropRight(1).mkString("/")
+      val committed = ManifestTable.snapshots(spark, dir)
+        .flatMap(s => s.files ++ s.deletes).map(dirOf).toSet
+      ManifestTable.dropStaged(spark, dir,
+        (added ++ snap.deletes).filterNot(f => committed(dirOf(f))))
       throw new IllegalArgumentException(
         "CHECK constraint violation: " + bad.toSeq.sortBy(_._1)
           .map { case (n, v) => s"$n=$v rows" }.mkString(", "))
     }
   }
+
+  /** The checks of `set` that rows of `files` of `snap` violate, with
+    * their counts — one aggregate over the files under the snapshot's
+    * logical names.
+    */
+  private def violations(spark: SparkSession, dir: String,
+      snap: ManifestTable.Snapshot, files: Seq[String],
+      set: Seq[Check]): Map[String, Long] =
+    if (files.isEmpty) Map.empty
+    else Expectations.evaluate(ColumnMap.logical(spark, dir, snap, files),
+      set.map(c => Expectations.Rule(c.name, c.predicate))).filter(_._2 > 0)
 }

@@ -137,6 +137,9 @@ object ManifestTable extends graft.QueryModule {
     * files the commit adds, or of another version's files it
     * re-references) on top; entries of files outside `files` drop.
     * `index` names the version's record index, if it has one.
+    * Before the put, the rows of the files the version adds must satisfy
+    * the CHECK constraints it publishes ([[Constraints]]); a violation
+    * drops the staged files and refuses with an IllegalArgumentException.
     * Throws [[LostRace]] if the version was already committed. Returns
     * the committed version.
     */
@@ -151,6 +154,7 @@ object ManifestTable extends graft.QueryModule {
       parent.fold(Map.empty: State)(_.state) ++ state(parent),
       (parent.toSeq.flatMap(_.stats.values) ++ stats)
         .collect { case e if kept(e.file) => e.file -> e }.toMap, index)
+    Constraints.gate(spark, dir, parent, snap)
     val fs = fsFor(spark, dir)
     val mdir = new Path(manifestDir(dir))
     fs.mkdirs(mdir)
@@ -276,10 +280,8 @@ object ManifestTable extends graft.QueryModule {
     commitStaged(df.sparkSession, dir, date, time, stageDataFiles(df, dir),
       maxRetries)
 
-  /** [[commit]] from already-staged files — the stage-first hook X187
-    * constraint enforcement needs (validate the staged bytes, then
-    * publish exactly those bytes), with `stats` the staged files'
-    * zone-map entries and `index` their record index.
+  /** [[commit]] from already-staged files, with `stats` the staged
+    * files' zone-map entries and `index` their record index.
     */
   def commitStaged(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
@@ -327,10 +329,9 @@ object ManifestTable extends graft.QueryModule {
     appendStagedRetrying(df.sparkSession, dir, date, time,
       stageDataFiles(df, dir), maxRetries, base)
 
-  /** [[appendRetrying]] from already-staged files — the stage-first hook
-    * X187 constraint enforcement needs. `state` is [[commitManifest]]'s,
-    * called with log-latest on every attempt; `stats` are the staged
-    * files' zone-map entries.
+  /** [[appendRetrying]] from already-staged files. `state` is
+    * [[commitManifest]]'s, called with log-latest on every attempt;
+    * `stats` are the staged files' zone-map entries.
     */
   def appendStagedRetrying(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], maxRetries: Int = 5,
@@ -562,6 +563,8 @@ object ManifestTable extends graft.QueryModule {
     * constraints, column mapping) and its zone-map entries and Bloom
     * filters, remapped with the files, so it reads and prunes like its
     * source. A record index is not copied; lookups on the clone scan.
+    * The commit is `op = "clone"`: its rows passed the source's CHECK
+    * constraints, so the clone's commit does not check them again.
     * Copy cost is data-proportional and embarrassingly parallel (the
     * driver loop moves manifests' worth of file names; bytes stream
     * file-by-file — on a real cluster this is a distcp-shaped job).
@@ -614,7 +617,7 @@ object ManifestTable extends graft.QueryModule {
         stageDataFiles(remapped, dstDir, "deletes")
       }
     commitManifest(spark, dstDir, None, date, time, files, deletes = deletes,
-      state = _ => snap.state,
+      op = "clone", state = _ => snap.state,
       stats = snap.stats.values.toSeq.map(e => e.copy(file = remap(e.file),
         blooms = e.blooms.map { case (c, p) => c -> remap(p) })))
   }

@@ -25,8 +25,8 @@ import graft.util.{Exact, FixtureCache}
   * on partitioned writes.
   *
   * The rebalanced frame then stages and commits through the standard
-  * stage-first tail (X187 constraints validate the staged bytes; X96
-  * optimistic retry on races). Zone-map stats (X57) are recorded by the
+  * tail (X96 optimistic retry on races; the commit checks X187
+  * constraints). Zone-map stats (X57) are recorded by the
   * caller's chosen commit surface exactly as before — optimized writes
   * change file GEOMETRY, never content or metadata semantics.
   */
@@ -40,42 +40,29 @@ object OptimizedWrite extends graft.QueryModule {
     */
   val CompressionFactor: Double = 2.5
 
-  private[graft] def withAdvisory[T](spark: SparkSession, bytes: Long)(body: => T): T = {
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, bytes.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** The rebalance hint — the pre-write half, exposed for writer
-    * surfaces that own their own commit tail (the X116 `optimizeWrite`
-    * writer option); sizing comes from the advisory conf [[withAdvisory]]
-    * sets for the duration of the write.
+  /** Stage the frame behind one rebalance hint, with the AQE advisory
+    * partition size set to the target for the write and restored after —
+    * the batch-write landing path's optimized shape; returns the files.
     */
-  def rebalanced(df: DataFrame): DataFrame = df.hint("rebalance")
-
-  private def staged(df: DataFrame, dir: String, targetBytes: Long): Seq[String] =
-    withAdvisory(df.sparkSession, (targetBytes * CompressionFactor).toLong) {
-      val files = ManifestTable.stageDataFiles(rebalanced(df), dir)
-      Constraints.enforceStaged(df.sparkSession, dir, files)
-      files
-    }
+  private[graft] def stage(df: DataFrame, dir: String, targetBytes: Long): Seq[String] = {
+    val (conf, key) = (df.sparkSession.conf, "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val prev = conf.getOption(key)
+    conf.set(key, (targetBytes * CompressionFactor).toLong.toString)
+    try ManifestTable.stageDataFiles(df.hint("rebalance"), dir)
+    finally prev.fold(conf.unset(key))(conf.set(key, _))
+  }
 
   /** REPLACE commit of the rebalanced frame. */
   def commit(df: DataFrame, dir: String, date: Int, time: Int,
       targetBytes: Long = DefaultTargetBytes): Int =
     ManifestTable.commitStaged(df.sparkSession, dir, date, time,
-      staged(df, dir, targetBytes))
+      stage(df, dir, targetBytes))
 
   /** APPEND commit of the rebalanced frame. */
   def append(df: DataFrame, dir: String, date: Int, time: Int,
       targetBytes: Long = DefaultTargetBytes): Int =
     ManifestTable.appendStagedRetrying(df.sparkSession, dir, date, time,
-      staged(df, dir, targetBytes))
+      stage(df, dir, targetBytes))
 
   /** Fixture: the same orders slice committed twice — a naive 48-task
     * write (48 tiny files) vs an optimized write (AQE rebalance to a

@@ -1,8 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Table-level write ordering (extension X216) — Iceberg's
   * `ALTER TABLE … WRITE ORDERED BY (c1, c2)`: declare the clustering
@@ -30,13 +29,12 @@ object WriteOrder {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
 
-  /** Range-cluster `df` on the declared order, stage, validate the
-    * staged bytes against the table's CHECK constraints, record zone
-    * maps on the ordered columns, and publish (append or replace).
+  /** Range-cluster `df` on the declared order and stage it. Returns the
+    * staged files with their zone-map entries on the ordered columns,
+    * for the caller's append or replace commit.
     */
-  def write(df: DataFrame, dir: String, cols: Seq[String], date: Int,
-      time: Int, append: Boolean, partitions: Option[Int] = None): Int = {
-    val spark = df.sparkSession
+  def stage(df: DataFrame, dir: String, cols: Seq[String],
+      partitions: Option[Int] = None): (Seq[String], Seq[ZoneMap.FileStats]) = {
     cols.foreach(c => require(df.columns.contains(c),
       s"graft.writeOrder column '$c' is not in the batch " +
         s"(${df.columns.mkString(", ")})"))
@@ -48,17 +46,8 @@ object WriteOrder {
       .map(n => df.repartitionByRange(n, cols.map(col): _*))
       .getOrElse(df.repartitionByRange(cols.map(col): _*))
     val ordered = ranged.sortWithinPartitions(cols.map(col): _*)
-    val schema = df.schema
-    val numeric = cols.filter(c => schema(c).dataType match {
-      case ByteType | ShortType | IntegerType | LongType | DateType => true
-      case _ => false
-    })
-    val strs = cols.filter(c => schema(c).dataType == StringType)
+    val (numeric, strs) = ZoneMap.boundable(df.schema, cols)
     val staged = ManifestTable.stageDataFiles(ordered, dir)
-    Constraints.enforceStaged(spark, dir, staged)
-    if (append) ZoneMap.appendStagedWithStats(spark, dir, date, time,
-      staged, numeric, strs)
-    else ZoneMap.commitStagedWithStats(spark, dir, date, time,
-      staged, numeric, strs)
+    (staged, ZoneMap.statsFor(df.sparkSession, dir, staged, numeric, strs))
   }
 }

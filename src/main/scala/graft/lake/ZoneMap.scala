@@ -109,18 +109,13 @@ object ZoneMap extends graft.QueryModule {
     */
   def analyze(spark: SparkSession, dir: String,
       cols: Option[Seq[String]] = None): Seq[FileStats] = {
-    import org.apache.spark.sql.types._
     val snap = ManifestTable.snapshots(spark, dir).lastOption.getOrElse(
       throw new NoSuchElementException(s"no table at $dir"))
     require(snap.files.nonEmpty, s"cannot analyze an empty table at $dir")
     val schema = spark.read.parquet(snap.files.map(f => s"$dir/$f"): _*).schema
     val pick = cols.getOrElse(schema.fields.map(_.name).toSeq)
     pick.foreach(c => require(schema.fieldNames.contains(c), s"no column '$c'"))
-    val numeric = pick.filter(c => schema(c).dataType match {
-      case ByteType | ShortType | IntegerType | LongType | DateType => true
-      case _ => false
-    })
-    val strs = pick.filter(c => schema(c).dataType == StringType)
+    val (numeric, strs) = boundable(schema, pick)
     require(numeric.nonEmpty || strs.nonEmpty,
       s"no integral or string columns among ${pick.mkString(",")}")
     // the sidecar replaces the version's entries: keep their Bloom filters
@@ -130,9 +125,19 @@ object ZoneMap extends graft.QueryModule {
     stats
   }
 
-  /** Retrying REPLACE from already-staged files with stats recorded —
-    * the X216 overwrite path (stage → validate → stats → publish).
+  /** `cols` of `schema` that zone maps bound: the integral ones (long
+    * bounds) and the string ones (lexicographic bounds); others skipped.
     */
+  private[lake] def boundable(schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[String]): (Seq[String], Seq[String]) = {
+    import org.apache.spark.sql.types._
+    (cols.filter(c => schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType | DateType => true
+      case _ => false
+    }), cols.filter(c => schema(c).dataType == StringType))
+  }
+
+  /** Retrying REPLACE from already-staged files with stats recorded. */
   def commitStagedWithStats(spark: SparkSession, dir: String, date: Int,
       time: Int, staged: Seq[String], statsCols: Seq[String],
       strCols: Seq[String] = Nil, op: String = "write",
@@ -160,19 +165,11 @@ object ZoneMap extends graft.QueryModule {
     * new parent on a lost race.
     */
   def appendWithStats(df: DataFrame, dir: String, date: Int, time: Int,
-      statsCols: Seq[String], strCols: Seq[String] = Nil): Int =
-    appendStagedWithStats(df.sparkSession, dir, date, time,
-      ManifestTable.stageDataFiles(df, dir), statsCols, strCols)
-
-  /** [[appendWithStats]] from already-staged files — the stage-first hook
-    * (X187/X216): callers validate the staged bytes, then publish exactly
-    * those bytes with their stats.
-    */
-  def appendStagedWithStats(spark: SparkSession, dir: String, date: Int,
-      time: Int, staged: Seq[String], statsCols: Seq[String],
-      strCols: Seq[String] = Nil): Int =
-    ManifestTable.appendStagedRetrying(spark, dir, date, time, staged,
-      stats = statsFor(spark, dir, staged, statsCols, strCols))
+      statsCols: Seq[String], strCols: Seq[String] = Nil): Int = {
+    val staged = ManifestTable.stageDataFiles(df, dir)
+    ManifestTable.appendStagedRetrying(df.sparkSession, dir, date, time, staged,
+      stats = statsFor(df.sparkSession, dir, staged, statsCols, strCols))
+  }
 
   /** The zone-map entries of `version`, sorted by file; None when it has
     * none.

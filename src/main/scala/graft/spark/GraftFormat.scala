@@ -1,7 +1,7 @@
 package graft.spark
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -61,69 +61,11 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
   override def createRelation(sqlContext: SQLContext,
       mode: org.apache.spark.sql.SaveMode, parameters: Map[String, String],
       data: org.apache.spark.sql.DataFrame): BaseRelation = {
-    import org.apache.spark.sql.SaveMode
     val spark = sqlContext.sparkSession
     val dir = parameters.getOrElse("path",
       throw new IllegalArgumentException("graft: 'path' is required"))
     val (date, time) = GraftDataSource.stampOf(parameters)
-    val exists = ManifestTable.latestVersion(spark, dir).nonEmpty
-    // Append schema enforcement (Delta's contract): silently appending a
-    // drifted schema poisons every future read — refuse unless the
-    // caller opts into X60-style reconciliation downstream.
-    if (exists && mode == SaveMode.Append &&
-        !parameters.get("allowSchemaDrift").exists(_.toBoolean)) {
-      val current = new ManifestFileIndex(spark, dir,
-        ManifestTable.snapshots(spark, dir).last).dataSchema
-      val incoming = data.schema
-      require(incoming.fields.map(f => (f.name, f.dataType)).toSeq ==
-          current.fields.map(f => (f.name, f.dataType)).toSeq,
-        s"graft: append schema ${incoming.simpleString} does not match table " +
-          s"schema ${current.simpleString}; set allowSchemaDrift=true to " +
-          "append anyway and reconcile reads via Evolution.readHistory")
-    }
-    // X187: every batch write stages first and validates the staged bytes
-    // against the table's CHECK constraints (zero Spark work when the
-    // table has none — the common case). X188: option("optimizeWrite",
-    // "true") rebalances the batch to option("targetFileBytes", n)
-    // before staging — Delta's optimizeWrite writer option.
-    def checkedCommit(append: Boolean): Int = {
-      // X192: table properties are the DEFAULT, explicit writer options
-      // win — Delta's delta.autoOptimize contract
-      lazy val props =
-        if (exists) graft.lake.Properties.active(spark, dir)
-        else Map.empty[String, String]
-      val target = parameters.get("targetFileBytes")
-        .orElse(props.get("graft.targetFileBytes")).map(_.toLong)
-        .getOrElse(graft.lake.OptimizedWrite.DefaultTargetBytes)
-      val optimize = parameters.get("optimizeWrite")
-        .orElse(props.get("graft.optimizeWrite")).exists(_.toBoolean)
-      // X216: a declared write order wins — it range-clusters the batch
-      // (shaping files for pruning) and records zone maps as it lands
-      val order = graft.lake.WriteOrder.orderedCols(props)
-      if (order.isDefined) {
-        graft.lake.WriteOrder.write(data, dir, order.get, date, time, append,
-          props.get("graft.writeOrder.partitions").map(_.toInt))
-      } else if (optimize) {
-        if (append) graft.lake.OptimizedWrite.append(data, dir, date, time, target)
-        else graft.lake.OptimizedWrite.commit(data, dir, date, time, target)
-      } else {
-        val staged = ManifestTable.stageDataFiles(data, dir)
-        graft.lake.Constraints.enforceStaged(spark, dir, staged)
-        if (append) ManifestTable.appendStagedRetrying(spark, dir, date, time, staged)
-        else ManifestTable.commitStaged(spark, dir, date, time, staged)
-      }
-    }
-    mode match {
-      case SaveMode.Overwrite => checkedCommit(append = false)
-      case SaveMode.Append => checkedCommit(append = true)
-      case SaveMode.ErrorIfExists =>
-        if (exists) throw new IllegalStateException(
-          s"graft: table at $dir already has committed versions")
-        else checkedCommit(append = false)
-      case SaveMode.Ignore =>
-        if (!exists) checkedCommit(append = false)
-    }
-    GraftDataSource.autoCompact(spark, dir, date, time)
+    GraftDataSource.land(spark, dir, data, mode, date, time, parameters)
     createRelation(sqlContext, parameters)
   }
 
@@ -404,7 +346,8 @@ object GraftDataSource {
 
   /** X214 — `graft.autoCompact`: after a write lands, fold small-file
     * debt back to the target in ONE follow-up X129 bin-pack commit —
-    * Delta's `delta.autoOptimize.autoCompact` table property. Fires only
+    * Delta's `delta.autoOptimize.autoCompact` table property, read from
+    * `props`, the table properties the write landed under. Fires only
     * when the latest version carries ≥ `graft.autoCompact.minFiles`
     * (default 8) files AND the fold would actually shrink the listing
     * (binPack's within-budget no-op), so steady-state writes pay one
@@ -415,9 +358,8 @@ object GraftDataSource {
     * micro-batch (churn); the X174 maintenance executor is the streaming
     * answer.
     */
-  private[spark] def autoCompact(spark: org.apache.spark.sql.SparkSession,
-      dir: String, date: Int, time: Int): Unit = {
-    val props = graft.lake.Properties.active(spark, dir)
+  private[spark] def autoCompact(spark: SparkSession, dir: String,
+      props: Map[String, String], date: Int, time: Int): Unit =
     if (props.get("graft.autoCompact").exists(_.toBoolean)) {
       val target = props.get("graft.targetFileBytes").map(_.toLong)
         .getOrElse(graft.lake.OptimizedWrite.DefaultTargetBytes)
@@ -427,72 +369,96 @@ object GraftDataSource {
         onlyIfMoreThan = minFiles - 1)
       catch { case _: graft.lake.LostRace => () }
     }
+
+  /** The one landing path of a batch write — the X116 writer, SQL INSERT
+    * (X173, `insert`) and CTAS (X186). One read of the latest snapshot
+    * decides existence (the committed log, not a half-staged leftover),
+    * the schema check (an append matches (name, type) unless
+    * `allowSchemaDrift=true`; an INSERT matches by position and takes the
+    * table's names, and into a schema-first mapped table lands through
+    * [[graft.lake.ColumnMap.append]]), the shape (a declared write order
+    * range-clusters the batch and records zone maps; `optimizeWrite` /
+    * `targetFileBytes` rebalance it, explicit `options` winning over the
+    * `graft.`-prefixed table properties) and the auto-compaction
+    * properties. Then it stages the batch and commits an append (mode
+    * `Append`) or a replace; the commit checks CHECK constraints.
+    * Returns the committed version; None for `Ignore` on a table.
+    */
+  private[spark] def land(spark: SparkSession, dir: String, data: DataFrame,
+      mode: SaveMode, date: Int, time: Int, options: Map[String, String],
+      insert: Boolean = false): Option[Int] = {
+    val snap = ManifestTable.snapshots(spark, dir).lastOption
+    if (snap.nonEmpty && mode == SaveMode.ErrorIfExists)
+      throw new IllegalStateException(s"graft: table at $dir already has " +
+        "committed versions (replace it with mode Overwrite or CREATE OR REPLACE TABLE)")
+    if (snap.nonEmpty && mode == SaveMode.Ignore) return None
+    val append = mode == SaveMode.Append
+    val batch = snap match {
+      case None =>
+        require(!insert, s"graft: no committed snapshot at $dir")
+        data
+      case Some(s) if insert =>
+        graft.lake.ColumnMap.mappingOf(s).filter(_ => s.files.isEmpty) match {
+          case Some(fields) =>
+            require(data.schema.fields.length == fields.length,
+              s"graft: INSERT carries ${data.schema.fields.length} columns, " +
+                s"table declares ${fields.length}")
+            return Some(graft.lake.ColumnMap.append(
+              data.toDF(fields.map(_.logical): _*), dir, date, time))
+          case None =>
+        }
+        val current = new ManifestFileIndex(spark, dir, s).dataSchema
+        require(data.schema.fields.length == current.fields.length &&
+            data.schema.fields.zip(current.fields).forall {
+              case (a, b) => a.dataType.sql == b.dataType.sql },
+          s"graft: INSERT schema ${data.schema.simpleString} does not match " +
+            s"table schema ${current.simpleString}")
+        data.toDF(current.fieldNames: _*)
+      case Some(s) =>
+        if (append && !options.get("allowSchemaDrift").exists(_.toBoolean)) {
+          val current = new ManifestFileIndex(spark, dir, s).dataSchema
+          require(data.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+              current.fields.map(f => (f.name, f.dataType)).toSeq,
+            s"graft: append schema ${data.schema.simpleString} does not match " +
+              s"table schema ${current.simpleString}; set allowSchemaDrift=true " +
+              "to append anyway and reconcile reads via Evolution.readHistory")
+        }
+        data
+    }
+    val props = snap.fold(Map.empty[String, String])(graft.lake.Properties.of)
+    def setting(key: String) = options.get(key).orElse(props.get(s"graft.$key"))
+    val (staged, stats) = graft.lake.WriteOrder.orderedCols(props) match {
+      case Some(cols) => graft.lake.WriteOrder.stage(batch, dir, cols,
+        props.get("graft.writeOrder.partitions").map(_.toInt))
+      case None if setting("optimizeWrite").exists(_.toBoolean) =>
+        (graft.lake.OptimizedWrite.stage(batch, dir, setting("targetFileBytes")
+          .fold(graft.lake.OptimizedWrite.DefaultTargetBytes)(_.toLong)), Nil)
+      case None => (ManifestTable.stageDataFiles(batch, dir), Nil)
+    }
+    val version =
+      if (append) ManifestTable.appendStagedRetrying(spark, dir, date, time,
+        staged, stats = stats)
+      else ManifestTable.commitStaged(spark, dir, date, time, staged, stats = stats)
+    autoCompact(spark, dir, props, date, time)
+    Some(version)
   }
 
   /** X173: the `InsertableRelation` body — SQL `INSERT INTO` as an X96
-    * optimistic append, `INSERT OVERWRITE` as a replace commit, both
-    * schema-enforced like the X116 writer (SQL INSERT is positional, and
-    * Spark's insertion preprocessing has already cast the query output to
-    * this relation's schema — a surviving type mismatch is real drift, and
-    * names realign to the table's). The commit targets the table's CURRENT
-    * log; the serving relation stays the snapshot it was created at
-    * (snapshot isolation — re-create the view to read the new version).
+    * optimistic append, `INSERT OVERWRITE` as a replace commit, through
+    * the one landing path ([[land]]). The commit targets the table's
+    * CURRENT log; the serving relation stays the snapshot it was created
+    * at (snapshot isolation — re-create the view to read the new version).
     */
   private[spark] def insertInto(spark: SparkSession, dir: String,
       parameters: Map[String, String], pinned: Boolean,
-      data: org.apache.spark.sql.DataFrame, overwrite: Boolean): Unit = {
+      data: DataFrame, overwrite: Boolean): Unit = {
     require(!pinned,
       "graft: INSERT into a version/branch/catalog-pinned view is not " +
         "supported — the view is an immutable snapshot; create a view over " +
         "the current table to insert")
     val (date, time) = stampOf(parameters)
-    val snaps = ManifestTable.snapshots(spark, dir)
-    require(snaps.nonEmpty, s"graft: no committed snapshot at $dir")
-    // X215: a schema-first (empty) mapped table has no footers to align
-    // against — the mapping IS the schema, and the first INSERT routes
-    // through ColumnMap.append (logical→physical translation, generated-
-    // column validation included)
-    val mapping = graft.lake.ColumnMap.mappingOf(snaps.last)
-    if (snaps.last.files.isEmpty && mapping.isDefined) {
-      val fields = mapping.get
-      require(data.schema.fields.length == fields.length,
-        s"graft: INSERT carries ${data.schema.fields.length} columns, " +
-          s"table declares ${fields.length}")
-      graft.lake.ColumnMap.append(
-        data.toDF(fields.map(_.logical): _*), dir, date, time)
-      return
-    }
-    val current = new ManifestFileIndex(spark, dir, snaps.last).dataSchema
-    require(data.schema.fields.length == current.fields.length &&
-        data.schema.fields.zip(current.fields).forall {
-          case (a, b) => a.dataType.sql == b.dataType.sql },
-      s"graft: INSERT schema ${data.schema.simpleString} does not match " +
-        s"table schema ${current.simpleString}")
-    val aligned = data.toDF(current.fieldNames: _*)
-    // X192: table properties bind the optimized-write default for SQL
-    // INSERT exactly as for the batch writer
-    val props = graft.lake.Properties.active(spark, dir)
-    val order = graft.lake.WriteOrder.orderedCols(props)
-    if (order.isDefined) {
-      graft.lake.WriteOrder.write(aligned, dir, order.get, date, time,
-        append = !overwrite,
-        props.get("graft.writeOrder.partitions").map(_.toInt))
-    } else if (props.get("graft.optimizeWrite").exists(_.toBoolean)) {
-      val target = props.get("graft.targetFileBytes").map(_.toLong)
-        .getOrElse(graft.lake.OptimizedWrite.DefaultTargetBytes)
-      if (overwrite) graft.lake.OptimizedWrite.commit(aligned, dir, date, time, target)
-      else graft.lake.OptimizedWrite.append(aligned, dir, date, time, target)
-    } else {
-      // X187: stage first, validate the staged bytes against the table's
-      // CHECK constraints (no constraints → zero Spark work), then
-      // publish exactly the validated bytes
-      val staged = ManifestTable.stageDataFiles(aligned, dir)
-      graft.lake.Constraints.enforceStaged(spark, dir, staged)
-      if (overwrite)
-        ManifestTable.commitStaged(spark, dir, date, time, staged)
-      else ManifestTable.appendStagedRetrying(spark, dir, date, time, staged)
-    }
-    autoCompact(spark, dir, date, time) // X214: property-gated, no-op without debt
+    land(spark, dir, data, if (overwrite) SaveMode.Overwrite else SaveMode.Append,
+      date, time, Map.empty, insert = true)
   }
 }
 

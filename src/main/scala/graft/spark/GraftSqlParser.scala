@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
@@ -737,9 +737,8 @@ case class GraftAlterColumnCommand(dir: String, op: String, a: String,
   * lie and refuses with the count), then lands as a METADATA-ONLY
   * commit — same file list, the new set in the manifest, zero data
   * bytes at 100 TB.
-  * From then on every new-data write surface (SQL INSERT, UPDATE,
-  * MERGE, the graft batch writer) validates its STAGED bytes against
-  * the active set before publishing. Era-correct like column mapping:
+  * From then on every commit that adds rows checks them against the
+  * set it publishes, whatever surface wrote them. Era-correct like column mapping:
   * time travel reads serve the constraint set the version had.
   */
 case class GraftConstraintCommand(dir: String, op: String, name: String,
@@ -885,17 +884,6 @@ case class GraftAnalyzeCommand(dir: String, cols: Option[Seq[String]])
   }
 }
 
-/** X186 — `CREATE [OR REPLACE] TABLE '<path>' [AT d t] AS <select>`:
-  * CTAS as ONE staged replace commit on the X39 log (Delta's CTAS
-  * shape). Plain CREATE refuses when the table already has committed
-  * versions (accidentally clobbering a lakehouse table must be loud);
-  * OR REPLACE commits the next version with the previous one still
-  * time-travelable — "replace" here is a commit, never a delete. The
-  * inner query runs through the SESSION'S OWN parser/analyzer, so every
-  * registered graft function (X171) and view is available inside it;
-  * when the target table carries CHECK constraints (X187), the staged
-  * result validates before publishing, like every other write surface.
-  */
 /** `CREATE TABLE '<path>' (c1 t1, c2 t2, …)` (X215) — schema-first
   * empty table: version 1 is an empty commit whose schema lives in the
   * X110 mapping, so DESCRIBE/INSERT/ALTER work before any row exists
@@ -911,20 +899,26 @@ case class GraftCreateEmptyCommand(dir: String, cols: Seq[(String, String)],
     Seq(Row(graft.lake.ColumnMap.createEmpty(spark, dir, cols, date, time).toLong))
 }
 
+/** X186 — `CREATE [OR REPLACE] TABLE '<path>' [AT d t] AS <select>`:
+  * CTAS as ONE staged replace commit on the X39 log (Delta's CTAS
+  * shape), through the batch writer's landing path
+  * ([[GraftDataSource.land]]), so a declared write order, optimized-write
+  * and auto-compaction properties apply as for every batch write. Plain
+  * CREATE refuses when the table already has committed versions
+  * (accidentally clobbering a lakehouse table must be loud); OR REPLACE
+  * commits the next version with the previous one still time-travelable
+  * — "replace" here is a commit, never a delete. The inner query runs
+  * through the SESSION'S OWN parser/analyzer, so every registered graft
+  * function (X171) and view is available inside it.
+  */
 case class GraftCtasCommand(dir: String, orReplace: Boolean, query: String,
     date: Int, time: Int) extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val exists = ManifestTable.latestVersion(spark, dir).nonEmpty
-    if (exists && !orReplace) throw new IllegalStateException(
-      s"graft CREATE TABLE: table at $dir already has committed versions " +
-        "(use CREATE OR REPLACE TABLE to commit a replacement version)")
-    val df = spark.sql(query)
-    val staged = ManifestTable.stageDataFiles(df, dir)
-    graft.lake.Constraints.enforceStaged(spark, dir, staged)
-    val v = ManifestTable.commitStaged(spark, dir, date, time, staged)
-    Seq(Row(v.toLong))
+    val mode = if (orReplace) SaveMode.Overwrite else SaveMode.ErrorIfExists
+    GraftDataSource.land(spark, dir, spark.sql(query), mode, date, time, Map.empty)
+      .map(v => Row(v.toLong)).toSeq
   }
 }
 
@@ -1026,7 +1020,7 @@ object GraftSqlQueries extends graft.QueryModule {
       ext.sql(s"""CREATE OR REPLACE TEMPORARY VIEW conq_t
                  |USING graft OPTIONS (path '$dir', runDate '20250901',
                  |runTime '930')""".stripMargin)
-      // violating insert: refused from the STAGED bytes, commits nothing
+      // violating insert: refused by its commit, commits nothing
       try {
         ext.sql("INSERT INTO conq_t SELECT CAST(-1 AS BIGINT), " +
           "CAST(-5.0 AS DOUBLE), 'manual'").collect()

@@ -287,64 +287,14 @@ class GraftStreamSource(spark: SparkSession, dir: String,
 /** Query/oracle surface for X114. */
 object GraftStream extends graft.QueryModule {
 
-  /** One AvailableNow pass of the graft stream into a parquet sink. */
+  /** One AvailableNow pass of the graft stream into a parquet sink;
+    * `options` are the stream's read options (`startingVersion`,
+    * `startingDate`/`startingTime`, `maxRowsPerTrigger`,
+    * `readChangeFeed` + `keys`, ...).
+    */
   def runOnce(spark: SparkSession, tableDir: String, sinkDir: String,
-      chkDir: String): Unit = {
-    val q = spark.readStream.format("graft").load(tableDir)
-      .writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", chkDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** One AvailableNow pass under a row-budget cap (X218). */
-  def runOnceRows(spark: SparkSession, tableDir: String, sinkDir: String,
-      chkDir: String, maxRows: Long): Unit = {
-    val q = spark.readStream.format("graft")
-      .option("maxRowsPerTrigger", maxRows.toString).load(tableDir)
-      .writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", chkDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** One AvailableNow pass subscribed from a run stamp (X203). */
-  def runOnceFromStamp(spark: SparkSession, tableDir: String, sinkDir: String,
-      chkDir: String, date: Int, time: Int): Unit = {
-    val q = spark.readStream.format("graft")
-      .option("startingDate", date.toString)
-      .option("startingTime", time.toString).load(tableDir)
-      .writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", chkDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** One AvailableNow pass subscribed from `startingVersion` (X199). */
-  def runOnceFrom(spark: SparkSession, tableDir: String, sinkDir: String,
-      chkDir: String, startingVersion: String): Unit = {
-    val q = spark.readStream.format("graft")
-      .option("startingVersion", startingVersion).load(tableDir)
-      .writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", chkDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** One AvailableNow pass of the X183 change feed into a parquet sink. */
-  def runCdfOnce(spark: SparkSession, tableDir: String, keys: String,
-      sinkDir: String, chkDir: String): Unit = {
-    val q = spark.readStream.format("graft")
-      .option("readChangeFeed", "true").option("keys", keys)
-      .load(tableDir)
+      chkDir: String, options: Map[String, String] = Map.empty): Unit = {
+    val q = spark.readStream.format("graft").options(options).load(tableDir)
       .writeStream.format("parquet")
       .option("path", sinkDir)
       .option("checkpointLocation", chkDir)
@@ -369,7 +319,8 @@ object GraftStream extends graft.QueryModule {
         graft.lake.DeleteVectors.deleteWhere(
           s, tbl, col("k") % 16 === 0, 20250801, 1100)
         ManifestTable.appendRetrying(o.where(col("k") % 4 === 2), tbl, 20250801, 1200)
-        runCdfOnce(s, tbl, "k", sink, chk)
+        runOnce(s, tbl, sink, chk,
+          Map("readChangeFeed" -> "true", "keys" -> "k"))
       }
       s.read.parquet(sink)
         .groupBy("_change_type", "_commit_version")
@@ -410,9 +361,9 @@ object GraftStream extends graft.QueryModule {
         ManifestTable.commit(ev.where(col("event_id") % 4 === 0), tbl, 20250801, 900)
         ManifestTable.appendRetrying(ev.where(col("event_id") % 4 === 1), tbl, 20250801, 1000)
         ManifestTable.appendRetrying(ev.where(col("event_id") % 4 === 2), tbl, 20250801, 1100)
-        runOnceFrom(s, tbl, sink, chk, "2") // delivers v3 only
+        runOnce(s, tbl, sink, chk, Map("startingVersion" -> "2")) // delivers v3 only
         ManifestTable.appendRetrying(ev.where(col("event_id") % 4 === 3), tbl, 20250801, 1200)
-        runOnceFrom(s, tbl, sink, chk, "2") // same checkpoint: v4 only
+        runOnce(s, tbl, sink, chk, Map("startingVersion" -> "2")) // same checkpoint: v4 only
       }
       s.read.parquet(sink)
         .groupBy("event_type")
@@ -433,8 +384,8 @@ object GraftStream extends graft.QueryModule {
         (1 to 3).foreach(i => ManifestTable.appendRetrying(
           ev.where(col("event_id") % 4 === i), tbl, 20250801, 900 + i))
         // budget ≈ one slice: the 4-version backlog drains in ~4 batches
-        runOnceRows(s, tbl, sink, chk,
-          maxRows = math.max(1L, ev.count() / 4))
+        runOnce(s, tbl, sink, chk,
+          Map("maxRowsPerTrigger" -> math.max(1L, ev.count() / 4).toString))
       }
       s.read.parquet(sink)
         .groupBy("event_type")
@@ -451,12 +402,13 @@ object GraftStream extends graft.QueryModule {
         val tbl = Scratch.dir("graft_sst_tbl")
         val chk = Scratch.dir("graft_sst_chk")
         val ev = Tables.events(s, d).select("event_id", "event_type", "value")
+        val stamp = Map("startingDate" -> "20250801", "startingTime" -> "1100")
         ManifestTable.commit(ev.where(col("event_id") % 4 === 0), tbl, 20250801, 900)
         ManifestTable.appendRetrying(ev.where(col("event_id") % 4 === 1), tbl, 20250801, 1000)
         ManifestTable.appendRetrying(ev.where(col("event_id") % 4 === 2), tbl, 20250801, 1100)
-        runOnceFromStamp(s, tbl, sink, chk, 20250801, 1100) // v3 only
+        runOnce(s, tbl, sink, chk, stamp) // v3 only
         ManifestTable.appendRetrying(ev.where(col("event_id") % 4 === 3), tbl, 20250801, 1200)
-        runOnceFromStamp(s, tbl, sink, chk, 20250801, 1100) // same checkpoint: v4
+        runOnce(s, tbl, sink, chk, stamp) // same checkpoint: v4
       }
       s.read.parquet(sink)
         .groupBy("event_type")

@@ -115,23 +115,27 @@ object CrashingCommit {
 /** A concurrent writer that commits while a job runs: [[during]] is a
   * row filter that keeps every row, but the first row it sees after
   * [[arm]] puts a copy of `dir`'s latest manifest as the next version,
-  * the way a writer that read the same parent and staged faster would.
-  * It lands between a commit's read of its parent and its put, the
-  * window a primitive-level interloper cannot reach.
+  * the way a writer that read the same parent and staged faster would —
+  * listing also the files `adding` names, when the interloper appended
+  * files it staged. It lands between a commit's read of its parent and
+  * its put, the window a primitive-level interloper cannot reach.
+  * [[fire]] lands it from any other code a job runs.
   */
 object InterloperDuringJob {
   private val Slot = """v(\d{8})\.json""".r
-  private val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val armed =
+    new java.util.concurrent.atomic.AtomicReference[Option[Seq[String]]](None)
 
-  def arm(): Unit = armed.set(true)
+  def arm(adding: Seq[String] = Nil): Unit = armed.set(Some(adding))
+
+  /** Land the armed commit, once. */
+  def fire(dir: String): Unit = armed.getAndSet(None).foreach(land(dir, _))
 
   def during(dir: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.udf { () =>
-      if (armed.compareAndSet(true, false)) land(dir)
-      true
-    }.asNondeterministic().apply()
+    org.apache.spark.sql.functions.udf { () => fire(dir); true }
+      .asNondeterministic().apply()
 
-  private def land(dir: String): Unit = {
+  private def land(dir: String, adding: Seq[String]): Unit = {
     import java.nio.file.{Files, StandardOpenOption}
     val mdir = new java.io.File(dir, "_manifests")
     val (v, latest) = mdir.listFiles().toSeq.flatMap(f => f.getName match {
@@ -139,8 +143,13 @@ object InterloperDuringJob {
       case _ => None
     }).maxBy(_._1)
     val body = JsonMethods.parse(new String(Files.readAllBytes(latest.toPath), "UTF-8"))
+    val files = body \ "files" match {
+      case JArray(fs) => JArray(fs ++ adding.map(JString(_)))
+      case other => other
+    }
     Files.write(new java.io.File(mdir, f"v${v + 1}%08d.json").toPath,
-      JsonMethods.compact(JsonMethods.render(body.replace(List("version"), JInt(v + 1))))
+      JsonMethods.compact(JsonMethods.render(body
+        .replace(List("version"), JInt(v + 1)).replace(List("files"), files)))
         .getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
   }
 }
@@ -178,6 +187,21 @@ class CommitPrimitiveSpec extends SparkSpec {
     // the loser's temp staging must not linger (vacuum hygiene)
     val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.listStatus(new Path(dir)).map(_.getPath.getName).toSet == Set("v1.json"))
+  }
+
+  test("putIfAbsent: of two puts racing one slot, exactly one wins and its bytes land") {
+    val dir = graft.util.Scratch.dir("cp_put_race")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (1 to 200).foreach { i =>
+      val t = p(dir, f"v$i%08d.json")
+      val gun = new java.util.concurrent.CyclicBarrier(2)
+      val puts = Seq("a", "b").map(w => pool.submit(() => {
+        gun.await(); RenameCommit.putIfAbsent(spark, t, w.getBytes("UTF-8"))
+      }))
+      val won = Seq("a", "b").zip(puts.map(_.get)).collect { case (w, true) => w }
+      assert(won.size == 1, s"slot $i: winners $won")
+      assert(readBytes(t) == won.head)
+    } finally pool.shutdown()
   }
 
   test("replace: swaps bytes in place; a pre-existing target is not an error") {

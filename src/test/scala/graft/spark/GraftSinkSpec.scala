@@ -381,7 +381,8 @@ class GraftSinkSpec extends SparkSpec {
     // compaction's version must not fail it, or a caller's retry of the
     // write would append its rows twice
     graft.lake.InterloperCommit.losing(spark, dir)(
-      GraftDataSource.autoCompact(spark, dir, 20250901, 903))
+      GraftDataSource.autoCompact(spark, dir,
+        graft.lake.Properties.active(spark, dir), 20250901, 903))
     val snaps = ManifestTable.snapshots(spark, dir)
     assert(snaps.count(_.op == "optimize") === 0)
     assert(snaps.last.files.size === 3)

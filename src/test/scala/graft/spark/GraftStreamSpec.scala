@@ -14,6 +14,10 @@ import graft.util.Scratch
 class GraftStreamSpec extends SparkSpec {
   import spark.implicits._
 
+  private val cdf = Map("readChangeFeed" -> "true", "keys" -> "k")
+  private def stamp(date: Int, time: Int) =
+    Map("startingDate" -> date.toString, "startingTime" -> time.toString)
+
   test("initial snapshot, then only new versions across checkpointed runs") {
     val tbl = Scratch.dir("gstream_tbl")
     val sink = Scratch.dir("gstream_sink")
@@ -192,7 +196,7 @@ class GraftStreamSpec extends SparkSpec {
       tbl, 20250801, 1000)
     DeleteVectors.deleteWhere(spark, tbl, col("k") < 2, 20250801, 1100)
 
-    GraftStream.runCdfOnce(spark, tbl, "k", sink, chk)
+    GraftStream.runOnce(spark, tbl, sink, chk, cdf)
     val feed1 = spark.read.parquet(sink)
     def n(feed: org.apache.spark.sql.DataFrame, ct: String, v: Long): Long =
       feed.where(col("_change_type") === ct && col("_commit_version") === v).count()
@@ -206,7 +210,7 @@ class GraftStreamSpec extends SparkSpec {
     ManifestTable.commit(
       (2L until 15L).map(i => (i, if (i == 5) 500L else i)).toDF("k", "v"),
       tbl, 20250801, 1200)
-    GraftStream.runCdfOnce(spark, tbl, "k", sink, chk) // same checkpoint
+    GraftStream.runOnce(spark, tbl, sink, chk, cdf) // same checkpoint
     val feed2 = spark.read.parquet(sink)
     assert(feed2.count() == 19, "second pass lands only version 4's changes")
     val v4 = feed2.where(col("_commit_version") === 4)
@@ -271,18 +275,18 @@ class GraftStreamSpec extends SparkSpec {
     // subscribe AT v2's stamp: v1 never flows, v2 (at the stamp) does
     val sink = Scratch.dir("gs_startts_sink")
     val chk = Scratch.dir("gs_startts_chk")
-    GraftStream.runOnceFromStamp(spark, tbl, sink, chk, 20250901, 1000)
+    GraftStream.runOnce(spark, tbl, sink, chk, stamp(20250901, 1000))
     assert(spark.read.parquet(sink).agg(min("k"), max("k"), count("*"))
       .head.toSeq === Seq(10L, 19L, 2L * 10 - 10))
     // a later commit flows through the same checkpoint even though the
     // re-resolved stamp base would now also cover it (offsets win)
     ManifestTable.appendRetrying(df(2), tbl, 20250901, 1010) // v3
-    GraftStream.runOnceFromStamp(spark, tbl, sink, chk, 20250901, 1000)
+    GraftStream.runOnce(spark, tbl, sink, chk, stamp(20250901, 1000))
     assert(spark.read.parquet(sink).count() === 20)
     // a stamp predating the log is a FULL backfill, not a refusal
     val sink2 = Scratch.dir("gs_startts_s2")
-    GraftStream.runOnceFromStamp(spark, tbl, sink2,
-      Scratch.dir("gs_startts_c2"), 20250801, 0)
+    GraftStream.runOnce(spark, tbl, sink2,
+      Scratch.dir("gs_startts_c2"), stamp(20250801, 0))
     assert(spark.read.parquet(sink2).count() === 30)
     // startingVersion and startingDate refuse to combine
     val e = intercept[Exception] {
@@ -304,14 +308,14 @@ class GraftStreamSpec extends SparkSpec {
     ManifestTable.commit(df(0), tbl, 20250901, 900) // v1
     ManifestTable.appendRetrying(df(1), tbl, 20250901, 910) // v2
     // subscribe from "latest" (= v2): the first pass delivers NOTHING
-    GraftStream.runOnceFrom(spark, tbl, sink, chk, "latest")
+    GraftStream.runOnce(spark, tbl, sink, chk, Map("startingVersion" -> "latest"))
     // the empty first batch may land a 0-row part file — rows are the
     // contract, not file presence
     assert(spark.read.parquet(sink).count() === 0,
       "backfill leaked through startingVersion")
     // a post-subscribe append flows through the same checkpoint
     ManifestTable.appendRetrying(df(2), tbl, 20250901, 920) // v3
-    GraftStream.runOnceFrom(spark, tbl, sink, chk, "latest")
+    GraftStream.runOnce(spark, tbl, sink, chk, Map("startingVersion" -> "latest"))
     val got = spark.read.parquet(sink)
     assert(got.count() === 10)
     assert(got.agg(min("k"), max("k")).head.toSeq === Seq(20L, 29L))

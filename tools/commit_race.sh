@@ -8,7 +8,7 @@
 #         tools/commit_race.sh [rounds=8] [repeats=5]
 #         SPARK_GRAFT_COMMIT_IMPL=graft.lake.HttpCasCommit tools/commit_race.sh
 #
-# Each repeat runs FIVE races on fresh tables/catalogs:
+# Each repeat runs SIX races on fresh tables/catalogs:
 #   1. append/append     — writers a+b; check-append (per-writer versions
 #      STRICTLY increase, union contiguous, no lost row, handoffs>=1)
 #   2. append/delete     — appender vs deleter of seeded even ids;
@@ -20,6 +20,9 @@
 #   5. append+optimize   — writers a+b each loop "append one row, then
 #      OPTIMIZE" on one table; every version in the log reads and the
 #      final rows are exact (a losing OPTIMIZE touches no committed file)
+#   6. append/constraint — writer a appends rows alternating valid and
+#      violating (id < 0) while the other process toggles ADD/DROP CHECK
+#      CONSTRAINT; every version's rows satisfy its own constraint set
 #
 # Start gun is two-phase: each writer touches <START>.ready.<tag> once its
 # SparkSession is up; we fire START only after BOTH ready flags exist, so
@@ -45,6 +48,14 @@ done
 CP="$CLASSES:/opt/spark/jars/*"
 run() { # shellcheck disable=SC2086
   java $OPENS -Xmx2g -Dspark.ui.enabled=false -cp "$CP" graft.CommitRace "$@"
+}
+
+# a check's RACE line; on failure its error, never a silent exit
+check() {
+  local out
+  out=$(run "$@" 2>&1) || {
+    echo "$1 FAILED" >&2; echo "$out" | grep -v " INFO \| WARN " | tail -20 >&2; exit 1; }
+  echo "$out" | grep RACE
 }
 
 CAS_PID=""
@@ -89,7 +100,7 @@ for i in $(seq 1 "$REPEATS"); do
   fire_gun "$START" a b
   wait $PA || { echo "writer a FAILED"; tail -5 "$DIR.a.log"; exit 1; }
   wait $PB || { echo "writer b FAILED"; tail -5 "$DIR.b.log"; exit 1; }
-  OUT=$(run check-append "$DIR" "$ROUNDS" 2>&1 | grep RACE)
+  OUT=$(check check-append "$DIR" "$ROUNDS")
   echo "$OUT"
   TOTAL_HANDOFFS=$(( TOTAL_HANDOFFS + $(echo "$OUT" | sed -n 's/.*handoffs=//p') ))
 
@@ -105,7 +116,7 @@ for i in $(seq 1 "$REPEATS"); do
   fire_gun "$START" a del
   wait $PA || { echo "appender FAILED"; tail -5 "$DIR.a.log"; exit 1; }
   wait $PD || { echo "deleter FAILED"; tail -5 "$DIR.d.log"; exit 1; }
-  run check-appdel "$DIR" "$ROUNDS" "$DROUNDS" 2>&1 | grep RACE
+  check check-appdel "$DIR" "$ROUNDS" "$DROUNDS"
 
   echo "=== repeat $i/$REPEATS: replace/replace ==="
   DIR=$(mktemp -d /tmp/graft_race_rr.XXXXXX)/t
@@ -118,7 +129,7 @@ for i in $(seq 1 "$REPEATS"); do
   fire_gun "$START" a b
   wait $PA || { echo "replacer a FAILED"; tail -5 "$DIR.a.log"; exit 1; }
   wait $PB || { echo "replacer b FAILED"; tail -5 "$DIR.b.log"; exit 1; }
-  run check-replace "$DIR" "$ROUNDS" 2>&1 | grep RACE
+  check check-replace "$DIR" "$ROUNDS"
 
   echo "=== repeat $i/$REPEATS: catalog tx (disjoint tables, one catalog) ==="
   ROOT=$(mktemp -d /tmp/graft_race_cat.XXXXXX)/c
@@ -131,7 +142,7 @@ for i in $(seq 1 "$REPEATS"); do
   fire_gun "$START" a b
   wait $PA || { echo "cat writer a FAILED"; tail -5 "$ROOT.a.log"; exit 1; }
   wait $PB || { echo "cat writer b FAILED"; tail -5 "$ROOT.b.log"; exit 1; }
-  OUT=$(run check-cat "$ROOT" "$ROUNDS" 2>&1 | grep RACE)
+  OUT=$(check check-cat "$ROOT" "$ROUNDS")
   echo "$OUT"
   TOTAL_HANDOFFS=$(( TOTAL_HANDOFFS + $(echo "$OUT" | sed -n 's/.*handoffs=//p') ))
 
@@ -147,7 +158,21 @@ for i in $(seq 1 "$REPEATS"); do
   wait $PA || { echo "writer a FAILED"; tail -5 "$DIR.a.log"; exit 1; }
   wait $PB || { echo "writer b FAILED"; tail -5 "$DIR.b.log"; exit 1; }
   grep -h "RACE append" "$DIR.a.log" "$DIR.b.log"
-  run check-appendopt "$DIR" "$ROUNDS" 2>&1 | grep RACE
+  check check-appendopt "$DIR" "$ROUNDS"
+
+  echo "=== repeat $i/$REPEATS: append (alternating violating rows) / ADD+DROP CONSTRAINT ==="
+  DIR=$(mktemp -d /tmp/graft_race_ac.XXXXXX)/t
+  START="$DIR.start"
+  run seed "$DIR"
+  run append "$DIR" a "$ROUNDS" "$START" violate > "$DIR.a.log" 2>&1 &
+  PA=$!
+  run constraint "$DIR" "$ROUNDS" "$START" > "$DIR.c.log" 2>&1 &
+  PC=$!
+  fire_gun "$START" a con
+  wait $PA || { echo "writer a FAILED"; tail -5 "$DIR.a.log"; exit 1; }
+  wait $PC || { echo "constraint toggler FAILED"; tail -5 "$DIR.c.log"; exit 1; }
+  grep -h "RACE append\|RACE constraint" "$DIR.a.log" "$DIR.c.log"
+  check check-constraints "$DIR"
 done
 MAXH=$(( 2 * REPEATS * (2 * ROUNDS - 1) ))
 echo "commit_race: all $REPEATS repeats passed (impl=${SPARK_GRAFT_COMMIT_IMPL:-rename});" \
