@@ -27,8 +27,9 @@ import graft.lake.{Catalog, Constraints, DeleteVectors, LostRace, ManifestTable,
   *    (a bin-pack to one file, which makes one attempt and may lose its
   *    race), with `violate` every odd round's id negative (a row the
   *    `constraint` toggler's check refuses while it is active; a refused
-  *    append lands no version); writes its committed version list to
-  *    `<dir>/_versions_<tag>.txt`
+  *    append lands no version): the first such round waits until a
+  *    constraint is active, so the put-side refusal is met at least once;
+  *    writes its committed version list to `<dir>/_versions_<tag>.txt`
   *  - `delete <dir> <rounds> <startFile>` — `rounds` × delete of base id
   *    `2k` (k = 1..rounds ≤ 5): predicates touch only seeded rows, so the
   *    final state is ORDER-INDEPENDENT and exactly checkable even though
@@ -54,7 +55,9 @@ import graft.lake.{Catalog, Constraints, DeleteVectors, LostRace, ManifestTable,
   *    CHECK `pos`: DROP when it is active, else ADD it as `id > 0`, or at
   *    least the smallest id committed when the round starts (the rows
   *    already there pass, a later violating append does not); an ADD
-  *    refused because a violating row landed since is reported, not fatal
+  *    refused because a violating row landed since is reported, not
+  *    fatal. A landed ADD holds until the next append lands (or appender
+  *    `a` finished), so the violating round before it meets the constraint
   *  - `check-constraints <dir>` — after an `append … violate` /
   *    `constraint` race: every version's rows satisfy that version's own
   *    constraint set, and the latest holds the seeded rows plus exactly
@@ -94,12 +97,7 @@ object CommitRace {
     */
   private def awaitStart(flag: String, tag: String): Unit = {
     Files.writeString(Paths.get(s"$flag.ready.$tag"), "up")
-    val deadline = System.currentTimeMillis() + 120000
-    while (!Files.exists(Paths.get(flag))) {
-      if (System.currentTimeMillis() > deadline)
-        sys.error(s"start flag $flag never appeared")
-      Thread.sleep(20)
-    }
+    until(s"start flag $flag")(Files.exists(Paths.get(flag)))
   }
 
   def main(args: Array[String]): Unit = args(0) match {
@@ -119,8 +117,10 @@ object CommitRace {
       var (lost, refused) = (0, 0)
       val versions = (1 to rounds).flatMap { i =>
         val id = 1000L * (tag.hashCode.abs % 97 + 1) + i
+        val bad = violate && i % 2 == 1
+        if (bad && i == 1) until(s"a constraint at $dir")(Constraints.active(s, dir).nonEmpty)
         val v = try Some(ManifestTable.appendRetrying(
-          Seq((if (violate && i % 2 == 1) -id else id, tag)).toDF("id", "tag"),
+          Seq((if (bad) -id else id, tag)).toDF("id", "tag"),
           dir, 20250816, 900 + i, maxRetries = Retries))
         catch { case e: IllegalArgumentException if violate &&
             e.getMessage.startsWith("CHECK constraint violation") => refused += 1; None }
@@ -144,8 +144,13 @@ object CommitRace {
           Constraints.drop(s, dir, "pos", 20250816, 900 + j); "drop"
         } else {
           val floor = ManifestTable.readLatest(s, dir).agg(min("id")).head.getLong(0)
-          try { Constraints.add(s, dir, "pos", s"id > 0 OR id >= $floor", 20250816, 900 + j); "add" }
-          catch {
+          try {
+            Constraints.add(s, dir, "pos", s"id > 0 OR id >= $floor", 20250816, 900 + j)
+            val v = ManifestTable.latestVersion(s, dir)
+            until(s"an append at $dir")(ManifestTable.latestVersion(s, dir) != v ||
+              Files.exists(Paths.get(s"$dir/_versions_a.txt")))
+            "add"
+          } catch {
             case e: IllegalArgumentException if e.getMessage.contains("existing rows violate") => "refused"
             case e: IllegalStateException if e.getMessage.contains("consecutive races") => "lost"
           }
@@ -335,6 +340,15 @@ object CommitRace {
       s.stop()
 
     case other => sys.error(s"unknown mode $other")
+  }
+
+  /** Poll `cond` every 20 ms; fail after two minutes. */
+  private def until(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + 120000
+    while (!cond) {
+      if (System.currentTimeMillis() > deadline) sys.error(s"waited two minutes for $what")
+      Thread.sleep(20)
+    }
   }
 
   private def strictlyIncreasing(v: Seq[Int]): Boolean =

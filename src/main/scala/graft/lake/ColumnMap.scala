@@ -128,40 +128,24 @@ object ColumnMap extends graft.QueryModule {
     val spark = df.sparkSession
     val v = ManifestTable.latestVersion(spark, dir).getOrElse(
       throw new NoSuchElementException(s"no table at $dir"))
-    val fields = mappingAt(spark, dir, v)
+    ManifestTable.appendRetrying(toPhysical(df, mappingAt(spark, dir, v)),
+      dir, date, time)
+  }
+
+  /** `df`, addressed by the logical names of `fields`, as the batch to
+    * stage: generated columns it OMITS are computed (X204), and every
+    * column is renamed to its physical name. Generated columns it
+    * PROVIDES are checked against their expressions by the commit
+    * ([[Constraints]]).
+    */
+  private[graft] def toPhysical(df: DataFrame, fields: Seq[Field]): DataFrame = {
     val logical = fields.map(_.logical)
-    // X204: a write may OMIT generated columns — they are computed here
     val withGen = fields
       .filter(f => f.gen.isDefined && !df.columns.contains(f.logical))
       .foldLeft(df)((d, f) => d.withColumn(f.logical, expr(f.gen.get).cast(f.dtype)))
     require(withGen.columns.toSet == logical.toSet,
       s"append columns ${withGen.columns.sorted.mkString(",")} != table columns ${logical.sorted.mkString(",")}")
-    val physical = withGen.select(fields.map(f => col(f.logical).as(f.physical)): _*)
-    val provided = fields.filter(f => f.gen.isDefined && df.columns.contains(f.logical))
-    if (provided.isEmpty) ManifestTable.appendRetrying(physical, dir, date, time)
-    else {
-      // X204: a write that PROVIDES a generated column must agree with
-      // the expression row-for-row. Stage first and validate the STAGED
-      // bytes (the X172/X180 containment discipline — a non-deterministic
-      // batch cannot pass validation yet commit different values), then
-      // publish exactly those bytes or drop them on refusal.
-      val staged = ManifestTable.stageDataFiles(physical, dir)
-      val logicalView = spark.read
-        .parquet(staged.map(f => s"$dir/$f"): _*)
-        .select(fields.map(f => col(f.physical).cast(f.dtype).as(f.logical)): _*)
-      val bad = provided.map(f => sum(when(
-        not(col(f.logical) <=> expr(f.gen.get).cast(f.dtype)), 1L)
-        .otherwise(0L)).as(f.logical))
-      val row = logicalView.agg(bad.head, bad.tail: _*).head
-      val viol = provided.zipWithIndex
-        .collect { case (f, i) if row.getLong(i) > 0 => s"${f.logical} (${row.getLong(i)} rows)" }
-      if (viol.nonEmpty) {
-        ManifestTable.dropStaged(spark, dir, staged)
-        throw new IllegalArgumentException(
-          s"generated column values conflict with their expressions: ${viol.mkString(", ")}")
-      }
-      ManifestTable.appendStagedRetrying(spark, dir, date, time, staged)
-    }
+    withGen.select(fields.map(f => col(f.logical).as(f.physical)): _*)
   }
 
   /** X208 — automatic schema evolution on write (Delta's `mergeSchema`
@@ -265,8 +249,8 @@ object ColumnMap extends graft.QueryModule {
     * Metadata-only commit; the expression is validated HERE against the
     * current logical schema (unknown columns / un-castable results
     * refuse with nothing committed). Writes that omit the column compute
-    * it; writes that provide it are validated row-for-row from staged
-    * bytes ([[append]]); pre-ADD files compute it at read time ([[read]]).
+    * it; writes that provide it are validated row-for-row by their
+    * commit ([[Constraints]]); pre-ADD files compute it at read time ([[read]]).
     */
   def addGenerated(spark: SparkSession, dir: String, name: String,
       dtype: String, genSql: String): Int = {
@@ -293,22 +277,25 @@ object ColumnMap extends graft.QueryModule {
     require(snaps.nonEmpty, s"no committed snapshot at $dir")
     val snap = version.map(v => snaps.find(_.version == v).getOrElse(
       throw new NoSuchElementException(s"no version $v at $dir"))).getOrElse(snaps.last)
-    logical(spark, dir, snap, snap.files)
+    if (mappingOf(snap).isEmpty)
+      // a version written before the table was mapped reads as stored
+      DeleteVectors.applyTo(spark, dir, snap, ManifestTable.rawVersionScan(spark, dir, snap))
+    else logical(spark, dir, snap, snap.files)
   }
 
   /** `files` of `snap` (its tombstones applied) under the snapshot's
-    * logical names — [[read]] of the whole version, and of just the
-    * files a commit adds when the commit checks its CHECK constraints
-    * ([[Constraints]]).
+    * logical names — [[read]] of a mapped version, and of just the files
+    * a commit adds when the commit checks its CHECK constraints
+    * ([[Constraints]]). `snap` may be a version that has not landed yet
+    * (and may never land as this content), so nothing here is cached
+    * under its version.
     */
   private[lake] def logical(spark: SparkSession, dir: String,
       snap: ManifestTable.Snapshot, files: Seq[String]): DataFrame = {
     val fields = mappingOf(snap) match {
       case Some(fs) => fs
-      // a version written before the table was mapped reads as stored
       case None => return DeleteVectors.applyTo(spark, dir, snap,
-        if (files == snap.files) ManifestTable.rawVersionScan(spark, dir, snap)
-        else spark.read.parquet(files.map(f => s"$dir/$f"): _*))
+        spark.read.parquet(files.map(f => s"$dir/$f"): _*))
     }
     // X215: an empty version (schema-first CREATE, or every row deleted
     // by a replace) serves its mapped schema with zero rows — there are

@@ -65,7 +65,8 @@ class GraftDataSource extends RelationProvider with DataSourceRegister
     val dir = parameters.getOrElse("path",
       throw new IllegalArgumentException("graft: 'path' is required"))
     val (date, time) = GraftDataSource.stampOf(parameters)
-    GraftDataSource.land(spark, dir, data, mode, date, time, parameters)
+    GraftDataSource.land(spark, dir, mode, date, time, parameters)(
+      GraftDataSource.writerBatch(spark, dir, data, mode, parameters))
     createRelation(sqlContext, parameters)
   }
 
@@ -371,76 +372,88 @@ object GraftDataSource {
     }
 
   /** The one landing path of a batch write — the X116 writer, SQL INSERT
-    * (X173, `insert`) and CTAS (X186). One read of the latest snapshot
-    * decides existence (the committed log, not a half-staged leftover),
-    * the schema check (an append matches (name, type) unless
-    * `allowSchemaDrift=true`; an INSERT matches by position and takes the
-    * table's names, and into a schema-first mapped table lands through
-    * [[graft.lake.ColumnMap.append]]), the shape (a declared write order
-    * range-clusters the batch and records zone maps; `optimizeWrite` /
-    * `targetFileBytes` rebalance it, explicit `options` winning over the
-    * `graft.`-prefixed table properties) and the auto-compaction
-    * properties. Then it stages the batch and commits an append (mode
-    * `Append`) or a replace; the commit checks CHECK constraints.
-    * Returns the committed version; None for `Ignore` on a table.
+    * (X173) and CTAS (X186). One read of the latest snapshot decides
+    * existence (the committed log, not a half-staged leftover), the batch
+    * (`batch` of that snapshot: the caller's schema rule), the shape (a
+    * declared write order range-clusters the batch and records zone maps;
+    * `optimizeWrite` / `targetFileBytes` rebalance it, explicit `options`
+    * winning over the `graft.`-prefixed table properties) and the
+    * auto-compaction properties. Then it stages the batch and commits an
+    * append (mode `Append`) or a replace; the commit checks CHECK
+    * constraints and generated columns. Returns the committed version;
+    * None for `Ignore` on a table.
     */
-  private[spark] def land(spark: SparkSession, dir: String, data: DataFrame,
-      mode: SaveMode, date: Int, time: Int, options: Map[String, String],
-      insert: Boolean = false): Option[Int] = {
+  private[spark] def land(spark: SparkSession, dir: String, mode: SaveMode,
+      date: Int, time: Int, options: Map[String, String])(
+      batch: Option[ManifestTable.Snapshot] => DataFrame): Option[Int] = {
     val snap = ManifestTable.snapshots(spark, dir).lastOption
     if (snap.nonEmpty && mode == SaveMode.ErrorIfExists)
       throw new IllegalStateException(s"graft: table at $dir already has " +
         "committed versions (replace it with mode Overwrite or CREATE OR REPLACE TABLE)")
     if (snap.nonEmpty && mode == SaveMode.Ignore) return None
-    val append = mode == SaveMode.Append
-    val batch = snap match {
-      case None =>
-        require(!insert, s"graft: no committed snapshot at $dir")
-        data
-      case Some(s) if insert =>
-        graft.lake.ColumnMap.mappingOf(s).filter(_ => s.files.isEmpty) match {
-          case Some(fields) =>
-            require(data.schema.fields.length == fields.length,
-              s"graft: INSERT carries ${data.schema.fields.length} columns, " +
-                s"table declares ${fields.length}")
-            return Some(graft.lake.ColumnMap.append(
-              data.toDF(fields.map(_.logical): _*), dir, date, time))
-          case None =>
-        }
+    val data = batch(snap)
+    val props = snap.fold(Map.empty[String, String])(graft.lake.Properties.of)
+    def setting(key: String) = options.get(key).orElse(props.get(s"graft.$key"))
+    val (staged, stats) = graft.lake.WriteOrder.orderedCols(props) match {
+      case Some(cols) => graft.lake.WriteOrder.stage(data, dir, cols,
+        props.get("graft.writeOrder.partitions").map(_.toInt))
+      case None if setting("optimizeWrite").exists(_.toBoolean) =>
+        (graft.lake.OptimizedWrite.stage(data, dir, setting("targetFileBytes")
+          .fold(graft.lake.OptimizedWrite.DefaultTargetBytes)(_.toLong)), Nil)
+      case None => (ManifestTable.stageDataFiles(data, dir), Nil)
+    }
+    val version =
+      if (mode == SaveMode.Append) ManifestTable.appendStagedRetrying(spark, dir,
+        date, time, staged, stats = stats)
+      else ManifestTable.commitStaged(spark, dir, date, time, staged, stats = stats)
+    autoCompact(spark, dir, props, date, time)
+    Some(version)
+  }
+
+  /** The X116 writer's schema rule: an append to a table matches its
+    * (name, type) schema unless `allowSchemaDrift=true` — silently
+    * appending a drifted schema poisons every later read (Delta's
+    * contract).
+    */
+  private def writerBatch(spark: SparkSession, dir: String, data: DataFrame,
+      mode: SaveMode, options: Map[String, String])(
+      snap: Option[ManifestTable.Snapshot]): DataFrame = {
+    if (mode == SaveMode.Append && !options.get("allowSchemaDrift").exists(_.toBoolean))
+      snap.foreach { s =>
         val current = new ManifestFileIndex(spark, dir, s).dataSchema
+        require(data.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+            current.fields.map(f => (f.name, f.dataType)).toSeq,
+          s"graft: append schema ${data.schema.simpleString} does not match " +
+            s"table schema ${current.simpleString}; set allowSchemaDrift=true " +
+            "to append anyway and reconcile reads via Evolution.readHistory")
+      }
+    data
+  }
+
+  /** SQL INSERT's schema rule: positional. Spark's insertion
+    * preprocessing has already cast the query to the relation's schema,
+    * so a surviving type mismatch is real drift; names realign to the
+    * table's. A schema-first mapped table (X215, no files yet) takes its
+    * logical names from the mapping and is stored under the physical ones.
+    */
+  private def insertBatch(spark: SparkSession, dir: String, data: DataFrame)(
+      snap: Option[ManifestTable.Snapshot]): DataFrame = {
+    require(snap.nonEmpty, s"graft: no committed snapshot at $dir")
+    graft.lake.ColumnMap.mappingOf(snap.get).filter(_ => snap.get.files.isEmpty) match {
+      case Some(fields) =>
+        require(data.schema.fields.length == fields.length,
+          s"graft: INSERT carries ${data.schema.fields.length} columns, " +
+            s"table declares ${fields.length}")
+        graft.lake.ColumnMap.toPhysical(data.toDF(fields.map(_.logical): _*), fields)
+      case None =>
+        val current = new ManifestFileIndex(spark, dir, snap.get).dataSchema
         require(data.schema.fields.length == current.fields.length &&
             data.schema.fields.zip(current.fields).forall {
               case (a, b) => a.dataType.sql == b.dataType.sql },
           s"graft: INSERT schema ${data.schema.simpleString} does not match " +
             s"table schema ${current.simpleString}")
         data.toDF(current.fieldNames: _*)
-      case Some(s) =>
-        if (append && !options.get("allowSchemaDrift").exists(_.toBoolean)) {
-          val current = new ManifestFileIndex(spark, dir, s).dataSchema
-          require(data.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-              current.fields.map(f => (f.name, f.dataType)).toSeq,
-            s"graft: append schema ${data.schema.simpleString} does not match " +
-              s"table schema ${current.simpleString}; set allowSchemaDrift=true " +
-              "to append anyway and reconcile reads via Evolution.readHistory")
-        }
-        data
     }
-    val props = snap.fold(Map.empty[String, String])(graft.lake.Properties.of)
-    def setting(key: String) = options.get(key).orElse(props.get(s"graft.$key"))
-    val (staged, stats) = graft.lake.WriteOrder.orderedCols(props) match {
-      case Some(cols) => graft.lake.WriteOrder.stage(batch, dir, cols,
-        props.get("graft.writeOrder.partitions").map(_.toInt))
-      case None if setting("optimizeWrite").exists(_.toBoolean) =>
-        (graft.lake.OptimizedWrite.stage(batch, dir, setting("targetFileBytes")
-          .fold(graft.lake.OptimizedWrite.DefaultTargetBytes)(_.toLong)), Nil)
-      case None => (ManifestTable.stageDataFiles(batch, dir), Nil)
-    }
-    val version =
-      if (append) ManifestTable.appendStagedRetrying(spark, dir, date, time,
-        staged, stats = stats)
-      else ManifestTable.commitStaged(spark, dir, date, time, staged, stats = stats)
-    autoCompact(spark, dir, props, date, time)
-    Some(version)
   }
 
   /** X173: the `InsertableRelation` body — SQL `INSERT INTO` as an X96
@@ -457,8 +470,8 @@ object GraftDataSource {
         "supported — the view is an immutable snapshot; create a view over " +
         "the current table to insert")
     val (date, time) = stampOf(parameters)
-    land(spark, dir, data, if (overwrite) SaveMode.Overwrite else SaveMode.Append,
-      date, time, Map.empty, insert = true)
+    land(spark, dir, if (overwrite) SaveMode.Overwrite else SaveMode.Append,
+      date, time, Map.empty)(insertBatch(spark, dir, data))
   }
 }
 

@@ -917,7 +917,7 @@ case class GraftCtasCommand(dir: String, orReplace: Boolean, query: String,
     Seq(AttributeReference("version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val mode = if (orReplace) SaveMode.Overwrite else SaveMode.ErrorIfExists
-    GraftDataSource.land(spark, dir, spark.sql(query), mode, date, time, Map.empty)
+    GraftDataSource.land(spark, dir, mode, date, time, Map.empty)(_ => spark.sql(query))
       .map(v => Row(v.toLong)).toSeq
   }
 }

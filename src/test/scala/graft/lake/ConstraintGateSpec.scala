@@ -114,6 +114,22 @@ class ConstraintGateSpec extends SparkSpec {
       ext.sql("INSERT INTO cgate_mapped_v SELECT CAST(-13 AS BIGINT), 1.0D")
     }))
 
+  /** `body`'s result and the Spark jobs it ran. */
+  private def counted[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      drain(); (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(20).toSeq
 
@@ -204,30 +220,67 @@ class ConstraintGateSpec extends SparkSpec {
       DeleteVectors.deleteWhere(spark, dir, col("k") % 10 === 0, 20250901, 920)
       dir
     }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val plain = table("cgate_jobs_plain", constrain = false)
+    val checked = table("cgate_jobs_checked", constrain = true)
+    def maintain(dir: String): Seq[Int] = Seq(
+      counted(DeleteVectors.materialize(spark, dir, 20250901, 930))._2,
+      counted(ZOrder.binPack(spark, dir, 1L << 30, 20250901, 940)) match {
+        case (v, n) => assert(v.isDefined, s"OPTIMIZE of $dir committed nothing"); n
+      })
+    assert(maintain(checked) === maintain(plain))
+    assert(ManifestTable.snapshots(spark, checked).map(_.op).takeRight(2) ===
+      Seq("materialize", "optimize"))
+    assert(ManifestTable.readLatest(spark, checked).count() === 270)
+  }
+
+  test("an append that loses a race re-checks nothing its first attempt already passed") {
+    val (lose, win) = (constrained("cgate_retry_lose"), constrained("cgate_retry_win"))
+    def batch(dir: String) = ManifestTable.stageDataFiles(Seq((9L, 9.0)).toDF("k", "v"), dir)
+    val (lost, won) = (batch(lose), batch(win))
+    val (v, lostJobs) = counted(InterloperCommit.losing(spark, lose)(
+      ManifestTable.appendStagedRetrying(spark, lose, 20250901, 920, lost)))
+    val (_, wonJobs) = counted(
+      ManifestTable.appendStagedRetrying(spark, win, 20250901, 920, won))
+    assert(v === 4, "the interloper takes v3, the append v4")
+    assert(wonJobs > 0, "the gate scans the batch")
+    assert(lostJobs === wonJobs, "the retry after the lost race scans it again")
+    assert(ManifestTable.readLatest(spark, lose).count() === 6)
+  }
+
+  test("a refused replace caches nothing for the version a later replace lands as") {
+    val dir = constrained("cgate_replace_schema")
+    def replace(select: String): Unit =
+      ext.sql(s"CREATE OR REPLACE TABLE '$dir' AT 20250901 920 AS SELECT $select")
+    def refused(select: String): Unit = {
+      val e = intercept[Exception](replace(select))
+      assert(causes(e).exists(c => c.getMessage != null &&
+        c.getMessage.contains("CHECK constraint violation")), e)
     }
-    def drain(): Unit = org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
-    def counted[T](body: => T): (T, Int) = {
-      drain(); jobs.set(0)
-      val out = body
-      drain(); (out, jobs.get)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val plain = table("cgate_jobs_plain", constrain = false)
-      val checked = table("cgate_jobs_checked", constrain = true)
-      def maintain(dir: String): Seq[Int] = Seq(
-        counted(DeleteVectors.materialize(spark, dir, 20250901, 930))._2,
-        counted(ZOrder.binPack(spark, dir, 1L << 30, 20250901, 940)) match {
-          case (v, n) => assert(v.isDefined, s"OPTIMIZE of $dir committed nothing"); n
-        })
-      assert(maintain(checked) === maintain(plain))
-      assert(ManifestTable.snapshots(spark, checked).map(_.op).takeRight(2) ===
-        Seq("materialize", "optimize"))
-      assert(ManifestTable.readLatest(spark, checked).count() === 270)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // another type for k, then another column set, each for version 3 first
+    refused("CAST(-1 AS INT) AS k, 1.0D AS v")
+    replace("CAST(7 AS BIGINT) AS k, 2.0D AS v")
+    assert(ManifestTable.readVersion(spark, dir, 3).as[(Long, Double)].collect() ===
+      Array((7L, 2.0)))
+    refused("CAST(-1 AS BIGINT) AS k, 'x' AS w")
+    replace("CAST(8 AS BIGINT) AS k, 'y' AS u")
+    assert(ManifestTable.readLatest(spark, dir).as[(Long, String)].collect() ===
+      Array((8L, "y")))
+    assert(ManifestTable.latestVersion(spark, dir).contains(4))
+    assert(staged(dir).isEmpty, staged(dir))
+  }
+
+  test("INSERT into a schema-first table checks a provided GENERATED column at its commit") {
+    val dir = Scratch.dir("cgate_generated")
+    ext.sql(s"CREATE TABLE '$dir' (k bigint, v double) AT 20250901 900")
+    ext.sql(s"ALTER TABLE '$dir' ADD COLUMN dbl double GENERATED ALWAYS AS (v * 2)")
+    view("cgate_generated_v", dir)
+    val e = intercept[Exception](
+      ext.sql("INSERT INTO cgate_generated_v SELECT CAST(1 AS BIGINT), 1.0D, 5.0D"))
+    assert(causes(e).exists(c => c.getMessage != null &&
+      c.getMessage.contains("generated column values conflict with their expressions: dbl (1 rows)")), e)
+    assert(staged(dir).isEmpty, staged(dir))
+    ext.sql("INSERT INTO cgate_generated_v SELECT CAST(1 AS BIGINT), 1.0D, 2.0D")
+    assert(ColumnMap.read(spark, dir).as[(Long, Double, Double)].collect() ===
+      Array((1L, 1.0, 2.0)))
   }
 }

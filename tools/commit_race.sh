@@ -22,7 +22,8 @@
 #      final rows are exact (a losing OPTIMIZE touches no committed file)
 #   6. append/constraint — writer a appends rows alternating valid and
 #      violating (id < 0) while the other process toggles ADD/DROP CHECK
-#      CONSTRAINT; every version's rows satisfy its own constraint set
+#      CONSTRAINT; every version's rows satisfy its own constraint set, and
+#      at least one violating append was refused by its put
 #
 # Start gun is two-phase: each writer touches <START>.ready.<tag> once its
 # SparkSession is up; we fire START only after BOTH ready flags exist, so
@@ -172,6 +173,10 @@ for i in $(seq 1 "$REPEATS"); do
   wait $PA || { echo "writer a FAILED"; tail -5 "$DIR.a.log"; exit 1; }
   wait $PC || { echo "constraint toggler FAILED"; tail -5 "$DIR.c.log"; exit 1; }
   grep -h "RACE append\|RACE constraint" "$DIR.a.log" "$DIR.c.log"
+  # the appender's first violating round waits for an active constraint,
+  # so at least one append must have been refused by its put
+  REFUSED=$(sed -n 's/.*refused=//p' "$DIR.a.log")
+  [ "${REFUSED:-0}" -gt 0 ] || { echo "append/constraint: no violating append met a constraint" >&2; exit 1; }
   check check-constraints "$DIR"
 done
 MAXH=$(( 2 * REPEATS * (2 * ROUNDS - 1) ))
