@@ -19,11 +19,15 @@ import org.apache.spark.sql.functions._
   *   - Tier 1 `gender_udf`: a Scala UDF returning the reference's nested
   *     struct (predicted_gender, confidence float). Deterministic, but opaque
   *     to Catalyst — kept for API fidelity.
-  *   - Tier 2 `withGender` (preferred): two broadcast left-joins against the
-  *     names dictionary + pure Column CASE logic. Fully codegen'd, pushdown
-  *     survives, and at 100 TB the ~dictionary broadcast replaces a per-row
-  *     JVM⇄interpreter boundary (the reference's BatchEvalPython, its #1
-  *     scale bottleneck — SURVEY §3.1).
+  *   - Tier 2 `withGender` (preferred): one exact-match lookup of the
+  *     normalized first token and the cleaned username in the immutable
+  *     [[NamesDict.resolvedEntries]] + pure Column CASE logic. No join and no
+  *     broadcast: the dictionary ships with the code, so a call plans no
+  *     extra job, pushdown survives, and at 100 TB the JVM hash lookup
+  *     replaces a per-row JVM⇄interpreter boundary (the reference's
+  *     BatchEvalPython, its #1 scale bottleneck — SURVEY §3.1). A miss or a
+  *     null key yields null, exactly what the left join against the
+  *     dictionary gave (the DuckDB oracle still states it as that join).
   */
 object Gender {
 
@@ -56,21 +60,11 @@ object Gender {
   /** Tier-1 UDF returning the nested struct, as the reference applies it. */
   val genderUdf = udf((fullName: String, username: String) => guess(fullName, username))
 
-  /** Names dictionary as a (small, broadcastable) DataFrame. */
-  def dictDF(s: SparkSession): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(
-      NamesDict.sortedEntries.map { case (n, g) => org.apache.spark.sql.Row(n, g) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("first_name", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("gender", org.apache.spark.sql.types.StringType))))
-  }
-
   private def isBlank(c: Column): Column = c.isNull || trim(c) === ""
 
   /** Column twin of [[NamesDict.normalizeKey]]: NFC composition (via the
     * X43 native expression) plus default-ignorable stripping. Applied to
-    * the full-name token before the dictionary join so both tiers (and
+    * the full-name token before the dictionary lookup so both tiers (and
     * the SQL oracle, which mirrors this with DuckDB's `nfc_normalize`)
     * resolve diacritic names identically. The username path is NOT
     * normalized — the reference's `[^A-Za-z]` cleaning already strips
@@ -80,24 +74,23 @@ object Gender {
     regexp_replace(graft.functions.TextNorm.nfc_norm(c),
       "[\\u00AD\\u200B-\\u200D\\uFEFF]", "")
 
-  /** Tier-2 join form: adds predicted_gender + confidence (double) columns to
+  /** The dictionary category of an already-normalized key: an exact `get`
+    * in [[NamesDict.resolvedEntries]], null on a miss or a null key.
+    */
+  private val category = udf((key: String) => NamesDict.resolvedEntries.getOrElse(key, null))
+
+  /** Tier-2 form: adds predicted_gender + confidence (double) columns to
     * `df`, which must carry `full_name` and `username` string columns.
     */
   def withGender(s: SparkSession, df: DataFrame): DataFrame = {
-    val dict = dictDF(s)
-    val d1 = dict.withColumnRenamed("first_name", "ft_key").withColumnRenamed("gender", "g_full")
-    val d2 = dict.withColumnRenamed("first_name", "cu_key").withColumnRenamed("gender", "g_user")
-
     val featured = df
       .withColumn("first_token",
         when(!isBlank(col("full_name")),
           normKey(regexp_extract(trim(col("full_name")), "^\\S+", 0))))
       .withColumn("cleaned_username",
         when(!isBlank(col("username")), regexp_replace(col("username"), "[^A-Za-z]", "")))
-
-    val joined = featured
-      .join(broadcast(d1), featured("first_token") === d1("ft_key"), "left")
-      .join(broadcast(d2), featured("cleaned_username") === d2("cu_key"), "left")
+      .withColumn("g_full", category(col("first_token")))
+      .withColumn("g_user", category(col("cleaned_username")))
 
     val confFull = when(col("first_token").isNull, 0.0)
       .when(col("g_full").isin("male", "mostly_male", "female", "mostly_female"), 0.9)
@@ -113,13 +106,13 @@ object Gender {
       .when(col("g_user").isin("female", "mostly_female"), "female")
       .otherwise("unknown")
 
-    joined
+    featured
       .withColumn("predicted_gender",
         when(confFull >= confUser,
           when(confFull === 0.0, "unknown").otherwise(genderFull))
           .otherwise(when(confUser === 0.0, "unknown").otherwise(genderUser)))
       .withColumn("confidence", when(confFull >= confUser, confFull).otherwise(confUser))
-      .drop("first_token", "cleaned_username", "ft_key", "g_full", "cu_key", "g_user")
+      .drop("first_token", "cleaned_username", "g_full", "g_user")
   }
 
   // --- Deterministic decision-table profiles (FIXTURES.md §3) shared by the

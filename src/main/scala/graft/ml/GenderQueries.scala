@@ -22,7 +22,8 @@ object GenderQueries extends graft.QueryModule {
         .drop("gender_info")
         .orderBy("id")),
 
-    // Tier 2: broadcast-join + CASE form — Catalyst-optimizable, codegen'd.
+    // Tier 2: dictionary lookup + CASE form — no join, codegen'd; the
+    // oracle states it as the dictionary join it equals.
     "q_gender_join" -> ((s, _) =>
       Gender.withGender(s, Gender.profilesDF(s))
         .select("id", "full_name", "username", "predicted_gender", "confidence")

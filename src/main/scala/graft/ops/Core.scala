@@ -145,8 +145,8 @@ object Core extends graft.QueryModule {
     // S12: previous-snapshot discovery — the reference lists + sorts dirs and
     // takes the greatest < current (script_api_apify_to_spark.py:218-234).
     // Spark-native via lake.Layout: each run appends one immutable
-    // (run_date, run_time) snapshot partition; previousRunTime is a
-    // metadata-only max over partition values and snapshotAt prunes the
+    // (run_date, run_time) snapshot partition; previousRunTime lists the
+    // partition dirs (no Spark job) and snapshotAt prunes the
     // scan to the single chosen partition — the pattern that scales to
     // thousands of snapshots.
     "q_prev_snapshot" -> ((s, d) => {
@@ -172,7 +172,7 @@ object Core extends graft.QueryModule {
     // X26: as-of-T snapshot read ACROSS dates — asking for 08:45 on a day
     // whose first snapshot lands at 09:00 must fall back to the previous
     // day's last snapshot (the case the reference's same-day listdir loop
-    // cannot serve). Discovery is metadata-only; the read prunes to the one
+    // cannot serve). Discovery lists partition dirs; the read prunes to the one
     // chosen partition (LayoutSpec pins both).
     "q_snapshot_asof" -> ((s, d) => {
       val o = orders(s, d).select("o_orderkey", "o_totalprice")

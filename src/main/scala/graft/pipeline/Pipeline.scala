@@ -37,12 +37,22 @@ import graft.sources.Ingest
   *     partition overwrite), so re-running a failed run — the DAG's retry
   *     mode, `apify_dag.py:38-39` — replaces exactly that run's partition
   *     instead of appending duplicates (PipelineSpec pins this);
+  *   - the usage layer is a file copy of the run's `formatted` partition
+  *     ([[Layout.copySnapshot]], same partition-overwrite semantics): the
+  *     reference writes the same rows twice (`:194,208`), one Spark write
+  *     does here;
+  *   - the payload's shape is read off the payload string and the landed
+  *     file is read with the declared [[contract]]
+  *     ([[Ingest.readContract]]), and the gender dictionary is a lookup,
+  *     not a join, so ingest and enrichment plan no inference or broadcast
+  *     job;
   *   - the JDBC append is made retry-idempotent the same way: each run's
   *     rows carry (run_date, run_time) and a re-run deletes-then-appends
   *     its own stamp ([[Jdbc.deleteWhere]]) — the reference would
   *     double-insert;
   *   - the per-day glob loop becomes one partition-pruned scan
-  *     (`run_date = d AND run_time <= t` over partition values);
+  *     (`run_date = d AND run_time <= t` over partition values), and
+  *     previous-run discovery lists partition dirs instead of scanning;
   *   - the "older global snapshot" (a hardcoded path in the reference,
   *     `apify_dag.py:41,198`) generalizes to the latest `final_aggregated`
   *     snapshot strictly before the current run, ACROSS days
@@ -59,7 +69,7 @@ import graft.sources.Ingest
   *
   * At 100 TB: per-account work is embarrassingly parallel (the
   * orchestrator fans out accounts); within one account every stage is a
-  * partition-local scan, a broadcast join (gender dict), or a single
+  * partition-local scan, a dictionary lookup (gender), or a single
   * keyed shuffle (the diff) — no driver-side data moves except the raw
   * landing, which is the ingest adapter's contract (SURVEY §2 S1).
   */
@@ -147,18 +157,16 @@ object Pipeline {
     */
   def runAccount(spark: SparkSession, cfg: Config, date: Int, time: Int,
       account: String, payload: String): Unit = {
-    Ingest.landRaw(payload, cfg.root, cfg.group, account, date)
-    val raw = Layout.rawFile(TableRef(cfg.root, Layout.rawLayer, cfg.group, account), date)
-    val contracted = Ingest.toContract(Ingest.normalize(spark, raw), contract)
-    // cache: the scored table feeds 2-3 sinks and the diff's current
-    // side; without it each action re-parses (and re-INFERS — multiLine
-    // JSON inference is a full extra file pass) the raw payload
+    val raw = Ingest.landRaw(payload, cfg.root, cfg.group, account, date)
+    val contracted = Ingest.readContract(spark, raw, payload, contract)
+    // cache: the scored table feeds the formatted write, the diff's current
+    // side and JDBC; without it each action re-parses the raw payload
     val scored = Gender.withGender(spark, contracted)
       .select(dataCols.map(col): _*)
       .cache()
     try {
       Layout.overwriteSnapshot(scored, formattedRef(cfg, account), date, time)
-      Layout.overwriteSnapshot(scored, usageRef(cfg, account), date, time)
+      Layout.copySnapshot(spark, formattedRef(cfg, account), usageRef(cfg, account), date, time)
 
       // same-DAY previous run only — the reference's discovery loop lists
       // the current date's usage dir (`script_api_apify_to_spark.py:218-234`)
@@ -206,11 +214,9 @@ object Pipeline {
       // ---- stage 2b: global diff vs the latest aggregate before this run.
       // The lookup and the old side's listing run BEFORE the fan-out, so no
       // reader lists the table while this run's aggregate write is in
-      // flight (on the first run ever the table has no dir yet)
+      // flight (on the first run ever the table has no dir, and no snapshot)
       val globalDiff =
-        (if (exists(spark, aggregatedRef(cfg)))
-          Layout.snapshotAsOf(spark, aggregatedRef(cfg), date, time - 1)
-        else None).map { case (pd, pt) =>
+        Layout.snapshotAsOf(spark, aggregatedRef(cfg), date, time - 1).map { case (pd, pt) =>
           val old = Layout.snapshotAt(spark, aggregatedRef(cfg), pd, pt)
             .select((dataCols :+ "username_scraped").map(col): _*)
           // current side = the aggregate being committed (cached above)

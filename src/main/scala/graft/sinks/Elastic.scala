@@ -1,5 +1,7 @@
 package graft.sinks
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -83,26 +85,36 @@ object Elastic {
     * from `idColumn` (idempotent upsert per key, the reference's
     * `es.mapping.id` semantics); every doc carries the reference's
     * string-formatted `indexed_at` tag.
+    *
+    * A partition flushes a request when the next pair would take the body
+    * past `batchBytes` (the connector's `es.batch.size.bytes`; ES advises
+    * a few MB per bulk), so a small partition is one POST however many
+    * docs it holds. A pair larger than the budget goes alone.
     */
   def bulkIndexKeyed(df: DataFrame, cfg: EsConfig, index: String,
-      idColumn: String = "username", batchSize: Int = 500): Unit = {
+      idColumn: String = "username", batchBytes: Int = 5 << 20): Unit = {
     val tagged = df.withColumn("indexed_at", indexedAtCol)
     val payload = tagged.select(
       col(idColumn).cast("string").as("_id"),
       to_json(struct(tagged.columns.map(col): _*)).as("_source"))
     val endpoint = s"http://${cfg.nodes}:${cfg.port}/_bulk"
     payload.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      rows.grouped(batchSize).foreach { batch =>
-        val body = batch.iterator.map { r =>
-          // a NULL id would silently route to an auto-generated doc id,
-          // breaking the keyed-upsert idempotency contract — fail loudly
-          require(!r.isNullAt(0),
-            s"bulkIndexKeyed: NULL id value (column is the ES doc id)")
-          s"""{"index":{"_index":"$index","_id":"${jsonEscape(r.getString(0))}"}}""" +
-            "\n" + r.getString(1)
-        }.mkString("", "\n", "\n")
-        postBulk(endpoint, body)
+      val body = new java.io.ByteArrayOutputStream()
+      def flush(): Unit = if (body.size > 0) {
+        postBulk(endpoint, body.toString(StandardCharsets.UTF_8))
+        body.reset()
       }
+      rows.foreach { r =>
+        // a NULL id would silently route to an auto-generated doc id,
+        // breaking the keyed-upsert idempotency contract — fail loudly
+        require(!r.isNullAt(0),
+          s"bulkIndexKeyed: NULL id value (column is the ES doc id)")
+        val pair = (s"""{"index":{"_index":"$index","_id":"${jsonEscape(r.getString(0))}"}}""" +
+          "\n" + r.getString(1) + "\n").getBytes(StandardCharsets.UTF_8)
+        if (body.size + pair.length > batchBytes) flush()
+        body.write(pair)
+      }
+      flush()
     }
   }
 
@@ -128,7 +140,7 @@ object Elastic {
     * keyed-idempotent, so replays are safe.
     */
   private[sinks] def postBulk(endpoint: String, ndjson: String, retries: Int = 3): Unit = {
-    val bytes = ndjson.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val bytes = ndjson.getBytes(StandardCharsets.UTF_8)
     var attempt = 0
     var lastErr: Throwable = null
     while (attempt <= retries) {
@@ -144,7 +156,7 @@ object Elastic {
         val code = conn.getResponseCode
         val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
         val respBody = if (is == null) "" else
-          try new String(is.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+          try new String(is.readAllBytes(), StandardCharsets.UTF_8)
           finally is.close()
         if (code >= 200 && code < 300) {
           // minified ES responses carry "errors":true/false at top level

@@ -8,7 +8,9 @@ import java.time.Duration
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
+import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException, JsonToken}
+import org.apache.spark.sql.catalyst.json.JSONOptions
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 import graft.lake.Layout
 import graft.lake.Layout.TableRef
@@ -34,7 +36,9 @@ import graft.lake.Layout.TableRef
   *    top-level array parses to one row per element; `{"items": [...]}`
   *    is detected from the inferred schema and exploded; a bare object of
   *    parallel arrays is zip-exploded (pandas' dict-of-columns semantics);
-  *    any other bare object is one row.
+  *    any other bare object is one row. A caller that still holds the
+  *    payload string reads the shape off it instead ([[readContract]]) and
+  *    reads the file with a declared schema, so no inference job runs.
   *  - S4's explicit-schema contract is a projection+cast at the end
   *    ([[toContract]]), so inference only ever touches the raw layer.
   */
@@ -68,6 +72,26 @@ object Ingest extends graft.QueryModule {
     file.toString
   }
 
+  /** The reference's payload shapes (`script_api_apify_to_spark.py:144-151`),
+    * as [[project]] turns a parsed payload into rows.
+    */
+  private sealed trait Shape
+  /** A bare list (one row per element) or a bare record (one row). */
+  private case object AsRows extends Shape
+  /** `{"items": [...]}`: one row per item. */
+  private case object Items extends Shape
+  /** A bare dict whose every field is an array: pandas' dict-of-columns. */
+  private final case class Columnar(fields: Seq[String]) extends Shape
+
+  /** The three-branch normalization, for a payload read as `df`. */
+  private def project(df: DataFrame, shape: Shape): DataFrame = shape match {
+    case AsRows => df
+    case Items => df.select(explode(col("items")).as("item")).select("item.*")
+    case Columnar(fields) =>
+      df.select(explode(arrays_zip(fields.map(col): _*)).as("r"))
+        .select(fields.map(f => col(s"r.$f").as(f)): _*)
+  }
+
   /** S3: normalize a landed raw.json into rows, covering the reference's
     * three payload shapes (`script_api_apify_to_spark.py:144-151`):
     *
@@ -79,23 +103,136 @@ object Ingest extends graft.QueryModule {
     *
     * multiLine=true because the reference pretty-prints (`json.dump(...,
     * indent=2)`, `:136`): the whole file is one JSON value, not JSON-lines.
+    * The shape is read off the inferred schema, which costs one job.
     */
   def normalize(spark: SparkSession, rawPath: String): DataFrame = {
     val df = spark.read.option("multiLine", "true").json(rawPath)
-    df.schema.fields match {
+    val fields = df.schema.fields
+    project(df, fields match {
       // wrapper shape ONLY when `items` is the sole top-level field — a
       // bare LIST of row objects that merely CONTAIN an items column must
       // stay branch 1 (one row per element), not get exploded
-      case Array(f) if f.name == "items" && f.dataType.isInstanceOf[ArrayType] =>
-        df.select(explode(col("items")).as("item")).select("item.*")
-      case _ =>
-        val fields = df.schema.fields
-        if (fields.nonEmpty && fields.forall(_.dataType.isInstanceOf[ArrayType])) {
-          // bare dict of parallel arrays → rows (pandas' dict-of-columns)
-          df.select(explode(arrays_zip(fields.map(f => col(f.name)): _*)).as("r"))
-            .select(fields.map(f => col(s"r.${f.name}").as(f.name)): _*)
-        } else df
+      case Array(f) if f.name == "items" && f.dataType.isInstanceOf[ArrayType] => Items
+      case _ if fields.nonEmpty && fields.forall(_.dataType.isInstanceOf[ArrayType]) =>
+        Columnar(fields.map(_.name).toSeq)
+      case _ => AsRows
+    })
+  }
+
+  /** S3 + S4 without inference: `toContract(normalize(spark, rawPath),
+    * schema)`, for a caller that still holds the landed `payload`. The
+    * shape comes from the string, and the file is read with a schema
+    * declared from `schema`, so building the frame runs no job. Payloads
+    * where that read could differ from inference fall back to
+    * [[normalize]]: a `schema` with a non-STRING column; a contract field
+    * holding a float, an integer beyond 64 bits, an object or an array
+    * (inference would re-render it); a key that matches a contract field
+    * only up to case, or repeats in one object; a list or `items` array
+    * with a non-object element or without a non-null scalar anywhere
+    * (inference could read it as another shape); an empty dict; a byte
+    * order mark; and JSON that fails after its first token. A payload
+    * that is not JSON from its first token reads as [[normalize]] reads
+    * it: one corrupt record, all-null in the contract.
+    */
+  def readContract(spark: SparkSession, rawPath: String, payload: String,
+      schema: StructType): DataFrame =
+    (if (schema.forall(_.dataType == StringType)) declaredShape(payload, schema.fieldNames.toSet)
+    else None) match {
+      case Some(shape) =>
+        val read = shape match {
+          case AsRows => schema
+          case Items => new StructType().add("items", ArrayType(schema))
+          case Columnar(fields) =>
+            StructType(fields.map(StructField(_, ArrayType(StringType))))
+        }
+        toContract(project(spark.read.schema(read).option("multiLine", "true").json(rawPath),
+          shape), schema)
+      case None => toContract(normalize(spark, rawPath), schema)
     }
+
+  /** Spark's own JSON parser settings, so a token fails here iff it fails
+    * in the reader.
+    */
+  private lazy val jsonFactory =
+    new JSONOptions(Map("multiLine" -> "true"), "UTC", "").buildJsonFactory()
+
+  /** The payload's shape when a declared read of the `contract` fields
+    * equals inference (see [[readContract]]), from one streaming pass.
+    */
+  private def declaredShape(payload: String, contract: Set[String]): Option[Shape] = {
+    // the reader matches keys exactly, `toContract` up to case
+    def clash(key: String) = !contract(key) && contract.exists(_.equalsIgnoreCase(key))
+    val p = jsonFactory.createParser(payload)
+    // a string, a 64-bit integer, a boolean or null: a STRING column keeps
+    // its text exactly as inference + cast renders it; consumes the value
+    def plainValue(): Boolean = {
+      val t = p.currentToken
+      val plain = t.isScalarValue && t != JsonToken.VALUE_NUMBER_FLOAT &&
+        (t != JsonToken.VALUE_NUMBER_INT || p.getNumberType != JsonParser.NumberType.BIG_INTEGER)
+      p.skipChildren()
+      plain
+    }
+    def nonNullScalar = p.currentToken.isScalarValue && p.currentToken != JsonToken.VALUE_NULL
+    // at START_ARRAY: (elements, all are plain records, all are plain
+    // values, some record field is a non-null scalar); consumes the array
+    def elements(): (Int, Boolean, Boolean, Boolean) = {
+      var (n, records, values, scalar) = (0, true, true, false)
+      while (p.nextToken() != JsonToken.END_ARRAY) {
+        n += 1
+        if (p.currentToken == JsonToken.START_OBJECT) {
+          values = false
+          val keys = scala.collection.mutable.Set.empty[String]
+          while (p.nextToken() != JsonToken.END_OBJECT) {
+            val key = p.currentName
+            p.nextToken()
+            scalar = scalar || nonNullScalar
+            val plain = plainValue()
+            records = records && keys.add(key) && !clash(key) && (plain || !contract(key))
+          }
+        } else {
+          records = false
+          values = plainValue() && values
+        }
+      }
+      (n, records, values, scalar)
+    }
+    try {
+      val first =
+        try p.nextToken()
+        catch {
+          // not JSON from its first token: the reader fails at the same
+          // token and keeps the file as one corrupt record
+          case _: JsonProcessingException if !payload.startsWith("\uFEFF") => return Some(AsRows)
+        }
+      val shape = first match {
+        case JsonToken.START_ARRAY =>
+          val (_, records, _, scalar) = elements()
+          Option.when(records && scalar)(AsRows)
+        case JsonToken.START_OBJECT =>
+          val fields = scala.collection.mutable.ArrayBuffer.empty[(String, Either[Boolean,
+            (Int, Boolean, Boolean, Boolean)])]
+          while (p.nextToken() != JsonToken.END_OBJECT) {
+            val name = p.currentName
+            fields += name -> (if (p.nextToken() == JsonToken.START_ARRAY) Right(elements())
+            else Left(plainValue()))
+          }
+          fields.toSeq match {
+            case Seq(("items", Right((n, records, _, scalar)))) =>
+              Option.when(n > 0 && records && scalar)(Items)
+            case fs if fs.isEmpty || fs.map(_._1).distinct.size < fs.size ||
+              fs.exists(f => clash(f._1)) => None
+            case fs if fs.forall(_._2.isRight) =>
+              Option.when(fs.forall { case (f, v) => !contract(f) || v.exists(_._3) })(
+                Columnar(fs.map(_._1)))
+            case fs => Option.when(fs.forall { case (f, v) => !contract(f) || v == Left(true) })(
+              AsRows)
+          }
+        case _ => None
+      }
+      if (p.nextToken() == null) shape else None
+    } catch {
+      case _: JsonProcessingException => None
+    } finally p.close()
   }
 
   /** S4: project+cast an inferred payload onto the explicit layer contract

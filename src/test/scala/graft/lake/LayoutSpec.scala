@@ -122,4 +122,79 @@ class LayoutSpec extends SparkSpec {
       .collect().map(_.toString).sorted
     assert(globbed.toSeq == folded.toSeq)
   }
+
+  /** The scan-based discovery that the listing replaced: aggregates over the
+    * partition values Spark's partition discovery finds.
+    */
+  private def scanPrevious(ref: TableRef, date: Int, current: Int): Option[Int] = {
+    val r = Layout.snapshots(spark, ref)
+      .where(col("run_date") === date && col("run_time") < current)
+      .agg(max("run_time")).first()
+    if (r.isNullAt(0)) None else Some(r.getInt(0))
+  }
+
+  private def scanAsOf(ref: TableRef, date: Int, time: Int): Option[(Int, Int)] = {
+    val r = Layout.snapshots(spark, ref)
+      .where(col("run_date") < date || (col("run_date") === date && col("run_time") <= time))
+      .agg(max(struct(col("run_date"), col("run_time")))).first()
+    if (r.isNullAt(0)) None else Some((r.getStruct(0).getInt(0), r.getStruct(0).getInt(1)))
+  }
+
+  test("listing-based discovery equals the partition-value scan") {
+    val ref = freshRef()
+    Seq((20250228, 1400), (20250228, 2300), (20250301, 900), (20250301, 1100),
+      (20250302, 0)).foreach { case (d, t) => Layout.writeSnapshot(snap(s"${d}_$t"), ref, d, t) }
+    def dir(rel: String) = { val f = new java.io.File(s"${ref.dir}/$rel"); f.mkdirs(); f }
+    // an empty partition dir, one holding only _SUCCESS, and hidden dirs
+    // holding a real data file: partition discovery sees none of them
+    dir("run_date=20250301/run_time=1200")
+    new java.io.File(dir("run_date=20250301/run_time=1000"), "_SUCCESS").createNewFile()
+    new java.io.File(dir("run_date=20250303/run_time=500"), "_SUCCESS").createNewFile()
+    val dataFile = new java.io.File(s"${ref.dir}/run_date=20250301/run_time=900")
+      .listFiles().find(_.getName.endsWith(".parquet")).get
+    Seq(".copy-staged/run_date=20250304/run_time=100", "run_date=20250301/.copy-x",
+      "run_date=20250301/_temporary/0/run_time=1300", "_temporary/run_date=20250305/run_time=1")
+      .foreach { rel =>
+      Files.copy(dataFile.toPath, new java.io.File(dir(rel), dataFile.getName).toPath)
+    }
+    for {
+      d <- Seq(20250227, 20250228, 20250301, 20250302, 20250303, 20250304, 20250305)
+      t <- Seq(0, 1, 500, 899, 900, 901, 1000, 1100, 1101, 1200, 1300, 1400, 2300, 2359)
+    } {
+      assert(Layout.previousRunTime(spark, ref, d, t) == scanPrevious(ref, d, t), s"previous $d $t")
+      assert(Layout.snapshotAsOf(spark, ref, d, t) == scanAsOf(ref, d, t), s"as of $d $t")
+    }
+    // a table with no dir has no snapshot
+    assert(Layout.snapshotAsOf(spark, freshRef(), 20250301, 900).isEmpty)
+  }
+
+  test("copySnapshot re-run replaces only its own partition; an empty source leaves the target") {
+    val root = Files.createTempDirectory("graft_layout_copy").toFile.getAbsolutePath
+    val from = TableRef(root, Layout.formattedLayer, "apify", "tbl")
+    val to = TableRef(root, Layout.usageLayer, "apify", "tbl")
+    def names(ref: TableRef, t: Int) = Layout.snapshotAt(spark, ref, 20250301, t)
+      .select("name").as[String].collect().sorted.toSeq
+    Seq(900, 1000).foreach { t =>
+      Layout.overwriteSnapshot(snap(s"v1_$t"), from, 20250301, t)
+      Layout.copySnapshot(spark, from, to, 20250301, t)
+    }
+    // re-run of 1000 with new rows: the copy replaces that partition only
+    Layout.overwriteSnapshot(snap("v2_1000"), from, 20250301, 1000)
+    Layout.copySnapshot(spark, from, to, 20250301, 1000)
+    assert(names(to, 1000) == Seq("a_v2_1000", "b_v2_1000"))
+    assert(names(to, 900) == Seq("a_v1_900", "b_v1_900"))
+    assert(Layout.snapshots(spark, to).count() == 4)
+    assert(new java.io.File(to.dir).list().forall(!_.startsWith(".copy-")))
+    // no source partition: the target partition stays as it was
+    Layout.copySnapshot(spark, TableRef(root, Layout.formattedLayer, "apify", "none"), to,
+      20250301, 900)
+    assert(names(to, 900) == Seq("a_v1_900", "b_v1_900"))
+    // a first copy of an empty source still leaves the table dir, as a write would
+    val fresh = TableRef(root, Layout.usageLayer, "apify", "fresh")
+    Layout.copySnapshot(spark, TableRef(root, Layout.formattedLayer, "apify", "none"), fresh,
+      20250301, 900)
+    assert(new java.io.File(fresh.dir).isDirectory)
+    intercept[IllegalArgumentException](Layout.copySnapshot(spark, from,
+      to.copy(dataSchema = Some(snap("x").schema)), 20250301, 900))
+  }
 }

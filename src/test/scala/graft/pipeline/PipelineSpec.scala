@@ -1,6 +1,10 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.SparkSpec
 import graft.lake.Layout
@@ -163,4 +167,60 @@ class PipelineSpec extends SparkSpec {
       assert(jobs.get == 0, s"the declared read ran ${jobs.get} schema jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** The jobs `body` runs, in start order. */
+  private def jobsOf(body: => Unit): Seq[PipelineSpec.Job] = {
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+          .getOrElse("")
+        started.add((s"${prop("spark.job.tags")} ${prop("spark.job.description")}",
+          prop("spark.sql.execution.id")))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    def drain(): Unit = org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drain() } finally spark.sparkContext.removeSparkListener(listener)
+    started.asScala.toSeq.map { case (labels, id) =>
+      PipelineSpec.Job(labels, id.toLongOption.flatMap(i => Option(plans.get(i))).getOrElse(""))
+    }
+  }
+
+  test("pipeline: an account task runs one layer write and no inference, broadcast or discovery job") {
+    val cfg = Pipeline.Config(graft.util.Scratch.dir("pipeline_jobs"))
+    val date = 20250301
+    Pipeline.runAccount(spark, cfg, date, 900, "acct_a",
+      PipelineQueries.payloadJson(spark, sf, 1, 1))
+    val payload = PipelineQueries.payloadJson(spark, sf, 1, 2)
+    val jobs = jobsOf(Pipeline.runAccount(spark, cfg, date, 1000, "acct_a", payload))
+    val shown = jobs.map(j => j.labels + " " +
+      j.plan.linesIterator.find(_.contains("Arguments: file:")).getOrElse(j.plan.take(300)))
+      .mkString("\n")
+    // schema inference and a discovery scan run outside any write
+    assert(jobs.forall(_.plan.contains("InsertIntoHadoopFsRelationCommand")), shown)
+    assert(!jobs.exists(_.labels.contains("broadcast")), shown)
+    val formatted = Pipeline.formattedRef(cfg, "acct_a")
+    val usage = Pipeline.usageRef(cfg, "acct_a")
+    def writes(ref: Layout.TableRef) =
+      jobs.count(_.plan.contains(s"Arguments: file:${ref.dir},"))
+    assert(writes(formatted) + writes(usage) == 1, shown)
+    val fmtRows = rows(Layout.snapshotAt(spark, formatted, date, 1000))
+    assert(fmtRows.nonEmpty)
+    assert(rows(Layout.snapshotAt(spark, usage, date, 1000)) == fmtRows)
+  }
+}
+
+object PipelineSpec {
+
+  /** One Spark job: its tags and description, and the plan of the SQL
+    * execution it ran in ("" when it ran outside any).
+    */
+  final case class Job(labels: String, plan: String)
 }

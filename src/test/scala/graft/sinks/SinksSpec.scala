@@ -186,8 +186,10 @@ class SinksSpec extends SparkSpec {
         .toDF("username", "n_posts").repartition(2)
       Elastic.bulkIndexKeyed(df,
         Elastic.EsConfig("127.0.0.1", server.getAddress.getPort),
-        "final_aggregated_index", batchSize = 2)
+        "final_aggregated_index", batchBytes = 1)
       val bodies = received.toArray(Array.empty[String])
+      // a budget below one pair posts every pair on its own
+      assert(bodies.length == 3, bodies.mkString("\n---\n"))
       // each body is alternating action/doc NDJSON lines, newline-terminated
       val pairs = bodies.flatMap { b =>
         val lines = b.split("\n").filter(_.nonEmpty)
@@ -205,6 +207,31 @@ class SinksSpec extends SparkSpec {
       }
       assert(pairs.map(p => """"_id":"(\w+)"""".r.findFirstMatchIn(p._1).get.group(1)).toSet ==
         Set("alice", "bob", "carol"))
+    } finally server.stop(0)
+  }
+
+  test("elastic: a partition under the byte budget posts exactly one bulk request") {
+    import java.net.InetSocketAddress
+    import java.nio.charset.StandardCharsets
+    import com.sun.net.httpserver.HttpServer
+    import spark.implicits._
+    val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/_bulk", ex => {
+      received.add(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+      val resp = """{"errors":false}""".getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(200, resp.length)
+      ex.getResponseBody.write(resp)
+      ex.close()
+    })
+    server.start()
+    try {
+      val df = (1 to 1200).map(i => (s"user_$i", i.toLong)).toDF("username", "n").coalesce(1)
+      Elastic.bulkIndexKeyed(df,
+        Elastic.EsConfig("127.0.0.1", server.getAddress.getPort), "idx")
+      val bodies = received.toArray(Array.empty[String])
+      assert(bodies.length == 1, s"${bodies.length} requests")
+      assert(bodies.head.split("\n").count(_.startsWith("{\"index\"")) == 1200)
     } finally server.stop(0)
   }
 

@@ -123,4 +123,52 @@ class IngestSpec extends SparkSpec {
       assert(rows.toSeq == Seq("u3", "u4"))
     } finally server.stop(0)
   }
+
+  test("readContract gives toContract(normalize) rows for every shape, declared or not") {
+    val payloads = Seq(listPayload, itemsPayload, dictPayload,
+      """{"username": "u7", "full_name": "Grace G"}""", """[{"username": "only_user"}]""",
+      "this is } not { json", """[{"username": 42, "full_name": true}]""",
+      """{"username": ["c1", "c2"], "full_name": ["C"], "extra": [1, 2, 3]}""",
+      // fall back to inference: a float, a 65-bit integer and an object in
+      // the contract, an empty wrapper, a non-object element, lists an
+      // all-array or empty schema could read as another shape, keys that
+      // clash up to case or repeat, a byte order mark, and a truncated list
+      """[{"username": "f", "full_name": 1.50}]""",
+      """[{"username": "b", "full_name": 36893488147419103232}]""",
+      """[{"username": "o", "full_name": {"first": "Ann"}}]""",
+      """{"items": []}""", """{"items": [{}]}""", """[{"username": "n"}, 3]""",
+      """[{"extra": [1, 2]}, {"extra": [3]}]""", """[{"items": [{"username": "i"}]}]""",
+      "[{}, {}]", "[]", """[{"Username": "U", "username": "u"}]""",
+      """{"USERNAME": "U"}""", """[{"username": "r1", "username": "r2"}]""",
+      "\uFEFF" + listPayload, """[{"username": "t1"}, {"username": """)
+    payloads.foreach { payload =>
+      val path = Ingest.landRaw(payload, tmpRoot(), "apify", "t", 20250301)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sortBy(_.toString)
+      val inferred = scala.util.Try(rows(Ingest.toContract(Ingest.normalize(spark, path), contract)))
+      val declared = scala.util.Try(rows(Ingest.readContract(spark, path, payload, contract)))
+      assert(declared.toOption == inferred.toOption, payload)
+      assert(declared.isSuccess == inferred.isSuccess, payload)
+    }
+  }
+
+  test("readContract builds its frame without a Spark job for every declared shape") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
+    Seq(listPayload, itemsPayload, dictPayload, """{"username": "u7"}""",
+      "this is } not { json").foreach { payload =>
+      val path = Ingest.landRaw(payload, tmpRoot(), "apify", "t", 20250301)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        drain(); jobs.set(0)
+        Ingest.readContract(spark, path, payload, contract)
+        drain()
+        assert(jobs.get == 0, s"${jobs.get} jobs building the read of $payload")
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }
